@@ -532,6 +532,16 @@ object Fleet {
       .agg((sum(col("v")).cast(DoubleType) / sum(col("calls")).cast(DoubleType))
         .as("fleet_vpc"))
     val vpc = col("v").cast(DoubleType) / col("calls").cast(DoubleType)
+    // the reported value per call comes from the EXACT decimal sum and
+    // integer count: micro-units rounded half away from zero by integer
+    // division, then one correctly rounded division by 1e6. Every step
+    // is exact or IEEE-defined, so Spark and the oracle agree on exact
+    // halves, where rounding the double quotient splits them (1050.33
+    // over 32 calls = 32.8228125: Spark's round gives 32.822813,
+    // DuckDB's 32.822812)
+    val valuePerCall = (signum(col("v")) *
+        expr("(CAST(abs(v) * 1000000 AS BIGINT) * 2 + calls) div (calls * 2)"))
+      .cast(DoubleType) / lit(1e6)
     // ANSI double division raises on /0 — an all-zero-value digest has
     // fleet_vpc = 0, so the fleet-relative ratio is NULL there (and
     // the hot flag false), never an error
@@ -540,7 +550,7 @@ object Fleet {
       .select(col("server_version"), col("event_type"), col("n_instances"),
         col("n_configs"), col("calls"),
         round(col("v").cast(DoubleType), 4).as("total_value"),
-        round(vpc, 6).as("value_per_call"),
+        valuePerCall.as("value_per_call"),
         ratio.as("vs_fleet"),
         coalesce(ratio > 1.25, lit(false)).as("version_hot"))
       .orderBy(col("server_version"), col("event_type"))
@@ -569,7 +579,8 @@ object Fleet {
       FROM by_ver GROUP BY 1)
     SELECT b.server_version, b.event_type, b.n_instances, b.n_configs, b.calls,
       ROUND(CAST(b.v AS DOUBLE), 4) AS total_value,
-      ROUND(CAST(b.v AS DOUBLE) / CAST(b.calls AS DOUBLE), 6) AS value_per_call,
+      CAST(SIGN(b.v) * ((CAST(ABS(b.v) * 1000000 AS BIGINT) * 2 + b.calls)
+        // (b.calls * 2)) AS DOUBLE) / 1e6 AS value_per_call,
       CASE WHEN f.fleet_vpc <> 0
         THEN ROUND(CAST(b.v AS DOUBLE) / CAST(b.calls AS DOUBLE) / f.fleet_vpc, 6)
       END AS vs_fleet,

@@ -616,7 +616,11 @@ class AnnSpec extends SparkSpec {
     assert(live.forall(_._2 % 3 != 1), "no deleted id may be servable")
     // physical removal: compaction rewrites the touched cells minus
     // tombstoned rows and clears the applied set
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(overwriteMode)
     val touched = IvfPq.compactIndex(spark, dir)
+    assert(spark.conf.getOption(overwriteMode) == modeBefore,
+      "compaction must not touch the session's partition overwrite mode")
     assert(touched.nonEmpty, "cells holding tombstoned rows must be rewritten")
     assert(asSet(IvfPq.loadIndex(spark, dir).inverted) == live,
       "post-compaction raw store must equal the live content bit for bit")
@@ -787,6 +791,72 @@ class AnnSpec extends SparkSpec {
     assert(finalBag == asBag(IvfPq.codedInvertedFile(index,
         base.unionByName(batch0).unionByName(batch1), books, 4)),
       "the ingested store must equal the frozen-index encode, exactly once each")
+  }
+
+  test("streaming ingest: a first batch torn mid-publish on a fresh store is invisible; its replay lands once") {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.operators.{IvfPq, SegmentStore}
+    val all = Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("v"))
+    val isDelta = col("id") % 10 === 7
+    val base = all.filter(!isDelta)
+    val batch = all.filter(isDelta)
+    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_torn0_" +
+      java.util.UUID.randomUUID.toString.take(8)
+    val (index, books) = IvfPq.buildIndex(base, base.count(), dim = 64,
+      m = 16, dsub = 4, kCodes = 64, dir = dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_ingest_commits")) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_append_commits")),
+      "a fresh build carries no marker dirs")
+    def asBag(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Int](2).toList))
+      .groupBy(identity).view.mapValues(_.length).toMap
+    val loaded = IvfPq.loadIndex(spark, dir)
+    val baseStored = asBag(loaded.inverted)
+    // crash the store's FIRST ingest batch after one cell's files are
+    // renamed in, before the marker: the shared publish's seam
+    SegmentStore.ingestBatch(spark, dir, IvfPq.layout, 0L,
+        failAfter = "publish-partial")(
+      IvfPq.stageCoded(loaded.index, loaded.books, loaded.dsub, batch, _))
+    val inv = new org.apache.hadoop.fs.Path(s"$dir/inverted")
+    val cells = fs.listStatus(inv)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
+    val tornCells = cells.count(st => fs.listStatus(st.getPath)
+      .exists(_.getPath.getName.startsWith("ingest-0-")))
+    assert(tornCells == 1, s"the seam must leave exactly one cell published, got $tornCells")
+    assert(asBag(IvfPq.loadIndex(spark, dir).inverted) == baseStored,
+      "a torn first ingest batch leaked rows into the live view")
+    // the replay of the same batchId completes it, each row exactly once
+    IvfPq.appendBatchToIndex(loaded, batch, dir, batchId = 0L)
+    val after = asBag(IvfPq.loadIndex(spark, dir).inverted)
+    assert(after.values.forall(_ == 1), "the replay duplicated rows")
+    assert(after == asBag(IvfPq.codedInvertedFile(index, all, books, 4)),
+      "the replayed store must equal the frozen-index encode of base ∪ batch")
+  }
+
+  test("a rebuild replaces the store wholesale: no trained tables of the previous regime survive") {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.operators.IvfPq
+    val corpus = Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("v"))
+    val n = corpus.count()
+    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_rebuild_" +
+      java.util.UUID.randomUUID.toString.take(8)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def has(sub: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
+    IvfPq.buildIndex(corpus, n, dim = 64, m = 16, dsub = 4, kCodes = 64,
+      dir = dir, oneLevelMax = -1L)
+    assert(has("coarse") && has("groups") && !has("centroids"))
+    IvfPq.buildIndex(corpus, n, dim = 64, m = 16, dsub = 4, kCodes = 64, dir = dir)
+    assert(has("centroids"))
+    assert(!has("coarse") && !has("groups"),
+      "a one-level rebuild left the two-level build's trained tables behind")
+    assert(IvfPq.loadIndex(spark, dir).index.isInstanceOf[IvfPq.OneLevelIndex])
   }
 
   test("full-cell takedown: compaction deletes the emptied cell instead of resurrecting it") {

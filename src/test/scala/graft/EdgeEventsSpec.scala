@@ -43,6 +43,27 @@ class EdgeEventsSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("server metadata: value_per_call rounds an exact half away from zero, as the oracle does") {
+    // 31 calls of 32.82 and one of 32.91: Σ = 1050.33 exactly, so
+    // 1050.33 / 32 = 32.8228125 sits on a 6-place half. The oracle SQL
+    // gives 32.822813 on these rows in DuckDB 1.0 (its former double
+    // quotient rounding gave 32.822812)
+    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_edge_tie_" +
+      java.util.UUID.randomUUID.toString.take(8)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-15 12:00:00")
+    val rows = (0 until 32).map(i => org.apache.spark.sql.Row(i.toLong, t0, 7L,
+      "tie", if (i == 31) 32.91 else 32.82, "{}"))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        Tables.events(spark, sf).schema)
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val out = SparkEntry.queries("qan_server_metadata")(spark, dir).collect()
+    assert(out.length == 1)
+    val r = out.head
+    assert(r.getAs[Long]("calls") == 32L)
+    assert(r.getAs[Double]("total_value") == 1050.33)
+    assert(r.getAs[Double]("value_per_call") == 32.822813)
+  }
+
   test("diff significance: degenerate units get null z, never a significant verdict") {
     // a lone event (n=1 total) can never clear the n>=2-per-half gate,
     // and a unit confined to one half has no counterpart mean — both
