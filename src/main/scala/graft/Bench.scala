@@ -1,67 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // comma-separated query-name filter for single-query iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // repetitions per query; the reported time is the median (odd count
-    // recommended). Default 3 — single-run timings proved order-
-    // dependent (JVM/JIT/block-manager noise swamped sub-second queries)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE size post-shuffle partitions by DATA VOLUME instead of
-      // the core-count constant above, INCLUDING under persisted plans
-      // (guide §2.2/§2.4 — partitioning must be scale-adaptive, not
-      // tuned to either local mode or the cluster): cached-plan output
-      // partitioning is pinned unless
-      // canChangeCachedPlanOutputPartitioning=true, so every stage
-      // under a store build's persist kept the full 32-partition
-      // fan-out on KB-sized data. Scale-neutral byte rule: a
-      // sandbox-sized aggregate lands in a handful of tasks, a 100 TB
-      // shuffle still fans out to thousands of partitions.
-      // (CPU-per-row stages that byte-sizing would starve widen
-      // themselves explicitly — operators.Par.widen, bytes-gated.)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // declared up front (Tables.table re-sets it as a no-op): the
-      // generator's un-zoned TIMESTAMP(MICROS) must read as
-      // session-zoned TIMESTAMP, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // streaming queries materialize through a memory sink; at the
-      // 100× tiling a single micro-batch's sink ingest can exceed the
-      // 1 GiB default and fail a query that is otherwise healthy —
-      // a bench-harness limit, not an operator cost
-      .config("spark.driver.maxResultSize",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_RESULT", "4g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same extension surface as Verify and a cluster deployment
-    graft.plans.GraftExtensions.install(spark)
-    // Materialize through the noop sink, not count(): under a count
-    // Catalyst prunes projection-only work (string funcs, hashes,
-    // fingerprints would never execute), so count() times little more
-    // than the scan for those queries. The noop sink evaluates every
-    // output row and discards it — the honest per-operator cost.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // operators persist/localCheckpoint intermediates that outlive the
-    // query (minhash base, CC labels); drop them between queries —
-    // BLOCKING, so eviction I/O from query i never bleeds into query
-    // i+1's timed window
+    val sfDir = GraftSession.sfDir
+    val cpus = GraftSession.cpus
+    val runs = GraftSession.runs
+    val spark = GraftSession(cpus)
     def clearState(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      graft.streaming.QanStream.releaseReplayState(spark)
+      GraftSession.clearState(spark)
       // collect the previous query's garbage OUTSIDE the next timed
       // window: across 174x3 runs in one JVM, deferred old-gen debt
       // from persist-heavy queries was a mid-run variance source
@@ -72,19 +18,9 @@ object Bench {
     // footer reads — so per-query timings below measure the queries,
     // not first-use JVM costs. Failures here are non-fatal (sf0.001 may
     // be absent) but logged — a silent warm-up crash hid real breakage.
-    // SORTED-BY-NAME execution order. SparkEntry.queries is a HashMap:
-    // its iteration order is hash-trie order, stable for a fixed key
-    // set but RESHUFFLED by every key addition — so each round's new
-    // operators silently moved every query to a different slot (=
-    // different wall-clock offset into the run), which made
-    // round-over-round per-query deltas unreadable whenever anything
-    // time-localized (external load, GC adjacency) touched part of the
-    // window. Sorted order pins each query's slot across rounds.
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .toSeq.sortBy(_._1)
+    val selected = GraftSession.selected()
     selected.foreach { case (name, fn) =>
-      try run(fn, "/root/testdata/sf0.001") catch {
+      try GraftSession.run(spark, fn, "/root/testdata/sf0.001") catch {
         case e: Throwable => System.err.println(s"[bench warm-up] $name: ${e.getMessage}")
       }
       clearState()
@@ -107,7 +43,7 @@ object Bench {
       }
     }
     selected.headOption.foreach { case (name, fn) =>
-      try run(fn, sfDir) catch {
+      try GraftSession.run(spark, fn, sfDir) catch {
         case e: Throwable => System.err.println(s"[bench warm-up] $name@target: ${e.getMessage}")
       }
     }
@@ -125,7 +61,7 @@ object Bench {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).split("\\s+")(0).toDouble
     } catch { case _: Throwable => -1.0 }
-    val settleWait = sys.env.getOrElse("SPARK_GRAFT_SETTLE_WAIT", "60").toInt
+    val settleWait = 60
     val settleBar = cpus.toDouble
     val settleT0 = System.nanoTime()
     while (loadNow() > settleBar &&
@@ -135,33 +71,6 @@ object Bench {
     val settledOk = startLoad >= 0 && startLoad <= settleBar
     System.err.println(f"[bench-settle] load=$startLoad%.2f bar=$settleBar%.1f " +
       f"waited=${settleSec}%.0fs ok=$settledOk")
-    // Per-query JVM-state probe: an r7-vs-r6 audit showed 5-7x
-    // tight-band cost shifts on byte-identical code+data that vanished
-    // when the same queries ran isolated — i.e. cumulative in-run JVM
-    // state, not the plans. These counters (JIT code cache occupancy,
-    // loaded-class count, cumulative GC time) printed per slot turn
-    // "query X got slower" into "the code cache crossed its limit at
-    // slot N" without a re-run.
-    def jvmProbe(): (Double, Long, Double, String) = {
-      import java.lang.management.ManagementFactory
-      import scala.jdk.CollectionConverters._
-      val codeMb = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.startsWith("CodeHeap"))
-        .map(_.getUsage.getUsed).sum / 1e6
-      val classes = ManagementFactory.getClassLoadingMXBean.getLoadedClassCount.toLong
-      val gcSec = ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime).sum / 1e3
-      // 1-min system load: a slot timed while load >> cpus was timed
-      // under EXTERNAL contention (the r7 post-mortem: three 5-7x
-      // "regressions" on byte-identical code+data that vanished in a
-      // clean re-run — only attributable because nothing logged the
-      // machine state at the moment each slot ran)
-      val load = try {
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg"))).split("\\s+")(0)
-      } catch { case _: Throwable => "?" }
-      (codeMb, classes, gcSec, load)
-    }
     // Timed section: median of `runs` repetitions per query, PLUS the
     // per-query min/max across those runs — an 11× flap with a tight
     // [min,max] band is a plan cost; a wide band on an unchanged plan
@@ -176,7 +85,7 @@ object Bench {
         else {
           clearState() // outside the timed section
           val t0 = System.nanoTime()
-          try { run(fn, sfDir); Some((System.nanoTime() - t0) / 1e9) }
+          try { GraftSession.run(spark, fn, sfDir); Some((System.nanoTime() - t0) / 1e9) }
           catch { case e: Throwable =>
             failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             System.err.println(s"[bench FAIL] $name: ${failures(name)}")
@@ -185,10 +94,16 @@ object Bench {
         }
       }
       slot += 1
-      val (ccMb, nCls, gcS, load) = jvmProbe()
+      // per-slot JVM state and 1-min system load: a slot timed while
+      // load >> cpus was timed under EXTERNAL contention (the r7
+      // post-mortem: three 5-7x "regressions" on byte-identical
+      // code+data that vanished in a clean re-run — only attributable
+      // because nothing logged the machine state at the moment each
+      // slot ran)
       System.err.println(f"[bench-probe] slot=$slot%3d $name%-34s " +
         f"med=${if (times.isEmpty) -1.0 else times.sorted.apply(times.size / 2)}%7.2f " +
-        f"codecache=${ccMb}%6.1fMB classes=$nCls%6d gc_cum=${gcS}%7.1fs load=$load%s")
+        f"codecache=${GraftSession.codeCacheMb}%6.1fMB classes=${GraftSession.loadedClasses}%6d " +
+        f"gc_cum=${GraftSession.gcSec}%7.1fs load=${loadNow()}%.2f")
       val median =
         if (times.isEmpty) -1.0
         else {

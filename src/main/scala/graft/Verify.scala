@@ -2,32 +2,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1,
+  * after the whole dump, if any query threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same scale-adaptive partition sizing as Bench (see its
-      // scaladoc): byte-targeted AQE coalescing, including under
-      // persisted plans — the gate must run the same physical shapes
-      // the bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // full extension surface active during the gate: the TopK rewrite
-    // rule + SQL functions run exactly as a cluster deployment
-    // (spark.sql.extensions=graft.plans.GraftExtensions) would
-    graft.plans.GraftExtensions.install(spark)
-    new java.io.File(outDir).mkdirs()
-    // comma-separated query-name filter for single-query iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val spark = GraftSession(GraftSession.cpus)
+    val queries = GraftSession.selected()
     // The IVF-family oracles inline SIXTEEN-cell centroid literals
     // (ScaleOps.ivfCtes) while the Spark side sizes the index with
     // AnnIvf.adaptiveCells(count) — the coupling holds only while the
@@ -39,7 +20,7 @@ object Verify {
     val ivfFamily = SparkEntry.oracleSql.collect {
       case (name, sql) if sql.contains("cents0(cell, c)") => name
     }.toSet
-    if (ivfFamily.exists(n => only.forall(_.contains(n)))) {
+    if (queries.exists { case (name, _) => ivfFamily(name) }) {
       val nEmb = Tables.table(spark, sfDir, "embeddings").count()
       val cells = graft.operators.AnnIvf.adaptiveCells(nEmb)
       require(cells == 16,
@@ -47,20 +28,23 @@ object Verify {
           "the verify corpus outgrew the static centroid-literal replay; " +
           s"regenerate ScaleOps.ivfCtes sizing for ${ivfFamily.mkString(", ")}")
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop intermediates operators persist/checkpoint (minhash base,
-      // CC labels) and finished streaming-replay state so they don't
-      // accumulate across the 100+ queries
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-      graft.streaming.QanStream.releaseReplayState(spark)
+    val failed = dump(spark, queries, sfDir, outDir)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each query's result to `outDir/<name>` (one parquet file)
+    * and every oracle to `outDir/oracle_sql.json`; a query that throws
+    * is skipped. Returns the names that threw.
+    */
+  def dump(spark: SparkSession, queries: Seq[(String, GraftSession.Query)],
+      sfDir: String, outDir: String): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = GraftSession.eachQuery(spark, queries, "verify") { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -77,6 +61,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

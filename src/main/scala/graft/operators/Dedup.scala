@@ -17,9 +17,7 @@ import graft.functions.expressions.GraftFunctions
 object Dedup {
 
   /** Pipeline defaults — ONE definition shared by the operators, the
-    * oracle constants inlined in ScaleOps, the specs, and the
-    * MinhashProbe diagnostic (which must attribute cost for the same
-    * pipeline production runs).
+    * oracle constants inlined in ScaleOps, and the specs.
     */
   val DefaultNgram = 3
   val DefaultK = 36
@@ -111,8 +109,6 @@ object Dedup {
     * corpus this is the difference between deduping the banding
     * pair budget (Σ C(occ,2), data-dependent and potentially 1000×
     * the true pair count) and deduping only near-threshold pairs.
-    * Cost-attribution for this exact shift lives in
-    * [[graft.tools.MinhashProbe]].
     */
   private[graft] def minhashCandidates(reps: DataFrame, textCol: String,
       n: Int, k: Int, bands: Int, bucketCap: Int,

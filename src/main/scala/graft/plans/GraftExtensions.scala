@@ -10,9 +10,9 @@ import graft.functions.expressions._
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`) and every session
   * gets the custom planner strategy plus the SQL-callable functions.
-  * For an already-running session (e.g. the driver-owned one in
-  * Verify/Bench), `GraftExtensions.install(spark)` registers the same
-  * pieces at runtime.
+  * For an already-running session (e.g. the one `graft.GraftSession`
+  * builds), the companion's `install(spark)` registers the same pieces
+  * at runtime.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -751,9 +751,7 @@ object Text {
   // per train doc. Gram hashing is md5-prefix based so DuckDB replays
   // it bit-exactly; the split rule is doc_hash_split's.
   /** The contamination gram stage — (doc_id, split, gram) with one
-    * row per distinct word-8-gram per document. Public so
-    * tools/CostProbe measures the EXECUTED stage (gram volumes, join
-    * input sizes), not a re-implementation; shared by
+    * row per distinct word-8-gram per document; shared by
     * doc_contamination and doc_bloom_prefilter.
     */
   def contaminationGrams(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =

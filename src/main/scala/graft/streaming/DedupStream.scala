@@ -56,9 +56,7 @@ object DedupStream {
     * batch, which is what lets it share a deterministic oracle.
     */
   /** The scan-side stage of [[minhashPairStream]]: grams → signature →
-    * banded bucket rows. Exposed so the cost probe (tools.StreamProbe)
-    * can measure the stateless compute and the stateful stages of the
-    * SAME executed plan separately.
+    * banded bucket rows.
     */
   def minhashBucketed(docs: DataFrame, k: Int = 36, bands: Int = 6): Dataset[BucketRow] = {
     import docs.sparkSession.implicits._

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.GraftSession
 
 /** Dump `.explain("formatted")` of selected queries to files — the
   * optimization-round evidence trail (plans/<tag>/<name>_<suffix>.txt).
@@ -17,42 +18,15 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "plans/r15"
     val suffix = if (args.length > 1) args(1) else "before"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession(GraftSession.cpus)
     Files.createDirectories(Paths.get(outDir))
-    graft.SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.write(Paths.get(s"$outDir/${name}_$suffix.txt"),
-            plan.getBytes("UTF-8"))
-          println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
-        }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-        graft.streaming.QanStream.releaseReplayState(spark)
-      }
+    GraftSession.eachQuery(spark, GraftSession.selected(), "plandump") { (name, fn) =>
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.write(Paths.get(s"$outDir/${name}_$suffix.txt"), plan.getBytes("UTF-8"))
+      println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
+    }
     spark.stop()
   }
 }

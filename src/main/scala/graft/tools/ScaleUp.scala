@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scaler: tiles the driver-generated testdata
@@ -48,14 +48,7 @@ object ScaleUp {
     // sign) pair is distinct up to 192 replicas (CRT of the 64-cycle
     // rotation and 3-cycle sign pattern) — the binding cap here.
     require(reps >= 1 && reps <= 192, s"replicas must be in [1, 192], got $reps")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.cpus)
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
     // multiplicative units of Z/26 — each (a, b) pair is a distinct

@@ -33,6 +33,14 @@ object Bridge {
       .map(e => e.getKey -> e.getValue).toMap
   }
 
+  /** Block until every event posted so far has reached every listener
+    * (the listener bus is private[spark]): a per-query trace reads its
+    * listeners only after the query's last job-end and progress events
+    * have been delivered.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a SQL-callable function backed by a Catalyst expression
     * builder, e.g. `registerFunction(spark, "simhash64", es => SimHash64(es.head))`.
     */

@@ -7,6 +7,23 @@ import graft.sources.OtelLogs
 
 class ExtensionsSpec extends SparkSpec {
 
+  // first in the suite, so no `install` call in this file has run yet
+  test("the spec session carries GraftSession's pinned confs and extensions") {
+    Seq(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+      "spark.driver.maxResultSize" -> "4g",
+      "spark.ui.enabled" -> "false"
+    ).foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    assert(spark.sparkContext.master == "local[4]")
+    val sh = spark.sql("SELECT simhash64('a b c')").collect()(0).getLong(0)
+    assert(sh == spark.range(1).select(
+      graft.functions.expressions.GraftFunctions.simhash64(lit("a b c"))).head.getLong(0))
+  }
+
   test("runtime-installed SQL functions evaluate through spark.sql") {
     GraftExtensions.install(spark)
     val r = spark.sql(

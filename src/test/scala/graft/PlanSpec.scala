@@ -188,9 +188,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("doc_tfidf_topk ranks through TopKPerGroup and broadcasts the corpus count") {
-    // the rewrite is an installed rule (Verify/Bench/production all
-    // install it); the bare test session needs it added explicitly
-    graft.plans.GraftExtensions.install(spark)
     val plan = executedPlan("doc_tfidf_topk")
     assert(plan.contains("TopKPerGroup"), s"row_number not rewritten:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),

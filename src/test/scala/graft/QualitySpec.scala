@@ -33,7 +33,6 @@ class QualitySpec extends SparkSpec {
   }
 
   test("bloom_agg / bloom_contains are callable from SQL") {
-    graft.plans.GraftExtensions.install(spark)
     import spark.implicits._
     Seq(1L, 2L, 3L).toDF("x").createOrReplaceTempView("bloom_probe_t")
     val hits = spark.sql("""

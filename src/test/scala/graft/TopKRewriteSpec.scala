@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
-
 /** The TopKRewriteRule optimizer rule: standard SQL
   * `row_number() <= k` window filters silently plan as the
   * bounded-heap TopKPerGroup operator (no Window, no Sort).
@@ -40,7 +38,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("row_number <= k rewrites to TopKPerGroup with identical results") {
-    GraftExtensions.install(spark)
     val df = run(topnSql)
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(optimized.contains("TopKPerGroup"), optimized)
@@ -57,7 +54,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("exact-rank and compound predicates keep their residual filter") {
-    GraftExtensions.install(spark)
     val df = run("""
       SELECT p_brand, p_partkey, rn FROM (
         SELECT p_brand, p_partkey, p_retailprice,
@@ -72,7 +68,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("partition-key conjuncts are pushed below the heap to the scan") {
-    GraftExtensions.install(spark)
     // pick a real brand so the result set is non-trivial
     val brand = Tables.part(spark, sf).select(min(col("p_brand")))
       .collect()(0).getString(0)
@@ -96,7 +91,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("rank() and global row_number do not rewrite") {
-    GraftExtensions.install(spark)
     // rank() can emit >k rows under ties — the heap cannot represent it
     val rankDf = run(topnSql.replace("row_number()", "rank()"))
     assert(!rankDf.queryExecution.optimizedPlan.toString.contains("TopKPerGroup"))

@@ -1,0 +1,20 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+class VerifySpec extends SparkSpec {
+
+  test("a throwing query is reported while every other query and the oracles are dumped") {
+    val out = Files.createTempDirectory("verify_dump").toString
+    val queries = Seq[(String, GraftSession.Query)](
+      "bad" -> ((_, _) => throw new IllegalStateException("boom")),
+      "good" -> ((s, d) => Tables.table(s, d, "region")))
+    val failed = Verify.dump(spark, queries, sf, out)
+    assert(failed == Seq("bad"))
+    assert(spark.read.parquet(s"$out/good").count() ==
+      Tables.table(spark, sf, "region").count())
+    assert(!Files.exists(Paths.get(s"$out/bad")))
+    val oracles = new String(Files.readAllBytes(Paths.get(s"$out/oracle_sql.json")), "UTF-8")
+    assert(oracles.contains("\"qan_top_queries\""))
+  }
+}
