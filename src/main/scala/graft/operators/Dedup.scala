@@ -276,7 +276,9 @@ object Dedup {
     *    propagation over the edge list; rounds are whole-stage joins
     *    (no driver graph state) and the iteration count is bounded by
     *    the component diameter — near-dup clusters are shallow, so
-    *    this converges in a handful of shuffles at any edge scale.
+    *    this converges in a handful of shuffles at any edge scale. A
+    *    run that has not converged after `maxIterations` rounds throws
+    *    `IllegalStateException` instead of returning upper-bound labels.
     *
     * @param ids   one column `id` — every node (incl. singletons)
     * @param pairs columns `a_id`, `b_id`
@@ -370,11 +372,15 @@ object Dedup {
       prevSum = Some(curSum)
       i += 1
     }
-    if (!converged)
-      System.err.println(
-        s"[graft] connectedComponents: NOT converged after $maxIterations rounds — " +
-          "labels are an upper bound; raise maxIterations for deeper components")
     edges.unpersist()
+    if (!converged) {
+      labels.unpersist()
+      // labels short of the fixpoint are only an upper bound: a cluster
+      // would be split in two, so fail rather than return them
+      throw new IllegalStateException(
+        s"connectedComponents: not converged after $maxIterations rounds; " +
+          "raise maxIterations for deeper components")
+    }
     labels
   }
 

@@ -73,19 +73,30 @@ object Par {
     */
   private val MaxJobThreads = 8
 
-  def jobs(work: (() => Unit)*): Unit = {
+  def jobs(work: (() => Unit)*): Unit = runJobs(work)
+
+  /** [[jobs]] with the pool's drain wait as a parameter, so a spec can
+    * force the stuck-pool path without waiting a minute.
+    */
+  private[graft] def runJobs(work: Seq[() => Unit], drainWaitMs: Long = 60000L): Unit = {
     if (work.size <= 1) { work.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(work.size, MaxJobThreads))
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
     val fs = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = w()
+      def call(): Unit = {
+        running.incrementAndGet()
+        try w() finally running.decrementAndGet(): Unit
+      }
     }))
     // First failure wins — but the pool is DRAINED before rethrowing:
     // cancel the siblings, stop the pool, and wait for every thread to
     // exit, so a failed store publish leaves no still-running sibling
     // write racing a caller's retry (which may re-list staging dirs).
     // The ExecutionException wrapper is unwrapped so callers (and test
-    // seams) see the original cause.
+    // seams) see the original cause. A worker that outlives the wait
+    // (it ignored the interrupt) is an error of its own: the caller
+    // must not go on while it still writes.
     var failure: Throwable = null
     fs.foreach { f =>
       if (failure == null) {
@@ -101,7 +112,12 @@ object Par {
       }
     }
     pool.shutdownNow()
-    pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+    if (!pool.awaitTermination(drainWaitMs, java.util.concurrent.TimeUnit.MILLISECONDS)) {
+      val stuck = new IllegalStateException(
+        s"Par.jobs: ${running.get} worker(s) still running ${drainWaitMs} ms after cancellation")
+      if (failure == null) throw stuck
+      failure.addSuppressed(stuck)
+    }
     if (failure != null) throw failure
   }
 

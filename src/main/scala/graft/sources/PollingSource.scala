@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -17,6 +20,13 @@ import org.apache.spark.sql.types.StructType
   * staging directory with `Trigger.AvailableNow` — the same
   * file-source machinery as QanStream.eventsStream, so everything
   * downstream (deltaFromRaw, rollups, governor) composes unchanged.
+  *
+  * One tick pays for one fetch and one state store: each poll runs the
+  * fetch once (the staged write counts its own rows through an
+  * `Observation`, so a live database is queried once per poll and the
+  * count is the snapshot that was staged), and a fresh drain sizes its
+  * state partitions to the staged input ([[statePartitions]]) instead
+  * of the replay harness's fixed 8.
   *
   * The fetch itself is injectable: production uses the JDBC reader
   * (executor-side partitioned scan), tests use a stub — the sandbox
@@ -68,25 +78,67 @@ object PollingSource {
     * fetch and write are executor-side jobs); `intervalMs` spaces the
     * polls like the reference's ticker, 0 in tests.
     *
-    * Returns the staged row count per poll (diagnostics).
+    * Each poll runs its fetch ONCE: the write carries an `Observation`
+    * that counts the rows it wrote, so nothing re-runs the fetch to
+    * count it. Returns, per poll, the number of rows staged.
     */
   def pollToStaging(spark: SparkSession, fetcher: SnapshotFetcher,
       polls: Int, stagingDir: String, intervalMs: Long = 0L,
       startIndex: Long = 0L,
       clock: Long => Long = _ => System.currentTimeMillis() * 1000L): Seq[Long] =
     (startIndex until startIndex + polls).map { i =>
-      val snap = fetcher.fetch(spark, i)
+      val rows = Observation(s"poll_$i")
+      fetcher.fetch(spark, i)
         .withColumn("poll_index", lit(i))
         .withColumn("poll_ts", lit(clock(i)))
-      snap.write.mode("append").parquet(stagingDir)
+        .observe(rows, count(lit(1)).as("rows"))
+        .write.mode("append").parquet(stagingDir)
       if (intervalMs > 0) Thread.sleep(intervalMs)
-      snap.count()
+      rows.get("rows").asInstanceOf[Long]
     }
 
   /** File-source stream over the staging directory. */
   def stagedStream(spark: SparkSession, stagingDir: String,
       schema: StructType): DataFrame =
     spark.readStream.schema(schema).parquet(stagingDir)
+
+  /** Input bytes one drain state partition is sized for: the advisory
+    * partition size the stores and `Par.widen` use too.
+    */
+  val StateBytesPerPartition: Long = 64L << 20
+
+  /** State partitions for `bytes` of stream input: one per
+    * [[StateBytesPerPartition]], clamped to `[1, cap]`.
+    */
+  def statePartitions(bytes: Long, cap: Int): Int =
+    math.max(1L, math.min(cap.toLong, bytes / StateBytesPerPartition +
+      (if (bytes % StateBytesPerPartition > 0) 1 else 0))).toInt
+
+  /** The state-partition count a drain of `df` into `checkpointDir`
+    * starts with. A fresh checkpoint gets [[statePartitions]] of the
+    * stream's file-source input (one listing per input path),
+    * capped at the session's `spark.sql.shuffle.partitions`. A
+    * checkpoint with an offset log keeps the count it was created with
+    * — Spark restores it from that log — so the listing is skipped.
+    */
+  private def drainPartitions(df: DataFrame, checkpointDir: String): Int = {
+    val spark = df.sparkSession
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val offsets = new Path(checkpointDir, "offsets")
+    val ofs = offsets.getFileSystem(hadoop)
+    if (ofs.exists(offsets) && ofs.listStatus(offsets).nonEmpty) return cap
+    val paths = df.queryExecution.logical.collect {
+      case r: StreamingRelation =>
+        r.dataSource.paths ++ CaseInsensitiveMap(r.dataSource.options).get("path")
+    }.flatten.distinct
+    val bytes = paths.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoop)
+      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+    }.sum
+    statePartitions(bytes, cap)
+  }
 
   /** Drain everything currently staged into a parquet sink and stop:
     * Trigger.AvailableNow processes all available input in
@@ -96,17 +148,15 @@ object PollingSource {
     * source offsets survive across drains through the checkpoint dir,
     * exactly like the reference's SnapshotStore surviving across poll
     * ticks; the file sink's commit log makes the output exactly-once.
+    *
+    * The drain starts with [[drainPartitions]] state partitions; each
+    * is one state store committed every micro-batch
+    * (`QanStream.startReplay` has the measured cost).
     */
   def drainAvailableNow(df: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    // stateful operators snapshot spark.sql.shuffle.partitions at
-    // query start and keep one state store per partition — at the
-    // session's batch-oriented setting a bounded drain spends its
-    // time committing near-empty store deltas, not computing deltas
-    // (the QanStream.runToMemoryQuery replay rule; production drains
-    // size this to their own key cardinality). Same set→start→restore
-    // critical section, serialized through the shared replay lock.
-    val q = graft.streaming.QanStream.startReplay(df.sparkSession) {
+    val parts = drainPartitions(df, checkpointDir)
+    val q = graft.streaming.QanStream.startReplay(df.sparkSession, parts) {
       df.writeStream
         .outputMode("append")
         .format("parquet")

@@ -452,42 +452,44 @@ object QanStream {
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
 
-  /** Start (but don't finish) a memory-sink query, for multi-batch
-    * driving in specs.
-    *
-    * Replay parallelism: stateful streaming operators snapshot
-    * `spark.sql.shuffle.partitions` at query start and keep one state
-    * store PER partition per stateful operator (a stream-stream join
-    * holds four) — at the session's batch-oriented 32 partitions a
-    * bounded replay spends its time committing 128 near-empty store
-    * deltas per micro-batch, not joining. Replays run at 8 partitions
-    * (results and cross-batch semantics are partition-count-invariant;
-    * the session conf is restored after start). Production queries
-    * size this to their own key cardinality — this knob is the
-    * replay harness's, not the operators'.
-    */
-  /** Guards the shuffle-partition override window below: the session
-    * conf is shared mutable state, so any OTHER query started between
-    * set and restore would silently snapshot 8 partitions. Every
-    * replay start in this repo goes through [[runToMemoryQuery]], so
-    * serializing the set→start→restore critical section closes the
-    * race within the harness (batch queries are unaffected — they
-    * read the conf at their own start, after restore).
+  /** Guards the shuffle-partition override window of [[startReplay]]:
+    * the session conf is shared mutable state, so any OTHER query
+    * started between set and restore would silently snapshot the
+    * override. Every streaming start in this repo goes through
+    * [[startReplay]], so serializing the set→start→restore critical
+    * section closes the race (batch queries are unaffected — they read
+    * the conf at their own start, after restore).
     */
   private val startLock = new Object
 
-  /** The one replay-start critical section: set the replay's 8
-    * shuffle partitions, start the streaming query, restore the
-    * session conf — serialized so no other query started concurrently
-    * can snapshot the override. Every streaming start in this repo
-    * (memory-sink replays, foreachBatch serves, the polling drain)
-    * goes through here.
+  /** The one streaming-start critical section: set `parts` shuffle
+    * partitions, start the query, restore the session conf — serialized
+    * so no other query started concurrently can snapshot the override.
+    * Every streaming start in this repo (memory-sink replays,
+    * foreachBatch serves, the polling drain) goes through here.
+    *
+    * Why the count is set per start: a stateful streaming operator
+    * snapshots `spark.sql.shuffle.partitions` when its checkpoint is
+    * created and keeps one versioned state store PER partition (a
+    * stream-stream join holds four), each of which opens, writes,
+    * checksums and commits its own delta file on every micro-batch,
+    * however few keys it holds. Measured on the collector's drain
+    * (~1,000 (instance, digest) keys, 4 vCPU, perfbench qan_monitor):
+    * 8 partitions spent 910 ms of a 1,321 ms trigger in state commit —
+    * about 110 ms per partition per batch — and 1 partition 54 ms. So
+    * the cost tracks the partition count, not the key count. The memory-sink and
+    * foreachBatch replays keep `parts` = 8; the polling drain passes
+    * one partition per 64 MB of its staged input
+    * (`PollingSource.statePartitions`). Results and cross-batch
+    * semantics are partition-count-invariant; a resumed checkpoint
+    * ignores `parts`, because Spark restores the count from its offset
+    * log.
     */
-  private[graft] def startReplay[T](spark: SparkSession)(start: => T): T =
+  private[graft] def startReplay[T](spark: SparkSession, parts: Int = 8)(start: => T): T =
     startLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "8")
+      spark.conf.set(key, parts.toString)
       try start
       finally prev match {
         case Some(v) => spark.conf.set(key, v)
@@ -495,6 +497,9 @@ object QanStream {
       }
     }
 
+  /** Start (but don't finish) a memory-sink query, for multi-batch
+    * driving in specs.
+    */
   def runToMemoryQuery(df: DataFrame, mode: OutputMode = OutputMode.Append()): MemorySink = {
     val name = s"st_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = startReplay(df.sparkSession) {

@@ -21,7 +21,9 @@ import graft.GraftSession
   *    delta on an unchanged plan is allocation/GC variance, not cost;
   *  - for a streaming query, its micro-batch progress summed over every
   *    stream it ran: batches with input, addBatch, state-store commit,
-  *    and the largest state (rows, MB).
+  *    the most state partitions any stateful operator ran with (each
+  *    partition is one store committed per batch), and the largest
+  *    state (rows, MB).
   *
   * Usage: SPARK_GRAFT_SF_DIR=<sfDir> SPARK_GRAFT_ONLY=doc_lex_compact_tiered \
   *        runMain graft.tools.QueryTrace
@@ -111,9 +113,10 @@ object QueryTrace {
       val state = batches.flatMap(_.stateOperators)
       val stateRows = if (state.isEmpty) 0L else state.map(_.numRowsTotal).max
       val stateMem = if (state.isEmpty) 0L else state.map(_.memoryUsedBytes).max
+      val stateParts = if (state.isEmpty) 0L else state.map(_.numShufflePartitions).max
       println(f"$tag stream queries=${progress.map(_.runId).distinct.size} " +
         f"batches=${batches.size} addBatch=${addBatch}ms " +
-        f"state_commit=${state.map(_.commitTimeMs).sum}ms " +
+        f"state_commit=${state.map(_.commitTimeMs).sum}ms state_parts=$stateParts " +
         f"state_rows=$stateRows state_mb=${stateMem / 1e6}%.1f")
     }
 }

@@ -129,6 +129,16 @@ class DedupSpec extends SparkSpec {
     assert(gotLoop == expected)
   }
 
+  test("connected components: a run short of its fixpoint throws instead of returning upper bounds") {
+    import spark.implicits._
+    // path 1-2-3-4: label 1 needs three rounds to reach node 4
+    val ids = (1L to 4L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_id", "b_id")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(ids, pairs, maxIterations = 1, driverEdgeCap = 0L))
+    assert(e.getMessage.contains("not converged after 1 rounds"))
+  }
+
   test("dedup clusters cover every document exactly once") {
     val out = SparkEntry.queries("doc_dedup_clusters")(spark, sf)
     val total = out.agg(sum("cluster_size")).collect()(0).getLong(0)
