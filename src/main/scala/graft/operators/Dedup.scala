@@ -276,9 +276,11 @@ object Dedup {
     *    propagation over the edge list; rounds are whole-stage joins
     *    (no driver graph state) and the iteration count is bounded by
     *    the component diameter — near-dup clusters are shallow, so
-    *    this converges in a handful of shuffles at any edge scale. A
-    *    run that has not converged after `maxIterations` rounds throws
-    *    `IllegalStateException` instead of returning upper-bound labels.
+    *    this converges in a handful of shuffles at any edge scale.
+    *    `maxIterations` bounds the propagation rounds; one more round
+    *    may run only to prove the fixpoint. A run whose labels still
+    *    change in that round throws `IllegalStateException` instead of
+    *    returning upper-bound labels.
     *
     * @param ids   one column `id` — every node (incl. singletons)
     * @param pairs columns `a_id`, `b_id`
@@ -346,9 +348,11 @@ object Dedup {
     var i = 0
     // labels are elementwise monotone non-increasing across rounds, so
     // an unchanged label SUM proves the fixpoint — one aggregate per
-    // round instead of a next-vs-previous join
+    // round instead of a next-vs-previous join. The proof takes the
+    // round after the labels settle, so labels that settle at round
+    // maxIterations get round maxIterations + 1 to show it
     var prevSum: Option[java.math.BigDecimal] = None
-    while (!converged && i < maxIterations) {
+    while (!converged && i <= maxIterations) {
       // each node's candidate = min(own label, min neighbor label)
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
@@ -378,7 +382,7 @@ object Dedup {
       // labels short of the fixpoint are only an upper bound: a cluster
       // would be split in two, so fail rather than return them
       throw new IllegalStateException(
-        s"connectedComponents: not converged after $maxIterations rounds; " +
+        s"connectedComponents: labels still changed after $maxIterations rounds; " +
           "raise maxIterations for deeper components")
     }
     labels

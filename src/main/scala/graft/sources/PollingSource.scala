@@ -1,9 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -24,9 +21,8 @@ import org.apache.spark.sql.types.StructType
   * One tick pays for one fetch and one state store: each poll runs the
   * fetch once (the staged write counts its own rows through an
   * `Observation`, so a live database is queried once per poll and the
-  * count is the snapshot that was staged), and a fresh drain sizes its
-  * state partitions to the staged input ([[statePartitions]]) instead
-  * of the replay harness's fixed 8.
+  * count is the snapshot that was staged), and a fresh drain starts
+  * with one state partition instead of the replay harness's fixed 8.
   *
   * The fetch itself is injectable: production uses the JDBC reader
   * (executor-side partitioned scan), tests use a stub — the sandbox
@@ -102,44 +98,6 @@ object PollingSource {
       schema: StructType): DataFrame =
     spark.readStream.schema(schema).parquet(stagingDir)
 
-  /** Input bytes one drain state partition is sized for: the advisory
-    * partition size the stores and `Par.widen` use too.
-    */
-  val StateBytesPerPartition: Long = 64L << 20
-
-  /** State partitions for `bytes` of stream input: one per
-    * [[StateBytesPerPartition]], clamped to `[1, cap]`.
-    */
-  def statePartitions(bytes: Long, cap: Int): Int =
-    math.max(1L, math.min(cap.toLong, bytes / StateBytesPerPartition +
-      (if (bytes % StateBytesPerPartition > 0) 1 else 0))).toInt
-
-  /** The state-partition count a drain of `df` into `checkpointDir`
-    * starts with. A fresh checkpoint gets [[statePartitions]] of the
-    * stream's file-source input (one listing per input path),
-    * capped at the session's `spark.sql.shuffle.partitions`. A
-    * checkpoint with an offset log keeps the count it was created with
-    * — Spark restores it from that log — so the listing is skipped.
-    */
-  private def drainPartitions(df: DataFrame, checkpointDir: String): Int = {
-    val spark = df.sparkSession
-    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val hadoop = spark.sparkContext.hadoopConfiguration
-    val offsets = new Path(checkpointDir, "offsets")
-    val ofs = offsets.getFileSystem(hadoop)
-    if (ofs.exists(offsets) && ofs.listStatus(offsets).nonEmpty) return cap
-    val paths = df.queryExecution.logical.collect {
-      case r: StreamingRelation =>
-        r.dataSource.paths ++ CaseInsensitiveMap(r.dataSource.options).get("path")
-    }.flatten.distinct
-    val bytes = paths.map { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(hadoop)
-      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-    }.sum
-    statePartitions(bytes, cap)
-  }
-
   /** Drain everything currently staged into a parquet sink and stop:
     * Trigger.AvailableNow processes all available input in
     * (rate-limited) micro-batches, checkpoints, and shuts the query
@@ -149,14 +107,16 @@ object PollingSource {
     * exactly like the reference's SnapshotStore surviving across poll
     * ticks; the file sink's commit log makes the output exactly-once.
     *
-    * The drain starts with [[drainPartitions]] state partitions; each
-    * is one state store committed every micro-batch
-    * (`QanStream.startReplay` has the measured cost).
+    * A fresh checkpoint starts with ONE state partition: every
+    * partition is a state store that commits a delta file each
+    * micro-batch however few keys it holds (`QanStream.startReplay`
+    * has the measured cost), and a collector tick carries about one
+    * key per (instance, digest). A resumed checkpoint keeps the count
+    * it was created with; Spark restores it from the offset log.
     */
   def drainAvailableNow(df: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val parts = drainPartitions(df, checkpointDir)
-    val q = graft.streaming.QanStream.startReplay(df.sparkSession, parts) {
+    val q = graft.streaming.QanStream.startReplay(df.sparkSession, parts = 1) {
       df.writeStream
         .outputMode("append")
         .format("parquet")

@@ -477,13 +477,12 @@ object QanStream {
     * (~1,000 (instance, digest) keys, 4 vCPU, perfbench qan_monitor):
     * 8 partitions spent 910 ms of a 1,321 ms trigger in state commit —
     * about 110 ms per partition per batch — and 1 partition 54 ms. So
-    * the cost tracks the partition count, not the key count. The memory-sink and
-    * foreachBatch replays keep `parts` = 8; the polling drain passes
-    * one partition per 64 MB of its staged input
-    * (`PollingSource.statePartitions`). Results and cross-batch
-    * semantics are partition-count-invariant; a resumed checkpoint
-    * ignores `parts`, because Spark restores the count from its offset
-    * log.
+    * the cost tracks the partition count, not the key count. The
+    * memory-sink and foreachBatch replays keep `parts` = 8; the polling
+    * drain passes 1 (`PollingSource.drainAvailableNow`). Results and
+    * cross-batch semantics are partition-count-invariant; a resumed
+    * checkpoint ignores `parts`, because Spark restores the count from
+    * its offset log.
     */
   private[graft] def startReplay[T](spark: SparkSession, parts: Int = 8)(start: => T): T =
     startLock.synchronized {

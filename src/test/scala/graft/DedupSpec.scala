@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.{GraftFunctions, PolyHash}
@@ -136,7 +136,24 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_id", "b_id")
     val e = intercept[IllegalStateException](
       Dedup.connectedComponents(ids, pairs, maxIterations = 1, driverEdgeCap = 0L))
-    assert(e.getMessage.contains("not converged after 1 rounds"))
+    assert(e.getMessage.contains("labels still changed after 1 rounds"))
+    // one round short of the fixpoint still throws
+    intercept[IllegalStateException](
+      Dedup.connectedComponents(ids, pairs, maxIterations = 2, driverEdgeCap = 0L))
+  }
+
+  test("connected components: labels that settle at round maxIterations are returned") {
+    import spark.implicits._
+    def labels(ids: DataFrame, pairs: DataFrame, rounds: Int): Map[Long, Long] =
+      Dedup.connectedComponents(ids, pairs, maxIterations = rounds, driverEdgeCap = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // path 1-2-3-4 settles at round 3
+    val ids = (1L to 4L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_id", "b_id")
+    assert(labels(ids, pairs, 3) == (1L to 4L).map(_ -> 1L).toMap)
+    // no edges: the labels are settled from round 1
+    val none = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    assert(labels(ids, none, 1) == (1L to 4L).map(n => n -> n).toMap)
   }
 
   test("dedup clusters cover every document exactly once") {

@@ -111,14 +111,6 @@ class PollingSpec extends SparkSpec {
     assert(counts == Seq(0L, 1L, 2L))
   }
 
-  test("drain state partitions: one per 64 MB of staged input, capped") {
-    val cap = 4
-    assert(PollingSource.statePartitions(0L, cap) == 1)
-    assert(PollingSource.statePartitions(PollingSource.StateBytesPerPartition - 1, cap) == 1)
-    assert(PollingSource.statePartitions(PollingSource.StateBytesPerPartition + 1, cap) == 2)
-    assert(PollingSource.statePartitions(Long.MaxValue, cap) == cap)
-  }
-
   test("a fresh drain keeps one state store; a resumed 8-partition checkpoint keeps 8") {
     val clock: Long => Long = i => i * 30_000_000L
     def run(resume8: Boolean): (Map[(String, Long), Double], Int) = {
@@ -132,7 +124,7 @@ class PollingSpec extends SparkSpec {
         counterEvents(PollingSource.stagedStream(spark, staging, schema))).toDF()
       if (resume8) {
         // the checkpoint an 8-partition drain created: started directly,
-        // the way every drain was started before the sizing rule
+        // the way every drain was started before drains took one partition
         val key = "spark.sql.shuffle.partitions"
         val prev = spark.conf.get(key)
         spark.conf.set(key, "8")
