@@ -489,7 +489,7 @@ object LexIndex {
     * append and ingest stages; `failAfter = "stage-partial"` stages
     * only postings and df (the crash seam with SOME tables staged).
     */
-  private def writeTables(docs: DataFrame, root: String,
+  private[graft] def writeTables(docs: DataFrame, root: String,
       failAfter: String): Unit = {
     val post = postings(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
