@@ -401,12 +401,13 @@ object IvfPq {
 
   /** The coded file is one `cell=`-partitioned [[SegmentStore]]
     * table: batch appends publish `append-<n>-<k>.parquet` under the
-    * touched cells, committed by `_append_commits/<n>`; streaming
-    * ingest publishes `ingest-<b>-<k>.parquet`; tombstones carry `id`.
+    * touched cells; streaming ingest publishes `ingest-<b>-<k>.parquet`;
+    * tombstones carry `id`. The trained tables sit beside it, outside
+    * the manifest: a build writes them once and nothing mutates them.
     */
   private[graft] val layout = SegmentStore.Layout(
     tables = Seq("inverted"), partitioned = true, appendPrefix = "append",
-    appendMarkers = "_append_commits", appendTag = "", tombstoneKey = "id")
+    appendTag = "", tombstoneKey = "id")
 
   /** The trained tables: one regime's index tables, the codebooks and
     * the meta row — copied whole by a merge, never segmented.
@@ -479,6 +480,7 @@ object IvfPq {
         .select(col("id"), col("codes"), col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/inverted"))
       ++ trained): _*)
+    SegmentStore.commitBuild(spark, dir, layout)
   }
 
   // ---------------------------------------------- distributed build
@@ -576,8 +578,8 @@ object IvfPq {
     *
     * CRASH-ATOMIC by [[SegmentStore.appendSegment]]: a torn append
     * (some cells' files in, others not) is INVISIBLE to
-    * [[loadIndex]] / [[compactIndex]] / [[mergeIndexes]] and rolled
-    * back by the next call; the STREAMING path [[appendBatchToIndex]]
+    * [[loadIndex]] / [[compactIndex]] / [[mergeIndexes]] and replaced
+    * by the next call; the STREAMING path [[appendBatchToIndex]]
     * instead resumes by batchId. `failAfter` is the crash-window test
     * seam ("staged" dies before any publish, "publish-partial" after
     * the first cell's publish).
@@ -597,25 +599,26 @@ object IvfPq {
     SegmentStore.appendSegment(delta.sparkSession, dir, layout, failAfter)(
       stageCoded(index, books, dsub, delta, _))
 
-  /** Stage the coded rows of `delta` under frozen halves as a
-    * cell-partitioned table at `staging` — one deterministic file per
-    * touched cell, so a replay reproduces the same files.
+  /** Stage the coded rows of `delta` under frozen halves as the
+    * cell-partitioned `inverted` table under `staging` — one
+    * deterministic file per touched cell, so a replay reproduces the
+    * same files.
     */
   private[graft] def stageCoded(index: Index, books: Array[Array[Array[Double]]],
       dsub: Int, delta: DataFrame, staging: String): Unit =
     codedInvertedFile(index, delta, books, dsub)
       .select(col("id"), col("codes"), col("cell"))
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$staging/inverted")
 
-  /** The stored coded file, LIVE files only (torn appends invisible):
-    * load and compaction discovery and rewrite read through this view
-    * and the merge copies the same live file set, so an uncommitted
-    * append can never be served, folded into a compaction, or cross a
-    * merge.
+  /** The coded file of manifest version `m`: load and compaction
+    * discovery and rewrite read through this view and the merge copies
+    * the same file set, so an uncommitted append can never be served,
+    * folded into a compaction, or cross a merge.
     */
-  private def readInverted(spark: SparkSession, dir: String): DataFrame =
-    SegmentStore.read(spark, dir, layout, "inverted", invertedSchema)
+  private def readInverted(spark: SparkSession, dir: String,
+      m: SegmentStore.Manifest): DataFrame =
+    SegmentStore.read(spark, dir, layout, m, "inverted", invertedSchema)
 
   /** [[appendToIndex]] for STREAMING ingest — idempotent under
     * micro-batch retry by [[SegmentStore.ingestBatch]] (a plain
@@ -645,78 +648,46 @@ object IvfPq {
     * touched `cell=` partitions (an unbounded ingest stream would
     * eventually make cell scans file-count-bound), and tombstoned
     * rows accumulate read-side anti-join work. Rewrites ONLY the
-    * touched cells — fragmented (more than one parquet file) or
-    * holding at least one tombstoned row — via dynamic partition
-    * overwrite, dropping tombstoned rows as it goes; untouched cells'
-    * files are left exactly as written. Rewrite work is proportional
-    * to fragmentation + deletes, not store size; tombstone-cell
-    * DISCOVERY is one column-pruned store scan (the id column plus the
-    * directory-encoded cell value — the codes payload is never read).
-    * Live content is bit-preserved (AnnSpec pins it); returns the
-    * rewritten cell ids.
-    *
-    * Durability follows SegmentStore's tombstone-snapshot rule (single
-    * concurrent compactor assumed; AnnSpec pins the crash window); the
-    * cell-overwrite specific: a touched cell whose every row is
-    * tombstoned produces ZERO output rows, which dynamic partition
-    * overwrite would leave in place (it only replaces partitions
-    * present in the written data) — those cell directories are
-    * deleted explicitly, before the snapshot clear, so a full-cell
-    * takedown cannot resurrect.
+    * touched cells — fragmented (more than one live file) or holding
+    * at least one tombstoned row — into one staged file per surviving
+    * cell, and swaps them in for the cells' old files with the
+    * tombstone snapshot retired, in one manifest version
+    * ([[SegmentStore.swapCompaction]]); a cell whose every row is
+    * tombstoned simply has no file in the new version. Untouched
+    * cells' files are left exactly as written. Rewrite work is
+    * proportional to fragmentation + deletes, not store size;
+    * tombstone-cell DISCOVERY is one column-pruned store scan (the id
+    * column plus the directory-encoded cell value — the codes payload
+    * is never read). Live content is bit-preserved (AnnSpec pins it);
+    * returns the rewritten cell ids.
     */
   def compactIndex(spark: SparkSession, dir: String): Seq[Int] = {
-    val inv = new org.apache.hadoop.fs.Path(s"$dir/inverted")
-    val fs = inv.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(inv)) return Seq.empty
-    val fragmented = fs.listStatus(inv).filter(_.isDirectory).flatMap { st =>
-      val name = st.getPath.getName
-      if (!name.startsWith("cell=")) None
-      else {
-        val files = fs.listStatus(st.getPath)
-          .count(_.getPath.getName.endsWith(".parquet"))
-        if (files > 1) Some(name.stripPrefix("cell=").toInt) else None
-      }
-    }.toSeq
-    val (tombFiles, tombs) = SegmentStore.tombstoneSnapshot(spark, dir, layout)
+    val m = SegmentStore.open(spark, dir)
+    def cellOf(rel: String): Int =
+      rel.split("/")(1).stripPrefix("cell=").toInt
+    val fragmented = m.of("inverted").groupBy(cellOf).filter(_._2.size > 1).keys.toSeq
+    val tombs = SegmentStore.tombstones(spark, dir, layout, m)
     // cells holding a tombstoned row: a semi-join of the store against
     // the small tombstone set, collected as (<= cell-count) ints —
     // column pruning reaches the scan, so only `id` (and the cell
     // partition value) is read, never the codes
     val tombCells =
-      if (tombFiles.isEmpty) Seq.empty[Int]
-      else readInverted(spark, dir)
+      if (m.tombstones.isEmpty) Seq.empty[Int]
+      else readInverted(spark, dir, m)
         .join(broadcast(tombs), Seq("id"), "left_semi")
         .select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
     val touched = (fragmented ++ tombCells).distinct.sorted
-    if (touched.nonEmpty) {
-      // localCheckpoint truncates the lineage off the source path so
-      // the self-overwrite is legal; only touched cells are read —
-      // LIVE files only: a torn (uncommitted) append must never be
-      // folded into the rewrite (the overwrite also clears its
-      // invisible garbage from the touched cells)
-      val rows = readInverted(spark, dir)
-        .filter(col("cell").isin(touched: _*))
+    val rewritten = m.of("inverted").filter(f => touched.contains(cellOf(f)))
+    val staging = SegmentStore.compactionStaging(spark, dir)
+    if (touched.nonEmpty)
+      SegmentStore.readFiles(spark, dir, layout, "inverted", invertedSchema,
+          rewritten.map(f => new org.apache.hadoop.fs.Path(s"$dir/$f")))
         .join(broadcast(tombs), Seq("id"), "left_anti")
         .repartition(col("cell")) // co-locate each cell → one file per cell
-        .localCheckpoint(true)
-      // a touched cell with zero surviving rows is absent from the
-      // written data — dynamic overwrite won't replace it; delete it
-      val surviving = rows.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      // per-write dynamic overwrite: the session conf is shared with
-      // every concurrent job on the session and stays untouched
-      rows.select(col("id"), col("codes"), col("cell"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(s"$dir/inverted")
-      rows.unpersist()
-      touched.filterNot(surviving).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/inverted/cell=$c"), true): Unit
-      }
-    }
-    // every snapshotted tombstone sat in a touched cell (or never
-    // existed in the store) — the snapshot is applied; clear ONLY it,
-    // strictly after all physical removals above
-    SegmentStore.clearTombstones(fs, dir, tombFiles.map(_.getName))
+        .select(col("id"), col("codes"), col("cell"))
+        .write.partitionBy("cell").parquet(s"$staging/inverted")
+    SegmentStore.swapCompaction(spark, dir, layout, m, "",
+      Map("inverted" -> rewritten), fenced = false)
     touched
   }
 
@@ -724,7 +695,7 @@ object IvfPq {
     * error) when no delete has landed since the last compaction.
     */
   def tombstonesOf(spark: SparkSession, dir: String): DataFrame =
-    SegmentStore.tombstones(spark, dir, layout)
+    SegmentStore.tombstones(spark, dir, layout, SegmentStore.open(spark, dir))
 
   /** Deterministic scratch location for the persisted index artifact
     * of an sf dir — /tmp scratch (the ScaleUp-tile convention), never
@@ -754,6 +725,7 @@ object IvfPq {
     * relations rather than failing schema inference.
     */
   def loadIndex(spark: SparkSession, dir: String): Loaded = {
+    val m = SegmentStore.open(spark, dir)
     val meta = spark.read.schema(metaSchema).parquet(s"$dir/meta").collect()
     require(meta.length == 1, s"loadIndex: bad meta at $dir")
     val (regime, dsub, wProbe) =
@@ -763,11 +735,10 @@ object IvfPq {
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
       (rows.map(_._1), rows.map(_._2))
     }
-    // the three remaining loads are independent once meta pins the
-    // regime: the trained-half collects (tiny tables, but each is a
-    // full driver job round-trip) and the coded file's liveness
-    // listing (a driver-side fs walk) — overlapped (guide §2.6; at
-    // delta scale the per-job scheduling latency IS the load cost)
+    // the remaining loads are independent once meta pins the regime:
+    // the trained-half collects (tiny tables, but each is a full
+    // driver job round-trip) — overlapped (guide §2.6; at delta scale
+    // the per-job scheduling latency IS the load cost)
     val ((index, inverted), books) = Par.two(
       () => {
         val idx: Index = regime match {
@@ -779,7 +750,7 @@ object IvfPq {
             val groups = spark.read.schema(groupSchema).parquet(s"$dir/groups")
             TwoLevelIndexW(AnnIvf.TwoLevelIndex(cids, ccents, groups), wProbe)
         }
-        (idx, readInverted(spark, dir)
+        (idx, readInverted(spark, dir, m)
           .select(col("cell"), col("id"), col("codes")))
       },
       () => {
@@ -792,6 +763,6 @@ object IvfPq {
           bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
       })
     Loaded(index, books, dsub, inverted,
-      SegmentStore.liveGate(spark, dir, layout)(inverted))
+      SegmentStore.liveGate(spark, dir, layout, m)(inverted))
   }
 }

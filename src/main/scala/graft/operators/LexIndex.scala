@@ -24,15 +24,15 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType
   *     target segments without ever consulting the original corpus.
   *   - `totals/` (n_corpus, t_total) — one row per segment.
   *
-  * The four tables are one [[SegmentStore]] (segments, commit markers,
-  * torn-publish invisibility, tombstones, ingest commits, merge — the
-  * protocol is described there). This store's segment names: the
-  * build's plain `part-*` files (segment `base`), batch appends
-  * `seg-a<n>-<k>.parquet` and compaction rewrites `seg-c<n>-…`, both
-  * committed by `_segments/<id>`, streaming ingest
-  * `ingest-<b>-<k>.parquet`, and merged shard slices `shard<i>-…`
-  * ([[segmentOf]]). [[loadIndex]] sees all four tables of a segment
-  * or none of it, never torn statistics.
+  * The four tables are one [[SegmentStore]] (one manifest log per
+  * store: torn-publish invisibility, tombstones, ingest receipts,
+  * merge — the protocol is described there). This store's segment
+  * names: the build's plain `part-*` files (segment `base`), batch
+  * appends `seg-a<n>-<k>.parquet` and compaction rewrites `seg-c<n>-…`,
+  * streaming ingest `ingest-<b>-<k>.parquet`, and merged shard slices
+  * `shard<i>-…` ([[segmentOf]]). A segment becomes live in the one
+  * manifest version that names all its files, so [[loadIndex]] sees
+  * all four tables of a segment or none of it, never torn statistics.
   *
   * Every write is deterministic (pure aggregates of the corpus), so a
   * loaded index reproduces the inline frames bit for bit — the oracle
@@ -182,8 +182,7 @@ object LexIndex {
     */
   private[graft] val layout = SegmentStore.Layout(
     tables = Seq("postings", "df", "dl", "totals"), partitioned = false,
-    appendPrefix = "seg", appendMarkers = "_segments", appendTag = "a",
-    tombstoneKey = "doc_id")
+    appendPrefix = "seg", appendTag = "a", tombstoneKey = "doc_id")
 
   // ------------------------------------------------- segment plumbing
 
@@ -204,10 +203,12 @@ object LexIndex {
       case _ => "base"
     }
 
-  /** The LIVE data files of one store table ([[SegmentStore.liveFiles]]). */
+  /** The live data files of one store table, as its latest manifest
+    * version names them.
+    */
   private[graft] def liveFiles(spark: SparkSession, dir: String,
       table: String): Seq[org.apache.hadoop.fs.Path] =
-    SegmentStore.liveFiles(spark, dir, layout, table)
+    SegmentStore.files(dir, SegmentStore.open(spark, dir), table)
 
   private def schemaOf(table: String): StructType = table match {
     case "postings" => postingSchema
@@ -302,12 +303,13 @@ object LexIndex {
   /** Build and persist the lexical index: ONE corpus tokenization
     * pass, the three derived aggregates, four parquet tables. The
     * target dir is replaced wholesale (the encodeShard discipline —
-    * destructive intent is total and explicit; a torn build is
-    * recovered by rebuilding, so the base segment needs no marker).
+    * destructive intent is total and explicit; a torn build has no
+    * manifest version and is recovered by rebuilding).
     */
   def buildIndex(docs: DataFrame, dir: String): Unit = {
     SegmentStore.reset(docs.sparkSession, dir)
     writeTables(docs, dir, "")
+    SegmentStore.commitBuild(docs.sparkSession, dir, layout)
   }
 
   /** The serve path's posting access: a broadcast join alone does NOT
@@ -411,19 +413,20 @@ object LexIndex {
       dl: DataFrame, totals: DataFrame, livePostings: DataFrame,
       liveDl: DataFrame)
 
-  /** Load a stored index: LIVE files only (committed segments — see
-    * the segment header; a torn multi-table publish is invisible),
-    * segment-summed df/totals views, tombstone-gated live views.
+  /** Load a stored index: the files of its latest manifest version
+    * (a torn multi-table publish is invisible), segment-summed
+    * df/totals views, tombstone-gated live views.
     */
   def loadIndex(spark: SparkSession, dir: String): Loaded = {
-    def read(t: String) = SegmentStore.read(spark, dir, layout, t, schemaOf(t))
+    val m = SegmentStore.open(spark, dir)
+    def read(t: String) = SegmentStore.read(spark, dir, layout, m, t, schemaOf(t))
     val postings = read("postings")
     val df = read("df").groupBy(col("token")).agg(sum(col("df")).as("df"))
     val dl = read("dl")
     val totals = read("totals")
       .agg(coalesce(sum(col("n_corpus")), lit(0L)).as("n_corpus"),
         coalesce(sum(col("t_total")), lit(0L)).as("t_total"))
-    val live = SegmentStore.liveGate(spark, dir, layout)
+    val live = SegmentStore.liveGate(spark, dir, layout, m)
     Loaded(postings, df, dl, totals, live(postings), live(dl))
   }
 
@@ -470,18 +473,16 @@ object LexIndex {
   //    untouched segments' df/dl/totals rows had no tombstoned docs
   //    by definition, and the new segment's rows are re-derived from
   //    its survivors (n_corpus from the dl roster — null-text-safe).
-  //    The rewrite publishes through SegmentStore's plan-replay
-  //    compaction publish (crash resume, tombstone ordering).
+  //    The rewrite goes live in one SegmentStore manifest swap, which
+  //    retires the applied tombstones in the same version.
   //
-  // Streaming-ingest fencing: a store carrying `_ingest_commits`
-  // receipts is REFUSED by default (an ingest publish racing the
-  // compactor's drops would be erased while its marker survives,
-  // permanently losing rows). Passing `ingestFenced = true` asserts
-  // the stream is STOPPED for good; compaction then folds every
-  // ingest segment into the rewrite and clears the receipts — a store
-  // accepts at most ONE stream lifetime between compactions, and the
-  // next stream starts a fresh checkpoint (batchIds restart at 0
-  // against cleared markers).
+  // Streaming-ingest fencing: a store carrying ingest receipts is
+  // REFUSED by default (its stream may still be landing batches).
+  // Passing `ingestFenced = true` asserts the stream is STOPPED for
+  // good; compaction then folds every ingest segment into the rewrite
+  // and clears the receipts — a store accepts at most ONE stream
+  // lifetime between compactions, and the next stream starts a fresh
+  // checkpoint (batchIds restart at 0 against cleared receipts).
 
   /** The four tables of one tokenized document set under `root` —
     * delta-sized independent jobs over the materialized posting cache,
@@ -513,8 +514,8 @@ object LexIndex {
     * segment `seg-a<n>` — one tokenization pass over the delta,
     * delta-sized writes only, crash-atomic by
     * [[SegmentStore.appendSegment]] (a torn append is invisible to
-    * [[loadIndex]] and rolled back by the next call; the STREAMING
-    * path [[appendBatchToIndex]] instead resumes by batchId).
+    * [[loadIndex]] and replaced by the next call; the STREAMING path
+    * [[appendBatchToIndex]] instead resumes by batchId).
     * `failAfter` is the crash-window test seam: "stage-partial" dies
     * between table writes, "staged" after the staging completes, and
     * "publish-partial" after the postings publish.
@@ -536,7 +537,7 @@ object LexIndex {
     * has landed since the last compaction.
     */
   def tombstonesOf(spark: SparkSession, dir: String): DataFrame =
-    SegmentStore.tombstones(spark, dir, layout)
+    SegmentStore.tombstones(spark, dir, layout, SegmentStore.open(spark, dir))
 
   /** The live segments whose dl roster holds any of `docIds` — the
     * touched-segment discovery of [[compactIndex]] and the
@@ -559,84 +560,79 @@ object LexIndex {
 
   /** SEGMENT-LOCAL compaction (see the lifecycle header): discover
     * the segments holding tombstoned docs through the dl roster,
-    * rewrite ONLY those (survivors folded into one new committed
-    * segment `seg-c<n>`, statistics re-derived from the segment's own
-    * rows), drop the old segments' files, clear the tombstone
-    * snapshot — published by SegmentStore's plan replay. Untouched
-    * segments' files are never opened for write — work is ∝ touched
-    * segments, not store size. `failAfterStage` is the crash-window
-    * test seam (stage + plan + marker land, publish does not — the
-    * next call must resume the plan). `ingestFenced` asserts no
-    * ingest stream is running and folds + clears the stream's
-    * receipts (see the fencing note above); without it a store
-    * carrying `_ingest_commits` is refused.
+    * rewrite ONLY those (survivors folded into one new segment
+    * `seg-c<n>`, statistics re-derived from the segment's own rows) and
+    * swap them in for the old segments' files with the tombstone
+    * snapshot retired, in one manifest version. Untouched segments'
+    * files are never opened for write — work is ∝ touched segments,
+    * not store size. `failAfterStage` is the crash-window test seam
+    * (staged, not swapped: the old version stays in force and the next
+    * call starts over). `ingestFenced` asserts no ingest stream is
+    * running and folds + clears the stream's receipts (see the fencing
+    * note above); without it a store carrying ingest receipts is
+    * refused.
     */
   def compactIndex(spark: SparkSession, dir: String,
       failAfterStage: Boolean = false, ingestFenced: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = SegmentStore.fsOf(spark, dir)
-    if (SegmentStore.resumeCompaction(fs, dir, layout)) return
-    val ingestMarkers = new Path(s"$dir/${SegmentStore.IngestMarkers}")
-    require(!fs.exists(ingestMarkers) || ingestFenced,
-      s"compactIndex: store $dir carries _ingest_commits receipts - an " +
-        "ingest stream may be live, and its publishes would race the " +
-        "compactor's drops (rows erased, marker kept). Stop the stream " +
-        "for good and pass ingestFenced = true to fold the stream's " +
-        "segments and clear its receipts (one stream lifetime per " +
-        "compaction cycle; the next stream needs a fresh checkpoint)")
-    val (tombFiles, tombs) = SegmentStore.tombstoneSnapshot(spark, dir, layout)
+    val m = SegmentStore.open(spark, dir)
+    require(m.batches.isEmpty || ingestFenced,
+      s"compactIndex: store $dir carries ingest receipts - an ingest " +
+        "stream may be live. Stop the stream for good and pass " +
+        "ingestFenced = true to fold the stream's segments and clear its " +
+        "receipts (one stream lifetime per compaction cycle; the next " +
+        "stream needs a fresh checkpoint)")
+    val tombs = SegmentStore.tombstones(spark, dir, layout, m)
     // touched segments: the dl roster rows of tombstoned docs,
     // attributed to their segment files ([[segmentsHolding]] — one
     // scan of the doc-count-sized dl table)
     val touchedBySnapshot: Set[String] =
-      if (tombFiles.isEmpty) Set.empty
+      if (m.tombstones.isEmpty) Set.empty
       else segmentsHolding(spark, dir, tombs)
     val fencedIngest: Set[String] =
       if (!ingestFenced) Set.empty
-      else layout.tables.flatMap(t => segmentsOf(spark, dir, t).keys)
+      else layout.tables.flatMap(m.of).map(f => segmentOf(name(f)))
         .filter(_.startsWith("ingest-")).toSet
     val touched = touchedBySnapshot ++ fencedIngest
-    if (touched.isEmpty) {
-      // nothing physical to rewrite: the snapshot's docs are in no
-      // live segment (spurious or already-compacted deletes) — the
-      // snapshot is trivially applied; clear it
-      SegmentStore.clearTombstones(fs, dir, tombFiles.map(_.getName))
-      if (ingestFenced && fs.exists(ingestMarkers))
-        fs.delete(ingestMarkers, true): Unit
-      return
+    val staging = SegmentStore.compactionStaging(spark, dir)
+    val touchedFiles: Map[String, Seq[String]] = layout.tables.map(t =>
+      t -> m.of(t).filter(f => touched(segmentOf(name(f))))).toMap
+    // nothing physical to rewrite when the snapshot's docs are in no
+    // live segment (spurious or already-compacted deletes): the swap
+    // then only retires the snapshot
+    if (touched.nonEmpty) {
+      def readTouched(t: String): DataFrame =
+        readFiles(spark, dir, t, touchedFiles(t).map(f => new org.apache.hadoop.fs.Path(s"$dir/$f")))
+      def staged(t: String): String = s"$staging/$t"
+      // stage the rewritten segment: survivors of the touched segments
+      // only — every other segment's files are never opened. All four
+      // staged tables derive from the two persisted survivor frames
+      // (postings survivors; the dl ROSTER's survivors — null-text-safe:
+      // a doc with no postings still owns a dl row), so they run as ONE
+      // overlapped barrier instead of write-two → read-back → write-two
+      // (the aggregates are deterministic over the same survivor rows,
+      // so the staged bytes are identical to the read-back form's).
+      val touchedPost = readTouched("postings")
+      val n = rangeParts(touchedPost)
+      val sp = touchedPost.join(broadcast(tombs), Seq("doc_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sdl = readTouched("dl")
+        .join(broadcast(tombs), Seq("doc_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try inParallel(
+        () => tokenSorted(sp, n).write.mode("overwrite").parquet(staged("postings")),
+        () => sdl.write.mode("overwrite").parquet(staged("dl")),
+        () => tokenSorted(dfOf(sp), n).write.mode("overwrite").parquet(staged("df")),
+        () => sdl.agg(count(lit(1)).as("n_corpus"))
+          .crossJoin(sp.agg(coalesce(sum(col("tf")), lit(0L)).as("t_total")))
+          .write.mode("overwrite").parquet(staged("totals")))
+      finally { sp.unpersist(): Unit; sdl.unpersist(): Unit }
     }
-    val newId = SegmentStore.nextId(fs, new Path(s"$dir/${layout.appendMarkers}"), "c")
-    val touchedFiles: Map[String, Seq[Path]] = layout.tables.map(t =>
-      t -> liveFiles(spark, dir, t)
-        .filter(p => touched(segmentOf(p.getName)))).toMap
-    def readTouched(t: String): DataFrame = readFiles(spark, dir, t, touchedFiles(t))
-    def staged(t: String): String = SegmentStore.compactionStaging(dir, t)
-    // stage the rewritten segment: survivors of the touched segments
-    // only — every other segment's files are never opened. All four
-    // staged tables derive from the two persisted survivor frames
-    // (postings survivors; the dl ROSTER's survivors — null-text-safe:
-    // a doc with no postings still owns a dl row), so they run as ONE
-    // overlapped barrier instead of write-two → read-back → write-two
-    // (the aggregates are deterministic over the same survivor rows,
-    // so the staged bytes are identical to the read-back form's).
-    val touchedPost = readTouched("postings")
-    val n = rangeParts(touchedPost)
-    val sp = touchedPost.join(broadcast(tombs), Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sdl = readTouched("dl")
-      .join(broadcast(tombs), Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try inParallel(
-      () => tokenSorted(sp, n).write.parquet(staged("postings")),
-      () => sdl.write.parquet(staged("dl")),
-      () => tokenSorted(dfOf(sp), n).write.parquet(staged("df")),
-      () => sdl.agg(count(lit(1)).as("n_corpus"))
-        .crossJoin(sp.agg(coalesce(sum(col("tf")), lit(0L)).as("t_total")))
-        .write.parquet(staged("totals")))
-    finally { sp.unpersist(): Unit; sdl.unpersist(): Unit }
-    SegmentStore.commitCompactionPlan(fs, dir, layout, newId, touchedFiles,
-      touched, ingestFenced, tombFiles, failAfterStage)
+    if (failAfterStage) return
+    SegmentStore.swapCompaction(spark, dir, layout, m,
+      s"seg-${SegmentStore.nextId(m, "seg", "c")}", touchedFiles, ingestFenced)
   }
+
+  private def name(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
 
   /** Merge self-contained shard stores into one serving artifact —
     * how a 100 TB corpus is ACTUALLY tokenized: no single job runs
@@ -644,7 +640,7 @@ object LexIndex {
     * over its doc slice ([[buildIndex]] — there are no trained halves
     * on the lexical side, so unlike IvfPq.mergeIndexes nothing needs
     * cross-shard equality verification), and
-    * [[SegmentStore.mergeShards]] copies every shard's LIVE files
+    * [[SegmentStore.mergeShards]] copies every shard's live files
     * shard-tagged under the output tables. Correct because the store
     * is ADDITIVE SEGMENTS by design: postings/dl rows are doc-disjoint
     * across shards and loadIndex's segment-summed df/totals views

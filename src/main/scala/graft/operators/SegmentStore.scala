@@ -1,7 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -10,121 +13,107 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * `cell=`-partitioned coded file). The indexes own their layouts and
   * their math; everything below is defined once, here.
   *
-  * SEGMENTS AND COMMIT MARKERS (the LSM/table-format discipline).
-  * Every mutating write lands as a NAMED SEGMENT — a deterministic
-  * set of data files across the store's tables plus a commit marker —
-  * and readers only see files whose segment is committed:
-  *   - the base build writes plain `part-*` files (the implicit base
-  *     segment, always live — a build replaces the dir wholesale
-  *     ([[reset]]), so a torn build is a torn store and the recovery
-  *     is rebuild);
-  *   - a batch append publishes `<appendPrefix>-<id>-<n>.parquet`
-  *     files, live only once `<appendMarkers>/<id>` exists
-  *     ([[appendSegment]]);
-  *   - a streaming ingest batch publishes `ingest-<b>-<n>.parquet`
-  *     files, live only once `_ingest_commits/<b>` exists
-  *     ([[ingestBatch]]);
-  *   - anything else (merged `shard<i>-…` copies — the merge copies
-  *     only LIVE files — and compaction rewrites whose marker landed)
-  *     is live ([[fileIsLive]]).
-  * A marker is written strictly AFTER every data file of its segment
-  * is in place, and the marker DIR is created BEFORE the first rename,
-  * which switches readers from the wholesale-directory fast path to
-  * the filtered listing ([[read]]). So a crash anywhere inside a
-  * multi-table or multi-cell publish leaves the whole segment
-  * INVISIBLE — a load sees all of a segment or none of it, never torn
-  * statistics or a torn coded file. The liveness check is one
-  * driver-side listing per table (cost ∝ file count — the manifest
-  * read every LSM store pays; a deployment amortizes it in a manifest
-  * file).
+  * ONE MANIFEST LOG PER STORE (the file-sink `_spark_metadata`
+  * discipline of Structured Streaming). `_manifest/` is a Spark
+  * [[HDFSMetadataLog]] of [[Manifest]] versions; each version names
+  * every table's live data files, the pending tombstone files and the
+  * applied ingest batchIds. Readers open the latest version
+  * ([[open]]) and read its files by name — no listing, no per-file
+  * liveness rule. Every mutation (build, batch append, streaming
+  * ingest batch, delete, compaction, shard merge) stages its files,
+  * renames them into the store, and commits by adding version v+1
+  * ([[commit]]): the log's add is an atomic create-if-absent, so a
+  * load sees all of a write or none of it, never torn statistics or a
+  * torn coded file. A data or tombstone file that no version names is
+  * garbage — the leftover of a crashed write — which the next
+  * compaction sweeps ([[swapCompaction]]); a crashed write's staging
+  * scratch under `_staging/` is replaced by the next write of its
+  * kind, and a build removes both with the dir.
   *
-  * BATCH APPEND ([[appendSegment]]): the index stages its delta under
-  * `_append_staging/seg=<id>`, publish renames the staged files to
-  * their segment names, the marker lands last, and the staging is
-  * dropped. Batch appends are transactional retry-by-caller: the next
-  * append rolls a torn attempt back — an UNCOMMITTED staged segment's
-  * partially-published files are purged; a committed leftover (marker
-  * landed, only the staging cleanup crashed) keeps its files. Crash
-  * seams (`failAfter`): "staged" dies after staging, before any
+  * Inside one JVM the read-latest → add(v+1) step is serialized per
+  * store dir (two writers of one store, e.g. an append overlapped with
+  * a delete, stage concurrently and commit in turn); the renames into
+  * the store run inside that step, so a sweep never meets a renamed
+  * but uncommitted file. An add that finds v+1 taken means another
+  * process writes the store, and throws.
+  *
+  * Crash seams (`failAfter`): "staged" dies after staging, before any
   * publish; "publish-partial" after the first table (flat layout) or
-  * cell (partitioned layout) is renamed in; an index may add seams of
-  * its own inside its staging ("stage-partial" in LexIndex).
+  * cell (partitioned layout) is renamed in, before the commit; an
+  * index may add seams of its own inside its staging ("stage-partial"
+  * in LexIndex, `failAfterStage` in its compaction).
   *
-  * STREAMING INGEST ([[ingestBatch]]) — idempotent under micro-batch
-  * retry, Structured Streaming's batchId-keyed sink rule. A re-run
-  * batch carries the SAME batchId, and a plain append would land its
-  * rows twice; instead:
-  *  1. the marker `_ingest_commits/<batchId>` short-circuits a replay
-  *     of an already-committed batch to a no-op;
-  *  2. the batch stages under `_staging/batch=<batchId>` with
-  *     overwrite — a retry that died mid-stage rewrites the same dir;
-  *  3. publish renames the staged files to DETERMINISTIC
-  *     batchId-keyed names, deleting any partial publish of this
-  *     batch first — a retry that died mid-publish replaces its own
-  *     files byte for byte instead of duplicating them;
-  *  4. the marker lands last. Index encodes are deterministic per row,
-  *     so a replay reproduces identical files.
-  * Work and writes stay delta-sized; base files are never rewritten.
-  *
-  * TOMBSTONES. A delete appends ids to the side table `tombstones/`
-  * ([[deleteIds]]) — the store is untouched, and a single-table
-  * append is job-atomic. Loads gate serving through [[liveGate]] (a
-  * broadcast anti-join, added only when tombstones exist), so a
-  * deleted row is unservable the moment its delete lands. Compaction
-  * applies a SNAPSHOT of the tombstone FILES taken up front
-  * ([[tombstoneSnapshot]]) and clears only that snapshot
-  * ([[clearTombstones]]) strictly AFTER every physical removal: a
-  * delete landing mid-compaction stays pending, and a crash at any
-  * point leaves tombstones pending — re-applying an already-removed
-  * id is a no-op anti-join, so deletes are never lost, at worst
-  * re-applied.
-  *
-  * PLAN-REPLAY COMPACTION PUBLISH (flat layout; single concurrent
-  * compactor assumed). The index stages its rewritten segment under
-  * `_compact_staging/<table>`; [[commitCompactionPlan]] writes a PLAN
-  * (every publish rename, every old file and marker to drop, the new
-  * segment's commit, the snapshot tombstones, by name) and then a
-  * `_complete` marker. A crash mid-stage restarts fresh (no marker →
-  * staging discarded); a crash mid-publish resumes the plan on the
-  * next compaction ([[resumeCompaction]] — renames and drops are
-  * name-deterministic and idempotent) and NEVER clears tombstones on
-  * a resume, since whether a late-landing tombstone made the snapshot
-  * is unknowable then. A store carrying `_ingest_commits` receipts is
-  * fenced by the index (an ingest publish racing the compactor's drops
-  * would be erased while its marker survives); a fenced plan clears
-  * the receipts with the folded segments.
-  *
-  * SHARD MERGE ([[mergeShards]]) is FILE-LEVEL: every shard's LIVE
-  * data files and pending tombstones land shard-tagged under the
-  * output's matching table (and `cell=`) dirs — no decode, no shuffle,
-  * no row read (cost ∝ file count). Shards carrying ingest receipts
-  * (per-stream batchIds cannot merge meaningfully — dropping them
-  * would let a replayed batch re-apply) or a staged compaction
-  * (mid-rewrite, indeterminate) are refused. The copy stands in for a
-  * same-filesystem rename or an object-store server-side copy (the
-  * merge must not consume its input shards); it runs on a bounded
-  * driver pool of [[CopyThreads]] — at real segment counts the
-  * per-file round trips, not the bytes, are the cost.
+  *   - BUILD ([[commitBuild]]): the index writes its tables into a
+  *     [[reset]] dir and the written files become version 0. A torn
+  *     build has no version: the recovery is rebuild.
+  *   - BATCH APPEND ([[appendSegment]]): the staged delta is renamed in
+  *     as `<appendPrefix>-<id>-<n>.parquet` (id = one past the largest
+  *     live one). A retry after a crash reuses the id and replaces the
+  *     earlier attempt's files.
+  *   - STREAMING INGEST ([[ingestBatch]]) — idempotent under
+  *     micro-batch retry, Structured Streaming's batchId-keyed sink
+  *     rule: a batchId the manifest already lists is a no-op; otherwise
+  *     the batch stages under `_staging/batch=<batchId>` with overwrite
+  *     and publishes DETERMINISTIC `ingest-<batchId>-<n>.parquet`
+  *     names, so a retry that died mid-publish replaces its own files
+  *     byte for byte, and the commit records the batchId.
+  *   - TOMBSTONES ([[deleteIds]]): a delete stages its ids and commits
+  *     them as new tombstone files; the store is untouched. Loads gate
+  *     serving through [[liveGate]] (a broadcast anti-join, added only
+  *     when tombstones are pending), so a deleted row is unservable the
+  *     moment its delete commits.
+  *   - COMPACTION ([[swapCompaction]]): the index reads one version —
+  *     its tombstones are the snapshot it applies — and stages the
+  *     rewritten files; the swap publishes them and commits the latest
+  *     version minus the rewritten files and minus the snapshot's
+  *     tombstone files. A delete that lands mid-compaction stays
+  *     pending, and a crash before the swap leaves the old version in
+  *     force with every tombstone pending: tombstones are only ever
+  *     retired in the version that drops their rows.
+  *   - SHARD MERGE ([[mergeShards]]) is FILE-LEVEL: every shard's live
+  *     data files and pending tombstones land shard-tagged under the
+  *     output's matching table (and `cell=`) dirs — no decode, no
+  *     shuffle, no row read (cost ∝ file count). A shard carrying
+  *     ingest receipts is refused (per-stream batchIds cannot merge
+  *     meaningfully — dropping them would let a replayed batch
+  *     re-apply). The copy stands in for a same-filesystem rename or an
+  *     object-store server-side copy (the merge must not consume its
+  *     input shards); it runs on a bounded driver pool of
+  *     [[CopyThreads]] — at real segment counts the per-file round
+  *     trips, not the bytes, are the cost.
   */
 private[graft] object SegmentStore {
 
   /** What differs between the stores sharing the protocol: the table
     * dirs, whether a table's files sit under `cell=` partition dirs
     * (such a layout has exactly one table), the batch-append file
-    * prefix, marker dir and id tag (ids are `<tag><n>`), and the
-    * tombstones' key column.
+    * prefix and id tag (ids are `<tag><n>`), and the tombstones' key
+    * column.
     */
   final case class Layout(tables: Seq[String], partitioned: Boolean,
-      appendPrefix: String, appendMarkers: String, appendTag: String,
-      tombstoneKey: String) {
+      appendPrefix: String, appendTag: String, tombstoneKey: String) {
     require(!partitioned || tables.size == 1,
       "a partitioned layout has exactly one table")
   }
 
-  val IngestMarkers = "_ingest_commits"
+  /** One committed version: each table's live data files and the
+    * pending tombstone files, as paths relative to the store dir, and
+    * the applied ingest batchIds.
+    */
+  final case class Manifest(files: Map[String, Seq[String]],
+      tombstones: Seq[String], batches: Seq[Long]) {
+    def of(table: String): Seq[String] = files.getOrElse(table, Nil)
+    def withFiles(added: Map[String, Seq[String]]): Manifest =
+      copy(files = (files.keySet ++ added.keySet).map(t =>
+        t -> (of(t) ++ added.getOrElse(t, Nil)).sorted).toMap)
+  }
+
+  private val Empty = Manifest(Map.empty, Nil, Nil)
   private val CopyThreads = 8
-  private val AppendStaging = "_append_staging"
-  private val CompactStaging = "_compact_staging"
+  private val Staging = "_staging"
+  private val Tombstones = "tombstones"
+  private val locks = new ConcurrentHashMap[String, Object]()
+  private def lockOf(dir: String): Object = locks.computeIfAbsent(dir, _ => new Object)
 
   def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -132,11 +121,9 @@ private[graft] object SegmentStore {
   private def empty(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
-  /** Replace `dir` wholesale: a build defines a FRESH store, so
-    * tombstones, commit markers, staging scratch and trained tables of
-    * a previous incarnation must not survive it (leaked markers would
-    * no-op batch ids the new store never saw, leaked tombstones would
-    * gate its live view).
+  /** Replace `dir` wholesale: a build defines a FRESH store, so its
+    * manifest, tombstones, staging scratch and trained tables of a
+    * previous incarnation must not survive it.
     */
   def reset(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
@@ -144,44 +131,47 @@ private[graft] object SegmentStore {
     if (fs.exists(p)) fs.delete(p, true): Unit
   }
 
-  // ------------------------------------------------- liveness
+  // ------------------------------------------------- manifest
 
-  /** The ids of the markers under `p` — empty when the dir is absent. */
-  private def markerSet(fs: FileSystem, p: Path): Set[String] =
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName).toSet
+  private def manifestLog(spark: SparkSession, dir: String) =
+    new HDFSMetadataLog[Manifest](spark, s"$dir/_manifest")
 
-  /** Is a store file LIVE — i.e. committed? Append- and ingest-tagged
-    * files need their marker; everything else is live.
+  private def latest(log: HDFSMetadataLog[Manifest]): (Long, Manifest) =
+    log.getLatest().getOrElse((-1L, Empty))
+
+  /** The reader's open: the latest committed version (an empty one for
+    * a store never committed).
     */
-  private def fileIsLive(name: String, layout: Layout, appends: Set[String],
-      ingests: Set[String]): Boolean =
-    if (name.startsWith(layout.appendPrefix + "-")) appends.contains(name.split("-")(1))
-    else if (name.startsWith("ingest-")) ingests.contains(name.split("-")(1))
-    else true
+  def open(spark: SparkSession, dir: String): Manifest =
+    if (!fsOf(spark, dir).exists(new Path(s"$dir/_manifest"))) Empty
+    else latest(manifestLog(spark, dir))._2
 
-  /** The dirs holding a table's data files: the table dir itself, or
-    * its `cell=` partitions sorted by name.
+  /** Commit one mutation as version v+1 of `dir`'s manifest: `next`
+    * sees the latest version, publishes its files and returns the new
+    * version (None commits nothing). Serialized per store dir in this
+    * JVM; returns the log and its latest version afterwards.
     */
-  private def leafDirs(fs: FileSystem, table: Path, layout: Layout): Seq[Path] =
-    if (!layout.partitioned) Seq(table)
-    else fs.listStatus(table)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath).sortBy(_.getName).toSeq
+  private def commit(spark: SparkSession, dir: String)(
+      next: Manifest => Option[Manifest]): (HDFSMetadataLog[Manifest], Long, Manifest) =
+    lockOf(dir).synchronized {
+      val log = manifestLog(spark, dir)
+      val (v, m) = latest(log)
+      next(m) match {
+        case None => (log, v, m)
+        case Some(n) =>
+          if (!log.add(v + 1, n)) throw new IllegalStateException(
+            s"store $dir: manifest version ${v + 1} already exists - another " +
+              "process is writing this store")
+          (log, v + 1, n)
+      }
+    }
 
-  /** The LIVE data files of one store table, sorted. */
-  def liveFiles(spark: SparkSession, dir: String, layout: Layout,
-      table: String): Seq[Path] = {
-    val fs = fsOf(spark, dir)
-    val t = new Path(s"$dir/$table")
-    if (!fs.exists(t)) return Seq.empty
-    val appends = markerSet(fs, new Path(s"$dir/${layout.appendMarkers}"))
-    val ingests = markerSet(fs, new Path(s"$dir/$IngestMarkers"))
-    leafDirs(fs, t, layout).flatMap(d => fs.listStatus(d).map(_.getPath))
-      .filter(p => p.getName.endsWith(".parquet")
-        && fileIsLive(p.getName, layout, appends, ingests))
-      .sortBy(_.toString)
-  }
+  /** A store-relative file's full path. */
+  private def pathOf(dir: String, rel: String): Path = new Path(s"$dir/$rel")
+
+  /** The live data files of one store table, as full paths. */
+  def files(dir: String, m: Manifest, table: String): Seq[Path] =
+    m.of(table).map(pathOf(dir, _))
 
   /** An explicit file list of one table as a DataFrame (empty list →
     * empty relation); a partitioned table keeps its partition column
@@ -196,97 +186,99 @@ private[graft] object SegmentStore {
         .parquet(files.map(_.toString): _*)
     }
 
-  /** A store table as a DataFrame of its LIVE files only. Fast path: a
-    * store that never saw a tagged write (no marker dirs) reads the
-    * directory wholesale — no listing, no filtering.
-    */
-  def read(spark: SparkSession, dir: String, layout: Layout, table: String,
-      schema: StructType): DataFrame = {
-    val fs = fsOf(spark, dir)
-    val tagged = fs.exists(new Path(s"$dir/${layout.appendMarkers}")) ||
-      fs.exists(new Path(s"$dir/$IngestMarkers"))
-    if (!tagged) spark.read.schema(schema).parquet(s"$dir/$table")
-    else readFiles(spark, dir, layout, table, schema,
-      liveFiles(spark, dir, layout, table))
-  }
+  /** A store table of version `m` as a DataFrame. */
+  def read(spark: SparkSession, dir: String, layout: Layout, m: Manifest,
+      table: String, schema: StructType): DataFrame =
+    readFiles(spark, dir, layout, table, schema, files(dir, m, table))
 
   // ------------------------------------------------- publish
 
-  /** Next unused id `<tag><n>` under a marker dir: max n + 1. */
-  def nextId(fs: FileSystem, markers: Path, tag: String): String = {
-    val re = s"^$tag(\\d+)$$".r
-    val used = markerSet(fs, markers)
-      .flatMap { case re(n) => Some(n.toLong); case _ => None }
+  /** Next unused id `<tag><n>` of `<prefix>-<tag><n>-…` files: one past
+    * the largest live n.
+    */
+  def nextId(m: Manifest, prefix: String, tag: String): String = {
+    val re = s"^${java.util.regex.Pattern.quote(s"$prefix-$tag")}(\\d+)-.*".r
+    val used = m.files.values.flatten.map(f => new Path(f).getName)
+      .collect { case re(n) => n.toLong }
     tag + (if (used.isEmpty) 1L else used.max + 1L)
   }
 
-  /** Rename every staged data file of a write into the store as
-    * `<name>-<n>.parquet` (n indexes each leaf dir's sorted staged
-    * files), first clearing any partial publish under the same name.
-    * The "publish-partial" seam stops after the first leaf dir.
+  /** The dirs holding a table's data files under `root` — the table
+    * dir itself, or its `cell=` partitions sorted by name — each with
+    * its path relative to `root`.
     */
-  private def publish(fs: FileSystem, dir: String, layout: Layout,
-      staging: String, name: String, failAfter: String): Unit = {
-    val units = layout.tables.flatMap { t =>
-      val staged = new Path(if (layout.partitioned) staging else s"$staging/$t")
-      leafDirs(fs, staged, layout).map(src => (src,
-        if (layout.partitioned) new Path(s"$dir/$t/${src.getName}")
-        else new Path(s"$dir/$t")))
-    }
-    units.take(if (failAfter == "publish-partial") 1 else units.size)
-      .foreach { case (src, target) =>
-        if (!fs.exists(target)) fs.mkdirs(target): Unit
-        fs.listStatus(target).map(_.getPath)
-          .filter(_.getName.startsWith(s"$name-"))
-          .foreach(p => fs.delete(p, false): Unit)
-        fs.listStatus(src).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).zipWithIndex
-          .foreach { case (f, i) =>
-            fs.rename(f, new Path(target, s"$name-$i.parquet")): Unit
-          }
-      }
+  private def leaves(fs: FileSystem, root: String, layout: Layout,
+      table: String): Seq[(Path, String)] = {
+    val t = new Path(s"$root/$table")
+    if (!layout.partitioned) Seq((t, table))
+    else if (!fs.exists(t)) Seq.empty
+    else fs.listStatus(t)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
+      .map(st => (st.getPath, s"$table/${st.getPath.getName}"))
+      .sortBy(_._2).toSeq
   }
 
-  /** Land one batch append as a committed segment: roll back a torn
-    * earlier attempt, `stage` the delta under the staging dir it is
-    * given, publish, commit. See the header for the crash seams.
+  private def parquetIn(fs: FileSystem, d: Path): Seq[Path] =
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+
+  /** Rename `src` to `dst`, replacing what an earlier attempt left there. */
+  private def move(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst) && !(fs.delete(dst, false) && fs.rename(src, dst)))
+      throw new java.io.IOException(s"rename $src -> $dst failed")
+
+  /** Rename every staged data file of a write (its tables staged
+    * under `staging` as under the store dir) into the store as
+    * `<name>-<n>.parquet` (n indexes each leaf dir's sorted staged
+    * files; an empty name keeps the staged name) and return the
+    * store-relative paths per table — None at the "publish-partial"
+    * seam, which stops after the first leaf dir.
+    */
+  private def publish(fs: FileSystem, dir: String, layout: Layout,
+      staging: String, name: String, failAfter: String): Option[Map[String, Seq[String]]] = {
+    val units = layout.tables.flatMap(t =>
+      leaves(fs, staging, layout, t).map { case (src, rel) => (t, src, rel) })
+    val out = units.take(if (failAfter == "publish-partial") 1 else units.size)
+      .map { case (t, src, rel) =>
+        if (!fs.exists(pathOf(dir, rel))) fs.mkdirs(pathOf(dir, rel)): Unit
+        t -> parquetIn(fs, src).zipWithIndex.map { case (f, i) =>
+          val to = s"$rel/${if (name.isEmpty) f.getName else s"$name-$i.parquet"}"
+          move(fs, f, pathOf(dir, to))
+          to
+        }
+      }
+    if (failAfter == "publish-partial") None
+    else Some(out.groupMapReduce(_._1)(_._2)(_ ++ _))
+  }
+
+  /** Commit a freshly written build: every data file the index wrote
+    * into its table dirs becomes version 0.
+    */
+  def commitBuild(spark: SparkSession, dir: String, layout: Layout): Unit = {
+    val fs = fsOf(spark, dir)
+    commit(spark, dir)(_ => Some(Manifest(layout.tables.map(t => t ->
+      leaves(fs, dir, layout, t).flatMap { case (d, rel) =>
+        parquetIn(fs, d).map(f => s"$rel/${f.getName}")
+      }).toMap, Nil, Nil))): Unit
+  }
+
+  /** Land one batch append: `stage` the delta under the staging dir it
+    * is given, publish and commit. See the header for the crash seams.
     */
   def appendSegment(spark: SparkSession, dir: String, layout: Layout,
       failAfter: String)(stage: String => Unit): Unit = {
     val fs = fsOf(spark, dir)
-    rollbackTornAppend(fs, dir, layout)
-    val markers = new Path(s"$dir/${layout.appendMarkers}")
-    val id = nextId(fs, markers, layout.appendTag)
-    val staging = s"$dir/$AppendStaging/seg=$id"
-    stage(staging)
+    val staging = new Path(s"$dir/$Staging/append")
+    fs.delete(staging, true)
+    stage(staging.toString)
     if (failAfter == "staged" || failAfter == "stage-partial") return
-    fs.mkdirs(markers): Unit // liveness filtering on before the first rename
-    publish(fs, dir, layout, staging, s"${layout.appendPrefix}-$id", failAfter)
-    if (failAfter == "publish-partial") return
-    fs.create(new Path(markers, id)).close() // the commit point
-    fs.delete(new Path(s"$dir/$AppendStaging"), true): Unit
-  }
-
-  /** Roll back torn batch appends: purge the partially-published
-    * (invisible) files of every UNCOMMITTED staged segment, then drop
-    * the staging.
-    */
-  private def rollbackTornAppend(fs: FileSystem, dir: String,
-      layout: Layout): Unit = {
-    val root = new Path(s"$dir/$AppendStaging")
-    if (!fs.exists(root)) return
-    val torn = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("seg=")).map(_.stripPrefix("seg="))
-      .filterNot(id => fs.exists(new Path(s"$dir/${layout.appendMarkers}/$id")))
-      .map(id => s"${layout.appendPrefix}-$id-")
-    if (torn.nonEmpty) for (t <- layout.tables) {
-      val tp = new Path(s"$dir/$t")
-      if (fs.exists(tp)) leafDirs(fs, tp, layout)
-        .flatMap(d => fs.listStatus(d).map(_.getPath))
-        .filter(p => torn.exists(p.getName.startsWith))
-        .foreach(p => fs.delete(p, false): Unit)
+    commit(spark, dir) { m =>
+      val id = nextId(m, layout.appendPrefix, layout.appendTag)
+      publish(fs, dir, layout, staging.toString, s"${layout.appendPrefix}-$id", failAfter)
+        .map(m.withFiles)
     }
-    fs.delete(root, true): Unit
+    if (failAfter != "publish-partial") fs.delete(staging, true): Unit
   }
 
   /** Land one streaming micro-batch, idempotently by `batchId` (see the
@@ -294,16 +286,16 @@ private[graft] object SegmentStore {
     */
   def ingestBatch(spark: SparkSession, dir: String, layout: Layout,
       batchId: Long, failAfter: String = "")(stage: String => Unit): Unit = {
+    if (open(spark, dir).batches.contains(batchId)) return
     val fs = fsOf(spark, dir)
-    val marker = new Path(s"$dir/$IngestMarkers/$batchId")
-    if (fs.exists(marker)) return
-    val staging = s"$dir/_staging/batch=$batchId"
+    val staging = s"$dir/$Staging/batch=$batchId"
     stage(staging)
-    fs.mkdirs(marker.getParent): Unit // liveness filtering on before the first rename
-    publish(fs, dir, layout, staging, s"ingest-$batchId", failAfter)
-    if (failAfter == "publish-partial") return
-    fs.delete(new Path(staging), true): Unit
-    fs.create(marker).close()
+    commit(spark, dir) { m =>
+      if (m.batches.contains(batchId)) None
+      else publish(fs, dir, layout, staging, s"ingest-$batchId", failAfter)
+        .map(f => m.withFiles(f).copy(batches = m.batches :+ batchId))
+    }
+    if (failAfter != "publish-partial") fs.delete(new Path(staging), true): Unit
   }
 
   // ------------------------------------------------- tombstones
@@ -311,176 +303,103 @@ private[graft] object SegmentStore {
   private def tombstoneSchema(layout: Layout): StructType =
     StructType(Seq(StructField(layout.tombstoneKey, LongType)))
 
-  /** Append ids to the side tombstone table. */
-  def deleteIds(ids: DataFrame, dir: String, layout: Layout): Unit =
+  /** Commit ids as new pending tombstone files. */
+  def deleteIds(ids: DataFrame, dir: String, layout: Layout): Unit = {
+    val spark = ids.sparkSession
+    val fs = fsOf(spark, dir)
+    val staging = new Path(s"$dir/$Staging/delete-${java.util.UUID.randomUUID}")
     ids.select(col(layout.tombstoneKey).cast(LongType).as(layout.tombstoneKey))
-      .write.mode("append").parquet(s"$dir/tombstones")
-
-  /** The pending tombstone set — empty (not an error) when no delete
-    * has landed since the last compaction.
-    */
-  def tombstones(spark: SparkSession, dir: String, layout: Layout): DataFrame = {
-    val p = new Path(s"$dir/tombstones")
-    if (fsOf(spark, dir).exists(p))
-      spark.read.schema(tombstoneSchema(layout)).parquet(p.toString)
-    else empty(spark, tombstoneSchema(layout))
+      .write.parquet(staging.toString)
+    commit(spark, dir) { m =>
+      if (!fs.exists(new Path(s"$dir/$Tombstones"))) fs.mkdirs(new Path(s"$dir/$Tombstones")): Unit
+      Some(m.copy(tombstones = m.tombstones ++ parquetIn(fs, staging).map { f =>
+        move(fs, f, pathOf(dir, s"$Tombstones/${f.getName}"))
+        s"$Tombstones/${f.getName}"
+      }))
+    }
+    fs.delete(staging, true): Unit
   }
+
+  /** The pending tombstone set of version `m`. */
+  def tombstones(spark: SparkSession, dir: String, layout: Layout,
+      m: Manifest): DataFrame =
+    if (m.tombstones.isEmpty) empty(spark, tombstoneSchema(layout))
+    else spark.read.schema(tombstoneSchema(layout))
+      .parquet(m.tombstones.map(pathOf(dir, _).toString): _*)
 
   /** The load-time live-view gate: the identity while no tombstone is
     * pending (no join node, so deletion costs nothing until a delete
     * lands), else a broadcast anti-join on the tombstone key that
     * keeps the input's column order.
     */
-  def liveGate(spark: SparkSession, dir: String,
-      layout: Layout): DataFrame => DataFrame = {
-    val p = new Path(s"$dir/tombstones")
-    if (!fsOf(spark, dir).exists(p)) identity
+  def liveGate(spark: SparkSession, dir: String, layout: Layout,
+      m: Manifest): DataFrame => DataFrame =
+    if (m.tombstones.isEmpty) identity
     else {
-      val tombs = broadcast(
-        spark.read.schema(tombstoneSchema(layout)).parquet(p.toString))
+      val tombs = broadcast(tombstones(spark, dir, layout, m))
       df => df.join(tombs, Seq(layout.tombstoneKey), "left_anti")
         .select(df.columns.map(col): _*)
     }
+
+  // ------------------------------------------------- compaction
+
+  private def compactRoot(dir: String): String = s"$dir/$Staging/compact"
+
+  /** A fresh staging root for a compaction's rewritten tables
+    * (`<root>/<table>`): what a crashed compaction left there is gone.
+    */
+  def compactionStaging(spark: SparkSession, dir: String): String = {
+    fsOf(spark, dir).delete(new Path(compactRoot(dir)), true): Unit
+    compactRoot(dir)
   }
 
-  /** Snapshot the pending tombstone FILES and read exactly them. */
-  def tombstoneSnapshot(spark: SparkSession, dir: String,
-      layout: Layout): (Seq[Path], DataFrame) = {
+  /** Swap a staged compaction of `snapshot` in: publish the staged
+    * files as `<name>-<n>.parquet` (an empty name keeps the staged
+    * names) and commit the LATEST version minus the `dropped` files and
+    * minus the snapshot's tombstone files (`fenced` also retires the
+    * ingest receipts). Then sweep every data or tombstone file the new
+    * version does not name — the rewritten files, the applied
+    * tombstones and crashed writes' garbage — and purge the older
+    * versions. Compactions of one store are assumed not to overlap.
+    */
+  def swapCompaction(spark: SparkSession, dir: String, layout: Layout,
+      snapshot: Manifest, name: String, dropped: Map[String, Seq[String]],
+      fenced: Boolean): Unit = {
     val fs = fsOf(spark, dir)
-    val p = new Path(s"$dir/tombstones")
-    val files =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).filter(_.isFile).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).toSeq
-    (files,
-      if (files.isEmpty) empty(spark, tombstoneSchema(layout))
-      else spark.read.schema(tombstoneSchema(layout))
-        .parquet(files.map(_.toString): _*))
-  }
-
-  /** Clear an applied snapshot by file name; the table dir goes once
-    * no tombstone file is left in it.
-    */
-  def clearTombstones(fs: FileSystem, dir: String, names: Seq[String]): Unit = {
-    names.foreach(n => fs.delete(new Path(s"$dir/tombstones/$n"), false): Unit)
-    val p = new Path(s"$dir/tombstones")
-    if (fs.exists(p) &&
-        !fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      fs.delete(p, true): Unit
-  }
-
-  // ------------------------------------------------- compaction publish
-
-  /** Finish a compaction that crashed mid-publish (its plan replays,
-    * tombstones stay pending) and report true; otherwise discard a
-    * compaction that crashed mid-stage and report false.
-    */
-  def resumeCompaction(fs: FileSystem, dir: String, layout: Layout): Boolean = {
-    val stage = new Path(s"$dir/$CompactStaging")
-    if (fs.exists(new Path(stage, "_complete"))) {
-      publishCompaction(fs, dir, layout, clearTombs = false)
-      true
-    } else {
-      if (fs.exists(stage)) fs.delete(stage, true): Unit
-      false
-    }
-  }
-
-  /** The staging dir of a compaction's rewritten table. */
-  def compactionStaging(dir: String, table: String): String =
-    s"$dir/$CompactStaging/$table"
-
-  /** Write the plan of a staged compaction and its `_complete`
-    * marker: the staged files publish as segment `newId`, the files
-    * in `dropped` and the markers of the `folded` segments go, a
-    * `fenced` plan also clears the ingest receipts, and the snapshot
-    * `tombFiles` clear last. Publishes unless `failAfterStage`.
-    */
-  def commitCompactionPlan(fs: FileSystem, dir: String, layout: Layout,
-      newId: String, dropped: Map[String, Seq[Path]], folded: Set[String],
-      fenced: Boolean, tombFiles: Seq[Path], failAfterStage: Boolean): Unit = {
-    require(!layout.partitioned, "plan-replay compaction is flat-layout only")
-    val seg = layout.appendPrefix
-    val plan = new StringBuilder
-    for (t <- layout.tables) {
-      fs.listStatus(new Path(compactionStaging(dir, t))).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).zipWithIndex
-        .foreach { case (f, i) =>
-          plan.append(s"pub:$t/${f.getName}:$seg-$newId-$i.parquet\n"): Unit
-        }
-      dropped(t).foreach(p => plan.append(s"drop:$t/${p.getName}\n"): Unit)
-    }
-    plan.append(s"commit:$newId\n"): Unit
-    folded.foreach { s =>
-      if (s.startsWith(s"$seg-"))
-        plan.append(s"dropmark:${layout.appendMarkers}/${s.stripPrefix(s"$seg-")}\n"): Unit
-      if (s.startsWith("ingest-"))
-        plan.append(s"dropmark:$IngestMarkers/${s.stripPrefix("ingest-")}\n"): Unit
-    }
-    if (fenced) plan.append(s"fence:$IngestMarkers\n"): Unit
-    tombFiles.foreach(p => plan.append(s"tomb:${p.getName}\n"): Unit)
-    val out = fs.create(new Path(s"$dir/$CompactStaging/_plan"))
-    out.write(plan.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    fs.create(new Path(s"$dir/$CompactStaging/_complete")).close()
-    if (!failAfterStage) publishCompaction(fs, dir, layout, clearTombs = true)
-  }
-
-  /** Replay the staged compaction plan: renames in (invisible until
-    * the commit marker), old files and markers dropped, the new
-    * segment committed, the fence applied, snapshot tombstones cleared
-    * (never on a resume), staging removed. Every step is
-    * name-deterministic and idempotent. The brief reader-visible
-    * window (old files dropped, new marker not yet landed) is the
-    * documented single-compactor / no-concurrent-reader publish window.
-    */
-  private def publishCompaction(fs: FileSystem, dir: String, layout: Layout,
-      clearTombs: Boolean): Unit = {
-    val in = fs.open(new Path(s"$dir/$CompactStaging/_plan"))
-    val planText = new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    in.close()
-    val lines = planText.split("\n").filter(_.nonEmpty).toSeq
-    def arg(tag: String): Seq[String] =
-      lines.filter(_.startsWith(tag + ":")).map(_.stripPrefix(tag + ":"))
-    fs.mkdirs(new Path(s"$dir/${layout.appendMarkers}")): Unit
-    // 1. renames in (files stay invisible: no marker yet)
-    arg("pub").foreach { l =>
-      val Array(tableAndSrc, dstName) = l.split(":")
-      val Array(t, srcName) = tableAndSrc.split("/")
-      val src = new Path(s"${compactionStaging(dir, t)}/$srcName")
-      if (fs.exists(src)) {
-        val target = new Path(s"$dir/$t")
-        if (!fs.exists(target)) fs.mkdirs(target): Unit
-        val dst = new Path(target, dstName)
-        if (fs.exists(dst)) fs.delete(dst, false): Unit
-        fs.rename(src, dst): Unit
+    if (!fs.exists(new Path(s"$dir/_manifest"))) return
+    val gone = dropped.values.flatten.toSet ++ snapshot.tombstones
+    val changed = gone.nonEmpty || (fenced && snapshot.batches.nonEmpty)
+    lockOf(dir).synchronized {
+      val (log, v, now) = commit(spark, dir) { m =>
+        if (!changed) None
+        else publish(fs, dir, layout, compactRoot(dir), name, "").map(added =>
+          Manifest(m.files.map { case (t, fs0) => t -> fs0.filterNot(gone) },
+            m.tombstones.filterNot(gone), if (fenced) Nil else m.batches)
+            .withFiles(added))
       }
+      sweep(fs, dir, layout, now)
+      log.purge(v)
     }
-    // 2. drop the rewritten segments' old files and markers
-    (arg("drop") ++ arg("dropmark")).foreach { rel =>
-      val p = new Path(s"$dir/$rel")
-      if (fs.exists(p)) fs.delete(p, false): Unit
+    fs.delete(new Path(compactRoot(dir)), true): Unit
+  }
+
+  /** Delete every data and tombstone file that version `m` does not
+    * name, and every `cell=` dir left with none.
+    */
+  private def sweep(fs: FileSystem, dir: String, layout: Layout, m: Manifest): Unit = {
+    val live = (m.files.values.flatten ++ m.tombstones).toSet
+    (layout.tables.flatMap(leaves(fs, dir, layout, _)) :+
+        ((new Path(s"$dir/$Tombstones"), Tombstones))).foreach { case (d, rel) =>
+      val (keep, drop) = parquetIn(fs, d).partition(f => live(s"$rel/${f.getName}"))
+      if (keep.isEmpty && rel.contains("/cell=")) fs.delete(d, true): Unit
+      else drop.foreach(f => fs.delete(f, false): Unit)
     }
-    // 3. commit the new segment
-    arg("commit").foreach { id =>
-      fs.create(new Path(s"$dir/${layout.appendMarkers}/$id"), true).close()
-    }
-    // 4. stream fence: the folded stream's receipts die with it
-    if (arg("fence").nonEmpty) {
-      val p = new Path(s"$dir/$IngestMarkers")
-      if (fs.exists(p)) fs.delete(p, true): Unit
-    }
-    // 5. snapshot tombstones — strictly after every publish step, and
-    // NEVER on a resumed publish
-    if (clearTombs) clearTombstones(fs, dir, arg("tomb"))
-    fs.delete(new Path(s"$dir/$CompactStaging"), true): Unit
   }
 
   // ------------------------------------------------- shard merge
 
   /** File-level merge of shard stores into `outDir` (see the header).
-    * `verify` runs after the refusal checks and before the output is
+    * `verify` runs after the refusal check and before the output is
     * replaced; `whole` names subdirs copied verbatim from the first
     * shard (trained tables the caller verified identical).
     */
@@ -490,42 +409,34 @@ private[graft] object SegmentStore {
     require(shardDirs.nonEmpty, "mergeIndexes: no shards")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(spark, outDir)
-    shardDirs.foreach { d =>
-      require(!fs.exists(new Path(s"$d/$IngestMarkers")),
-        s"mergeIndexes: shard $d carries $IngestMarkers receipts - " +
-          "it is a serving store, not a build shard; compact its ingest " +
-          "into a fresh build before merging")
-      require(!fs.exists(new Path(s"$d/$CompactStaging")),
-        s"mergeIndexes: shard $d carries a staged compaction - finish " +
-          "or discard it (compactIndex) before merging")
+    val shards = shardDirs.map(d => d -> open(spark, d))
+    shards.foreach { case (d, m) =>
+      require(m.batches.isEmpty,
+        s"mergeIndexes: shard $d carries ingest receipts - it is a serving " +
+          "store, not a build shard; compact its ingest into a fresh build " +
+          "before merging")
     }
     verify
-    val out = new Path(outDir)
-    if (fs.exists(out)) fs.delete(out, true): Unit
+    reset(spark, outDir)
     whole.foreach { sub =>
       val p = new Path(s"${shardDirs.head}/$sub")
       if (fs.exists(p))
         FileUtil.copy(fs, p, fs, new Path(s"$outDir/$sub"), false, conf): Unit
     }
-    val copies: Seq[(Path, Path)] = shardDirs.zipWithIndex.flatMap {
-      case (d, i) =>
-        val data = layout.tables.flatMap { t =>
-          liveFiles(spark, d, layout, t).map(f => (f,
-            if (layout.partitioned) s"$outDir/$t/${f.getParent.getName}"
-            else s"$outDir/$t"))
-        }
-        val tomb = new Path(s"$d/tombstones")
-        val tombs =
-          if (!fs.exists(tomb)) Seq.empty
-          else fs.listStatus(tomb).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-            .map(f => (f, s"$outDir/tombstones")).toSeq
-        (data ++ tombs).map { case (f, to) => (f, new Path(to, s"shard$i-${f.getName}")) }
+    def tagged(rel: String, i: Int): String = {
+      val p = new Path(rel)
+      s"${p.getParent}/shard$i-${p.getName}"
     }
-    // every output table exists even when no shard has rows (explicit-
-    // schema reads of an empty dir yield empty relations)
-    (layout.tables.map(t => new Path(s"$outDir/$t")) ++ copies.map(_._2.getParent))
-      .distinct.foreach(p => fs.mkdirs(p): Unit)
+    val indexed = shards.map(_._2).zipWithIndex
+    val merged = Manifest(
+      layout.tables.map(t => t -> indexed.flatMap { case (m, i) => m.of(t).map(tagged(_, i)) }
+        .sorted).toMap,
+      indexed.flatMap { case (m, i) => m.tombstones.map(tagged(_, i)) }.sorted, Nil)
+    val copies = shards.zipWithIndex.flatMap { case ((d, m), i) =>
+      (m.files.values.flatten ++ m.tombstones).map(rel =>
+        (pathOf(d, rel), pathOf(outDir, tagged(rel, i))))
+    }
+    copies.map(_._2.getParent).distinct.foreach(p => fs.mkdirs(p): Unit)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(CopyThreads, copies.size max 1))
     try {
@@ -535,5 +446,6 @@ private[graft] object SegmentStore {
         })
       }.foreach(_.get())
     } finally pool.shutdown()
+    commit(spark, outDir)(_ => Some(merged)): Unit
   }
 }

@@ -1418,9 +1418,9 @@ object Corpus {
     val isDel = col("doc_id") % lexDelMod === lexDelRem
     val dir = lexDir(s, d) + "_stats"
     LexIndex.buildIndex(docs.filter(!isDelta), dir)
-    // the delta-segment append and the tombstone write touch disjoint
-    // store paths (seg staging/publish vs tombstones/) — overlapped
-    // (§2.6); the stats read side below runs only after both land
+    // the delta-segment append and the tombstone write stage
+    // concurrently (§2.6) and commit their manifest versions in turn;
+    // the stats read side below runs only after both land
     graft.operators.Par.jobs(
       () => LexIndex.appendToIndex(docs.filter(isDelta), dir),
       () => LexIndex.deleteFromIndex(

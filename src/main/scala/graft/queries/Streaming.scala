@@ -622,7 +622,7 @@ object Streaming {
   // doc_lex_append write, one delta-sized tokenization pass, base
   // segments never rewritten). The per-batch write is IDEMPOTENT
   // under micro-batch retry (LexIndex.appendBatchToIndex: batchId
-  // commit marker + staged overwrite + deterministic batchId-keyed
+  // receipt in the manifest + staged overwrite + deterministic batchId-keyed
   // publish names — IvfPq.appendBatchToIndex's protocol verbatim;
   // LexIndexSpec replays a batch and pins store multiplicity). Each
   // ingested doc emits a receipt (doc_id, dl, n_terms — per-row facts

@@ -1797,10 +1797,10 @@ object Vectors {
   // The oracle replays every number from the training/assignment
   // chain (ivfCtes + the frozen delta assignment) and the two doc
   // subsets; the engine derives them from the STORE (the reloaded
-  // coded file, the physical file listing, the tombstone side table).
+  // coded file, the manifest's file list, the tombstone side table).
   //
   // 100 TB shape: one pass over the coded file (cell, id only — codes
-  // pruned), a manifest-sized file listing, a tombstone-sized scan.
+  // pruned), one manifest read, a tombstone-sized scan.
   private val embIndexStats: Q = (s, d) => {
     val all = vecs(s, d).select(col("vec_id").as("id"), col("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1812,10 +1812,9 @@ object Vectors {
     // halves ARE the frozen index the append encodes under
     val (bIdx, bBooks) = IvfPq.buildIndex(base, base.count(), dim = 64,
       m = pqM, dsub = pqDsub, kCodes = pqK, dir = dir)
-    // the delta append (inverted/cell=*/append-* under the staging
-    // protocol) and the tombstone write (tombstones/) touch disjoint
-    // store paths — overlapped (§2.6); the stats read side below runs
-    // only after both land
+    // the delta append and the tombstone write stage concurrently
+    // (§2.6) and commit their manifest versions in turn; the stats
+    // read side below runs only after both land
     graft.operators.Par.jobs(
       () => IvfPq.appendToIndex(bIdx, bBooks, pqDsub,
         all.filter(isDelta), dir, ""),
@@ -1823,18 +1822,10 @@ object Vectors {
     val loaded = IvfPq.loadIndex(s, dir)
     val inv = loaded.inverted
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // append-fragment count from the PHYSICAL store layout: the
-    // driver-side listing is manifest-sized (∝ file count)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val invPath = new org.apache.hadoop.fs.Path(s"$dir/inverted")
-    val appendFiles: Long =
-      if (!fs.exists(invPath)) 0L
-      else fs.listStatus(invPath)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-        .flatMap(cd => fs.listStatus(cd.getPath))
-        .count(st => st.getPath.getName.startsWith("append-")
-          && st.getPath.getName.endsWith(".parquet")).toLong
+    // append-fragment count from the store's manifest: the live
+    // coded files it names (∝ file count, no listing)
+    val appendFiles: Long = graft.operators.SegmentStore.open(s, dir).of("inverted")
+      .count(_.split("/").last.startsWith("append-")).toLong
     val fragRow = inv.agg(
       lit("fragmentation").as("artifact"),
       countDistinct(col("cell")).as("n_rows"),

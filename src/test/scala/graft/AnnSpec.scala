@@ -557,8 +557,8 @@ class AnnSpec extends SparkSpec {
     assert(asSet(IvfPq.loadIndex(spark, dir).inverted) == baseStored,
       "a staged-but-unpublished append must be invisible")
     // THE torn window: one cell's files renamed in, the rest not, no
-    // commit marker — the bytes are inside the store's cell= dirs but
-    // loadIndex must see NONE of the append (whole append or none)
+    // manifest version — the bytes are inside the store's cell= dirs
+    // but loadIndex must see NONE of the append (whole append or none)
     IvfPq.appendToIndex(IvfPq.loadIndex(spark, dir), delta, dir,
       failAfter = "publish-partial")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -566,26 +566,25 @@ class AnnSpec extends SparkSpec {
     val inv = new org.apache.hadoop.fs.Path(s"$dir/inverted")
     def tornFiles(): Seq[String] = fs.listStatus(inv)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .flatMap(st => fs.listStatus(st.getPath).map(_.getPath.getName))
-      .filter(_.startsWith("append-")).toSeq
+      .flatMap(st => fs.listStatus(st.getPath)
+        .map(f => s"inverted/${st.getPath.getName}/${f.getPath.getName}"))
+      .filter(_.split("/").last.startsWith("append-")).toSeq
     assert(tornFiles().nonEmpty,
       "the crash seam must leave partially-published coded files on disk")
     assert(asSet(IvfPq.loadIndex(spark, dir).inverted) == baseStored,
       "a torn multi-cell publish leaked partial coded rows")
-    // the next append call rolls the torn attempt back and lands
-    // clean: store == one-shot encode of base ∪ delta (frozen halves)
+    // the next append call replaces the torn attempt and lands clean:
+    // store == one-shot encode of base ∪ delta (frozen halves)
     IvfPq.appendToIndex(IvfPq.loadIndex(spark, dir), delta, dir)
     assert(asSet(IvfPq.loadIndex(spark, dir).inverted) ==
       asSet(IvfPq.codedInvertedFile(index, all, books, 4)),
       "post-rollback append diverges from encode(base ∪ delta)")
-    // every surviving append file is committed, staging is gone
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_append_staging")),
+    // every append file on disk is one the manifest names, staging is gone
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_staging/append")),
       "a completed append must clear its staging")
-    val committed = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$dir/_append_commits"))
-      .map(_.getPath.getName).toSet
-    assert(tornFiles().forall(f => committed.contains(f.split("-")(1))),
-      "an uncommitted append file survived the rollback")
+    val committed = graft.operators.SegmentStore.open(spark, dir).of("inverted").toSet
+    assert(tornFiles().forall(committed.contains),
+      "an uncommitted append file survived the retry")
   }
 
   test("tombstone delete: live view drops the ids immediately, compaction removes them physically and clears the set") {
@@ -764,27 +763,22 @@ class AnnSpec extends SparkSpec {
       "a committed batch replay must be a no-op")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash AFTER publish, BEFORE the commit marker: the retry re-runs
-    // the whole body — deterministic batchId-keyed filenames mean it
+    // crash MID-publish of the SECOND batch: some cells' files renamed
+    // in, no manifest version — invisible, and the retry re-runs the
+    // whole body: deterministic batchId-keyed filenames mean it
     // REPLACES its own files instead of double-appending
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_ingest_commits/0"), false)
-    IvfPq.appendBatchToIndex(loaded, batch0, dir, batchId = 0L)
-    assert(asBag(IvfPq.loadIndex(spark, dir).inverted) == afterB0,
-      "a replay across the publish/commit crash window must not duplicate rows")
-    // crash MID-publish: some cells of the batch published, marker
-    // absent — drop one published file, retry, content fully restored
+    graft.operators.SegmentStore.ingestBatch(spark, dir, IvfPq.layout, 1L,
+        failAfter = "publish-partial")(
+      IvfPq.stageCoded(loaded.index, loaded.books, loaded.dsub, batch1, _))
     val published = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/inverted"))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
       .flatMap(st => fs.listStatus(st.getPath).map(_.getPath))
-      .filter(_.getName.startsWith("ingest-0-"))
-    assert(published.nonEmpty, "batch 0 must have published batchId-keyed files")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_ingest_commits/0"), false)
-    fs.delete(published.head, false)
-    IvfPq.appendBatchToIndex(loaded, batch0, dir, batchId = 0L)
+      .filter(_.getName.startsWith("ingest-1-"))
+    assert(published.nonEmpty, "batch 1 must have published batchId-keyed files")
     assert(asBag(IvfPq.loadIndex(spark, dir).inverted) == afterB0,
-      "a replay after a mid-publish crash must restore the batch exactly once")
-    // a SECOND batch under its own id appends; the final store equals
-    // the frozen-index encode of base ∪ both batches, multiplicity 1
+      "a replay across the publish/commit crash window must not duplicate rows")
+    // the retry lands it; the final store equals the frozen-index
+    // encode of base ∪ both batches, multiplicity 1
     IvfPq.appendBatchToIndex(loaded, batch1, dir, batchId = 1L)
     val finalBag = asBag(IvfPq.loadIndex(spark, dir).inverted)
     assert(finalBag.values.sum == nBase + n0 + n1)
@@ -808,16 +802,15 @@ class AnnSpec extends SparkSpec {
       m = 16, dsub = 4, kCodes = 64, dir = dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_ingest_commits")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_append_commits")),
-      "a fresh build carries no marker dirs")
+    assert(SegmentStore.open(spark, dir).batches.isEmpty,
+      "a fresh build carries no ingest receipts")
     def asBag(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Int](2).toList))
       .groupBy(identity).view.mapValues(_.length).toMap
     val loaded = IvfPq.loadIndex(spark, dir)
     val baseStored = asBag(loaded.inverted)
     // crash the store's FIRST ingest batch after one cell's files are
-    // renamed in, before the marker: the shared publish's seam
+    // renamed in, before the commit: the shared publish's seam
     SegmentStore.ingestBatch(spark, dir, IvfPq.layout, 0L,
         failAfter = "publish-partial")(
       IvfPq.stageCoded(loaded.index, loaded.books, loaded.dsub, batch, _))

@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.LexIndex
+import graft.operators.{LexIndex, SegmentStore}
 
 /** Persisted lexical index LIFECYCLE (doc_lex_append / doc_lex_delete
   * / st_lex_append): append ≡ build(base ∪ delta) table for table,
   * tombstones gate serving immediately, compaction == build(surviving)
-  * with the crash window replayed, streaming ingest idempotent under
-  * batch replay — the IvfPq lifecycle discipline on the text side.
+  * across its crash window, streaming ingest idempotent under batch
+  * replay — the IvfPq lifecycle discipline on the text side.
   */
 class LexIndexSpec extends SparkSpec {
 
@@ -82,7 +82,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.buildIndex(docs, dir)
     LexIndex.deleteFromIndex(docs.filter(isDel).select(col("doc_id")), dir)
     val nAll = LexIndex.loadIndex(spark, dir).postings.count()
-    // crash point: stage + marker land, publish does not
+    // crash point: the rewrite is staged, the manifest swap does not land
     LexIndex.compactIndex(spark, dir, failAfterStage = true)
     val mid = LexIndex.loadIndex(spark, dir)
     assert(mid.postings.count() == nAll,
@@ -94,20 +94,18 @@ class LexIndexSpec extends SparkSpec {
     assert(mid.livePostings
         .filter(col("doc_id").isInCollection(delIds)).count() == 0,
       "tombstones must keep gating the old store across the crash")
-    // the next compaction call RESUMES the publish...
+    // the next compaction call starts over from the old version and
+    // retires the tombstones in the same manifest version that drops
+    // their rows
     LexIndex.compactIndex(spark, dir)
     LexIndex.buildIndex(docs.filter(!isDel), mono)
     assert(storeRows(dir) == storeRows(mono),
-      "resumed publish diverges from build(surviving)")
-    // ...but must NOT clear tombstones (snapshot membership is
-    // unknowable after a crash); the following run re-applies them as
-    // a no-op anti-join and clears them
-    assert(LexIndex.tombstonesOf(spark, dir).count() > 0,
-      "a resumed publish cleared tombstones it cannot prove applied")
+      "the compaction after a crash diverges from build(surviving)")
+    assert(LexIndex.tombstonesOf(spark, dir).count() == 0,
+      "applied tombstones must be cleared")
     LexIndex.compactIndex(spark, dir)
-    assert(LexIndex.tombstonesOf(spark, dir).count() == 0)
     assert(storeRows(dir) == storeRows(mono),
-      "re-applying already-removed tombstones must be a no-op")
+      "a compaction with nothing to apply must be a no-op")
   }
 
   test("shard merge == monolithic build; serving equality; unsafe shards refused") {
@@ -139,20 +137,13 @@ class LexIndexSpec extends SparkSpec {
       "raw merged store keeps the rows until compaction")
     assert(lm2.livePostings.filter(col("doc_id") === victimId).count() == 0,
       "the shard's pending tombstone must gate the merged live view")
-    // refusals: ingest receipts / staged compaction mark a shard unsafe
-    val fs = new org.apache.hadoop.fs.Path(a)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$a/_ingest_commits"))
+    // refusal: an ingest receipt marks a shard as a serving store
+    LexIndex.appendBatchToIndex(
+      docs.filter(lit(false)).select(col("doc_id"), col("text")), a, 0L)
     val e1 = intercept[IllegalArgumentException] {
       LexIndex.mergeIndexes(spark, Seq(a, b), tmp("sm_ref1"))
     }
-    assert(e1.getMessage.contains("_ingest_commits"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$a/_ingest_commits"), true)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$b/_compact_staging"))
-    val e2 = intercept[IllegalArgumentException] {
-      LexIndex.mergeIndexes(spark, Seq(a, b), tmp("sm_ref2"))
-    }
-    assert(e2.getMessage.contains("staged compaction"))
+    assert(e1.getMessage.contains("ingest receipts"))
   }
 
   test("batch append crash windows: a torn append is whole-segment-invisible and rolls back") {
@@ -219,14 +210,14 @@ class LexIndexSpec extends SparkSpec {
       }.toMap
     val before = untouchedBytes()
     assert(before.nonEmpty)
-    // crash window first: stage + plan + marker land, publish does not
+    // crash window first: the rewrite is staged, the swap does not land
     LexIndex.compactIndex(spark, dir, failAfterStage = true)
     val nAll = docs.count()
     assert(LexIndex.loadIndex(spark, dir).dl.count() == nAll,
       "a crashed compaction must leave the old store intact")
     assert(LexIndex.tombstonesOf(spark, dir).count() > 0,
       "pending tombstones must survive the crash")
-    // resume
+    // the next call starts over
     LexIndex.compactIndex(spark, dir)
     LexIndex.buildIndex(docs.filter(!isDel), mono)
     assert(storeRows(dir) == storeRows(mono),
@@ -243,14 +234,14 @@ class LexIndexSpec extends SparkSpec {
     val expect = LexIndex.postings(docs.filter(isD1 && !isDel))
     assert(rows(rewritten) == rows(expect),
       "rewrite unit must be exactly the touched segment's survivors")
-    // tombstones: never cleared on a resumed publish; next call clears
-    assert(LexIndex.tombstonesOf(spark, dir).count() > 0)
-    LexIndex.compactIndex(spark, dir)
+    // the swap retired the applied tombstones with their rows; a
+    // further compaction finds nothing to rewrite
     assert(LexIndex.tombstonesOf(spark, dir).count() == 0)
+    LexIndex.compactIndex(spark, dir)
     assert(storeRows(dir) == storeRows(mono),
-      "re-applying already-removed tombstones must be a no-op")
+      "a compaction with nothing to apply must be a no-op")
     assert(untouchedBytes() == before,
-      "the no-op re-application must not rewrite anything")
+      "the no-op compaction must not rewrite anything")
   }
 
   test("tiered compaction across the merge boundary: only the tombstoned shard's slice is rewritten") {
@@ -299,21 +290,19 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.appendBatchToIndex(
       docs.filter(isDelta).select(col("doc_id"), col("text")), dir, 0L)
     LexIndex.deleteFromIndex(docs.filter(isDel).select(col("doc_id")), dir)
-    // unfenced: refused — an ingest publish racing the compactor's
-    // drops would be erased while its commit marker survives
+    // unfenced: refused — the store's stream may still be landing
+    // batches
     val e = intercept[IllegalArgumentException] {
       LexIndex.compactIndex(spark, dir)
     }
-    assert(e.getMessage.contains("_ingest_commits"))
+    assert(e.getMessage.contains("ingest receipts"))
     // fenced: the stream's segments fold into the rewrite, receipts
     // clear, and the result is build(surviving)
     LexIndex.compactIndex(spark, dir, ingestFenced = true)
     LexIndex.buildIndex(docs.filter(!isDel), mono)
     assert(storeRows(dir) == storeRows(mono),
       "fenced compaction diverges from build(surviving)")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_ingest_commits")),
+    assert(SegmentStore.open(spark, dir).batches.isEmpty,
       "the fence must clear the stream's receipts")
     assert(!LexIndex.segmentsOf(spark, dir, "postings").keySet
         .exists(_.startsWith("ingest-")),
@@ -325,20 +314,20 @@ class LexIndexSpec extends SparkSpec {
     val isDelta = col("doc_id") % 10 === 7
     val (dir, mono) = (tmp("ingest"), tmp("ingest_mono"))
     LexIndex.buildIndex(docs.filter(!isDelta), dir)
+    val base = storeRows(dir)
     val delta = docs.filter(isDelta).select(col("doc_id"), col("text"))
+    // crash after the postings publish, before the commit: invisible
+    SegmentStore.ingestBatch(spark, dir, LexIndex.layout, 0L,
+      failAfter = "publish-partial")(LexIndex.writeTables(delta, _, ""))
+    assert(storeRows(dir) == base, "a torn ingest batch leaked rows")
+    // its replay re-publishes the SAME deterministic file names —
+    // multiplicity 1, never 2
     LexIndex.appendBatchToIndex(delta, dir, 0L)
     val once = storeRows(dir)
+    assert(once != base)
     // committed batch replayed -> short-circuited no-op
     LexIndex.appendBatchToIndex(delta, dir, 0L)
     assert(storeRows(dir) == once, "a committed batch was re-applied")
-    // crash before the marker: the replay re-publishes the SAME
-    // deterministic file names — multiplicity 1, never 2
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_ingest_commits/0"), false)
-    LexIndex.appendBatchToIndex(delta, dir, 0L)
-    assert(storeRows(dir) == once,
-      "a pre-marker replay duplicated the batch")
     // the ingested store IS the monolithic build
     LexIndex.buildIndex(docs, mono)
     assert(once == storeRows(mono))

@@ -236,15 +236,15 @@ class MergeSpec extends SparkSpec {
     val (dirA, dirB) = (tmp("rc_a"), tmp("rc_b"))
     IvfPq.encodeShard(index, books, 4, c.filter(col("id") % 2 === 0), dirA)
     IvfPq.encodeShard(index, books, 4, c.filter(col("id") % 2 === 1), dirB)
-    // a streaming batch lands against shard A: its commit marker makes
+    // a streaming batch lands against shard A: its ingest receipt makes
     // it a serving store — batchIds are per-stream, so merging the
-    // marker is meaningless and dropping it breaks exactly-once
+    // receipt is meaningless and dropping it breaks exactly-once
     IvfPq.appendBatchToIndex(IvfPq.loadIndex(spark, dirA),
       c.filter(col("id") % 2 === 0).limit(3), dirA, batchId = 0L)
     val e = intercept[IllegalArgumentException] {
       IvfPq.mergeIndexes(spark, Seq(dirA, dirB), tmp("rc_m"))
     }
-    assert(e.getMessage.contains("_ingest_commits"))
+    assert(e.getMessage.contains("ingest receipts"))
     c.unpersist()
   }
 }
