@@ -3,41 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.sources.TableIO
-
 class SourcesSpec extends SparkSpec {
-
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
-
-  test("csv round-trip preserves rows and types") {
-    val o = Tables.orders(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("csv_io").toString
-    TableIO.writeCsv(o, dir)
-    val back = TableIO.readCsv(spark, dir, o.schema)
-    assert(back.schema == o.schema)
-    assert(rows(back) == rows(o))
-  }
-
-  test("json round-trip preserves rows") {
-    val n = Tables.nation(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("json_io").toString
-    TableIO.writeJson(n, dir)
-    assert(rows(TableIO.readJson(spark, dir, n.schema)) == rows(n))
-  }
-
-  test("partitioned parquet layout prunes partitions at the scan") {
-    val o = Tables.orders(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("part_io").toString
-    TableIO.writePartitioned(o, dir, "o_orderstatus")
-    val back = TableIO.readParquet(spark, dir)
-    val q = back.filter(col("o_orderstatus") === "O")
-    q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-    // partition filter must appear as a partition filter, not a data filter
-    assert(plan.contains("PartitionFilters") && plan.contains("o_orderstatus"), plan)
-    assert(q.count() == o.filter(col("o_orderstatus") === "O").count())
-  }
 
   test("approx percentile within 2% of exact") {
     val approx = SparkEntry.queries("q18_approx_percentile")(spark, sf)
