@@ -25,6 +25,16 @@ object Dedup {
   val DefaultTau = 0.8
   val DefaultBucketCap = 1000
 
+  /** The char n-gram shingle set of the text column `textCol` as
+    * sorted distinct 64-bit hashes: every n-char substring (a text
+    * shorter than n is its own single gram), hashed by gramHashes. The
+    * one definition every char-shingle path shares.
+    */
+  def charGramHashes(textCol: String, n: Int): Column =
+    GraftFunctions.gramHashes(expr(
+      s"transform(sequence(1, greatest(length($textCol)-${n - 1}, 1)), " +
+        s"i -> substring($textCol, i, $n))"))
+
   /** MinHash signature: k permutations via the native
     * MinHashSignature expression (one compiled loop per row — see its
     * scaladoc for why the HOF formulation was replaced).
@@ -129,12 +139,9 @@ object Dedup {
       // work; the rep aggregate's byte-sized partitioning (or a
       // single-file scan) would serialize them (bytes-gated — the
       // identity at scale)
-      .select(col("id"),
-        expr(s"transform(sequence(1, greatest(length($textCol)-${n - 1}, 1)), " +
-          s"i -> substring($textCol, i, $n))").as("grams_raw"))
       // shingle sets live on as sorted distinct 64-bit hashes: set ops
       // (minhash, exact intersect) run on longs, never strings
-      .select(col("id"), GraftFunctions.gramHashes(col("grams_raw")).as("ghash"))
+      .select(col("id"), charGramHashes(textCol, n).as("ghash"))
       .withColumn("sig", minhashSignature("ghash", k))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val buckets = base

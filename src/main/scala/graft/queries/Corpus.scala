@@ -164,8 +164,7 @@ object Corpus {
     val g = documents(s, d)
       .filter(col("doc_id") < 200)
       .select(col("doc_id"),
-        GraftFunctions.gramHashes(
-          expr("transform(sequence(1, greatest(length(text)-2, 1)), i -> substring(text, i, 3))")).as("grams"))
+        graft.operators.Dedup.charGramHashes("text", 3).as("grams"))
     val a = g.select(col("doc_id").as("a_id"), col("grams").as("a_grams"))
     val b = g.select(col("doc_id").as("b_id"), col("grams").as("b_grams"))
     a.join(b, col("a_id") =!= col("b_id"))

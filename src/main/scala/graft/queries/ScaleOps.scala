@@ -91,8 +91,7 @@ object ScaleOps {
     val g = documents(s, d)
       .filter(col("doc_id") < 500)
       .select(col("doc_id"),
-        GraftFunctions.gramHashes(
-          expr("transform(sequence(1, greatest(length(text)-2, 1)), i -> substring(text, i, 3))")).as("grams"))
+        graft.operators.Dedup.charGramHashes("text", 3).as("grams"))
       .withColumn("n_grams", size(col("grams")))
     val a = g.select(col("doc_id").as("a_id"), col("grams").as("a_grams"),
       col("n_grams").as("a_n"))

@@ -65,11 +65,7 @@ object DedupStream {
     // per arriving doc; without the fan-out they pipeline into the
     // replay source's single-file scan task
     val sigs = graft.operators.Par.widenStream(docs)
-      .select(col("doc_id"),
-        expr("transform(sequence(1, greatest(length(text)-2, 1)), " +
-          "i -> substring(text, i, 3))").as("grams_raw"))
-      .select(col("doc_id"),
-        graft.functions.expressions.GraftFunctions.gramHashes(col("grams_raw")).as("ghash"))
+      .select(col("doc_id"), Dedup.charGramHashes("text", 3).as("ghash"))
       .withColumn("sig", Dedup.minhashSignature("ghash", k))
     sigs
       .select(col("doc_id"), col("sig"),
