@@ -121,27 +121,45 @@ object Par {
     if (failure != null) throw failure
   }
 
-  /** Start a value-producing Spark-action chain on a daemon driver
-    * thread IMMEDIATELY and return a blocking, memoizing getter — the
-    * streaming-query form of [[two]]: a store bootstrap build is
-    * independent of the stream-start machinery (MicroBatchExecution
-    * init, source listing, batch-0 planning — none of which read the
-    * store), so the serve/ingest queries start their stream while the
-    * build runs and the foreachBatch body awaits the getter before
-    * touching the store. First failure propagates unwrapped from the
-    * getter (every call after a failure rethrows the same cause).
+  /** Run `body` while `build` — a value-producing Spark-action chain
+    * — runs on a daemon driver thread started IMMEDIATELY; `body` gets
+    * a blocking, memoizing getter for the build's value. The streaming
+    * form of [[two]]: a store bootstrap build is independent of the
+    * stream-start machinery (MicroBatchExecution init, source listing,
+    * batch-0 planning — none of which read the store), so the serve
+    * and ingest queries start their stream inside `body` while the
+    * build runs, and the foreachBatch body awaits the getter before
+    * touching the store. Structured: the build is ALWAYS awaited
+    * before this returns or rethrows, so it never outlives its caller
+    * (a failed stream's build would otherwise keep writing a store the
+    * next query resets). A body failure stays primary, with a build
+    * failure attached as suppressed; a build failure propagates
+    * unwrapped from the getter, and from here if the body never asked.
     */
-  def async[T](f: () => T): () => T = {
+  def overlapped[T, R](build: () => T)(body: (() => T) => R): R = {
     val fut = new java.util.concurrent.FutureTask[T](
-      new java.util.concurrent.Callable[T] { def call(): T = f() })
+      new java.util.concurrent.Callable[T] { def call(): T = build() })
     val t = new Thread(fut, "graft-async-build")
     t.setDaemon(true)
     t.start()
-    () => try fut.get()
+    def await(): T = {
+      t.join()
+      try fut.get()
       catch {
         case e: java.util.concurrent.ExecutionException =>
           throw Option(e.getCause).getOrElse(e)
       }
+    }
+    val r =
+      try body(() => await())
+      catch {
+        case e: Throwable =>
+          try { await(); () }
+          catch { case b: Throwable => if (b ne e) e.addSuppressed(b) }
+          throw e
+      }
+    await()
+    r
   }
 
   /** Two INDEPENDENT value-producing Spark-action chains overlapped —

@@ -599,17 +599,17 @@ object Streaming {
     // (source listing, batch-0 planning never read the store): build +
     // load run async while the stream starts; the per-batch body awaits
     // the loaded artifact before serving (guide §2.6)
-    val loadedF = Par.async { () =>
-      LexIndex.buildIndex(graft.Tables.documents(s, d), dir)
-      LexIndex.loadIndex(s, dir)
-    }
     val arriving = QanStream.documentsStream(s, d)
       .filter(col("doc_id") < 5)
       .select(col("doc_id"),
         explode(array_distinct(split(lower(trim(col("text"))), "\\s+")))
           .as("token"))
-    QanStream.runForeachBatch(arriving, batch => bm25ServeStage(loadedF(), batch))
-      .orderBy(col("query_id"), col("rank"))
+    Par.overlapped { () =>
+      LexIndex.buildIndex(graft.Tables.documents(s, d), dir)
+      LexIndex.loadIndex(s, dir)
+    } { loadedF =>
+      QanStream.runForeachBatch(arriving, batch => bm25ServeStage(loadedF(), batch))
+    }.orderBy(col("query_id"), col("rank"))
   }
 
   // ------------------------------------------------------ st_lex_append
@@ -640,23 +640,21 @@ object Streaming {
     val dir = Corpus.lexDir(s, d) + "_stream_append"
     // base build async under the stream start (§2.6); each batch body
     // awaits it before landing its delta segment
-    val baseBuilt = Par.async { () =>
-      LexIndex.buildIndex(docs.filter(!isDelta), dir)
-    }
     val arrivingDelta = QanStream.documentsStream(s, d)
       .select(col("doc_id"), col("text"))
       .filter(isDelta)
-    val receipts = QanStream.runForeachBatchWithId(arrivingDelta, (batch, bid) => {
-      baseBuilt()
-      LexIndex.appendBatchToIndex(batch, dir, bid)
-      LexIndex.postings(batch).groupBy(col("doc_id"))
-        .agg(sum(col("tf")).as("dl"), count(lit(1)).as("n_terms"))
-    })
+    val receipts = Par.overlapped { () =>
+      LexIndex.buildIndex(docs.filter(!isDelta), dir)
+    } { baseBuilt =>
+      QanStream.runForeachBatchWithId(arrivingDelta, (batch, bid) => {
+        baseBuilt()
+        LexIndex.appendBatchToIndex(batch, dir, bid)
+        LexIndex.postings(batch).groupBy(col("doc_id"))
+          .agg(sum(col("tf")).as("dl"), count(lit(1)).as("n_terms"))
+      })
+    }
     // post-stream audit: every receipt readable back from the RELOADED
     // store, exactly once, with the full posting fan-out present
-    // (baseBuilt() covers the empty-stream edge: no batch ran ⇒ the
-    // body never awaited the build)
-    baseBuilt()
     val loaded = LexIndex.loadIndex(s, dir)
     val storedDl = loaded.dl.groupBy(col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("store_copies"))
@@ -710,19 +708,19 @@ object Streaming {
     val dir = Corpus.lexDir(s, d) + "_stream_delete"
     // base build async under the stream start (§2.6); each batch body
     // awaits it before landing its tombstones
-    val baseBuilt = Par.async { () => LexIndex.buildIndex(docs, dir) }
     val isDel = col("doc_id") % Corpus.lexDelMod === Corpus.lexDelRem
     val arriving = QanStream.documentsStream(s, d)
       .select(col("doc_id")).filter(isDel)
-    val receipts = QanStream.runForeachBatch(arriving, batch => {
-      baseBuilt()
-      LexIndex.deleteFromIndex(batch.select(col("doc_id")), dir)
-      batch.select(col("doc_id"))
-    })
+    val receipts = Par.overlapped { () => LexIndex.buildIndex(docs, dir) } { baseBuilt =>
+      QanStream.runForeachBatch(arriving, batch => {
+        baseBuilt()
+        LexIndex.deleteFromIndex(batch.select(col("doc_id")), dir)
+        batch.select(col("doc_id"))
+      })
+    }
     // post-stream audit against the RELOADED store: the raw roster
     // still holds the row (physical removal is compaction's job), but
     // the live view must not serve it
-    baseBuilt()
     val loaded = LexIndex.loadIndex(s, dir)
     val raw = loaded.dl.select(col("doc_id"), col("dl"))
     val live = loaded.liveDl
@@ -888,34 +886,34 @@ object Streaming {
     // write overlap each other but must finish before the stream is
     // CONSTRUCTED: the feed plan probes loaded.index and the stream
     // source lists reqDir.
-    val lexF = graft.operators.Par.async { () =>
+    graft.operators.Par.overlapped { () =>
       LexIndex.buildIndex(graft.Tables.documents(s, d), lexDirPath)
       LexIndex.loadIndex(s, lexDirPath)
-    }
-    graft.operators.Par.jobs(
-      () => IvfPq.buildIndex(corpus, corpus.count(), dim = 64,
-        m = Vectors.pqM, dsub = Vectors.pqDsub, kCodes = Vectors.pqK,
-        dir = vecDir): Unit,
-      // the request feed: (query_id, text, qv) per request — both
-      // construction scans are doc_id/vec_id-pushdown-pruned to the
-      // request rows; in production this directory IS the arrival queue
-      () => graft.Tables.documents(s, d).filter(col("doc_id") < 5)
-        .select(col("doc_id").as("query_id"), col("text"))
-        .join(graft.Tables.embeddings(s, d).filter(col("vec_id") < 5)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").cast(ArrayType(DoubleType)).as("qv")),
-          Seq("query_id"))
-        .write.mode("overwrite").parquet(reqDir))
-    val loaded = IvfPq.loadIndex(s, vecDir)
-    val full = corpus.select(col("id").as("neighbor_id"), col("v").as("cv"))
-    val arriving = s.readStream.schema(StructType(Seq(
-        StructField("query_id", LongType),
-        StructField("text", StringType),
-        StructField("qv", ArrayType(DoubleType)))))
-      .parquet(reqDir)
-    QanStream.runForeachBatch(hybridFeed(loaded, arriving),
-        batch => hybridServeStage(lexF(), full, batch))
-      .orderBy(col("query_id"), col("fused_rank"))
+    } { lexF =>
+      graft.operators.Par.jobs(
+        () => IvfPq.buildIndex(corpus, corpus.count(), dim = 64,
+          m = Vectors.pqM, dsub = Vectors.pqDsub, kCodes = Vectors.pqK,
+          dir = vecDir): Unit,
+        // the request feed: (query_id, text, qv) per request — both
+        // construction scans are doc_id/vec_id-pushdown-pruned to the
+        // request rows; in production this directory IS the arrival queue
+        () => graft.Tables.documents(s, d).filter(col("doc_id") < 5)
+          .select(col("doc_id").as("query_id"), col("text"))
+          .join(graft.Tables.embeddings(s, d).filter(col("vec_id") < 5)
+            .select(col("vec_id").as("query_id"),
+              col("embedding").cast(ArrayType(DoubleType)).as("qv")),
+            Seq("query_id"))
+          .write.mode("overwrite").parquet(reqDir))
+      val loaded = IvfPq.loadIndex(s, vecDir)
+      val full = corpus.select(col("id").as("neighbor_id"), col("v").as("cv"))
+      val arriving = s.readStream.schema(StructType(Seq(
+          StructField("query_id", LongType),
+          StructField("text", StringType),
+          StructField("qv", ArrayType(DoubleType)))))
+        .parquet(reqDir)
+      QanStream.runForeachBatch(hybridFeed(loaded, arriving),
+          batch => hybridServeStage(lexF(), full, batch))
+    }.orderBy(col("query_id"), col("fused_rank"))
   }
 
   // Streaming index INGEST — the online half of emb_index_append, and
@@ -955,26 +953,25 @@ object Streaming {
     val dir = Vectors.indexDir(d) + "_stream_append"
     // base build + load async under the stream start (§2.6); each
     // batch body awaits the loaded artifact before encoding/appending
-    val loadedF = graft.operators.Par.async { () =>
-      IvfPq.buildIndex(base, base.count(), dim = 64, m = Vectors.pqM,
-        dsub = Vectors.pqDsub, kCodes = Vectors.pqK, dir = dir)
-      IvfPq.loadIndex(s, dir)
-    }
     val arrivingDelta = QanStream.embeddingsStream(s, d)
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
       .filter(isDelta)
-    val receipts = QanStream.runForeachBatchWithId(arrivingDelta, (batch, bid) => {
-      val loaded = loadedF()
-      IvfPq.appendBatchToIndex(loaded, batch, dir, bid)
-      IvfPq.codedInvertedFile(loaded.index, batch, loaded.books, loaded.dsub)
-        .select(col("id").as("vec_id"), col("cell"),
-          concat_ws(",", col("codes")).as("codes"))
-    })
+    val receipts = graft.operators.Par.overlapped { () =>
+      IvfPq.buildIndex(base, base.count(), dim = 64, m = Vectors.pqM,
+        dsub = Vectors.pqDsub, kCodes = Vectors.pqK, dir = dir)
+      IvfPq.loadIndex(s, dir)
+    } { loadedF =>
+      QanStream.runForeachBatchWithId(arrivingDelta, (batch, bid) => {
+        val loaded = loadedF()
+        IvfPq.appendBatchToIndex(loaded, batch, dir, bid)
+        IvfPq.codedInvertedFile(loaded.index, batch, loaded.books, loaded.dsub)
+          .select(col("id").as("vec_id"), col("cell"),
+            concat_ws(",", col("codes")).as("codes"))
+      })
+    }
     // post-stream audit: every receipt must be readable back from the
     // RELOADED store, byte-identical (id, cell, codes), exactly once
-    // (loadedF() covers the empty-stream edge)
-    loadedF()
     val stored = IvfPq.loadIndex(s, dir).inverted
       .select(col("id").as("vec_id"), col("cell"),
         concat_ws(",", col("codes")).as("codes"))
@@ -1047,22 +1044,22 @@ object Streaming {
     val dir = Vectors.indexDir(d) + "_stream_delete"
     // base build async under the stream start (§2.6); each batch body
     // awaits it before landing its tombstones
-    val baseBuilt = graft.operators.Par.async { () =>
-      IvfPq.buildIndex(all, all.count(), dim = 64, m = Vectors.pqM,
-        dsub = Vectors.pqDsub, kCodes = Vectors.pqK, dir = dir)
-    }
     val isDel = col("id") % Vectors.deleteMod === Vectors.deleteRem
     val arriving = QanStream.embeddingsStream(s, d)
       .select(col("vec_id").as("id")).filter(isDel)
-    val receipts = QanStream.runForeachBatch(arriving, batch => {
-      baseBuilt()
-      IvfPq.deleteFromIndex(batch.select(col("id")), dir)
-      batch.select(col("id").as("vec_id"))
-    })
+    val receipts = graft.operators.Par.overlapped { () =>
+      IvfPq.buildIndex(all, all.count(), dim = 64, m = Vectors.pqM,
+        dsub = Vectors.pqDsub, kCodes = Vectors.pqK, dir = dir)
+    } { baseBuilt =>
+      QanStream.runForeachBatch(arriving, batch => {
+        baseBuilt()
+        IvfPq.deleteFromIndex(batch.select(col("id")), dir)
+        batch.select(col("id").as("vec_id"))
+      })
+    }
     // post-stream audit against the RELOADED index: the raw store
     // still holds the row (physical removal is compaction's job), but
     // the live view must not serve it
-    baseBuilt()
     val loaded = IvfPq.loadIndex(s, dir)
     val cells = loaded.inverted.select(col("id").as("vec_id"), col("cell"))
     val liveIds = loaded.live

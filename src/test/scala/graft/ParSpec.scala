@@ -27,4 +27,28 @@ class ParSpec extends AnyFunSuite {
     assert(stuck.length == 1 && stuck.head.getMessage.contains("1 worker"), e.getSuppressed.toSeq)
     assert(waitedMs >= 1000L && waitedMs < 2900L, s"returned after $waitedMs ms")
   }
+
+  test("overlapped: a body that fails first still waits for the slow build, whose error is attached") {
+    val started = new CountDownLatch(1)
+    val boom = new RuntimeException("stream failed")
+    val buildErr = new IllegalStateException("build failed")
+    @volatile var buildEnded = 0L
+    val slowBuild: () => Int = () => {
+      started.countDown()
+      Thread.sleep(800)
+      buildEnded = System.nanoTime()
+      throw buildErr
+    }
+    val e = intercept[RuntimeException] {
+      Par.overlapped(slowBuild) { _ => started.await(); throw boom }
+    }
+    val returned = System.nanoTime()
+    assert(e eq boom, "the body's failure is what the caller sees")
+    assert(e.getSuppressed.toSeq == Seq(buildErr), e.getSuppressed.toSeq)
+    assert(buildEnded > 0L && buildEnded <= returned, "returned before the build ended")
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == "graft-async-build" && t.isAlive),
+      "a graft-async-build thread outlived the call")
+  }
 }
