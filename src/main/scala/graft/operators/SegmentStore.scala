@@ -112,8 +112,14 @@ private[graft] object SegmentStore {
   private val CopyThreads = 8
   private val Staging = "_staging"
   private val Tombstones = "tombstones"
-  private val locks = new ConcurrentHashMap[String, Object]()
-  private def lockOf(dir: String): Object = locks.computeIfAbsent(dir, _ => new Object)
+  /** Each store's manifest log, one per dir in this JVM: it is the
+    * lock that serializes the dir's commits, and its cache of the
+    * latest versions spares re-reading what this JVM just committed.
+    * [[reset]] drops it with the dir.
+    */
+  private val logs = new ConcurrentHashMap[String, HDFSMetadataLog[Manifest]]()
+  private def logOf(spark: SparkSession, dir: String): HDFSMetadataLog[Manifest] =
+    logs.computeIfAbsent(dir, _ => new HDFSMetadataLog[Manifest](spark, s"$dir/_manifest"))
 
   def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -126,15 +132,11 @@ private[graft] object SegmentStore {
     * previous incarnation must not survive it.
     */
   def reset(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(dir)
-    if (fs.exists(p)) fs.delete(p, true): Unit
+    logs.remove(dir)
+    fsOf(spark, dir).delete(new Path(dir), true): Unit
   }
 
   // ------------------------------------------------- manifest
-
-  private def manifestLog(spark: SparkSession, dir: String) =
-    new HDFSMetadataLog[Manifest](spark, s"$dir/_manifest")
 
   private def latest(log: HDFSMetadataLog[Manifest]): (Long, Manifest) =
     log.getLatest().getOrElse((-1L, Empty))
@@ -143,28 +145,29 @@ private[graft] object SegmentStore {
     * a store never committed).
     */
   def open(spark: SparkSession, dir: String): Manifest =
-    if (!fsOf(spark, dir).exists(new Path(s"$dir/_manifest"))) Empty
-    else latest(manifestLog(spark, dir))._2
+    if (!logs.containsKey(dir) && !fsOf(spark, dir).exists(new Path(s"$dir/_manifest"))) Empty
+    else latest(logOf(spark, dir))._2
 
   /** Commit one mutation as version v+1 of `dir`'s manifest: `next`
     * sees the latest version, publishes its files and returns the new
     * version (None commits nothing). Serialized per store dir in this
-    * JVM; returns the log and its latest version afterwards.
+    * JVM; returns the latest version afterwards.
     */
   private def commit(spark: SparkSession, dir: String)(
-      next: Manifest => Option[Manifest]): (HDFSMetadataLog[Manifest], Long, Manifest) =
-    lockOf(dir).synchronized {
-      val log = manifestLog(spark, dir)
+      next: Manifest => Option[Manifest]): (Long, Manifest) = {
+    val log = logOf(spark, dir)
+    log.synchronized {
       val (v, m) = latest(log)
       next(m) match {
-        case None => (log, v, m)
+        case None => (v, m)
         case Some(n) =>
           if (!log.add(v + 1, n)) throw new IllegalStateException(
             s"store $dir: manifest version ${v + 1} already exists - another " +
               "process is writing this store")
-          (log, v + 1, n)
+          (v + 1, n)
       }
     }
+  }
 
   /** A store-relative file's full path. */
   private def pathOf(dir: String, rel: String): Path = new Path(s"$dir/$rel")
@@ -211,17 +214,19 @@ private[graft] object SegmentStore {
       table: String): Seq[(Path, String)] = {
     val t = new Path(s"$root/$table")
     if (!layout.partitioned) Seq((t, table))
-    else if (!fs.exists(t)) Seq.empty
-    else fs.listStatus(t)
+    else list(fs, t)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
       .map(st => (st.getPath, s"$table/${st.getPath.getName}"))
-      .sortBy(_._2).toSeq
+      .sortBy(_._2)
   }
 
+  /** A dir's entries — none when it does not exist. */
+  private def list(fs: FileSystem, d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(d).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
   private def parquetIn(fs: FileSystem, d: Path): Seq[Path] =
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+    list(fs, d).map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
 
   /** Rename `src` to `dst`, replacing what an earlier attempt left there. */
   private def move(fs: FileSystem, src: Path, dst: Path): Unit =
@@ -264,13 +269,13 @@ private[graft] object SegmentStore {
   }
 
   /** Land one batch append: `stage` the delta under the staging dir it
-    * is given, publish and commit. See the header for the crash seams.
+    * is given (overwriting what a crashed append left there), publish
+    * and commit. See the header for the crash seams.
     */
   def appendSegment(spark: SparkSession, dir: String, layout: Layout,
       failAfter: String)(stage: String => Unit): Unit = {
     val fs = fsOf(spark, dir)
     val staging = new Path(s"$dir/$Staging/append")
-    fs.delete(staging, true)
     stage(staging.toString)
     if (failAfter == "staged" || failAfter == "stage-partial") return
     commit(spark, dir) { m =>
@@ -369,8 +374,9 @@ private[graft] object SegmentStore {
     if (!fs.exists(new Path(s"$dir/_manifest"))) return
     val gone = dropped.values.flatten.toSet ++ snapshot.tombstones
     val changed = gone.nonEmpty || (fenced && snapshot.batches.nonEmpty)
-    lockOf(dir).synchronized {
-      val (log, v, now) = commit(spark, dir) { m =>
+    val log = logOf(spark, dir)
+    log.synchronized {
+      val (v, now) = commit(spark, dir) { m =>
         if (!changed) None
         else publish(fs, dir, layout, compactRoot(dir), name, "").map(added =>
           Manifest(m.files.map { case (t, fs0) => t -> fs0.filterNot(gone) },

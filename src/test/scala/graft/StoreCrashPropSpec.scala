@@ -73,9 +73,13 @@ class StoreCrashPropSpec extends SparkSpec {
     def tombstones(dir: String): Set[Long]
   }
 
-  private def tmp(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_crashprop_${tag}_" +
+  /** Store dirs of the running sequence, removed when it ends. */
+  private val seqDirs = mutable.ArrayBuffer.empty[String]
+  private def tmp(tag: String): String = {
+    seqDirs += s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_crashprop_${tag}_" +
       java.util.UUID.randomUUID.toString.take(8)
+    seqDirs.last
+  }
 
   private object Lex extends Store {
     private val vocab = Vector("alpha", "beta", "gamma", "delta", "eps",
@@ -280,7 +284,8 @@ class StoreCrashPropSpec extends SparkSpec {
     var seq = 0
     val prop = Prop.forAllNoShrink(seqGen) { steps =>
       seq += 1
-      run(store, steps, s"$tag$seq", fresh(seq))
+      try run(store, steps, s"$tag$seq", fresh(seq))
+      finally { seqDirs.foreach(SegmentStore.reset(spark, _)); seqDirs.clear() }
       true
     }
     val r = SCTest.check(SCTest.Parameters.default
