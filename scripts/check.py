@@ -25,6 +25,13 @@ def canon(rows, cols):
         out.append(tuple(rr))
     return sorted(out), [cols[i] for i in order]
 
+def normty(t):
+    # the driver's hash is type-sensitive where pandas conversion
+    # diverges: HUGEINT (int128) → float64 breaks it, while plain
+    # integer widths (int32 vs int64) hash the same. Normalize
+    # integer widths, keep HUGEINT/DECIMAL/DOUBLE distinct.
+    return "INT" if t in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT") else t
+
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -47,12 +54,6 @@ def main():
             wrows = want.fetchall()
         except Exception as e:
             print(f"FAIL {name}: oracle sql error: {e}"); n_bad += 1; continue
-        # the driver's hash is type-sensitive where pandas conversion
-        # diverges: HUGEINT (int128) → float64 breaks it, while plain
-        # integer widths (int32 vs int64) hash the same. Normalize
-        # integer widths, keep HUGEINT/DECIMAL/DOUBLE distinct.
-        def normty(t):
-            return "INT" if t in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT") else t
         try:
             gt = {r[0]: normty(r[1]) for r in con.execute(
                 f"DESCRIBE SELECT * FROM '{outdir}/{name}/*.parquet'").fetchall()}

@@ -14,12 +14,7 @@ object Verify {
     // AnnIvf.adaptiveCells(count) — the coupling holds only while the
     // verify corpus keeps adaptiveCells at 16 (≤ ~2.1k embeddings).
     // Fail HERE with the real cause rather than letting a grown corpus
-    // surface as an opaque per-query hash mismatch. (Oracle queries
-    // are identified structurally: every IVF replay starts from the
-    // cents0 literal CTE.)
-    val ivfFamily = SparkEntry.oracleSql.collect {
-      case (name, sql) if sql.contains("cents0(cell, c)") => name
-    }.toSet
+    // surface as an opaque per-query hash mismatch.
     if (queries.exists { case (name, _) => ivfFamily(name) }) {
       val nEmb = Tables.table(spark, sfDir, "embeddings").count()
       val cells = graft.operators.AnnIvf.adaptiveCells(nEmb)
@@ -35,6 +30,12 @@ object Verify {
       sys.exit(1)
     }
   }
+
+  /** The oracles that replay the 16-cell IVF index: every IVF replay
+    * block starts from the centroid literal CTE ScaleOps marks. */
+  lazy val ivfFamily: Set[String] = SparkEntry.oracleSql.collect {
+    case (name, sql) if sql.contains(graft.queries.ScaleOps.IvfCentroidMarker) => name
+  }.toSet
 
   /** Writes each query's result to `outDir/<name>` (one parquet file)
     * and every oracle to `outDir/oracle_sql.json`; a query that throws

@@ -108,8 +108,8 @@ object AnnPq {
     * (m small ints per vector, the only per-vector payload a coded
     * inverted file ships through an ADC join). Same per-subspace
     * argmin kernels as [[encode]]; no reconstruction is materialized —
-    * ADC consumers score codes against a per-query LUT
-    * ([[graft.functions.expressions.AnnKernels.adcCosine]]).
+    * ADC consumers score codes directly against the query
+    * ([[graft.functions.expressions.AnnKernels.adcCosineFromQuery]]).
     *
     * @return input columns + `codes` (array&lt;int&gt; of length m;
     *         −1 marks an empty-codebook subspace, skipped by ADC)

@@ -30,8 +30,8 @@ import graft.functions.expressions.GraftFunctions
   *    full-composition oracle (emb_ivfpq_topk_two_level).
   *  - '''True ADC''': the candidate relation carries (cell, id,
   *    codes) — m ints per vector, the part a 100 TB deployment keeps
-  *    memory-resident — and scoring is m lookups into a per-query LUT
-  *    (AnnKernels.pqQueryLut / adcCosine). The PQ reconstruction
+  *    memory-resident — and scoring folds each code's centroid against
+  *    the query (AnnKernels.adcCosineFromQuery). The PQ reconstruction
   *    (~dim doubles ≈ 32× the codes) exists nowhere in the join.
   *
   * [[buildIndex]]/[[loadIndex]] persist the trained artifact

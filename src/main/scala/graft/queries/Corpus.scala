@@ -1648,8 +1648,7 @@ object Corpus {
       SELECT query_id, doc_id, brank AS rank_lex
       FROM bm25r WHERE brank <= $hybridDepth),
     ${ScaleOps.ivfCtes(16, 64)},
-    ${Vectors.pqCtesComposable},
-    ${Vectors.ivfpqQueryProbesCte(64)},
+    ${Vectors.pqCtesComposable},${ScaleOps.probesCte(s"${Vectors.ivfpqNprobe}")},
     ${Vectors.adcCtes("probes", "inverted", 64)},
     ${Vectors.ivfpqRerankCtes(Vectors.ivfpqRerank, 64)},
     vec AS (

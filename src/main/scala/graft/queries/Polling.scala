@@ -28,9 +28,11 @@ object Polling {
   // polls through exactly the same stream.
   private val qanPollDelta: Q = (s, d) => {
     import s.implicits._
-    val staging = Files.createTempDirectory("graft_pollq_staging").toString
-    val ckpt = Files.createTempDirectory("graft_pollq_ckpt").toString
-    val out = Files.createTempDirectory("graft_pollq_out").toString
+    // the result reads `out` lazily: all three go at JVM exit
+    def scratch(tag: String) = graft.operators.Scratch.deleteAtExit(
+      Files.createTempDirectory(tag).toString)
+    val (staging, ckpt, out) =
+      (scratch("graft_pollq_staging"), scratch("graft_pollq_ckpt"), scratch("graft_pollq_out"))
     graft.Tables.events(s, d)
       .groupBy(col("user_id"), col("event_type"),
         date_trunc("day", col("ts")).as("day"))

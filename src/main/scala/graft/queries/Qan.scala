@@ -449,10 +449,8 @@ object Qan {
   private def allocWireDir(): String = {
     val tmp = System.getProperty("java.io.tmpdir", "/tmp")
     sweepStaleWireDirs(new java.io.File(tmp))
-    val path = s"$tmp/graft_otel_roundtrip_" +
-      java.util.UUID.randomUUID.toString.take(8)
-    deleteAtExit(new java.io.File(path))
-    path
+    graft.operators.Scratch.deleteAtExit(s"$tmp/graft_otel_roundtrip_" +
+      java.util.UUID.randomUUID.toString.take(8))
   }
 
   private def otelWireDir(s: SparkSession, d: String): String = {
@@ -492,26 +490,6 @@ object Qan {
     otelImportRollup(s.read.format("graft-otel").load(path))
   }
 
-  private def deleteTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteTree)
-    f.delete(): Unit
-  }
-
-  /** Remove this run's wire dirs when the JVM exits (the lazy read means
-    * they cannot be deleted inline; deleteOnExit can't remove non-empty
-    * dirs). ONE hook drains a shared list — registering a hook per
-    * evaluation accumulated threads unboundedly across repeated
-    * spec/bench invocations in a long-lived session.
-    */
-  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => exitDirs.forEach(deleteTree)))
-  private def deleteAtExit(dir: java.io.File): Unit = {
-    exitHook
-    exitDirs.add(dir): Unit
-  }
-
   /** Sweep wire dirs orphaned by killed JVMs (shutdown hooks never ran).
     * Only dirs stale by more than six hours are touched — longer than
     * any harness run, so a concurrent run's dir is never swept even if
@@ -524,7 +502,7 @@ object Qan {
     if (kids != null) kids.foreach { f =>
       if (f.isDirectory && f.getName.startsWith("graft_otel_roundtrip_") &&
           f.lastModified() < cutoff)
-        deleteTree(f)
+        graft.operators.Scratch.deleteTree(f)
     }
   }
 

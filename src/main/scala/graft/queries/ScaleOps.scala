@@ -375,21 +375,23 @@ object ScaleOps {
   // IVF-bucketed approximate top-k — the data-adaptive scale path
   // next to emb_ann_lsh (seeded centroids + one decimal-exact Lloyd
   // refinement; see AnnIvf for the 100 TB argument).
-  private val embAnnIvf: Q = (s, d) => {
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    // persisted: sizing count + Lloyd rounds + inverted file rescan it
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    // adaptiveCells everywhere an IVF index is built (= 16 at every
-    // oracle-checked scale): ALL IVF consumers — search, audit,
-    // sampling, dedup, OOD — must share one index shape or they
-    // silently describe different partitions of the corpus at scale
-    AnnIvf.topK(corpus, queries, k = 10,
-        cells = AnnIvf.adaptiveCells(corpus.count()), dim = 64, nprobe = 2)
+  //
+  // adaptiveCells everywhere an IVF index is built (= 16 at every
+  // oracle-checked scale): ALL IVF consumers — search, audit,
+  // sampling, dedup, OOD — must share one index shape or they
+  // silently describe different partitions of the corpus at scale.
+  // Each one-level/two-level pair (annIvf, cellDedup, cellRecall) is
+  // one body given its regime's search or inverted-file builder, which
+  // takes the persisted corpus and its one sizing count.
+  private def annIvf(topK: (DataFrame, DataFrame, Long) => DataFrame): Q = (s, d) => {
+    val corpus = Vectors.vecCorpus(s, d)
+    topK(corpus, Vectors.queryVecs(corpus), corpus.count())
       .orderBy(col("query_id"), col("rank"))
   }
+
+  private val embAnnIvf = annIvf((corpus, queries, n) =>
+    AnnIvf.topK(corpus, queries, k = 10,
+      cells = AnnIvf.adaptiveCells(n), dim = 64, nprobe = 2))
 
   // Two-level IVF top-k — the regime PAST adaptiveCells' ceiling
   // (~10⁶–10⁷ vectors; see the AnnIvf two-level scaladoc): fine
@@ -399,20 +401,30 @@ object ScaleOps {
   // instead of O(cells). Same output shape as emb_ann_ivf; the oracle
   // replays the full two-level chain (sampled Lloyd, coarse Lloyd over
   // the fine table, neighborhood argmin) bit-exactly.
-  private val embAnnIvfTwoLevel: Q = (s, d) => {
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    // count ONCE: adaptiveCells and the training-sample cap share the
-    // same sizing count (a second count() is a wasted corpus pass)
-    val n = corpus.count()
+  // (count ONCE: adaptiveCells and the training-sample cap share the
+  // same sizing count — a second count() is a wasted corpus pass)
+  private val embAnnIvfTwoLevel = annIvf((corpus, queries, n) =>
     AnnIvf.topKTwoLevel(corpus, queries, k = 10,
-        cells = AnnIvf.adaptiveCells(n), dim = 64,
-        nprobe = 2, wProbe = 2, knownCount = n)
-      .orderBy(col("query_id"), col("rank"))
+      cells = AnnIvf.adaptiveCells(n), dim = 64,
+      nprobe = 2, wProbe = 2, knownCount = n))
+
+  /** The one-level index at adaptiveCells(n): refined centroids,
+    * collected. */
+  private def oneLevelCentroids(corpus: DataFrame, n: Long): (Array[Int], Array[Array[Double]]) =
+    AnnIvf.collectCentroids(
+      AnnIvf.refinedCentroids(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64))
+
+  private def oneLevelInverted(corpus: DataFrame, n: Long): DataFrame = {
+    val (ids, cents) = oneLevelCentroids(corpus, n)
+    AnnIvf.invertedFile(corpus, ids, cents)
   }
+
+  /** The two-level inverted file at wProbe 2 (sampled fine training,
+    * coarse-pruned assignment; `n` also caps the training sample). */
+  private def twoLevelInverted(corpus: DataFrame, n: Long): DataFrame =
+    AnnIvf.invertedFileTwoLevel(corpus,
+      AnnIvf.twoLevelIndex(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64,
+        knownCount = n), wProbe = 2)
 
   // ------------------------------------------------ emb_cluster_sample
   // Cluster-balanced data selection (the embedding-space analogue of
@@ -428,13 +440,8 @@ object ScaleOps {
   // corpus. At 100 TB the inverted file would be a checkpointed
   // column, not recomputed per consumer. Output is the per-cell audit.
   private val embClusterSample: Q = (s, d) => {
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (ids, cents) = AnnIvf.collectCentroids(
-      AnnIvf.refinedCentroids(corpus,
-        cells = AnnIvf.adaptiveCells(corpus.count()), dim = 64))
-    val inverted = AnnIvf.invertedFile(corpus, ids, cents)
+    val corpus = Vectors.vecCorpus(s, d)
+    val inverted = oneLevelInverted(corpus, corpus.count())
     val thresholds = inverted.groupBy(col("cell"))
       .agg(count(lit(1)).as("cell_n"))
       .withColumn("threshold",
@@ -495,19 +502,10 @@ object ScaleOps {
   // occupancy, floored at 16) so per-cell work stays constant; at
   // every oracle-checked scale (≤ 2000 vectors) the rule resolves to
   // exactly 16, the count the centroid-literal replay inlines.
-  private val embCellDedup: Q = (s, d) => {
+  private def cellDedup(invertedOf: (DataFrame, Long) => DataFrame): Q = (s, d) => {
     val tau = 0.4
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    // persisted: the sizing count, the Lloyd rounds and the inverted
-    // file all rescan the corpus — cache the projection once
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // STRUCTURAL regime handover (AnnIvf.regimeFor): past the
-    // one-level ceiling this dispatches to the two-level index — the
-    // 90×-at-100× path cannot be selected at scale by accident. At
-    // every oracle-checked scale it resolves to the one-level plan
-    // the centroid-literal replay below inlines.
-    val inverted = AnnIvf.invertedFileAuto(corpus, corpus.count(), dim = 64)
+    val corpus = Vectors.vecCorpus(s, d)
+    val inverted = invertedOf(corpus, corpus.count())
     val a = inverted.select(col("cell"), col("id").as("a_id"), col("v").as("av"))
     val b = inverted.select(col("cell"), col("id").as("b_id"), col("v").as("bv"))
     val pairs = a.join(b, Seq("cell")).filter(col("a_id") < col("b_id"))
@@ -520,6 +518,14 @@ object ScaleOps {
       .filter(col("cluster_size") >= 2)
       .orderBy(col("representative_id"))
   }
+
+  // STRUCTURAL regime handover (AnnIvf.regimeFor): past the
+  // one-level ceiling this dispatches to the two-level index — the
+  // 90×-at-100× path cannot be selected at scale by accident. At
+  // every oracle-checked scale it resolves to the one-level plan
+  // the centroid-literal replay below inlines.
+  private val embCellDedup =
+    cellDedup((corpus, n) => AnnIvf.invertedFileAuto(corpus, n, dim = 64))
 
   // SemDeDup through the TWO-LEVEL index — the variant for the regime
   // the 100x point measured out of the one-level path (BENCH_SF10:
@@ -528,34 +534,16 @@ object ScaleOps {
   // connected-components labeling; only the index build changes:
   // capped-sample training (O(cap x cells)) and coarse-pruned
   // assignment (O(sqrt(cells)) per row) — both linear in the corpus.
-  private val embCellDedupTwoLevel: Q = (s, d) => {
-    val tau = 0.4
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // count ONCE: adaptiveCells and the training-sample cap share it
-    val n = corpus.count()
-    val idx = AnnIvf.twoLevelIndex(corpus,
-      cells = AnnIvf.adaptiveCells(n), dim = 64, knownCount = n)
-    val inverted = AnnIvf.invertedFileTwoLevel(corpus, idx, wProbe = 2)
-    val a = inverted.select(col("cell"), col("id").as("a_id"), col("v").as("av"))
-    val b = inverted.select(col("cell"), col("id").as("b_id"), col("v").as("bv"))
-    val pairs = a.join(b, Seq("cell")).filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", GraftFunctions.cosineSimilarity(col("av"), col("bv")))
-      .filter(col("cos_sim") >= tau)
-      .select(col("a_id"), col("b_id"))
-    Dedup.connectedComponents(corpus.select(col("id")), pairs)
-      .groupBy(col("cluster").as("representative_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-      .filter(col("cluster_size") >= 2)
-      .orderBy(col("representative_id"))
-  }
+  private val embCellDedupTwoLevel = cellDedup(twoLevelInverted)
 
-  private lazy val embCellDedupTwoLevelSql: String = s"""
-    WITH RECURSIVE ${ivf2Ctes(16, 64, 2)},
+  /** The cell-dedup oracle of either regime, given its index CTEs and
+    * inverted file: within-cell pairs at cosine ≥ 0.4, then the
+    * recursive min-label connected components. */
+  private def cellDedupSql(indexCtes: String, inverted: String): String = s"""
+    WITH RECURSIVE $indexCtes,
     pairs AS (
       SELECT a.vec_id AS a_id, b.vec_id AS b_id
-      FROM inverted2 a JOIN inverted2 b
+      FROM $inverted a JOIN $inverted b
         ON a.cell = b.cell AND a.vec_id < b.vec_id
       WHERE list_cosine_similarity(a.v, b.v) >= 0.4),
     edges AS (
@@ -576,30 +564,8 @@ object ScaleOps {
     HAVING COUNT(*) >= 2
     ORDER BY representative_id"""
 
-  private lazy val embCellDedupSql: String = s"""
-    WITH RECURSIVE ${ivfCtes(16, 64)},
-    pairs AS (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id
-      FROM inverted a JOIN inverted b
-        ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.v, b.v) >= 0.4),
-    edges AS (
-      SELECT a_id AS src, b_id AS dst FROM pairs
-      UNION ALL
-      SELECT b_id, a_id FROM pairs),
-    reach(id, lbl) AS (
-      SELECT vec_id, vec_id FROM e
-      UNION
-      SELECT g.dst, r.lbl
-      FROM reach r JOIN edges g ON g.src = r.id
-      WHERE r.lbl < g.dst),
-    labels AS (
-      SELECT id, MIN(lbl) AS cluster FROM reach GROUP BY id)
-    SELECT cluster AS representative_id, COUNT(*) AS cluster_size
-    FROM labels
-    GROUP BY 1
-    HAVING COUNT(*) >= 2
-    ORDER BY 1"""
+  private lazy val embCellDedupSql = cellDedupSql(ivfCtes(16, 64), "inverted")
+  private lazy val embCellDedupTwoLevelSql = cellDedupSql(ivf2Ctes(16, 64, 2), "inverted2")
 
   // -------------------------------------------------- emb_cell_recall
   // The SemDeDup approximation audit — doc_lsh_recall's role for
@@ -612,11 +578,9 @@ object ScaleOps {
   // count can be tuned on evidence. Cells are trained on the FULL
   // corpus exactly as emb_cell_dedup does; only the ground-truth side
   // is range-capped.
-  private val embCellRecall: Q = (s, d) => {
+  private def cellRecall(invertedOf: (DataFrame, Long) => DataFrame): Q = (s, d) => {
     val tau = 0.4
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     val sub = corpus.filter(col("id") < 500)
     val a = sub.select(col("id").as("a_id"), col("v").as("av"))
     val b = sub.select(col("id").as("b_id"), col("v").as("bv"))
@@ -624,11 +588,9 @@ object ScaleOps {
       .withColumn("cos_sim", GraftFunctions.cosineSimilarity(col("av"), col("bv")))
       .filter(col("cos_sim") >= tau)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
-    // same adaptive cell count as emb_cell_dedup — the audit must
-    // measure the index the dedup actually uses
-    val (cellIds, cents) = AnnIvf.collectCentroids(
-      AnnIvf.refinedCentroids(corpus, cells = AnnIvf.adaptiveCells(corpus.count()), dim = 64))
-    val inv = AnnIvf.invertedFile(corpus, cellIds, cents).select(col("id"), col("cell"))
+    // the index parameters are exactly the dedup twin's — the audit
+    // must measure the index the dedup actually uses
+    val inv = invertedOf(corpus, corpus.count()).select(col("id"), col("cell"))
     exact
       .join(inv.select(col("id").as("a_id"), col("cell").as("cell_a")), Seq("a_id"))
       .join(inv.select(col("id").as("b_id"), col("cell").as("cell_b")), Seq("b_id"))
@@ -646,15 +608,20 @@ object ScaleOps {
       .orderBy(col("sim_band"))
   }
 
-  private lazy val embCellRecallSql: String = s"""
-    WITH ${ivfCtes(16, 64)},
+  private val embCellRecall = cellRecall(oneLevelInverted)
+
+  /** The cell-recall oracle of either regime, given its index CTEs
+    * and inverted file: exact ≥ 0.4 pairs over vec_id < 500, banded,
+    * with the share that lands in one cell. */
+  private def cellRecallSql(indexCtes: String, inverted: String): String = s"""
+    WITH $indexCtes,
     sub AS (SELECT vec_id, v FROM e WHERE vec_id < 500),
     exact AS (
       SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         list_cosine_similarity(a.v, b.v) AS cos_sim
       FROM sub a JOIN sub b ON a.vec_id < b.vec_id
       WHERE list_cosine_similarity(a.v, b.v) >= 0.4),
-    cells AS (SELECT vec_id, cell FROM inverted),
+    cells AS (SELECT vec_id, cell FROM $inverted),
     joined AS (
       SELECT x.cos_sim, ca.cell AS cell_a, cb.cell AS cell_b
       FROM exact x
@@ -668,6 +635,9 @@ object ScaleOps {
     FROM joined
     GROUP BY 1
     ORDER BY 1"""
+
+  private lazy val embCellRecallSql = cellRecallSql(ivfCtes(16, 64), "inverted")
+  private lazy val embCellRecallTwoLevelSql = cellRecallSql(ivf2Ctes(16, 64, 2), "inverted2")
 
   // ---------------------------------------- emb_cell_recall_two_level
   // The approximation audit for the PRODUCTION (two-level) SemDeDup
@@ -684,60 +654,7 @@ object ScaleOps {
   // quantizer → wProbe-pruned fine argmin, post-coarsep restriction).
   // The index is built on the FULL corpus exactly as the dedup does;
   // only the ground-truth side is range-capped.
-  private val embCellRecallTwoLevel: Q = (s, d) => {
-    val tau = 0.4
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sub = corpus.filter(col("id") < 500)
-    val a = sub.select(col("id").as("a_id"), col("v").as("av"))
-    val b = sub.select(col("id").as("b_id"), col("v").as("bv"))
-    val exact = a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cos_sim", GraftFunctions.cosineSimilarity(col("av"), col("bv")))
-      .filter(col("cos_sim") >= tau)
-      .select(col("a_id"), col("b_id"), col("cos_sim"))
-    // count ONCE (adaptiveCells + training-sample cap share it); the
-    // index parameters are exactly emb_cell_dedup_two_level's — the
-    // audit must measure the index the dedup actually uses
-    val n = corpus.count()
-    val idx = AnnIvf.twoLevelIndex(corpus,
-      cells = AnnIvf.adaptiveCells(n), dim = 64, knownCount = n)
-    val inv = AnnIvf.invertedFileTwoLevel(corpus, idx, wProbe = 2)
-      .select(col("id"), col("cell"))
-    exact
-      .join(inv.select(col("id").as("a_id"), col("cell").as("cell_a")), Seq("a_id"))
-      .join(inv.select(col("id").as("b_id"), col("cell").as("cell_b")), Seq("b_id"))
-      // same raw-cosine band-edge ULP caveat as emb_cell_recall
-      .groupBy((floor(col("cos_sim") * 10) / 10.0).as("sim_band"))
-      .agg(count(lit(1)).as("n_exact"),
-        count(when(col("cell_a") === col("cell_b"), 1)).as("n_same_cell"))
-      .withColumn("recall",
-        round(col("n_same_cell").cast(DoubleType) / col("n_exact").cast(DoubleType), 6))
-      .orderBy(col("sim_band"))
-  }
-
-  private lazy val embCellRecallTwoLevelSql: String = s"""
-    WITH ${ivf2Ctes(16, 64, 2)},
-    sub AS (SELECT vec_id, v FROM e WHERE vec_id < 500),
-    exact AS (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        list_cosine_similarity(a.v, b.v) AS cos_sim
-      FROM sub a JOIN sub b ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.v, b.v) >= 0.4),
-    cells AS (SELECT vec_id, cell FROM inverted2),
-    joined AS (
-      SELECT x.cos_sim, ca.cell AS cell_a, cb.cell AS cell_b
-      FROM exact x
-      JOIN cells ca ON ca.vec_id = x.a_id
-      JOIN cells cb ON cb.vec_id = x.b_id)
-    SELECT floor(cos_sim * 10) / 10.0 AS sim_band,
-      COUNT(*) AS n_exact,
-      COUNT(CASE WHEN cell_a = cell_b THEN 1 END) AS n_same_cell,
-      ROUND(CAST(COUNT(CASE WHEN cell_a = cell_b THEN 1 END) AS DOUBLE)
-        / CAST(COUNT(*) AS DOUBLE), 6) AS recall
-    FROM joined
-    GROUP BY 1
-    ORDER BY 1"""
+  private val embCellRecallTwoLevel = cellRecall(twoLevelInverted)
 
   // --------------------------------------- emb_two_level_probe_curve
   // The wProbe tuning curve — emb_recall_curve's role for the
@@ -761,9 +678,7 @@ object ScaleOps {
   private val embTwoLevelProbeCurve: Q = (s, d) => {
     val tau = 0.4
     val maxW = 4 // = coarseK(16) at every oracle-checked scale
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     val n = corpus.count()
     val cells = AnnIvf.adaptiveCells(n)
     val sub = corpus.filter(col("id") < 500)
@@ -895,16 +810,11 @@ object ScaleOps {
   // projection-only scan + one hash aggregate — nothing but the
   // ≤cells-row audit ever leaves the executors.
   private val embIvfQuality: Q = (s, d) => {
-    val e = embeddings(s, d)
-      .withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     // the audit must describe the SAME index every other IVF consumer
     // builds (adaptiveCells), and one combined kernel sweep yields
     // assignment + quantization error together
-    val (ids, cents) = AnnIvf.collectCentroids(
-      AnnIvf.refinedCentroids(corpus,
-        cells = AnnIvf.adaptiveCells(corpus.count()), dim = 64))
+    val (ids, cents) = oneLevelCentroids(corpus, corpus.count())
     corpus
       .withColumn("cd", GraftFunctions.nearestCellWithDist(col("v"), cents, ids))
       .select(col("id"), col("cd.cell").as("cell"), col("cd.sq").as("sq"))
@@ -944,16 +854,11 @@ object ScaleOps {
   // merge. Shares the Lloyd-refined centroids (and their DuckDB
   // replay CTEs) with emb_ivf_quality/emb_cell_dedup.
   private val embOodScore: Q = (s, d) => {
-    val e = embeddings(s, d)
-      .withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     // adaptiveCells (= 16 at every oracle-checked scale): the OOD
     // score must audit the SAME index emb_cell_dedup prunes against,
     // or outlier pruning and semantic dedup silently diverge at scale
-    val (ids, cents) = AnnIvf.collectCentroids(
-      AnnIvf.refinedCentroids(corpus,
-        cells = AnnIvf.adaptiveCells(corpus.count()), dim = 64))
+    val (ids, cents) = oneLevelCentroids(corpus, corpus.count())
     // one compiled sweep yields assignment AND quantization error —
     // NearestCell + NearestCellDist would argmin the centroids twice
     corpus
@@ -988,18 +893,11 @@ object ScaleOps {
   // each), so the curve replays exactly in DuckDB.
   private val embRecallCurve: Q = (s, d) => {
     val maxProbe = 4
-    val e = embeddings(s, d).withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
-    // persisted: the sizing count, Lloyd rounds, inverted file and the
-    // probe join all rescan the cast projection otherwise
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     val n = corpus.count()
-    val (ids, cents) = AnnIvf.collectCentroids(
-      AnnIvf.refinedCentroids(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64))
+    val (ids, cents) = oneLevelCentroids(corpus, n)
     val inv = AnnIvf.invertedFile(corpus, ids, cents)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val expanded = queries
+    val expanded = Vectors.queryVecs(corpus)
       .select(col("query_id"), col("qv"),
         posexplode(GraftFunctions.nearestCells(col("qv"), cents, ids, maxProbe))
           .as(Seq("pr", "cell")))
@@ -1052,19 +950,13 @@ object ScaleOps {
   private lazy val embRecallCurveSql: String = s"""
     WITH ${ivfCtes(16, 64)},
     ${graft.queries.Vectors.cosineTopkCtes.trim},
-    exact AS (SELECT query_id, neighbor_id AS id FROM ex_r WHERE rank <= 10),
-    probes AS (
-      SELECT q.vec_id AS query_id, q.v AS qv, c1.cell,
-        ROW_NUMBER() OVER (PARTITION BY q.vec_id
-          ORDER BY ${ivfSqDist("q.v", "c1.c", 64)}, c1.cell) AS probe_rank
-      FROM (SELECT vec_id, v FROM e WHERE vec_id < 5) q CROSS JOIN centf c1),
+    exact AS (SELECT query_id, neighbor_id AS id FROM ex_r WHERE rank <= 10),${probesCte("4")},
     expanded AS (
       SELECT p.query_id, iv.vec_id AS id, k.k AS nprobe,
         list_cosine_similarity(p.qv, iv.v) AS cos
       FROM probes p
       JOIN inverted iv ON iv.cell = p.cell AND iv.vec_id <> p.query_id
-      CROSS JOIN LATERAL (SELECT unnest(generate_series(probe_rank, 4)) AS k) k
-      WHERE p.probe_rank <= 4),
+      CROSS JOIN LATERAL (SELECT unnest(generate_series(cell_rank, 4)) AS k) k),
     ann10 AS (
       SELECT query_id, nprobe, id FROM (
         SELECT query_id, nprobe, id,
@@ -1468,29 +1360,30 @@ object ScaleOps {
     * as literals (shortest-roundtrip repr → identical doubles), and
     * every fold (plane dots for bucket codes, dot/norms for cosine)
     * uses the same sequential accumulation shape as the Spark
-    * expressions — bit-identical signs, codes, and rankings.
+    * expressions — bit-identical signs, codes, and rankings. This is
+    * the bucket code of `v` under hyperplanes `hp`: one sign bit per
+    * plane, each a [[Vectors.dimFold]] of the plane literals.
     */
+  private def lshCodeSql(hp: Array[Array[Double]], dim: Int): String =
+    hp.indices.map { j =>
+      val lits = hp(j).map(java.lang.Double.toString).mkString("[", ", ", "]")
+      val dot = Vectors.dimFold(s"v[CAST(i AS INT)] * ($lits::DOUBLE[])[CAST(i AS INT)]", dim)
+      s"(CASE WHEN $dot > 0 THEN ${1L << j} ELSE 0 END)"
+    }.mkString(" + ")
+
+  /** The Hamming-≤1 multiprobe list of `code`. */
+  private def lshProbeList(bits: Int): String =
+    ("code" +: (0 until bits).map(j => s"xor(code, ${1L << j})")).mkString("[", ", ", "]")
+
   /** CTE chain replaying the random-hyperplane ANN through `ranked
     * (query_id, neighbor_id, cos_raw, rank)` — shared by the LSH
     * oracle and the recall audit.
     */
   private val lshRankedCtes: String = {
     val bits = 6; val dim = 64
-    val hp = graft.operators.AnnLsh.hyperplanes(bits, dim)
-    def fold(vec: String, plane: Array[Double]): String = {
-      val lits = plane.map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +
-        s"i -> $vec[CAST(i AS INT)] * ($lits::DOUBLE[])[CAST(i AS INT)])), (acc, x) -> acc + x)"
-    }
-    val codeExpr = (0 until bits)
-      .map(j => s"(CASE WHEN ${fold("v", hp(j))} > 0 THEN ${1L << j} ELSE 0 END)")
-      .mkString(" + ")
-    def sumFold(term: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), i -> $term)), (acc, x) -> acc + x)"
-    val dot = sumFold("qv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    val nq = sumFold("qv[CAST(i AS INT)] * qv[CAST(i AS INT)]")
-    val nc = sumFold("cv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    val probeList = ("code" +: (0 until bits).map(j => s"xor(code, ${1L << j})")).mkString("[", ", ", "]")
+    val codeExpr = lshCodeSql(graft.operators.AnnLsh.hyperplanes(bits, dim), dim)
+    val cos = Vectors.cosFold("qv", "cv", dim)
+    val probeList = lshProbeList(bits)
     s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     coded AS (
@@ -1503,9 +1396,9 @@ object ScaleOps {
       FROM probes p JOIN coded c ON c.code = p.code AND c.vec_id <> p.query_id),
     ranked AS (
       SELECT query_id, neighbor_id,
-        $dot / (sqrt($nq) * sqrt($nc)) AS cos_raw,
+        $cos AS cos_raw,
         ROW_NUMBER() OVER (PARTITION BY query_id
-          ORDER BY $dot / (sqrt($nq) * sqrt($nc)) DESC, neighbor_id) AS rank
+          ORDER BY $cos DESC, neighbor_id) AS rank
       FROM scored)"""
   }
 
@@ -1547,22 +1440,10 @@ object ScaleOps {
     */
   private val embAnnRecallTunedSql: String = {
     val bits = 6; val dim = 64; val tables = AnnRecallTables
-    def fold(vec: String, plane: Array[Double]): String = {
-      val lits = plane.map(java.lang.Double.toString).mkString("[", ", ", "]")
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +
-        s"i -> $vec[CAST(i AS INT)] * ($lits::DOUBLE[])[CAST(i AS INT)])), (acc, x) -> acc + x)"
-    }
-    def sumFold(term: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), i -> $term)), (acc, x) -> acc + x)"
-    val dot = sumFold("qv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    val nq = sumFold("qv[CAST(i AS INT)] * qv[CAST(i AS INT)]")
-    val nc = sumFold("cv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    val probeList = ("code" +: (0 until bits).map(j => s"xor(code, ${1L << j})")).mkString("[", ", ", "]")
+    val probeList = lshProbeList(bits)
     val perTable = (0 until tables).map { t =>
-      val hp = graft.operators.AnnLsh.hyperplanes(bits, dim, seed = 42L + 1000L * t)
-      val codeExpr = (0 until bits)
-        .map(j => s"(CASE WHEN ${fold("v", hp(j))} > 0 THEN ${1L << j} ELSE 0 END)")
-        .mkString(" + ")
+      val codeExpr = lshCodeSql(
+        graft.operators.AnnLsh.hyperplanes(bits, dim, seed = 42L + 1000L * t), dim)
       s"""coded_$t AS (
       SELECT vec_id, v, $codeExpr AS code FROM e),
     cand_$t AS (
@@ -1588,7 +1469,7 @@ object ScaleOps {
     ranked AS (
       SELECT query_id, neighbor_id,
         ROW_NUMBER() OVER (PARTITION BY query_id
-          ORDER BY $dot / (sqrt($nq) * sqrt($nc)) DESC, neighbor_id) AS rank
+          ORDER BY ${Vectors.cosFold("qv", "cv", dim)} DESC, neighbor_id) AS rank
       FROM scored),
     ann AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= 10),
     ncand AS (SELECT query_id, COUNT(*) AS n_candidates FROM cand GROUP BY 1),
@@ -1613,70 +1494,74 @@ object ScaleOps {
     * sequential fold / decimal-sum shape as the Spark expressions, so
     * assignments, the Lloyd refinement and the final ranking are
     * bit-identical across engines.
+    *
+    * `IvfCentroidMarker` starts the seeded-centroid literal CTE of both
+    * replay blocks; Verify finds the 16-cell IVF family by it.
     */
-  /** Shared replay CTE block for every IVF-derived oracle: seeded
-    * centroids as literals → assign0 → decimal-exact Lloyd means →
-    * `inverted(vec_id, v, cell)`. Distances use the same sequential
-    * fold shape as the Spark kernels.
-    */
-  private[queries] def ivfSqDist(a: String, b: String, dim: Int): String =
-    s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +
-      s"i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))), (acc, x) -> acc + x)"
+  private[graft] val IvfCentroidMarker = "cents0(cell, c)"
 
-  /** `eWhere` (optional) restricts the training corpus `e` — the
-    * incremental-append oracle trains on the base subset and replays
-    * the frozen-index delta encode separately.
-    */
-  private[queries] def ivfCtes(cells: Int, dim: Int, eWhere: String = ""): String = {
-    val cents = AnnIvf.centroids0(cells, dim)
-    val centRows = cents.zipWithIndex.map { case (c, i) =>
+  private[queries] def ivfSqDist(a: String, b: String, dim: Int): String =
+    Vectors.dimFold(s"($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)])", dim)
+
+  private def litRows(cents: Array[Array[Double]]): String =
+    cents.zipWithIndex.map { case (c, i) =>
       s"($i, ${c.map(java.lang.Double.toString).mkString("[", ", ", "]")}::DOUBLE[])"
     }.mkString(", ")
-    // one assign→mean CTE pair per Lloyd round (round count lives in
-    // AnnIvf.LloydRounds, shared with the Spark side); `centf` is the
-    // final centroid table every downstream oracle probes against
-    def assignCte(name: String, centTable: String): String = s"""
+
+  /** Nearest centroid of each `src(idCol, vCol)` row in
+    * `centTable(cell, c)`, ROW_NUMBER'd by (dist, cell) — the total
+    * order the packed kernels implement. */
+  private def assignCte(name: String, src: String, idCol: String, vCol: String,
+      centTable: String, dim: Int): String = s"""
     $name AS (
-      SELECT vec_id, v, cell FROM (
-        SELECT e.vec_id, e.v, c.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ivfSqDist("e.v", "c.c", dim)}, c.cell) AS rn
-        FROM e CROSS JOIN $centTable c)
+      SELECT $idCol, $vCol, cell FROM (
+        SELECT s.$idCol, s.$vCol, c.cell,
+          ROW_NUMBER() OVER (PARTITION BY s.$idCol
+            ORDER BY ${ivfSqDist(s"s.$vCol", "c.c", dim)}, c.cell) AS rn
+        FROM $src s CROSS JOIN $centTable c)
       WHERE rn = 1)"""
-    def meanCte(name: String, assignTable: String): String = s"""
+
+  /** Decimal-exact per-cell mean of `assignTable`'s `vCol`. */
+  private def meanCte(name: String, assignTable: String, vCol: String,
+      dim: Int): String = s"""
     $name AS (
       SELECT cell, list(m ORDER BY i) AS c FROM (
         SELECT a.cell, i,
-          CAST(COALESCE(SUM(CAST(a.v[CAST(i AS INT)] AS DECIMAL(18,6))), 0) AS DOUBLE) / COUNT(*) AS m
+          CAST(COALESCE(SUM(CAST(a.$vCol[CAST(i AS INT)] AS DECIMAL(18,6))), 0) AS DOUBLE) / COUNT(*) AS m
         FROM $assignTable a CROSS JOIN (SELECT unnest(range(1, ${dim + 1})) AS i)
         GROUP BY a.cell, i)
       GROUP BY cell)"""
-    val rounds = AnnIvf.LloydRounds
-    val eFilter = if (eWhere.isEmpty) "" else s" WHERE $eWhere"
-    val sb = new StringBuilder(s"""e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings$eFilter),
-    cents0(cell, c) AS (VALUES $centRows),${assignCte("assign0", "cents0")}""")
-    for (r <- 1 to rounds) {
-      sb.append(",").append(meanCte(s"cent$r", s"assign${r - 1}"))
-      if (r < rounds) sb.append(",").append(assignCte(s"assign$r", s"cent$r"))
+
+  /** `rounds` Lloyd rounds from `init`: `<assign>0`, `<cent>1`, …,
+    * `<cent><rounds>` (round counts live in AnnIvf, shared with the
+    * Spark side). */
+  private def lloydCtes(src: String, idCol: String, vCol: String, init: String,
+      assign: String, cent: String, rounds: Int, dim: Int): String =
+    (1 to rounds).foldLeft(assignCte(s"${assign}0", src, idCol, vCol, init, dim)) { (acc, r) =>
+      acc + "," + meanCte(s"$cent$r", s"$assign${r - 1}", vCol, dim) +
+        (if (r < rounds) "," + assignCte(s"$assign$r", src, idCol, vCol, s"$cent$r", dim) else "")
     }
-    sb.append(s""",
-    centf AS (SELECT cell, c FROM cent$rounds),${assignCte("inverted", "centf")}""")
-    sb.toString
+
+  /** Shared replay CTE block for every IVF-derived oracle: seeded
+    * centroids as literals → decimal-exact Lloyd → `centf` (the final
+    * centroid table every downstream oracle probes against) →
+    * `inverted(vec_id, v, cell)`. `eWhere` (optional) restricts the
+    * training corpus `e` — the incremental-append oracle trains on the
+    * base subset and replays the frozen-index delta encode separately.
+    */
+  private[queries] def ivfCtes(cells: Int, dim: Int, eWhere: String = ""): String = {
+    val eFilter = if (eWhere.isEmpty) "" else s" WHERE $eWhere"
+    s"""e AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings$eFilter),
+    $IvfCentroidMarker AS (VALUES ${litRows(AnnIvf.centroids0(cells, dim))}),${
+      lloydCtes("e", "vec_id", "v", "cents0", "assign", "cent", AnnIvf.LloydRounds, dim)},
+    centf AS (SELECT cell, c FROM cent${AnnIvf.LloydRounds}),${
+      assignCte("inverted", "e", "vec_id", "v", "centf", dim)}"""
   }
 
-  /** DuckDB replay of the ENTIRE two-level IVF pipeline: sampled fine
-    * Lloyd (same assign/mean shapes as [[ivfCtes]], over the hash-
-    * sampled training set), coarse Lloyd over the fine-centroid table
-    * itself (AnnIvf.CoarseRounds, seed AnnIvf.CoarseSeed), fine cells
-    * grouped under their nearest FINAL coarse centroid, and both the
-    * corpus assignment and the query probes restricted to the wProbe
-    * nearest coarse neighborhoods — every argmin ROW_NUMBER'd by
-    * (dist, cell), the total order the packed kernels implement.
-    */
   /** Shared replay CTE block for every TWO-LEVEL IVF oracle: sampled
-    * training set, fine Lloyd (same assign/mean shapes as [[ivfCtes]]),
-    * coarse Lloyd over the fine-centroid table itself
+    * training set, fine Lloyd (the same assign/mean CTEs as
+    * [[ivfCtes]]), coarse Lloyd over the fine-centroid table itself
     * (AnnIvf.CoarseRounds, seed AnnIvf.CoarseSeed), fine cells grouped
     * under their nearest FINAL coarse centroid, and the corpus
     * assignment restricted to the wProbe nearest coarse neighborhoods
@@ -1687,52 +1572,17 @@ object ScaleOps {
     */
   private[queries] def ivf2Ctes(cells: Int, dim: Int, wProbe: Int): String = {
     val sampleRate = AnnIvf.DefaultSampleRate; val sampleMod = AnnIvf.SampleModulus
-    val ck = AnnIvf.coarseK(cells)
-    def litRows(cents: Array[Array[Double]]): String =
-      cents.zipWithIndex.map { case (c, i) =>
-        s"($i, ${c.map(java.lang.Double.toString).mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(", ")
-    // generic assign/mean pair over (src(idCol, vCol)) vs centTable(cell, c)
-    def assignCte(name: String, src: String, idCol: String, vCol: String,
-        centTable: String): String = s"""
-    $name AS (
-      SELECT $idCol, $vCol, cell FROM (
-        SELECT s.$idCol, s.$vCol, c.cell,
-          ROW_NUMBER() OVER (PARTITION BY s.$idCol
-            ORDER BY ${ivfSqDist(s"s.$vCol", "c.c", dim)}, c.cell) AS rn
-        FROM $src s CROSS JOIN $centTable c)
-      WHERE rn = 1)"""
-    def meanCte(name: String, assignTable: String, vCol: String): String = s"""
-    $name AS (
-      SELECT cell, list(m ORDER BY i) AS c FROM (
-        SELECT a.cell, i,
-          CAST(COALESCE(SUM(CAST(a.$vCol[CAST(i AS INT)] AS DECIMAL(18,6))), 0) AS DOUBLE) / COUNT(*) AS m
-        FROM $assignTable a CROSS JOIN (SELECT unnest(range(1, ${dim + 1})) AS i)
-        GROUP BY a.cell, i)
-      GROUP BY cell)"""
-    val sb = new StringBuilder(s"""e AS (
+    s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     tr AS (
       SELECT vec_id, v FROM e
       WHERE CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR) || '|graft-ivf2-train'), 1, 8)) AS BIGINT) % $sampleMod < $sampleRate),
-    cents0(cell, c) AS (VALUES ${litRows(AnnIvf.centroids0(cells, dim))}),${assignCte("assign0", "tr", "vec_id", "v", "cents0")}""")
-    for (r <- 1 to AnnIvf.LloydRounds) {
-      sb.append(",").append(meanCte(s"cent$r", s"assign${r - 1}", "v"))
-      if (r < AnnIvf.LloydRounds)
-        sb.append(",").append(assignCte(s"assign$r", "tr", "vec_id", "v", s"cent$r"))
-    }
-    sb.append(s""",
+    $IvfCentroidMarker AS (VALUES ${litRows(AnnIvf.centroids0(cells, dim))}),${
+      lloydCtes("tr", "vec_id", "v", "cents0", "assign", "cent", AnnIvf.LloydRounds, dim)},
     centf AS (SELECT cell, c FROM cent${AnnIvf.LloydRounds}),
     fines AS (SELECT cell AS fid, c AS fv FROM centf),
-    coarse0(cell, c) AS (VALUES ${litRows(AnnIvf.centroids0(ck, dim, AnnIvf.CoarseSeed))})""")
-    // coarse Lloyd over the fine-centroid table (the coarse "corpus")
-    sb.append(",").append(assignCte("cassign0", "fines", "fid", "fv", "coarse0"))
-    for (r <- 1 to AnnIvf.CoarseRounds) {
-      sb.append(",").append(meanCte(s"ccent$r", s"cassign${r - 1}", "fv"))
-      if (r < AnnIvf.CoarseRounds)
-        sb.append(",").append(assignCte(s"cassign$r", "fines", "fid", "fv", s"ccent$r"))
-    }
-    sb.append(s""",
+    coarse0(cell, c) AS (VALUES ${litRows(AnnIvf.centroids0(AnnIvf.coarseK(cells), dim, AnnIvf.CoarseSeed))}),${
+      lloydCtes("fines", "fid", "fv", "coarse0", "cassign", "ccent", AnnIvf.CoarseRounds, dim)},
     coarsef AS (SELECT cell, c FROM ccent${AnnIvf.CoarseRounds}),
     f2c AS (
       SELECT fid, cell AS coarse FROM (
@@ -1767,74 +1617,66 @@ object ScaleOps {
           ROW_NUMBER() OVER (PARTITION BY vec_id
             ORDER BY ${ivfSqDist("v", "fc", dim)}, fcell) AS rn
         FROM cand)
-      WHERE rn = 1)""")
-    sb.toString
+      WHERE rn = 1)"""
   }
 
-  private val embAnnIvfTwoLevelSql: String = {
-    val cells = 16; val dim = 64; val k = 10; val nprobe = 2; val wProbe = 2
-    def sumFold(term: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), i -> $term)), (acc, x) -> acc + x)"
-    val dot = sumFold("qv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    val nq = sumFold("qv[CAST(i AS INT)] * qv[CAST(i AS INT)]")
-    val nc = sumFold("cv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
+  /** One-level query probes over [[ivfCtes]]: each query row of `e`
+    * (`queryWhere`; the vec_id < 5 convention by default) and its
+    * `nprobe` nearest final centroids, as `probes(query_id, qv, cell,
+    * cell_rank)`. */
+  private[queries] def probesCte(nprobe: String,
+      queryWhere: String = "e.vec_id < 5"): String = {
+    val where = if (queryWhere.isEmpty) "" else s"\n        WHERE $queryWhere"
     s"""
-    WITH ${ivf2Ctes(cells, dim, wProbe)},
-    qprobes AS (
-      SELECT query_id, qv, fcell AS cell FROM (
-        SELECT c.vec_id AS query_id, c.v AS qv, c.fcell,
-          ROW_NUMBER() OVER (PARTITION BY c.vec_id
-            ORDER BY ${ivfSqDist("c.v", "c.fc", dim)}, c.fcell) AS rn
-        FROM cand c
-        WHERE c.vec_id < 5)
-      WHERE rn <= $nprobe),
-    scored AS (
-      SELECT p.query_id, iv.vec_id AS neighbor_id, p.qv AS qv, iv.v AS cv
-      FROM qprobes p JOIN inverted2 iv ON iv.cell = p.cell AND iv.vec_id <> p.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id,
-        $dot / (sqrt($nq) * sqrt($nc)) AS cos_raw,
-        ROW_NUMBER() OVER (PARTITION BY query_id
-          ORDER BY $dot / (sqrt($nq) * sqrt($nc)) DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, rank, neighbor_id, ROUND(cos_raw, 4) AS cos_sim
-    FROM ranked
-    WHERE rank <= $k
-    ORDER BY query_id, rank"""
-  }
-
-  private val embAnnIvfSql: String = {
-    val cells = 16; val dim = 64; val k = 10; val nprobe = 2
-    def sqDist(a: String, b: String): String = ivfSqDist(a, b, dim)
-    def sumFold(term: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), i -> $term)), (acc, x) -> acc + x)"
-    val dot = sumFold("qv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    val nq = sumFold("qv[CAST(i AS INT)] * qv[CAST(i AS INT)]")
-    val nc = sumFold("cv[CAST(i AS INT)] * cv[CAST(i AS INT)]")
-    s"""
-    WITH ${ivfCtes(cells, dim)},
     probes AS (
-      SELECT query_id, qv, cell FROM (
+      SELECT query_id, qv, cell, rn AS cell_rank FROM (
         SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${sqDist("e.v", "c1.c")}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)
-      WHERE rn <= $nprobe),
+            ORDER BY ${ivfSqDist("e.v", "c1.c", 64)}, c1.cell) AS rn
+        FROM e CROSS JOIN centf c1$where)
+      WHERE rn <= $nprobe)"""
+  }
+
+  /** Two-level query probes over [[ivf2Ctes]]: the `nprobe` nearest
+    * fine cells among each query's wProbe coarse neighborhoods (`cand`),
+    * as `qprobes(query_id, qv, cell)`. */
+  private[queries] def qprobesCte(nprobe: Int): String = s"""
+    qprobes AS (
+      SELECT query_id, qv, cell FROM (
+        SELECT c.vec_id AS query_id, c.v AS qv, c.fcell AS cell,
+          ROW_NUMBER() OVER (PARTITION BY c.vec_id
+            ORDER BY ${ivfSqDist("c.v", "c.fc", 64)}, c.fcell) AS rn
+        FROM cand c
+        WHERE c.vec_id < 5)
+      WHERE rn <= $nprobe)"""
+
+  /** The IVF top-10 oracle of either regime, given its index CTEs
+    * (ending in a query-probe table `probesTable`) and its inverted
+    * file: exact cosine over the probed cells, ranked. */
+  private def annIvfSql(indexCtes: String, probesTable: String, inverted: String): String = {
+    val cos = Vectors.cosFold("qv", "cv", 64)
+    s"""
+    WITH $indexCtes,
     scored AS (
       SELECT p.query_id, iv.vec_id AS neighbor_id, p.qv AS qv, iv.v AS cv
-      FROM probes p JOIN inverted iv ON iv.cell = p.cell AND iv.vec_id <> p.query_id),
+      FROM $probesTable p JOIN $inverted iv ON iv.cell = p.cell AND iv.vec_id <> p.query_id),
     ranked AS (
       SELECT query_id, neighbor_id,
-        $dot / (sqrt($nq) * sqrt($nc)) AS cos_raw,
+        $cos AS cos_raw,
         ROW_NUMBER() OVER (PARTITION BY query_id
-          ORDER BY $dot / (sqrt($nq) * sqrt($nc)) DESC, neighbor_id) AS rank
+          ORDER BY $cos DESC, neighbor_id) AS rank
       FROM scored)
     SELECT query_id, rank, neighbor_id, ROUND(cos_raw, 4) AS cos_sim
     FROM ranked
-    WHERE rank <= $k
+    WHERE rank <= 10
     ORDER BY query_id, rank"""
   }
+
+  private val embAnnIvfTwoLevelSql: String =
+    annIvfSql(s"${ivf2Ctes(16, 64, 2)},${qprobesCte(2)}", "qprobes", "inverted2")
+
+  private val embAnnIvfSql: String =
+    annIvfSql(s"${ivfCtes(16, 64)},${probesCte("2")}", "probes", "inverted")
 
   /** Oracle for the composed cleaning pass: the minhash/cluster replay
     * CTEs plus the lang/quality stage SQL exposed by Text — the same

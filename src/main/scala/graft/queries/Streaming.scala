@@ -275,10 +275,7 @@ object Streaming {
   private val stOodFilter: Q = (s, d) => {
     import graft.operators.AnnIvf
     import org.apache.spark.sql.types.ArrayType
-    val corpus = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     // adaptiveCells (= 16 at oracle scales): the online filter must
     // score against the same index the batch dedup/audit family uses.
     // corpus persisted: the sizing count, Lloyd rounds and the
@@ -406,17 +403,24 @@ object Streaming {
         round(col("adc_cos"), 4).as("adc_cos"), col("adc_rank"))
   }
 
-  private val stIvfpqServe: Q = (s, d) => {
+  /** The serve twins' shared front: train + persist the index, then
+    * serve FROM THE STORED ARTIFACT (the load path emb_index_build
+    * audits hash-exactly). Returns the full-vector side and the
+    * stateless self-source feed: SLIM ADC candidates — the query
+    * vector must NOT ride the candidate relation (|cell|·nprobe copies
+    * of 512 B per query materialize at the micro-batch sink boundary:
+    * superlinear at 10× data when first measured) — plus one qv row
+    * per arriving query (both legs are projections of the SAME
+    * source, so every query's candidates share its micro-batch and
+    * per-batch finishing stays exact under any batching).
+    * `candidates` narrows the candidate leg before the union. */
+  private def ivfpqServeFeed(s: SparkSession, d: String,
+      candidates: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     import graft.operators.IvfPq
     import org.apache.spark.sql.types.{ArrayType, LongType}
     import graft.functions.expressions.GraftFunctions
-    val corpus = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     val n = corpus.count()
-    // offline half: train + persist, then serve FROM THE STORED
-    // ARTIFACT (the load path emb_index_build audits hash-exactly)
     val dir = Vectors.indexDir(d)
     IvfPq.buildIndex(corpus, n, dim = 64, m = Vectors.pqM,
       dsub = Vectors.pqDsub, kCodes = Vectors.pqK, dir = dir)
@@ -426,12 +430,8 @@ object Streaming {
     val arriving = QanStream.embeddingsStream(s, d)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("qv"))
-    // Streaming plan (stateless): SLIM ADC survivors — the qv must not
-    // ride the candidate relation (the topk twin's discipline), but the
-    // exact verify needs it once per query, so the feed is the same
-    // self-source union: per-survivor slim rows + one qv row per
-    // arriving query. The receiver-side scatter fans the candidate
-    // stage across executors instead of the file source's 1-2 splits.
+    // the receiver-side scatter fans the candidate stage across
+    // executors instead of the file source's 1-2 splits
     val candSlim = IvfPq.probe(loaded.index,
         arriving.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt),
         "qv", Vectors.ivfpqNprobe)
@@ -442,25 +442,22 @@ object Streaming {
           loaded.books, Vectors.pqDsub).as("adc_cos"),
         col("neighbor_id"),
         lit(null).cast(ArrayType(DoubleType)).as("qv"))
-      .filter(col("adc_cos") >= Vectors.ivfpqAdcPrefilter)
     val queryRows = arriving.select(col("query_id"),
       lit(null).cast(DoubleType).as("adc_cos"),
       lit(null).cast(LongType).as("neighbor_id"), col("qv"))
-    QanStream.runForeachBatch(candSlim.unionByName(queryRows),
-        batch => serveVerifyStage(full, batch))
+    (full, candidates(candSlim).unionByName(queryRows))
+  }
+
+  private val stIvfpqServe: Q = (s, d) => {
+    val (full, feed) = ivfpqServeFeed(s, d,
+      _.filter(col("adc_cos") >= Vectors.ivfpqAdcPrefilter))
+    QanStream.runForeachBatch(feed, batch => serveVerifyStage(full, batch))
       .orderBy(col("query_id"), col("neighbor_id"))
   }
 
   private lazy val stIvfpqServeSql: String = s"""
     WITH ${ScaleOps.ivfCtes(16, 64)},
-    ${Vectors.pqCtesComposable},
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", 64)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1)
-      WHERE rn <= ${Vectors.ivfpqNprobe}),
+    ${Vectors.pqCtesComposable},${ScaleOps.probesCte(s"${Vectors.ivfpqNprobe}", queryWhere = "")},
     ${Vectors.adcCtes("probes", "inverted", 64)},
     scored AS (
       SELECT a.query_id, a.neighbor_id, a.adc_raw,
@@ -478,7 +475,7 @@ object Streaming {
   // Top-k retrieval serving over the LOADED index — the real online
   // contract (a retrieval service answers "the k best neighbors of
   // this arriving vector", not "all pairs above τ"): same stateless
-  // probe → LUT → true-ADC stream-static join as st_ivfpq_serve, then
+  // probe → true-ADC stream-static join as st_ivfpq_serve, then
   // a PER-MICRO-BATCH bounded top-k (ADC pool of `rerank`, exact
   // re-rank to rank ≤ k) applied inside foreachBatch. Ranking windows
   // are illegal on an unbounded stream, but every query's candidates
@@ -489,64 +486,14 @@ object Streaming {
   // bounded by the batch's arrivals. The oracle replays the batch
   // composition: same chain as emb_ivfpq_topk over ALL queries.
   private val stIvfpqServeTopk: Q = (s, d) => {
-    import graft.operators.IvfPq
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.expressions.GraftFunctions
-    val corpus = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = corpus.count()
-    val dir = Vectors.indexDir(d)
-    IvfPq.buildIndex(corpus, n, dim = 64, m = Vectors.pqM,
-      dsub = Vectors.pqDsub, kCodes = Vectors.pqK, dir = dir)
-    val loaded = IvfPq.loadIndex(s, dir)
-    val codedInv = broadcast(loaded.live.withColumnRenamed("id", "neighbor_id"))
-    val full = corpus.select(col("id").as("neighbor_id"), col("v").as("cv"))
-    val arriving = QanStream.embeddingsStream(s, d)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("qv"))
-    // Streaming plan (stateless): SLIM ADC candidates — the query
-    // vector must NOT ride the candidate relation (|cell|·nprobe
-    // copies of 512 B per query materialize at the micro-batch sink
-    // boundary: superlinear at 10× data when first measured) — the
-    // same discipline the batch composition applies by dropping qv
-    // before the cell join. The exact re-rank still needs qv ONCE per
-    // query, so the feed is a self-source union: per-candidate slim
-    // rows + one qv row per arriving query (both legs are projections
-    // of the SAME source, so every query's candidates share its
-    // micro-batch and per-batch top-k stays exact under any batching).
-    // same receiver-side scatter as st_ivfpq_serve: fan the candidate
-    // stage across executors instead of the file source's 1-2 splits
-    val candSlim = IvfPq.probe(loaded.index,
-        arriving.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt),
-        "qv", Vectors.ivfpqNprobe)
-      .join(codedInv, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"),
-        GraftFunctions.adcCosineFromQuery(col("qv"), col("codes"),
-          loaded.books, Vectors.pqDsub).as("adc_cos"),
-        col("neighbor_id"),
-        lit(null).cast(ArrayType(DoubleType)).as("qv"))
-    val queryRows = arriving.select(col("query_id"),
-      lit(null).cast(DoubleType).as("adc_cos"),
-      lit(null).cast(LongType).as("neighbor_id"), col("qv"))
-    QanStream.runForeachBatch(candSlim.unionByName(queryRows),
-        batch => serveTopkStage(full, batch))
+    val (full, feed) = ivfpqServeFeed(s, d, identity)
+    QanStream.runForeachBatch(feed, batch => serveTopkStage(full, batch))
       .orderBy(col("query_id"), col("rank"))
   }
 
   private lazy val stIvfpqServeTopkSql: String = s"""
     WITH ${ScaleOps.ivfCtes(16, 64)},
-    ${Vectors.pqCtesComposable},
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", 64)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1)
-      WHERE rn <= ${Vectors.ivfpqNprobe}),
+    ${Vectors.pqCtesComposable},${ScaleOps.probesCte(s"${Vectors.ivfpqNprobe}", queryWhere = "")},
     ${Vectors.adcCtes("probes", "inverted", 64)},
     ${Vectors.ivfpqRerankTailSql(Vectors.ivfpqRerank, Vectors.ivfpqK, 64)}"""
 
@@ -872,10 +819,7 @@ object Streaming {
     // offline halves: both artifacts built + loaded (emb_index_build /
     // doc_bm25_served audit each store's round-trip hash-exactly)
     val lexDirPath = Corpus.lexDir(s, d)
-    val corpus = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     val vecDir = Vectors.indexDir(d)
     val reqDir = Corpus.requestDir(s, d)
     // three independent bootstrap chains over disjoint dirs (guide
@@ -945,10 +889,7 @@ object Streaming {
     import graft.operators.IvfPq
     import org.apache.spark.sql.types.ArrayType
     val isDelta = col("id") % Vectors.appendDeltaMod === Vectors.appendDeltaRem
-    val all = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val all = Vectors.vecCorpus(s, d)
     val base = all.filter(!isDelta)
     val dir = Vectors.indexDir(d) + "_stream_append"
     // base build + load async under the stream start (§2.6); each
@@ -987,29 +928,7 @@ object Streaming {
   private lazy val stIndexAppendSql: String = s"""
     WITH ${ScaleOps.ivfCtes(16, 64,
         eWhere = s"vec_id % ${Vectors.appendDeltaMod} <> ${Vectors.appendDeltaRem}")},
-    ${Vectors.pqCtesComposable},
-    dl AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-      WHERE vec_id % ${Vectors.appendDeltaMod} = ${Vectors.appendDeltaRem}),
-    dl_assign AS (
-      SELECT vec_id, cell FROM (
-        SELECT d.vec_id, c.cell,
-          ROW_NUMBER() OVER (PARTITION BY d.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("d.v", "c.c", 64)}, c.cell) AS rn
-        FROM dl d CROSS JOIN centf c)
-      WHERE rn = 1),
-    dl_subs AS (
-      SELECT vec_id, CAST(sub AS INT) AS sub,
-        list_slice(v, sub * ${Vectors.pqDsub} + 1,
-          sub * ${Vectors.pqDsub} + ${Vectors.pqDsub}) AS subv
-      FROM dl CROSS JOIN (SELECT unnest(range(0, ${Vectors.pqM})) AS sub)),
-    dl_coded AS (
-      SELECT vec_id, sub, code FROM (
-        SELECT s.vec_id, s.sub, b.code,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-            ORDER BY ${Vectors.pqSqDist("s.subv", "b.c")}, b.cell) AS rn
-        FROM dl_subs s JOIN pq_cb b ON b.sub = s.sub)
-      WHERE rn = 1)
+    ${Vectors.pqCtesComposable},${Vectors.deltaAssignCtes},${Vectors.deltaCodedCtes}
     SELECT a.vec_id, a.cell,
       (SELECT string_agg(CAST(c.code AS VARCHAR), ',' ORDER BY c.sub)
          FROM dl_coded c WHERE c.vec_id = a.vec_id) AS codes,
@@ -1036,11 +955,7 @@ object Streaming {
   // still_servable = FALSE.
   private val stIndexDelete: Q = (s, d) => {
     import graft.operators.IvfPq
-    import org.apache.spark.sql.types.ArrayType
-    val all = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val all = Vectors.vecCorpus(s, d)
     val dir = Vectors.indexDir(d) + "_stream_delete"
     // base build async under the stream start (§2.6); each batch body
     // awaits it before landing its tombstones
@@ -1100,10 +1015,7 @@ object Streaming {
   private val stCellDedup: Q = (s, d) => {
     import graft.operators.AnnIvf
     import org.apache.spark.sql.types.ArrayType
-    val corpus = graft.Tables.embeddings(s, d)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Vectors.vecCorpus(s, d)
     // calibration routes through the STRUCTURAL regime handover
     // (AnnIvf.regimeFor): same index shape as every batch IVF consumer
     // at oracle scales (one-level, adaptiveCells = 16), and past the

@@ -23,6 +23,18 @@ object Vectors {
     embeddings(s, d)
       .withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
 
+  /** The (id, v) corpus every index query builds from, persisted: the
+    * sizing count, the training rounds and the inverted file each
+    * rescan it. */
+  private[queries] def vecCorpus(s: SparkSession, d: String): DataFrame =
+    vecs(s, d).select(col("vec_id").as("id"), col("v"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The fixed query set (vec_id < 5) as (query_id, qv). */
+  private[queries] def queryVecs(corpus: DataFrame): DataFrame =
+    corpus.filter(col("id") < 5)
+      .select(col("id").as("query_id"), col("v").as("qv"))
+
   // --------------------------------------------------- emb_cosine_topk
   // Brute-force cosine top-k: the exact-ANN baseline. Query set is
   // fixed (vec_id < 5) so work is bounded; ranking via per-query
@@ -279,8 +291,7 @@ object Vectors {
     * the two can never drift.
     */
   private[queries] def pqSqDist(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(range(1, ${pqDsub + 1}), " +
-      s"i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))), (acc, x) -> acc + x)"
+    ScaleOps.ivfSqDist(a, b, pqDsub)
 
   private def pqCtesGen(prefix: String, withE: Boolean): String = {
     val c0 = AnnPq.codebook0(pqK, pqDsub)
@@ -337,13 +348,20 @@ object Vectors {
     */
   private[queries] lazy val pqCtesComposable: String = pqCtesGen("pq_", withE = false)
 
-  private[queries] def cosFold(a: String, b: String, dim: Int): String = {
-    def f(term: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), i -> $term)), (acc, x) -> acc + x)"
-    val dot = f(s"$a[CAST(i AS INT)] * $b[CAST(i AS INT)]")
-    val na = f(s"$a[CAST(i AS INT)] * $a[CAST(i AS INT)]")
-    val nb = f(s"$b[CAST(i AS INT)] * $b[CAST(i AS INT)]")
-    s"$dot / (sqrt($na) * sqrt($nb))"
+  /** `term` (over the 1-based dim index `i`) summed as a sequential
+    * left fold from 0.0 — the accumulation order of the engine's
+    * compiled kernels, so every vector oracle replays them bit-exactly.
+    */
+  private[queries] def dimFold(term: String, dim: Int): String =
+    s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), i -> $term)), (acc, x) -> acc + x)"
+
+  /** Cosine of `a` and `b` over `dim` dims from three [[dimFold]]s;
+    * `at` is the per-dim element (a weighted element for the
+    * Matryoshka demo). */
+  private[queries] def cosFold(a: String, b: String, dim: Int,
+      at: String => String = v => s"$v[CAST(i AS INT)]"): String = {
+    val (x, y) = (at(a), at(b))
+    s"${dimFold(s"$x * $y", dim)} / (sqrt(${dimFold(s"$x * $x", dim)}) * sqrt(${dimFold(s"$y * $y", dim)}))"
   }
 
   private lazy val embPqCodesSql: String = s"""
@@ -431,13 +449,10 @@ object Vectors {
   private[queries] val ivfpqAdcPrefilter = 0.3
   private[queries] val ivfpqExactVerify = 0.4
   private val embIvfpqTopk: Q = (s, d) => {
-    val e = vecs(s, d)
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = vecCorpus(s, d)
     // one sizing count, shared by the regime dispatch and cell rule
     val n = corpus.count()
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     IvfPq.topK(corpus, n, dim = 64, queries, k = ivfpqK,
         nprobe = ivfpqNprobe, rerank = ivfpqRerank,
         m = pqM, dsub = pqDsub, kCodes = pqK)
@@ -447,10 +462,12 @@ object Vectors {
   /** Shared TRUE-ADC replay CTEs: blocked per-subspace dot/norm
     * partials over `pq_coded`'s chosen centroids, cross-subspace sums
     * folded in ascending-sub order, query norm folded over the full
-    * vector — the exact arithmetic of AnnKernels.pqQueryLut/adcCosine
-    * (NOT the flat cosine fold: ADC's association is per-subspace by
+    * vector — the exact arithmetic of AnnKernels.adcCosineFromQuery,
+    * which every production path scores with (its bit-equal LUT pair
+    * pqQueryLut/adcCosine is only AnnSpec's reference now). NOT the
+    * flat cosine fold: ADC's association is per-subspace by
     * construction, and both engines execute the identical blocked
-    * order). Requires a `probesTable(query_id, qv, cell)` CTE, an
+    * order. Requires a `probesTable(query_id, qv, cell)` CTE, an
     * `invTable(vec_id, cell)` CTE, and the pq_ chain. Terminal CTE:
     * `adcr(query_id, neighbor_id, adc_raw, adc_rank)`.
     */
@@ -460,9 +477,6 @@ object Vectors {
     def foldSub(term: String): String =
       s"list_reduce(list_prepend(0.0, list_transform(range(1, ${d + 1}), " +
         s"j -> $term)), (acc, x) -> acc + x)"
-    def fold64(term: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}), " +
-        s"i -> $term)), (acc, x) -> acc + x)"
     s"""adcp AS (
       SELECT p.query_id, iv.vec_id AS neighbor_id, c.sub,
         ${foldSub(s"p.qv[CAST(c.sub * $d + j AS INT)] * c.c[CAST(j AS INT)]")} AS pd,
@@ -477,7 +491,7 @@ object Vectors {
       FROM adcp GROUP BY query_id, neighbor_id),
     qn AS (
       SELECT DISTINCT query_id,
-        ${fold64("qv[CAST(i AS INT)] * qv[CAST(i AS INT)]")} AS qn2
+        ${dimFold("qv[CAST(i AS INT)] * qv[CAST(i AS INT)]", dim)} AS qn2
       FROM $probesTable),
     adcr AS (
       SELECT a.query_id, a.neighbor_id,
@@ -521,26 +535,11 @@ object Vectors {
     WHERE rank <= $k
     ORDER BY query_id, rank"""
 
-  /** One-level query-probe CTE (vec_id < 5 convention): nearest
-    * `ivfpqNprobe` final cells per query — shared by the composed
-    * search oracle and the hybrid-fusion oracle's vector side.
-    */
-  private[queries] def ivfpqQueryProbesCte(dim: Int): String = s"""
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", dim)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)
-      WHERE rn <= $ivfpqNprobe)"""
-
   private lazy val embIvfpqTopkSql: String = {
     val dim = 64
     s"""
     WITH ${ScaleOps.ivfCtes(16, dim)},
-    $pqCtesComposable,
-    ${ivfpqQueryProbesCte(dim)},
+    $pqCtesComposable,${ScaleOps.probesCte(s"$ivfpqNprobe")},
     ${adcCtes("probes", "inverted", dim)},
     ${ivfpqRerankTailSql(ivfpqRerank, ivfpqK, dim)}"""
   }
@@ -558,12 +557,9 @@ object Vectors {
   // runs carries the same hash-level evidence as the one-level arm
   // the driver gate exercises through emb_ivfpq_topk.
   private val embIvfpqTopkTwoLevel: Q = (s, d) => {
-    val e = vecs(s, d)
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = vecCorpus(s, d)
     val n = corpus.count()
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     IvfPq.topK(corpus, n, dim = 64, queries, k = ivfpqK,
         nprobe = ivfpqNprobe, rerank = ivfpqRerank,
         m = pqM, dsub = pqDsub, kCodes = pqK,
@@ -575,15 +571,7 @@ object Vectors {
     val dim = 64
     s"""
     WITH ${ScaleOps.ivf2Ctes(16, dim, 2)},
-    $pqCtesComposable,
-    qprobes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT c.vec_id AS query_id, c.v AS qv, c.fcell AS cell,
-          ROW_NUMBER() OVER (PARTITION BY c.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("c.v", "c.fc", dim)}, c.fcell) AS rn
-        FROM cand c
-        WHERE c.vec_id < 5)
-      WHERE rn <= $ivfpqNprobe),
+    $pqCtesComposable,${ScaleOps.qprobesCte(ivfpqNprobe)},
     ${adcCtes("qprobes", "inverted2", dim)},
     ${ivfpqRerankTailSql(ivfpqRerank, ivfpqK, dim)}"""
   }
@@ -616,14 +604,54 @@ object Vectors {
   private[queries] val selLabel = 7
   private[queries] val selMod = 7
   private[queries] val selRem = 3
+  /** `inv_f`: `inverted`'s (vec_id, cell) rows that pass the label
+    * filter. */
+  private def filteredInvCte(inverted: String): String = s"""
+    inv_f AS (
+      SELECT iv.vec_id, iv.cell FROM $inverted iv
+      JOIN embeddings em ON em.vec_id = iv.vec_id
+      WHERE em.label IN (${filteredLabels.mkString(", ")}))"""
+
+  /** The exact filtered top-k ground truth: `exr(query_id,
+    * neighbor_id)`, the `ivfpqK` best label-filtered neighbors of each
+    * query by exact cosine. */
+  private lazy val filteredExactCtes: String = s"""
+    sub AS (
+      SELECT e.vec_id, e.v FROM e
+      JOIN embeddings em ON em.vec_id = e.vec_id
+      WHERE em.label IN (${filteredLabels.mkString(", ")})),
+    exact AS (
+      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        ${cosFold("q.v", "c.v", 64)} AS cos_raw
+      FROM e q JOIN sub c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
+    exr AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT query_id, neighbor_id,
+          ROW_NUMBER() OVER (PARTITION BY query_id
+            ORDER BY cos_raw DESC, neighbor_id) AS rank
+        FROM exact)
+      WHERE rank <= $ivfpqK)"""
+
+  /** The exact filtered top-k ground truth: the `ivfpqK` best of
+    * `fullF(neighbor_id, cv)` for each query by exact cosine. */
+  private def filteredExact(fullF: DataFrame, queries: DataFrame): DataFrame =
+    fullF.crossJoin(broadcast(queries))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos_sim",
+        GraftFunctions.cosineSimilarity(col("qv"), col("cv")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("cos_sim").desc, col("neighbor_id"))))
+      .filter(col("rank") <= ivfpqK)
+      .select(col("query_id"), col("neighbor_id"))
+
   private def labeledCorpus(s: SparkSession, d: String): DataFrame =
     vecs(s, d).select(col("vec_id").as("id"), col("v"), col("label"))
   private val embFilteredTopk: Q = (s, d) => {
     val corpus = labeledCorpus(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     IvfPq.filteredTopK(corpus, n, dim = 64, attrs = Seq("label"),
         pred = col("label").isin(filteredLabels: _*), queries,
         k = ivfpqK, nprobe = ivfpqNprobe, rerank = ivfpqRerank,
@@ -636,19 +664,8 @@ object Vectors {
     val dim = 64
     s"""
     WITH ${ScaleOps.ivfCtes(16, dim)},
-    $pqCtesComposable,
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", dim)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)
-      WHERE rn <= ${ivfpqNprobe * filteredProbeBoost}),
-    inv_f AS (
-      SELECT iv.vec_id, iv.cell FROM inverted iv
-      JOIN embeddings em ON em.vec_id = iv.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
+    $pqCtesComposable,${ScaleOps.probesCte(s"${ivfpqNprobe * filteredProbeBoost}")},${
+      filteredInvCte("inverted")},
     ${adcCtes("probes", "inv_f", dim)},
     ${ivfpqRerankTailSql(ivfpqRerank, ivfpqK, dim,
         extraSelect = ", 'pre_filtered_probe' AS regime")}"""
@@ -671,8 +688,7 @@ object Vectors {
     val corpus = labeledCorpus(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     IvfPq.filteredTopK(corpus, n, dim = 64, attrs = Seq("label"),
         pred = col("label") === selLabel && col("id") % selMod === selRem,
         queries, k = ivfpqK, nprobe = ivfpqNprobe, rerank = ivfpqRerank,
@@ -722,26 +738,16 @@ object Vectors {
     val corpus = labeledCorpus(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     val pred = col("label").isin(filteredLabels: _*)
     val ann = IvfPq.filteredTopK(corpus, n, dim = 64, attrs = Seq("label"),
         pred = pred, queries = queries, k = ivfpqK, nprobe = ivfpqNprobe,
         rerank = ivfpqRerank, m = pqM, dsub = pqDsub, kCodes = pqK,
         probeBoost = filteredProbeBoost, bruteFrac = filteredBruteFrac)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val exact = corpus.filter(pred)
-      .select(col("id").as("neighbor_id"), col("v").as("cv"))
-      .crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        GraftFunctions.cosineSimilarity(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= ivfpqK)
-      .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann, Seq("query_id", "neighbor_id"), "left")
+    filteredExact(corpus.filter(pred)
+        .select(col("id").as("neighbor_id"), col("v").as("cv")), queries)
+      .join(ann, Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce(col("hit"), lit(0L))).as("n_found"))
@@ -754,19 +760,8 @@ object Vectors {
     val dim = 64
     s"""
     WITH ${ScaleOps.ivfCtes(16, dim)},
-    $pqCtesComposable,
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", dim)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)
-      WHERE rn <= ${ivfpqNprobe * filteredProbeBoost}),
-    inv_f AS (
-      SELECT iv.vec_id, iv.cell FROM inverted iv
-      JOIN embeddings em ON em.vec_id = iv.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
+    $pqCtesComposable,${ScaleOps.probesCte(s"${ivfpqNprobe * filteredProbeBoost}")},${
+      filteredInvCte("inverted")},
     ${adcCtes("probes", "inv_f", dim)},
     surv AS (SELECT * FROM adcr WHERE adc_rank <= $ivfpqRerank),
     exs AS (
@@ -781,22 +776,7 @@ object Vectors {
           ROW_NUMBER() OVER (PARTITION BY query_id
             ORDER BY cos_raw DESC, neighbor_id) AS rank
         FROM exs)
-      WHERE rank <= $ivfpqK),
-    sub AS (
-      SELECT e.vec_id, e.v FROM e
-      JOIN embeddings em ON em.vec_id = e.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
-    exact AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        ${cosFold("q.v", "c.v", dim)} AS cos_raw
-      FROM e q JOIN sub c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
-    exr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-          ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cos_raw DESC, neighbor_id) AS rank
-        FROM exact)
-      WHERE rank <= $ivfpqK)
+      WHERE rank <= $ivfpqK),$filteredExactCtes
     SELECT x.query_id,
       COUNT(*) AS n_exact,
       CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_found,
@@ -829,51 +809,84 @@ object Vectors {
   // queries run filteredTopK at one chosen boost. Pair work is
   // bounded by s·n·|Q| — the same bound as the exact ground truth it
   // audits against (the brute arm's own cost).
-  private val embFilteredBoostCurve: Q = (s, d) => {
-    import graft.operators.{AnnIvf, AnnPq, IvfPq}
+  private def filteredBoostCurve(
+      train: (DataFrame, Long, Int) => IvfPq.Index): Q = (s, d) => {
     val corpus = labeledCorpus(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
     val pred = col("label").isin(filteredLabels: _*)
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     val vecsOnly = corpus.select(col("id"), col("v"))
     val cells = AnnIvf.adaptiveCells(n)
     val boostMax = math.max(1, cells / ivfpqNprobe)
     // the two training halves are independent chains over the persisted
     // corpus — overlapped (guide §2.6, the IvfPq.trainHalves discipline)
-    val ((ids, cents), books) = graft.operators.Par.two(
-      () => AnnIvf.collectCentroids(
-        AnnIvf.refinedCentroids(vecsOnly, cells, 64)),
+    val (index, books) = graft.operators.Par.two(
+      () => train(vecsOnly, n, cells),
       () => AnnPq.collectCodebooks(
         AnnPq.refinedCodebooks(vecsOnly, pqM, pqDsub, pqK), pqM))
-    val index = IvfPq.OneLevelIndex(ids, cents)
     val codedF = IvfPq.codedInvertedFileAttrs(index, corpus, books, pqDsub,
         Seq("label"))
       .filter(pred)
       .select(col("cell"), col("id").as("neighbor_id"), col("codes"))
-    // probes at max width, tagged with each cell's probe rank
-    val probesMax = queries.select(col("query_id"), col("qv"),
-        posexplode(GraftFunctions.nearestCells(col("qv"), cents, ids,
-          ivfpqNprobe * boostMax)))
-      .select(col("query_id"), col("qv"),
-        (col("pos") + 1).as("cell_rank"), col("col").as("cell"))
     val fullF = corpus.filter(pred)
       .select(col("id").as("neighbor_id"), col("v").as("cv"))
-    val pairs = probesMax.join(codedF, Seq("cell"))
+    // the pair pool of probed (query_id, qv, cell, <tag>) rows: ADC +
+    // exact cosine ONCE per pair (both are boost-independent)
+    def pool(probes: DataFrame): DataFrame = probes.join(codedF, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc_cos", GraftFunctions.adcCosineFromQuery(
         col("qv"), col("codes"), books, pqDsub))
       .join(fullF, Seq("neighbor_id"))
       .withColumn("cos_sim",
         GraftFunctions.cosineSimilarity(col("qv"), col("cv")))
-      .select(col("query_id"), col("neighbor_id"), col("cell_rank"),
-        col("adc_cos"), col("cos_sim"))
+      .drop("qv", "cv", "codes")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import s.implicits._
     val boosts = broadcast((1 to boostMax).toDF("boost"))
-    val tagged = pairs.join(boosts,
-      col("cell_rank") <= col("boost") * lit(ivfpqNprobe))
+    // each pair joined to every boost whose probe set holds its cell,
+    // plus the regime's per-boost output columns
+    val (tagged, perBoost) = index match {
+      case IvfPq.OneLevelIndex(ids, cents) =>
+        // probes at max width, tagged with each cell's probe rank
+        val probesMax = queries.select(col("query_id"), col("qv"),
+            posexplode(GraftFunctions.nearestCells(col("qv"), cents, ids,
+              ivfpqNprobe * boostMax)))
+          .select(col("query_id"), col("qv"),
+            (col("pos") + 1).as("cell_rank"), col("col").as("cell"))
+        (pool(probesMax).join(boosts,
+          col("cell_rank") <= col("boost") * lit(ivfpqNprobe)), Nil)
+      case IvfPq.TwoLevelIndexW(idx, wBase) =>
+        val maxWc = idx.coarseIds.length
+        val wProbe = least(lit(wBase) * col("boost"), lit(maxWc))
+        // every fine cell per query, tagged (coarse rank, fine distance)
+        // — the one probe pass all boosts share
+        val qcells = queries.select(col("query_id"), col("qv"),
+            posexplode(GraftFunctions.nearestCells(col("qv"), idx.coarseCents,
+              idx.coarseIds, math.max(1, maxWc))).as(Seq("crpos", "coarse")))
+          .select(col("query_id"), col("qv"), (col("crpos") + 1).as("cr"),
+            col("coarse"))
+          .join(broadcast(idx.groups), Seq("coarse"))
+          .select(col("query_id"), col("qv"), col("cr"),
+            explode(arrays_zip(col("gids"), col("gcents"))).as("z"))
+          .select(col("query_id"), col("qv"), col("cr"),
+            col("z.gids").as("cell"), col("z.gcents").as("fc"))
+          .withColumn("dist", expr(
+            "aggregate(zip_with(qv, fc, (x, y) -> (x - y) * (x - y)), " +
+              "CAST(0 AS DOUBLE), (acc, t) -> acc + t)"))
+          .select(col("query_id"), col("qv"), col("cr"), col("cell"), col("dist"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // boost b's probe set: fine ranking WITHIN the min(w·b, |coarse|)
+        // nearest coarse neighborhoods — the filteredTopKWith widening arm
+        val probed = qcells.join(boosts, col("cr") <= wProbe)
+          .withColumn("cell_rank", row_number().over(
+            Window.partitionBy(col("boost"), col("query_id"))
+              .orderBy(col("dist"), col("cell"))))
+          .filter(col("cell_rank") <= col("boost") * lit(ivfpqNprobe))
+          .select(col("boost"), col("query_id"), col("cell"))
+        (probed.join(pool(qcells.select(col("query_id"), col("qv"), col("cell"))),
+          Seq("query_id", "cell")), Seq(wProbe.as("w_probe")))
+    }
     val topk = tagged
       .withColumn("adc_rank", row_number().over(
         Window.partitionBy(col("boost"), col("query_id"))
@@ -884,15 +897,7 @@ object Vectors {
           .orderBy(col("cos_sim").desc, col("neighbor_id"))))
       .filter(col("rank") <= ivfpqK)
       .select(col("boost"), col("query_id"), col("neighbor_id"))
-    val exact = fullF.crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        GraftFunctions.cosineSimilarity(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= ivfpqK)
-      .select(col("query_id"), col("neighbor_id"))
+    val exact = filteredExact(fullF, queries)
     val nCand = tagged.groupBy(col("boost")).agg(count(lit(1)).as("n_cand"))
     val nFound = topk.join(exact, Seq("query_id", "neighbor_id"))
       .groupBy(col("boost")).agg(count(lit(1)).as("n_found"))
@@ -900,7 +905,7 @@ object Vectors {
     boosts.join(nCand, Seq("boost"), "left")
       .join(nFound, Seq("boost"), "left")
       .crossJoin(nExact)
-      .select(col("boost"),
+      .select(Seq(col("boost")) ++ perBoost ++ Seq(
         coalesce(col("n_cand"), lit(0L)).as("n_cand"),
         col("n_exact"),
         coalesce(col("n_found"), lit(0L)).as("n_found"),
@@ -908,45 +913,20 @@ object Vectors {
         // ground truth yields recall 0.0, not an ANSI divide-by-zero
         when(col("n_exact") === 0, lit(0.0))
           .otherwise(round(coalesce(col("n_found"), lit(0L)).cast(DoubleType)
-            / col("n_exact").cast(DoubleType), 4)).as("recall"))
+            / col("n_exact").cast(DoubleType), 4)).as("recall")): _*)
       .orderBy(col("boost"))
   }
 
-  private lazy val embFilteredBoostCurveSql: String = {
-    val dim = 64
-    val boostMax = 16 / ivfpqNprobe // adaptiveCells = 16 at oracle scale
-    s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
-    $pqCtesComposable,
-    pmax AS (
-      SELECT query_id, qv, cell, rn AS cell_rank FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", dim)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)),
-    probes AS (SELECT query_id, qv, cell FROM pmax),
-    inv_f AS (
-      SELECT iv.vec_id, iv.cell FROM inverted iv
-      JOIN embeddings em ON em.vec_id = iv.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
-    ${adcCtes("probes", "inv_f", dim)},
-    prank AS (
-      SELECT p.query_id, iv.vec_id AS neighbor_id, MIN(p.cell_rank) AS cell_rank
-      FROM pmax p JOIN inv_f iv ON iv.cell = p.cell AND iv.vec_id <> p.query_id
-      GROUP BY 1, 2),
-    pcos AS (
-      SELECT a.query_id, a.neighbor_id, a.adc_raw, r.cell_rank,
-        ${cosFold("qe.v", "c.v", dim)} AS cos_raw
-      FROM adcr a
-      JOIN prank r ON r.query_id = a.query_id AND r.neighbor_id = a.neighbor_id
-      JOIN e c ON c.vec_id = a.neighbor_id
-      JOIN e qe ON qe.vec_id = a.query_id),
-    boosts AS (
-      SELECT CAST(unnest(range(1, ${boostMax + 1})) AS INT) AS boost),
-    tagged AS (
-      SELECT b.boost, p.query_id, p.neighbor_id, p.adc_raw, p.cos_raw
-      FROM boosts b JOIN pcos p ON p.cell_rank <= b.boost * $ivfpqNprobe),
+  private val embFilteredBoostCurve = filteredBoostCurve { (vecs, _, cells) =>
+    val (ids, cents) = AnnIvf.collectCentroids(AnnIvf.refinedCentroids(vecs, cells, 64))
+    IvfPq.OneLevelIndex(ids, cents)
+  }
+
+  /** The tail of both boost-curve oracles, from `tagged(boost, query_id,
+    * neighbor_id, adc_raw, cos_raw)` and `boosts(boost)`: per boost the
+    * rerank-pool top-k, its hits in the exact ground truth and the
+    * candidate volume. `perBoost` adds output columns after `boost`. */
+  private def boostCurveTailSql(perBoost: String): String = s"""
     surv_b AS (
       SELECT * FROM (
         SELECT boost, query_id, neighbor_id, cos_raw,
@@ -960,29 +940,15 @@ object Vectors {
           ROW_NUMBER() OVER (PARTITION BY boost, query_id
             ORDER BY cos_raw DESC, neighbor_id) AS rank
         FROM surv_b)
-      WHERE rank <= $ivfpqK),
-    sub AS (
-      SELECT e.vec_id, e.v FROM e
-      JOIN embeddings em ON em.vec_id = e.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
-    exact AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        ${cosFold("q.v", "c.v", dim)} AS cos_raw
-      FROM e q JOIN sub c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
-    exr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-          ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cos_raw DESC, neighbor_id) AS rank
-        FROM exact)
-      WHERE rank <= $ivfpqK),
+      WHERE rank <= $ivfpqK),$filteredExactCtes,
     ncand AS (SELECT boost, COUNT(*) AS n_cand FROM tagged GROUP BY 1),
     nfound AS (
       SELECT t.boost, COUNT(*) AS n_found FROM topk_b t
       JOIN exr x ON x.query_id = t.query_id AND x.neighbor_id = t.neighbor_id
       GROUP BY 1),
     nex AS (SELECT COUNT(*) AS n_exact FROM exr)
-    SELECT b.boost, CAST(COALESCE(c.n_cand, 0) AS BIGINT) AS n_cand,
+    SELECT b.boost,$perBoost
+      CAST(COALESCE(c.n_cand, 0) AS BIGINT) AS n_cand,
       nex.n_exact, CAST(COALESCE(f.n_found, 0) AS BIGINT) AS n_found,
       -- zero-row guard mirrors the engine's when(n_exact === 0, 0.0):
       -- an unguarded division would diverge (NULL/Inf) exactly where
@@ -995,6 +961,33 @@ object Vectors {
     LEFT JOIN nfound f ON f.boost = b.boost
     CROSS JOIN nex
     ORDER BY b.boost"""
+
+  private val boostMaxSql = 16 / ivfpqNprobe // adaptiveCells = 16 at oracle scale
+
+  private lazy val embFilteredBoostCurveSql: String = {
+    val dim = 64
+    s"""
+    WITH ${ScaleOps.ivfCtes(16, dim)},
+    $pqCtesComposable,${ScaleOps.probesCte(s"${boostMaxSql * ivfpqNprobe}")},${
+      filteredInvCte("inverted")},
+    ${adcCtes("probes", "inv_f", dim)},
+    prank AS (
+      SELECT p.query_id, iv.vec_id AS neighbor_id, MIN(p.cell_rank) AS cell_rank
+      FROM probes p JOIN inv_f iv ON iv.cell = p.cell AND iv.vec_id <> p.query_id
+      GROUP BY 1, 2),
+    pcos AS (
+      SELECT a.query_id, a.neighbor_id, a.adc_raw, r.cell_rank,
+        ${cosFold("qe.v", "c.v", dim)} AS cos_raw
+      FROM adcr a
+      JOIN prank r ON r.query_id = a.query_id AND r.neighbor_id = a.neighbor_id
+      JOIN e c ON c.vec_id = a.neighbor_id
+      JOIN e qe ON qe.vec_id = a.query_id),
+    boosts AS (
+      SELECT CAST(unnest(range(1, ${boostMaxSql + 1})) AS INT) AS boost),
+    tagged AS (
+      SELECT b.boost, p.query_id, p.neighbor_id, p.adc_raw, p.cos_raw
+      FROM boosts b JOIN pcos p ON p.cell_rank <= b.boost * $ivfpqNprobe),${
+      boostCurveTailSql("")}"""
   }
 
   // ------------------------- emb_filtered_boost_curve_two_level
@@ -1020,119 +1013,15 @@ object Vectors {
   // every cell — that is what a tuning curve prices; the pair pool is
   // bounded by s·n·|Q|, the brute arm's own cost); production
   // queries run filteredTopK at one chosen boost.
-  private val embFilteredBoostCurveTwoLevel: Q = (s, d) => {
-    import graft.operators.{AnnIvf, AnnPq, IvfPq}
-    val wBase = 2
-    val corpus = labeledCorpus(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = corpus.count()
-    val pred = col("label").isin(filteredLabels: _*)
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
-    val vecsOnly = corpus.select(col("id"), col("v"))
-    val cells = AnnIvf.adaptiveCells(n)
-    val boostMax = math.max(1, cells / ivfpqNprobe)
-    // independent training halves overlapped (the trainHalves discipline)
-    val (idx, books) = graft.operators.Par.two(
-      () => AnnIvf.twoLevelIndex(vecsOnly, cells, dim = 64, knownCount = n),
-      () => AnnPq.collectCodebooks(
-        AnnPq.refinedCodebooks(vecsOnly, pqM, pqDsub, pqK), pqM))
-    val index = IvfPq.TwoLevelIndexW(idx, wBase)
-    val codedF = IvfPq.codedInvertedFileAttrs(index, corpus, books, pqDsub,
-        Seq("label"))
-      .filter(pred)
-      .select(col("cell"), col("id").as("neighbor_id"), col("codes"))
-    val maxWc = idx.coarseIds.length
-    // every fine cell per query, tagged (coarse rank, fine distance) —
-    // the one probe pass all boosts share
-    val qcells = queries.select(col("query_id"), col("qv"),
-        posexplode(GraftFunctions.nearestCells(col("qv"), idx.coarseCents,
-          idx.coarseIds, math.max(1, maxWc))).as(Seq("crpos", "coarse")))
-      .select(col("query_id"), col("qv"), (col("crpos") + 1).as("cr"),
-        col("coarse"))
-      .join(broadcast(idx.groups), Seq("coarse"))
-      .select(col("query_id"), col("qv"), col("cr"),
-        explode(arrays_zip(col("gids"), col("gcents"))).as("z"))
-      .select(col("query_id"), col("qv"), col("cr"),
-        col("z.gids").as("cell"), col("z.gcents").as("fc"))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(qv, fc, (x, y) -> (x - y) * (x - y)), " +
-          "CAST(0 AS DOUBLE), (acc, t) -> acc + t)"))
-      .select(col("query_id"), col("qv"), col("cr"), col("cell"), col("dist"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    import s.implicits._
-    val boosts = broadcast((1 to boostMax).toDF("boost"))
-    // boost b's probe set: fine ranking WITHIN the min(w·b, |coarse|)
-    // nearest coarse neighborhoods — the filteredTopKWith widening arm
-    val probed = qcells.join(boosts,
-        col("cr") <= least(lit(wBase) * col("boost"), lit(maxWc)))
-      .withColumn("cell_rank", row_number().over(
-        Window.partitionBy(col("boost"), col("query_id"))
-          .orderBy(col("dist"), col("cell"))))
-      .filter(col("cell_rank") <= col("boost") * lit(ivfpqNprobe))
-      .select(col("boost"), col("query_id"), col("cell"))
-    val fullF = corpus.filter(pred)
-      .select(col("id").as("neighbor_id"), col("v").as("cv"))
-    // the pair pool, ADC + exact cosine ONCE per pair
-    val pairs = qcells.select(col("query_id"), col("qv"), col("cell"))
-      .join(codedF, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cos", GraftFunctions.adcCosineFromQuery(
-        col("qv"), col("codes"), books, pqDsub))
-      .join(fullF, Seq("neighbor_id"))
-      .withColumn("cos_sim",
-        GraftFunctions.cosineSimilarity(col("qv"), col("cv")))
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        col("adc_cos"), col("cos_sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tagged = probed.join(pairs, Seq("query_id", "cell"))
-    val topk = tagged
-      .withColumn("adc_rank", row_number().over(
-        Window.partitionBy(col("boost"), col("query_id"))
-          .orderBy(col("adc_cos").desc, col("neighbor_id"))))
-      .filter(col("adc_rank") <= ivfpqRerank)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("boost"), col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= ivfpqK)
-      .select(col("boost"), col("query_id"), col("neighbor_id"))
-    val exact = fullF.crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        GraftFunctions.cosineSimilarity(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= ivfpqK)
-      .select(col("query_id"), col("neighbor_id"))
-    val nCand = tagged.groupBy(col("boost")).agg(count(lit(1)).as("n_cand"))
-    val nFound = topk.join(exact, Seq("query_id", "neighbor_id"))
-      .groupBy(col("boost")).agg(count(lit(1)).as("n_found"))
-    val nExact = broadcast(exact.agg(count(lit(1)).as("n_exact")))
-    boosts.join(nCand, Seq("boost"), "left")
-      .join(nFound, Seq("boost"), "left")
-      .crossJoin(nExact)
-      .select(col("boost"),
-        least(lit(wBase) * col("boost"), lit(maxWc)).as("w_probe"),
-        coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-        col("n_exact"),
-        coalesce(col("n_found"), lit(0L)).as("n_found"),
-        when(col("n_exact") === 0, lit(0.0))
-          .otherwise(round(coalesce(col("n_found"), lit(0L)).cast(DoubleType)
-            / col("n_exact").cast(DoubleType), 4)).as("recall"))
-      .orderBy(col("boost"))
+  private val embFilteredBoostCurveTwoLevel = filteredBoostCurve { (vecs, n, cells) =>
+    IvfPq.TwoLevelIndexW(AnnIvf.twoLevelIndex(vecs, cells, dim = 64, knownCount = n), 2)
   }
 
   private lazy val embFilteredBoostCurveTwoLevelSql: String = {
     val dim = 64
-    val boostMax = 16 / ivfpqNprobe // adaptiveCells = 16 at oracle scale
     s"""
     WITH ${ScaleOps.ivf2Ctes(16, dim, 2)},
-    $pqCtesComposable,
-    inv2_f AS (
-      SELECT iv.vec_id, iv.cell FROM inverted2 iv
-      JOIN embeddings em ON em.vec_id = iv.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
+    $pqCtesComposable,${filteredInvCte("inverted2")},
     maxwc AS (SELECT COUNT(*) AS mwc FROM coarsep),
     qcoarse AS (
       SELECT query_id, qv, coarse, cr FROM (
@@ -1148,7 +1037,7 @@ object Vectors {
       JOIN f2c ON f2c.coarse = q.coarse
       JOIN centf cf ON cf.cell = f2c.fid),
     boosts AS (
-      SELECT CAST(unnest(range(1, ${boostMax + 1})) AS INT) AS boost),
+      SELECT CAST(unnest(range(1, ${boostMaxSql + 1})) AS INT) AS boost),
     probed AS (
       SELECT boost, query_id, cell FROM (
         SELECT b.boost, q.query_id, q.cell,
@@ -1157,66 +1046,19 @@ object Vectors {
         FROM boosts b JOIN qcells q
           ON q.cr <= LEAST(2 * b.boost, (SELECT mwc FROM maxwc)))
       WHERE cell_rank <= $ivfpqNprobe * boost),
-    probesq AS (SELECT query_id, qv, cell FROM qcells),
-    ${adcCtes("probesq", "inv2_f", dim)},
+    ${adcCtes("qcells", "inv_f", dim)},
     pcos AS (
       SELECT a.query_id, iv.cell, a.neighbor_id, a.adc_raw,
         ${cosFold("qe.v", "c.v", dim)} AS cos_raw
       FROM adcr a
-      JOIN inv2_f iv ON iv.vec_id = a.neighbor_id
+      JOIN inv_f iv ON iv.vec_id = a.neighbor_id
       JOIN e c ON c.vec_id = a.neighbor_id
       JOIN e qe ON qe.vec_id = a.query_id),
     tagged AS (
       SELECT p.boost, c.query_id, c.neighbor_id, c.adc_raw, c.cos_raw
       FROM probed p
-      JOIN pcos c ON c.query_id = p.query_id AND c.cell = p.cell),
-    surv_b AS (
-      SELECT * FROM (
-        SELECT boost, query_id, neighbor_id, cos_raw,
-          ROW_NUMBER() OVER (PARTITION BY boost, query_id
-            ORDER BY adc_raw DESC, neighbor_id) AS adc_rank
-        FROM tagged)
-      WHERE adc_rank <= $ivfpqRerank),
-    topk_b AS (
-      SELECT boost, query_id, neighbor_id FROM (
-        SELECT boost, query_id, neighbor_id,
-          ROW_NUMBER() OVER (PARTITION BY boost, query_id
-            ORDER BY cos_raw DESC, neighbor_id) AS rank
-        FROM surv_b)
-      WHERE rank <= $ivfpqK),
-    sub AS (
-      SELECT e.vec_id, e.v FROM e
-      JOIN embeddings em ON em.vec_id = e.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
-    exact AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        ${cosFold("q.v", "c.v", dim)} AS cos_raw
-      FROM e q JOIN sub c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
-    exr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-          ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cos_raw DESC, neighbor_id) AS rank
-        FROM exact)
-      WHERE rank <= $ivfpqK),
-    ncand AS (SELECT boost, COUNT(*) AS n_cand FROM tagged GROUP BY 1),
-    nfound AS (
-      SELECT t.boost, COUNT(*) AS n_found FROM topk_b t
-      JOIN exr x ON x.query_id = t.query_id AND x.neighbor_id = t.neighbor_id
-      GROUP BY 1),
-    nex AS (SELECT COUNT(*) AS n_exact FROM exr)
-    SELECT b.boost,
-      CAST(LEAST(2 * b.boost, (SELECT mwc FROM maxwc)) AS INT) AS w_probe,
-      CAST(COALESCE(c.n_cand, 0) AS BIGINT) AS n_cand,
-      nex.n_exact, CAST(COALESCE(f.n_found, 0) AS BIGINT) AS n_found,
-      CASE WHEN nex.n_exact = 0 THEN 0.0 ELSE
-        ROUND(CAST(COALESCE(f.n_found, 0) AS DOUBLE) / nex.n_exact, 4)
-      END AS recall
-    FROM boosts b
-    LEFT JOIN ncand c ON c.boost = b.boost
-    LEFT JOIN nfound f ON f.boost = b.boost
-    CROSS JOIN nex
-    ORDER BY b.boost"""
+      JOIN pcos c ON c.query_id = p.query_id AND c.cell = p.cell),${
+      boostCurveTailSql("\n      CAST(LEAST(2 * b.boost, (SELECT mwc FROM maxwc)) AS INT) AS w_probe,")}"""
   }
 
   // -------------------------------------- emb_filtered_topk_adaptive
@@ -1242,8 +1084,7 @@ object Vectors {
     val filteredN = corpus.filter(pred).count()
     val boost = IvfPq.adaptiveProbeBoost(n, filteredN,
       AnnIvf.adaptiveCells(n), ivfpqNprobe)
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     IvfPq.filteredTopK(corpus, n, dim = 64, attrs = Seq("label"),
         pred = pred, queries = queries,
         k = ivfpqK, nprobe = ivfpqNprobe, rerank = ivfpqRerank,
@@ -1263,19 +1104,8 @@ object Vectors {
         (CAST((SELECT COUNT(*) FROM embeddings
                WHERE label IN (${filteredLabels.mkString(", ")})) AS DOUBLE)
          / CAST((SELECT COUNT(*) FROM embeddings) AS DOUBLE))) AS INT))
-        AS boost),
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", dim)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)
-      WHERE rn <= $ivfpqNprobe * (SELECT boost FROM bsel)),
-    inv_f AS (
-      SELECT iv.vec_id, iv.cell FROM inverted iv
-      JOIN embeddings em ON em.vec_id = iv.vec_id
-      WHERE em.label IN (${filteredLabels.mkString(", ")})),
+        AS boost),${ScaleOps.probesCte(s"$ivfpqNprobe * (SELECT boost FROM bsel)")},${
+      filteredInvCte("inverted")},
     ${adcCtes("probes", "inv_f", dim)},
     ${ivfpqRerankTailSql(ivfpqRerank, ivfpqK, dim,
         extraSelect = ", 'pre_filtered_probe' AS regime, " +
@@ -1296,9 +1126,7 @@ object Vectors {
   // curve replays exactly in DuckDB.
   private val embIvfpqRerankCurve: Q = (s, d) => {
     val maxRerank = 50 // depths 10, 20, 30, 40, 50
-    val e = vecs(s, d)
-    val corpus = e.select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = vecCorpus(s, d)
     val n = corpus.count()
     // the same regime-dispatched index + true-ADC candidate stage as
     // emb_ivfpq_topk (IvfPq) — the curve tunes the knob of the REAL
@@ -1306,8 +1134,7 @@ object Vectors {
     val (index, books) =
       IvfPq.trainHalves(corpus, n, dim = 64, pqM, pqDsub, pqK)
     val codedInv = IvfPq.codedInvertedFile(index, corpus, books, pqDsub)
-    val queries = corpus.filter(col("id") < 5)
-      .select(col("id").as("query_id"), col("v").as("qv"))
+    val queries = queryVecs(corpus)
     val surv = IvfPq.adcCandidates(index, books, pqDsub, codedInv, queries, ivfpqNprobe)
       .withColumn("adc_rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("adc_cos").desc, col("neighbor_id"))))
@@ -1361,15 +1188,8 @@ object Vectors {
     WITH ${ScaleOps.ivfCtes(16, dim)},
     $pqCtesComposable,
     ${cosineTopkCtes.trim},
-    exact AS (SELECT query_id, neighbor_id AS id FROM ex_r WHERE rank <= 10),
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
-          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("e.v", "c1.c", dim)}, c1.cell) AS rn
-        FROM e CROSS JOIN centf c1
-        WHERE e.vec_id < 5)
-      WHERE rn <= $ivfpqNprobe),
+    exact AS (SELECT query_id, neighbor_id AS id FROM ex_r WHERE rank <= 10),${
+      ScaleOps.probesCte(s"$ivfpqNprobe")},
     ${adcCtes("probes", "inverted", dim)},
     surv AS (
       SELECT a.query_id, a.neighbor_id AS id, a.adc_rank,
@@ -1427,10 +1247,109 @@ object Vectors {
   // the manifest aggregates are one scan of the (tiny relative to the
   // corpus) coded file with map-side partials. The artifact directory
   // is per-sf scratch, overwritten per build.
-  private val embIndexBuild: Q = (s, d) => {
+  // ------------------------------------------ store-manifest rows
+  // Every manifest row is (artifact, n_rows, sum_a, sum_b): order-
+  // insensitive checksums the oracle recomputes from its replay chain.
+
+  /** Exact DECIMAL(38,18) sum, rounded ONCE at the end. NOT (18,6):
+    * Spark's double->decimal cast rounds the shortest repr HALF_UP
+    * while DuckDB's TRUNCATES the exact binary expansion, so per-
+    * element quantization at 6dp diverges by +-1e-6 on computed
+    * (full-precision) doubles and only statistical sign cancellation
+    * kept the summed manifests green (it broke at sf0.1). At 18dp
+    * the two casts differ by ~1e-17/element, invisible at the final
+    * 6dp rounding.
+    */
+  private def decSum(c: Column): Column = {
     import org.apache.spark.sql.types.DecimalType
-    val corpus = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    round(coalesce(sum(c.cast(DecimalType(38, 18))),
+      lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 18)))
+      .cast(DoubleType), 6)
+  }
+
+  /** Rows, Σ cell id and the decimal-exact Σ of every coordinate of a
+    * driver-local centroid table. */
+  private def centRow(s: SparkSession, label: String, ids: Array[Int],
+      cents: Array[Array[Double]]): DataFrame = {
+    import s.implicits._
+    ids.zip(cents).toSeq
+      .flatMap { case (cell, cent) => cent.map(x => (cell, x)) }
+      .toDF("cell", "x")
+      .agg(lit(label).as("artifact"),
+        lit(ids.length.toLong).as("n_rows"),
+        lit(ids.map(_.toLong).sum).as("sum_a"),
+        decSum(col("x")).as("sum_b"))
+  }
+
+  /** Rows, Σ(id + cell + codes) and distinct cells of a coded file. */
+  private def checksumRow(label: String, df: DataFrame): DataFrame = df.agg(
+    lit(label).as("artifact"),
+    count(lit(1)).as("n_rows"),
+    (coalesce(sum(col("id")), lit(0L))
+      + coalesce(sum(col("cell").cast("long")), lit(0L))
+      + coalesce(sum(expr(
+        "aggregate(codes, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")),
+        lit(0L))).as("sum_a"),
+    countDistinct(col("cell")).cast(DoubleType).as("sum_b"))
+
+  /** The store's pending tombstones: count, Σ id, distinct ids. */
+  private def tombRow(s: SparkSession, dir: String): DataFrame =
+    IvfPq.tombstonesOf(s, dir).agg(
+      lit("tombstones").as("artifact"),
+      count(lit(1)).as("n_rows"),
+      coalesce(sum(col("id")), lit(0L)).as("sum_a"),
+      countDistinct(col("id")).cast(DoubleType).as("sum_b"))
+
+  /** Cell occupancy of a (cell) table: non-empty cells, the largest
+    * cell and the max/mean imbalance — the retrain trigger. */
+  private def balanceRow(cells: DataFrame): DataFrame =
+    cells.groupBy(col("cell")).agg(count(lit(1)).as("sz")).agg(
+      lit("balance").as("artifact"),
+      count(lit(1)).as("n_rows"),
+      coalesce(max(col("sz")), lit(0L)).as("sum_a"),
+      coalesce(round(max(col("sz")).cast(DoubleType)
+          * count(lit(1)).cast(DoubleType)
+          / sum(col("sz")).cast(DoubleType), 6),
+        lit(0.0)).as("sum_b"))
+
+  /** The oracle's [[checksumRow]] over the (vec_id, cell) table `inv`
+    * and the (vec_id, code) table `codes`, both restricted by `where`. */
+  private def checksumRowSql(label: String, inv: String, codes: String,
+      where: String = ""): String = {
+    val w = if (where.isEmpty) "" else s" WHERE $where"
+    s"""
+      SELECT '$label' AS artifact,
+        (SELECT COUNT(*) FROM $inv$w) AS n_rows,
+        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
+           FROM $inv$w)
+          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM $codes$w) AS sum_a,
+        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM $inv$w) AS sum_b"""
+  }
+
+  /** The oracle's [[centRow]] over a `(cell, c)` centroid table. */
+  private def centRowSql(label: String, cents: String): String = s"""
+      SELECT '$label' AS artifact,
+        (SELECT COUNT(*) FROM $cents) AS n_rows,
+        (SELECT CAST(COALESCE(SUM(cell), 0) AS BIGINT) FROM $cents) AS sum_a,
+        ROUND(CAST(COALESCE(SUM(CAST(x AS DECIMAL(38,18))), 0) AS DOUBLE), 6) AS sum_b
+      FROM (SELECT unnest(c) AS x FROM $cents)"""
+
+  /** The oracle's [[tombRow]]: the ids the delete predicate selects. */
+  private lazy val tombRowSql: String = s"""
+      SELECT 'tombstones' AS artifact, COUNT(*) AS n_rows,
+        CAST(COALESCE(SUM(vec_id), 0) AS BIGINT) AS sum_a,
+        CAST(COUNT(DISTINCT vec_id) AS DOUBLE) AS sum_b
+      FROM embeddings WHERE vec_id % $deleteMod = $deleteRem"""
+
+  /** The oracle's [[balanceRow]] over a (cell) table. */
+  private def balanceRowSql(cells: String): String = s"""
+      SELECT 'balance' AS artifact, COUNT(*) AS n_rows,
+        CAST(COALESCE(MAX(sz), 0) AS BIGINT) AS sum_a,
+        COALESCE(ROUND(CAST(MAX(sz) AS DOUBLE) * COUNT(*) / SUM(sz), 6), 0) AS sum_b
+      FROM (SELECT cell, COUNT(*) AS sz FROM $cells GROUP BY cell)"""
+
+  private val embIndexBuild: Q = (s, d) => {
+    val corpus = vecCorpus(s, d)
     val n = corpus.count()
     val dir = Vectors.indexDir(d)
     IvfPq.buildIndex(corpus, n, dim = 64, m = pqM, dsub = pqDsub,
@@ -1442,26 +1361,6 @@ object Vectors {
       case IvfPq.TwoLevelIndexW(idx, _) => (idx.coarseIds, idx.coarseCents)
     }
     import s.implicits._
-    // Exact DECIMAL(38,18) sum, rounded ONCE at the end. NOT (18,6):
-    // Spark's double->decimal cast rounds the shortest repr HALF_UP
-    // while DuckDB's TRUNCATES the exact binary expansion, so per-
-    // element quantization at 6dp diverges by +-1e-6 on computed
-    // (full-precision) doubles and only statistical sign cancellation
-    // kept the summed manifests green (it broke at sf0.1). At 18dp
-    // the two casts differ by ~1e-17/element, invisible at the final
-    // 6dp rounding.
-    def decSum(c: Column): Column =
-      round(coalesce(sum(c.cast(DecimalType(38, 18))),
-        lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 18)))
-        .cast(DoubleType), 6)
-    val centEl = cids.zip(ccents).toSeq
-      .flatMap { case (cell, cent) => cent.map(x => (cell, x)) }
-      .toDF("cell", "x")
-    val centRow = centEl.agg(
-      lit("centroids").as("artifact"),
-      lit(cids.length.toLong).as("n_rows"),
-      lit(cids.map(_.toLong).sum).as("sum_a"),
-      decSum(col("x")).as("sum_b"))
     val bookEl = loaded.books.toSeq.zipWithIndex.flatMap { case (book, sub) =>
       book.toSeq.zipWithIndex.flatMap { case (cent, code) =>
         cent.map(x => (sub, code, x)) } }.toDF("sub", "code", "x")
@@ -1472,28 +1371,14 @@ object Vectors {
       lit(loaded.books.map(_.length.toLong).sum).as("n_rows"),
       lit(bookMeta.sum).as("sum_a"),
       decSum(col("x")).as("sum_b"))
-    val invRow = loaded.inverted.agg(
-      lit("inverted").as("artifact"),
-      count(lit(1)).as("n_rows"),
-      (coalesce(sum(col("id")), lit(0L))
-        + coalesce(sum(col("cell").cast("long")), lit(0L))
-        + coalesce(sum(expr(
-          "aggregate(codes, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")),
-          lit(0L))).as("sum_a"),
-      countDistinct(col("cell")).cast(DoubleType).as("sum_b"))
-    centRow.unionAll(bookRow).unionAll(invRow).orderBy(col("artifact"))
+    centRow(s, "centroids", cids, ccents).unionAll(bookRow)
+      .unionAll(checksumRow("inverted", loaded.inverted)).orderBy(col("artifact"))
   }
 
   private lazy val embIndexBuildSql: String = s"""
     WITH ${ScaleOps.ivfCtes(16, 64)},
     $pqCtesComposable,
-    cent_el AS (SELECT cell, unnest(c) AS x FROM centf),
-    cent_stats AS (
-      SELECT 'centroids' AS artifact,
-        (SELECT COUNT(*) FROM centf) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(cell), 0) AS BIGINT) FROM centf) AS sum_a,
-        ROUND(CAST(COALESCE(SUM(CAST(x AS DECIMAL(38,18))), 0) AS DOUBLE), 6) AS sum_b
-      FROM cent_el),
+    cent_stats AS (${centRowSql("centroids", "centf")}),
     cb_el AS (SELECT sub, code, unnest(c) AS x FROM pq_cb),
     cb_stats AS (
       SELECT 'codebooks' AS artifact,
@@ -1501,13 +1386,7 @@ object Vectors {
         (SELECT CAST(COALESCE(SUM((sub + 1) * (code + 1)), 0) AS BIGINT) FROM pq_cb) AS sum_a,
         ROUND(CAST(COALESCE(SUM(CAST(x AS DECIMAL(38,18))), 0) AS DOUBLE), 6) AS sum_b
       FROM cb_el),
-    inv_stats AS (
-      SELECT 'inverted' AS artifact,
-        (SELECT COUNT(*) FROM inverted) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM inverted)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM pq_coded) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM inverted) AS sum_b)
+    inv_stats AS (${checksumRowSql("inverted", "inverted", "pq_coded")})
     SELECT * FROM cent_stats
     UNION ALL SELECT * FROM cb_stats
     UNION ALL SELECT * FROM inv_stats
@@ -1537,9 +1416,7 @@ object Vectors {
   // MergeSpec additionally pins store bit-equality vs the monolithic
   // build in BOTH regimes and the mismatched-halves refusal.
   private val embIndexShardMerge: Q = (s, d) => {
-    import org.apache.spark.sql.types.DecimalType
-    val corpus = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = vecCorpus(s, d)
     val n = corpus.count()
     // train once — same regime dispatch and constants as buildIndex
     // (the two halves overlapped, the trainHalves discipline)
@@ -1558,85 +1435,24 @@ object Vectors {
         corpus.filter(col("id") % 2 === 1), dirB))
     IvfPq.mergeIndexes(s, Seq(dirA, dirB), dirM)
     val loaded = IvfPq.loadIndex(s, dirM)
-    import s.implicits._
-    // Exact DECIMAL(38,18) sum, rounded ONCE at the end. NOT (18,6):
-    // Spark's double->decimal cast rounds the shortest repr HALF_UP
-    // while DuckDB's TRUNCATES the exact binary expansion, so per-
-    // element quantization at 6dp diverges by +-1e-6 on computed
-    // (full-precision) doubles and only statistical sign cancellation
-    // kept the summed manifests green (it broke at sf0.1). At 18dp
-    // the two casts differ by ~1e-17/element, invisible at the final
-    // 6dp rounding.
-    def decSum(c: Column): Column =
-      round(coalesce(sum(c.cast(DecimalType(38, 18))),
-        lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 18)))
-        .cast(DoubleType), 6)
     val (cids, ccents) = loaded.index match {
       case IvfPq.OneLevelIndex(ids, cents) => (ids, cents)
       case IvfPq.TwoLevelIndexW(idx, _) => (idx.coarseIds, idx.coarseCents)
     }
-    val centEl = cids.zip(ccents).toSeq
-      .flatMap { case (cell, cent) => cent.map(x => (cell, x)) }
-      .toDF("cell", "x")
-    val centRow = centEl.agg(
-      lit("centroids").as("artifact"),
-      lit(cids.length.toLong).as("n_rows"),
-      lit(cids.map(_.toLong).sum).as("sum_a"),
-      decSum(col("x")).as("sum_b"))
-    val codesSum = expr(
-      "aggregate(codes, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")
-    def invRow(label: String, df: DataFrame): DataFrame = df.agg(
-      lit(label).as("artifact"),
-      count(lit(1)).as("n_rows"),
-      (coalesce(sum(col("id")), lit(0L))
-        + coalesce(sum(col("cell").cast("long")), lit(0L))
-        + coalesce(sum(codesSum), lit(0L))).as("sum_a"),
-      countDistinct(col("cell")).cast(DoubleType).as("sum_b"))
-    centRow
-      .unionAll(invRow("merged", loaded.inverted))
-      .unionAll(invRow("shard_even", loaded.inverted.filter(col("id") % 2 === 0)))
-      .unionAll(invRow("shard_odd", loaded.inverted.filter(col("id") % 2 === 1)))
+    centRow(s, "centroids", cids, ccents)
+      .unionAll(checksumRow("merged", loaded.inverted))
+      .unionAll(checksumRow("shard_even", loaded.inverted.filter(col("id") % 2 === 0)))
+      .unionAll(checksumRow("shard_odd", loaded.inverted.filter(col("id") % 2 === 1)))
       .orderBy(col("artifact"))
   }
 
   private lazy val embIndexShardMergeSql: String = s"""
     WITH ${ScaleOps.ivfCtes(16, 64)},
     $pqCtesComposable,
-    cent_el AS (SELECT cell, unnest(c) AS x FROM centf),
-    row_cent AS (
-      SELECT 'centroids' AS artifact,
-        (SELECT COUNT(*) FROM centf) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(cell), 0) AS BIGINT) FROM centf) AS sum_a,
-        ROUND(CAST(COALESCE(SUM(CAST(x AS DECIMAL(38,18))), 0) AS DOUBLE), 6) AS sum_b
-      FROM cent_el),
-    inv_part AS (
-      SELECT i.vec_id, i.cell, c.code
-      FROM inverted i JOIN pq_coded c ON c.vec_id = i.vec_id),
-    row_merged AS (
-      SELECT 'merged' AS artifact,
-        (SELECT COUNT(*) FROM inverted) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM inverted)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM pq_coded) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM inverted) AS sum_b),
-    row_even AS (
-      SELECT 'shard_even' AS artifact,
-        (SELECT COUNT(*) FROM inverted WHERE vec_id % 2 = 0) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM inverted WHERE vec_id % 2 = 0)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM inv_part
-             WHERE vec_id % 2 = 0) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM inverted
-         WHERE vec_id % 2 = 0) AS sum_b),
-    row_odd AS (
-      SELECT 'shard_odd' AS artifact,
-        (SELECT COUNT(*) FROM inverted WHERE vec_id % 2 = 1) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM inverted WHERE vec_id % 2 = 1)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM inv_part
-             WHERE vec_id % 2 = 1) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM inverted
-         WHERE vec_id % 2 = 1) AS sum_b)
+    row_cent AS (${centRowSql("centroids", "centf")}),
+    row_merged AS (${checksumRowSql("merged", "inverted", "pq_coded")}),
+    row_even AS (${checksumRowSql("shard_even", "inverted", "pq_coded", "vec_id % 2 = 0")}),
+    row_odd AS (${checksumRowSql("shard_odd", "inverted", "pq_coded", "vec_id % 2 = 1")})
     SELECT * FROM row_cent
     UNION ALL SELECT * FROM row_even
     UNION ALL SELECT * FROM row_merged
@@ -1669,9 +1485,37 @@ object Vectors {
   // the coded file with map-side partials.
   private[queries] val appendDeltaMod = 10
   private[queries] val appendDeltaRem = 7
+
+  /** The delta `dl(vec_id, v)` and its frozen-index cell assignment
+    * `dl_assign(vec_id, cell)` against the base-trained `centf`. */
+  private[queries] lazy val deltaAssignCtes: String = s"""
+    dl AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+      WHERE vec_id % $appendDeltaMod = $appendDeltaRem),
+    dl_assign AS (
+      SELECT vec_id, cell FROM (
+        SELECT d.vec_id, c.cell,
+          ROW_NUMBER() OVER (PARTITION BY d.vec_id
+            ORDER BY ${ScaleOps.ivfSqDist("d.v", "c.c", 64)}, c.cell) AS rn
+        FROM dl d CROSS JOIN centf c)
+      WHERE rn = 1)"""
+
+  /** The delta's PQ encode under the frozen base codebooks (`pq_cb`):
+    * `dl_coded(vec_id, sub, code)` over [[deltaAssignCtes]]' `dl`. */
+  private[queries] lazy val deltaCodedCtes: String = s"""
+    dl_subs AS (
+      SELECT vec_id, CAST(sub AS INT) AS sub,
+        list_slice(v, sub * $pqDsub + 1, sub * $pqDsub + $pqDsub) AS subv
+      FROM dl CROSS JOIN (SELECT unnest(range(0, $pqM)) AS sub)),
+    dl_coded AS (
+      SELECT vec_id, sub, code FROM (
+        SELECT s.vec_id, s.sub, b.code,
+          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
+            ORDER BY ${pqSqDist("s.subv", "b.c")}, b.cell) AS rn
+        FROM dl_subs s JOIN pq_cb b ON b.sub = s.sub)
+      WHERE rn = 1)"""
   private val embIndexAppend: Q = (s, d) => {
-    val all = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val all = vecCorpus(s, d)
     val isDelta = col("id") % appendDeltaMod === appendDeltaRem
     val base = all.filter(!isDelta)
     val nBase = base.count()
@@ -1686,27 +1530,9 @@ object Vectors {
     // manifest from the RELOADED post-append artifact
     val after = IvfPq.loadIndex(s, dir).inverted
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codesSum = expr(
-      "aggregate(codes, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")
-    def checksumRow(label: String, df: DataFrame): DataFrame = df.agg(
-      lit(label).as("artifact"),
-      count(lit(1)).as("n_rows"),
-      (coalesce(sum(col("id")), lit(0L))
-        + coalesce(sum(col("cell").cast("long")), lit(0L))
-        + coalesce(sum(codesSum), lit(0L))).as("sum_a"),
-      countDistinct(col("cell")).cast(DoubleType).as("sum_b"))
-    val sizes = after.groupBy(col("cell")).agg(count(lit(1)).as("sz"))
-    val balanceRow = sizes.agg(
-      lit("balance").as("artifact"),
-      count(lit(1)).as("n_rows"),
-      coalesce(max(col("sz")), lit(0L)).as("sum_a"),
-      coalesce(round(max(col("sz")).cast(DoubleType)
-          * count(lit(1)).cast(DoubleType)
-          / sum(col("sz")).cast(DoubleType), 6),
-        lit(0.0)).as("sum_b"))
     checksumRow("appended", after)
       .unionAll(checksumRow("delta", after.filter(isDelta)))
-      .unionAll(balanceRow)
+      .unionAll(balanceRow(after))
       .orderBy(col("artifact"))
   }
 
@@ -1715,55 +1541,16 @@ object Vectors {
     s"""
     WITH ${ScaleOps.ivfCtes(16, dim,
         eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},
-    $pqCtesComposable,
-    dl AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-      WHERE vec_id % $appendDeltaMod = $appendDeltaRem),
-    dl_assign AS (
-      SELECT vec_id, cell FROM (
-        SELECT d.vec_id, c.cell,
-          ROW_NUMBER() OVER (PARTITION BY d.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("d.v", "c.c", dim)}, c.cell) AS rn
-        FROM dl d CROSS JOIN centf c)
-      WHERE rn = 1),
-    dl_subs AS (
-      SELECT vec_id, CAST(sub AS INT) AS sub,
-        list_slice(v, sub * $pqDsub + 1, sub * $pqDsub + $pqDsub) AS subv
-      FROM dl CROSS JOIN (SELECT unnest(range(0, $pqM)) AS sub)),
-    dl_coded AS (
-      SELECT vec_id, sub, code FROM (
-        SELECT s.vec_id, s.sub, b.code,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-            ORDER BY ${pqSqDist("s.subv", "b.c")}, b.cell) AS rn
-        FROM dl_subs s JOIN pq_cb b ON b.sub = s.sub)
-      WHERE rn = 1),
+    $pqCtesComposable,$deltaAssignCtes,$deltaCodedCtes,
     inv_all AS (
       SELECT vec_id, cell FROM inverted
       UNION ALL SELECT vec_id, cell FROM dl_assign),
     codes_all AS (
       SELECT vec_id, code FROM pq_coded
       UNION ALL SELECT vec_id, code FROM dl_coded),
-    row_appended AS (
-      SELECT 'appended' AS artifact,
-        (SELECT COUNT(*) FROM inv_all) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM inv_all)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM codes_all) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM inv_all) AS sum_b),
-    row_delta AS (
-      SELECT 'delta' AS artifact,
-        (SELECT COUNT(*) FROM dl_assign) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM dl_assign)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM dl_coded) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM dl_assign) AS sum_b),
-    sizes AS (SELECT cell, COUNT(*) AS sz FROM inv_all GROUP BY cell),
-    row_balance AS (
-      SELECT 'balance' AS artifact,
-        (SELECT COUNT(*) FROM sizes) AS n_rows,
-        (SELECT CAST(COALESCE(MAX(sz), 0) AS BIGINT) FROM sizes) AS sum_a,
-        (SELECT COALESCE(ROUND(CAST(MAX(sz) AS DOUBLE) * COUNT(*) / SUM(sz), 6), 0)
-           FROM sizes) AS sum_b)
+    row_appended AS (${checksumRowSql("appended", "inv_all", "codes_all")}),
+    row_delta AS (${checksumRowSql("delta", "dl_assign", "dl_coded")}),
+    row_balance AS (${balanceRowSql("inv_all")})
     SELECT * FROM row_appended
     UNION ALL SELECT * FROM row_delta
     UNION ALL SELECT * FROM row_balance
@@ -1802,8 +1589,7 @@ object Vectors {
   // 100 TB shape: one pass over the coded file (cell, id only — codes
   // pruned), one manifest read, a tombstone-sized scan.
   private val embIndexStats: Q = (s, d) => {
-    val all = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val all = vecCorpus(s, d)
     val isDelta = col("id") % appendDeltaMod === appendDeltaRem
     val isDel = col("id") % deleteMod === deleteRem
     val base = all.filter(!isDelta)
@@ -1842,16 +1628,7 @@ object Vectors {
         round(when(coalesce(first(col("n_store")), lit(0L)) === 0, lit(0.0))
           .otherwise(count(col("id")).cast(DoubleType)
             / first(col("n_store")).cast(DoubleType)), 6).as("sum_b"))
-    val liveSizes = loaded.live.groupBy(col("cell")).agg(count(lit(1)).as("sz"))
-    val balanceRow = liveSizes.agg(
-      lit("balance").as("artifact"),
-      count(lit(1)).as("n_rows"),
-      coalesce(max(col("sz")), lit(0L)).as("sum_a"),
-      coalesce(round(max(col("sz")).cast(DoubleType)
-          * count(lit(1)).cast(DoubleType)
-          / sum(col("sz")).cast(DoubleType), 6),
-        lit(0.0)).as("sum_b"))
-    fragRow.unionAll(staleRow).unionAll(balanceRow)
+    fragRow.unionAll(staleRow).unionAll(balanceRow(loaded.live))
       .orderBy(col("artifact"))
   }
 
@@ -1859,17 +1636,7 @@ object Vectors {
     val dim = 64
     s"""
     WITH ${ScaleOps.ivfCtes(16, dim,
-        eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},
-    dl AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-      WHERE vec_id % $appendDeltaMod = $appendDeltaRem),
-    dl_assign AS (
-      SELECT vec_id, cell FROM (
-        SELECT d.vec_id, c.cell,
-          ROW_NUMBER() OVER (PARTITION BY d.vec_id
-            ORDER BY ${ScaleOps.ivfSqDist("d.v", "c.c", dim)}, c.cell) AS rn
-        FROM dl d CROSS JOIN centf c)
-      WHERE rn = 1),
+        eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},$deltaAssignCtes,
     inv_all AS (
       SELECT vec_id, cell FROM inverted
       UNION ALL SELECT vec_id, cell FROM dl_assign),
@@ -1894,13 +1661,7 @@ object Vectors {
       SELECT i.vec_id, i.cell FROM inv_all i
       LEFT JOIN tomb t ON t.vec_id = i.vec_id
       WHERE t.vec_id IS NULL),
-    sizes AS (SELECT cell, COUNT(*) AS sz FROM live GROUP BY cell),
-    row_balance AS (
-      SELECT 'balance' AS artifact,
-        (SELECT COUNT(*) FROM sizes) AS n_rows,
-        (SELECT CAST(COALESCE(MAX(sz), 0) AS BIGINT) FROM sizes) AS sum_a,
-        (SELECT COALESCE(ROUND(CAST(MAX(sz) AS DOUBLE) * COUNT(*) / SUM(sz), 6), 0)
-           FROM sizes) AS sum_b)
+    row_balance AS (${balanceRowSql("live")})
     SELECT * FROM row_balance
     UNION ALL SELECT * FROM row_frag
     UNION ALL SELECT * FROM row_stale
@@ -1936,33 +1697,25 @@ object Vectors {
   // backstop); compaction reads and rewrites only touched cells.
   private[queries] val deleteMod = 9
   private[queries] val deleteRem = 4
-  private val embIndexDelete: Q = (s, d) => {
-    val corpus = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private lazy val liveSql = s"vec_id % $deleteMod <> $deleteRem"
+  /** Build → tombstone delete → serve `live` → compact, in the regime
+    * `oneLevelMax` forces; `trainedRows` checksums the RELOADED trained
+    * halves the regime keeps beyond the coded file. */
+  private def indexLifecycle(suffix: String, oneLevelMax: Long,
+      trainedRows: (SparkSession, IvfPq.Loaded) => Seq[DataFrame]): Q = (s, d) => {
+    val corpus = vecCorpus(s, d)
     val n = corpus.count()
-    val dir = indexDir(d) + "_delete"
+    val dir = indexDir(d) + suffix
     IvfPq.buildIndex(corpus, n, dim = 64, m = pqM, dsub = pqDsub,
-      kCodes = pqK, dir = dir)
+      kCodes = pqK, dir = dir, oneLevelMax = oneLevelMax)
     val isDel = col("id") % deleteMod === deleteRem
     IvfPq.deleteFromIndex(corpus.filter(isDel).select(col("id")), dir)
     val afterDel = IvfPq.loadIndex(s, dir)
-    val codesSum = expr(
-      "aggregate(codes, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")
-    def checksumRow(label: String, df: DataFrame): DataFrame = df.agg(
-      lit(label).as("artifact"),
-      count(lit(1)).as("n_rows"),
-      (coalesce(sum(col("id")), lit(0L))
-        + coalesce(sum(col("cell").cast("long")), lit(0L))
-        + coalesce(sum(codesSum), lit(0L))).as("sum_a"),
-      countDistinct(col("cell")).cast(DoubleType).as("sum_b"))
-    val tombRow = IvfPq.tombstonesOf(s, dir).agg(
-      lit("tombstones").as("artifact"),
-      count(lit(1)).as("n_rows"),
-      coalesce(sum(col("id")), lit(0L)).as("sum_a"),
-      countDistinct(col("id")).cast(DoubleType).as("sum_b"))
     // materialize the pre-compaction rows NOW — compaction mutates the
     // store (and clears the tombstone files) these lazy plans read
-    val pre = checksumRow("live", afterDel.live).unionAll(tombRow)
+    val pre = (trainedRows(s, afterDel) ++
+        Seq(checksumRow("live", afterDel.live), tombRow(s, dir)))
+      .reduce(_ unionAll _)
       .localCheckpoint(true)
     IvfPq.compactIndex(s, dir)
     checksumRow("compacted", IvfPq.loadIndex(s, dir).inverted)
@@ -1970,31 +1723,15 @@ object Vectors {
       .orderBy(col("artifact"))
   }
 
+  private val embIndexDelete =
+    indexLifecycle("_delete", AnnIvf.OneLevelMaxVectors, (_, _) => Nil)
+
   private lazy val embIndexDeleteSql: String = s"""
     WITH ${ScaleOps.ivfCtes(16, 64)},
     $pqCtesComposable,
-    live AS (SELECT vec_id, cell FROM inverted
-      WHERE vec_id % $deleteMod <> $deleteRem),
-    codes_live AS (SELECT vec_id, code FROM pq_coded
-      WHERE vec_id % $deleteMod <> $deleteRem),
-    tomb AS (
-      SELECT vec_id FROM embeddings WHERE vec_id % $deleteMod = $deleteRem),
-    live_stats AS (
-      SELECT
-        (SELECT COUNT(*) FROM live) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM live)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM codes_live) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM live) AS sum_b),
-    row_compacted AS (
-      SELECT 'compacted' AS artifact, n_rows, sum_a, sum_b FROM live_stats),
-    row_live AS (
-      SELECT 'live' AS artifact, n_rows, sum_a, sum_b FROM live_stats),
-    row_tomb AS (
-      SELECT 'tombstones' AS artifact,
-        (SELECT COUNT(*) FROM tomb) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) AS BIGINT) FROM tomb) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT vec_id) AS DOUBLE) FROM tomb) AS sum_b)
+    row_compacted AS (${checksumRowSql("compacted", "inverted", "pq_coded", liveSql)}),
+    row_live AS (${checksumRowSql("live", "inverted", "pq_coded", liveSql)}),
+    row_tomb AS ($tombRowSql)
     SELECT * FROM row_compacted
     UNION ALL SELECT * FROM row_live
     UNION ALL SELECT * FROM row_tomb
@@ -2023,97 +1760,32 @@ object Vectors {
   // 100 TB shape: identical to the one-level lifecycle ops (this IS
   // the at-scale regime): delta-sized tombstone writes, broadcast
   // anti-join serving, compaction ∝ touched cells.
-  private val embIndexLifecycleTwoLevel: Q = (s, d) => {
-    import org.apache.spark.sql.types.DecimalType
-    val corpus = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = corpus.count()
-    val dir = indexDir(d) + "_two_level"
-    IvfPq.buildIndex(corpus, n, dim = 64, m = pqM, dsub = pqDsub,
-      kCodes = pqK, dir = dir, wProbe = 2, oneLevelMax = -1L)
-    val isDel = col("id") % deleteMod === deleteRem
-    IvfPq.deleteFromIndex(corpus.filter(isDel).select(col("id")), dir)
-    val afterDel = IvfPq.loadIndex(s, dir)
-    val idx = afterDel.index match {
-      case IvfPq.TwoLevelIndexW(i, _) => i
-      case other => sys.error(s"forced two-level store loaded as $other")
-    }
-    import s.implicits._
-    // Exact DECIMAL(38,18) sum, rounded ONCE at the end. NOT (18,6):
-    // Spark's double->decimal cast rounds the shortest repr HALF_UP
-    // while DuckDB's TRUNCATES the exact binary expansion, so per-
-    // element quantization at 6dp diverges by +-1e-6 on computed
-    // (full-precision) doubles and only statistical sign cancellation
-    // kept the summed manifests green (it broke at sf0.1). At 18dp
-    // the two casts differ by ~1e-17/element, invisible at the final
-    // 6dp rounding.
-    def decSum(c: Column): Column =
-      round(coalesce(sum(c.cast(DecimalType(38, 18))),
-        lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 18)))
-        .cast(DoubleType), 6)
-    // trained halves from the RELOADED artifact (never the in-memory
-    // build) — driver-local tables, ≤ √cells rows by construction
-    val coarseEl = idx.coarseIds.zip(idx.coarseCents).toSeq
-      .flatMap { case (cell, cent) => cent.map(x => (cell, x)) }.toDF("cell", "x")
-    val coarseRow = coarseEl.agg(
-      lit("coarse").as("artifact"),
-      lit(idx.coarseIds.length.toLong).as("n_rows"),
-      lit(idx.coarseIds.map(_.toLong).sum).as("sum_a"),
-      decSum(col("x")).as("sum_b"))
-    // groups is the trained half the two-level design keeps as DATA
-    // (~cells rows × dim doubles — O(cells) ≈ 50-400 MB at the regime
-    // these arms exist for): checksum it DISTRIBUTED, never collected
-    val groupsRow = idx.groups.agg(
-        count(lit(1)).as("n_rows"),
-        coalesce(sum(expr(
-          "aggregate(gids, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")),
-          lit(0L)).as("sum_a"))
-      .crossJoin(idx.groups
-        .select(explode(flatten(col("gcents"))).as("x"))
-        .agg(decSum(col("x")).as("sum_b")))
-      .select(lit("groups").as("artifact"), col("n_rows"), col("sum_a"),
-        col("sum_b"))
-    val codesSum = expr(
-      "aggregate(codes, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")
-    def checksumRow(label: String, df: DataFrame): DataFrame = df.agg(
-      lit(label).as("artifact"),
-      count(lit(1)).as("n_rows"),
-      (coalesce(sum(col("id")), lit(0L))
-        + coalesce(sum(col("cell").cast("long")), lit(0L))
-        + coalesce(sum(codesSum), lit(0L))).as("sum_a"),
-      countDistinct(col("cell")).cast(DoubleType).as("sum_b"))
-    val tombRow = IvfPq.tombstonesOf(s, dir).agg(
-      lit("tombstones").as("artifact"),
-      count(lit(1)).as("n_rows"),
-      coalesce(sum(col("id")), lit(0L)).as("sum_a"),
-      countDistinct(col("id")).cast(DoubleType).as("sum_b"))
-    // materialize the pre-compaction rows NOW — compaction mutates the
-    // store (and clears the tombstone files) these lazy plans read
-    val pre = coarseRow.unionAll(groupsRow)
-      .unionAll(checksumRow("live", afterDel.live)).unionAll(tombRow)
-      .localCheckpoint(true)
-    IvfPq.compactIndex(s, dir)
-    checksumRow("compacted", IvfPq.loadIndex(s, dir).inverted)
-      .unionAll(pre)
-      .orderBy(col("artifact"))
-  }
+  private val embIndexLifecycleTwoLevel = indexLifecycle("_two_level", -1L,
+    (s, loaded) => {
+      val idx = loaded.index match {
+        case IvfPq.TwoLevelIndexW(i, _) => i
+        case other => sys.error(s"forced two-level store loaded as $other")
+      }
+      // groups is the trained half the two-level design keeps as DATA
+      // (~cells rows × dim doubles — O(cells) ≈ 50-400 MB at the regime
+      // these arms exist for): checksum it DISTRIBUTED, never collected
+      val groupsRow = idx.groups.agg(
+          count(lit(1)).as("n_rows"),
+          coalesce(sum(expr(
+            "aggregate(gids, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))")),
+            lit(0L)).as("sum_a"))
+        .crossJoin(idx.groups
+          .select(explode(flatten(col("gcents"))).as("x"))
+          .agg(decSum(col("x")).as("sum_b")))
+        .select(lit("groups").as("artifact"), col("n_rows"), col("sum_a"),
+          col("sum_b"))
+      Seq(centRow(s, "coarse", idx.coarseIds, idx.coarseCents), groupsRow)
+    })
 
   private lazy val embIndexLifecycleTwoLevelSql: String = s"""
     WITH ${ScaleOps.ivf2Ctes(16, 64, 2)},
     $pqCtesComposable,
-    live AS (SELECT vec_id, cell FROM inverted2
-      WHERE vec_id % $deleteMod <> $deleteRem),
-    codes_live AS (SELECT vec_id, code FROM pq_coded
-      WHERE vec_id % $deleteMod <> $deleteRem),
-    tomb AS (
-      SELECT vec_id FROM embeddings WHERE vec_id % $deleteMod = $deleteRem),
-    coarse_el AS (SELECT cell, unnest(c) AS x FROM coarsep),
-    row_coarse AS (
-      SELECT 'coarse' AS artifact,
-        (SELECT COUNT(*) FROM coarsep) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(cell), 0) AS BIGINT) FROM coarsep) AS sum_a,
-        ROUND(CAST(COALESCE(SUM(CAST(x AS DECIMAL(38,18))), 0) AS DOUBLE), 6) AS sum_b
-      FROM coarse_el),
+    row_coarse AS (${centRowSql("coarse", "coarsep")}),
     grp_el AS (
       SELECT f2c.fid, unnest(f.fv) AS x
       FROM f2c JOIN fines f ON f.fid = f2c.fid),
@@ -2123,22 +1795,9 @@ object Vectors {
         (SELECT CAST(COALESCE(SUM(fid), 0) AS BIGINT) FROM f2c) AS sum_a,
         ROUND(CAST(COALESCE(SUM(CAST(x AS DECIMAL(38,18))), 0) AS DOUBLE), 6) AS sum_b
       FROM grp_el),
-    live_stats AS (
-      SELECT
-        (SELECT COUNT(*) FROM live) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) + COALESCE(SUM(cell), 0) AS BIGINT)
-           FROM live)
-          + (SELECT CAST(COALESCE(SUM(code), 0) AS BIGINT) FROM codes_live) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT cell) AS DOUBLE) FROM live) AS sum_b),
-    row_compacted AS (
-      SELECT 'compacted' AS artifact, n_rows, sum_a, sum_b FROM live_stats),
-    row_live AS (
-      SELECT 'live' AS artifact, n_rows, sum_a, sum_b FROM live_stats),
-    row_tomb AS (
-      SELECT 'tombstones' AS artifact,
-        (SELECT COUNT(*) FROM tomb) AS n_rows,
-        (SELECT CAST(COALESCE(SUM(vec_id), 0) AS BIGINT) FROM tomb) AS sum_a,
-        (SELECT CAST(COUNT(DISTINCT vec_id) AS DOUBLE) FROM tomb) AS sum_b)
+    row_compacted AS (${checksumRowSql("compacted", "inverted2", "pq_coded", liveSql)}),
+    row_live AS (${checksumRowSql("live", "inverted2", "pq_coded", liveSql)}),
+    row_tomb AS ($tombRowSql)
     SELECT * FROM row_coarse
     UNION ALL SELECT * FROM row_compacted
     UNION ALL SELECT * FROM row_groups
@@ -2274,14 +1933,8 @@ object Vectors {
   private val embMatryoshkaDemoSql: String = {
     val dim = 64; val pre = 16
     val wLits = matWeights.map(java.lang.Double.toString).mkString("[", ", ", "]")
-    def fold(n: Int, term: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, ${n + 1}), i -> $term)), (acc, x) -> acc + x)"
-    def wcos(n: Int, a: String, b: String): String = {
-      val dot = fold(n, s"($a[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)]) * ($b[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)])")
-      val na = fold(n, s"($a[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)]) * ($a[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)])")
-      val nb = fold(n, s"($b[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)]) * ($b[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)])")
-      s"$dot / (sqrt($na) * sqrt($nb))"
-    }
+    def wcos(n: Int, a: String, b: String): String =
+      cosFold(a, b, n, v => s"($v[CAST(i AS INT)] * ($wLits::DOUBLE[])[CAST(i AS INT)])")
     s"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

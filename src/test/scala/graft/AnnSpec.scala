@@ -443,8 +443,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = corpus.count()
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_spec_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_spec")
     val (index, books) = IvfPq.buildIndex(corpus, n, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir)
     val loaded = IvfPq.loadIndex(spark, dir)
@@ -480,8 +479,7 @@ class AnnSpec extends SparkSpec {
     val nBase = base.count()
     val nDelta = delta.count()
     assert(nDelta > 0, "spec needs a non-empty delta slice")
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_app_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_app")
     val (index, books) = IvfPq.buildIndex(base, nBase, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir)
     IvfPq.appendToIndex(IvfPq.loadIndex(spark, dir), delta, dir)
@@ -544,8 +542,7 @@ class AnnSpec extends SparkSpec {
     val base = all.filter(!isDelta)
     val delta = all.filter(isDelta)
     assert(delta.count() > 0, "spec needs a non-empty delta slice")
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_crash_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_crash")
     val (index, books) = IvfPq.buildIndex(base, base.count(), dim = 64,
       m = 16, dsub = 4, kCodes = 64, dir = dir)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -597,8 +594,7 @@ class AnnSpec extends SparkSpec {
     val isDel = col("id") % 3 === 1
     val nDel = all.filter(isDel).count()
     assert(nDel > 0, "spec needs a non-empty delete slice")
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_del_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_del")
     val (index, books) = IvfPq.buildIndex(all, n, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir)
     IvfPq.deleteFromIndex(all.filter(isDel).select(col("id")), dir)
@@ -662,8 +658,7 @@ class AnnSpec extends SparkSpec {
     val delta = all.filter(isDelta)
     val nBase = base.count()
     assert(delta.count() > 0)
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_2l_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_2l")
     val (index, books) = IvfPq.buildIndex(base, nBase, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir, wProbe = 2, oneLevelMax = -1L)
     val idx = index match {
@@ -740,8 +735,7 @@ class AnnSpec extends SparkSpec {
     val isDelta = col("id") % 10 === 7
     val base = all.filter(!isDelta)
     val nBase = base.count()
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_retry_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_retry")
     val (index, books) = IvfPq.buildIndex(base, nBase, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir)
     val loaded = IvfPq.loadIndex(spark, dir)
@@ -796,8 +790,7 @@ class AnnSpec extends SparkSpec {
     val isDelta = col("id") % 10 === 7
     val base = all.filter(!isDelta)
     val batch = all.filter(isDelta)
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_torn0_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_torn0")
     val (index, books) = IvfPq.buildIndex(base, base.count(), dim = 64,
       m = 16, dsub = 4, kCodes = 64, dir = dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -837,8 +830,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = corpus.count()
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_rebuild_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_rebuild")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def has(sub: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
@@ -859,8 +851,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = all.count()
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_cellgone_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_cellgone")
     IvfPq.buildIndex(all, n, dim = 64, m = 16, dsub = 4, kCodes = 64, dir = dir)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Int](2).toList)).toSet
@@ -913,8 +904,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = all.count()
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_crash_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_crash")
     val (index, books) = IvfPq.buildIndex(all, n, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -26,8 +26,7 @@ class BucketJoinSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = corpus.count()
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_bucket_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_bucket")
     val (index, _) = IvfPq.buildIndex(corpus, n, dim = 64, m = 16,
       dsub = 4, kCodes = 64, dir = dir)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

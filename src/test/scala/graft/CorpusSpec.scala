@@ -103,8 +103,7 @@ class CorpusSpec extends SparkSpec {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   test("segment dedup: a 3x boilerplate segment is removed everywhere, reassembly is byte-exact") {
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_segdedup_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("segdedup")
     val boiler = (1 to 10).map(i => s"b$i").mkString(" ")
     def uniq(p: String) = (1 to 10).map(i => s"$p$i").mkString(" ")
     val rows = Seq(

@@ -11,8 +11,7 @@ class EdgeCaseSpec extends SparkSpec {
     * doc and a single-word doc (the testdata corpus has neither).
     */
   private lazy val edgeDir: String = {
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_edge_docs_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("edge_docs")
     val base = Tables.documents(spark, sf)
     val extra = spark.createDataFrame(java.util.List.of(
         org.apache.spark.sql.Row(900001L, "", "en", "edge", 0L),
@@ -58,8 +57,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("every embeddings-table query survives zero, NaN and empty vectors") {
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_edge_emb_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("edge_emb")
     val base = Tables.embeddings(spark, sf)
     def vec(f: Int => Float): java.util.List[java.lang.Float] = {
       val l = new java.util.ArrayList[java.lang.Float](64)

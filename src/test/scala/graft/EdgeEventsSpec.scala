@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
 class EdgeEventsSpec extends SparkSpec {
 
   private lazy val edgeDir: String = {
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_edge_events_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("edge_events")
     val base = Tables.events(spark, sf)
     val t0 = java.sql.Timestamp.valueOf("2024-01-15 12:00:00")
     val extra = spark.createDataFrame(java.util.List.of(
@@ -48,8 +47,7 @@ class EdgeEventsSpec extends SparkSpec {
     // 1050.33 / 32 = 32.8228125 sits on a 6-place half. The oracle SQL
     // gives 32.822813 on these rows in DuckDB 1.0 (its former double
     // quotient rounding gave 32.822812)
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_edge_tie_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("edge_tie")
     val t0 = java.sql.Timestamp.valueOf("2024-01-15 12:00:00")
     val rows = (0 until 32).map(i => org.apache.spark.sql.Row(i.toLong, t0, 7L,
       "tie", if (i == 31) 32.91 else 32.82, "{}"))

@@ -13,8 +13,7 @@ package graft
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_empty_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("empty")
     val names = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "documents", "embeddings")
     names.foreach { n =>

@@ -88,7 +88,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("otel log export round-trips through the JSON sink/source") {
     val out = SparkEntry.queries("qan_otel_export")(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("otel_logs").toString
+    val dir = tmpDir("otel_logs", create = true)
     OtelLogs.writeJson(out, dir)
     val back = OtelLogs.readJson(spark, dir)
     assert(back.count() == out.count())

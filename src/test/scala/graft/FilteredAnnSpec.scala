@@ -222,8 +222,7 @@ class FilteredAnnSpec extends SparkSpec {
     val index = IvfPq.indexAuto(vecsOnly, n, dim = 64)
     val books = AnnPq.collectCodebooks(
       AnnPq.refinedCodebooks(vecsOnly, 16, 4, 64), 16)
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_filt_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("filt")
     // the wider schema a filtered-serving deployment stores
     IvfPq.codedInvertedFileAttrs(index, corpus, books, 4, Seq("label"))
       .write.mode("overwrite").partitionBy("cell").parquet(dir)

@@ -39,7 +39,7 @@ class GovernorSpec extends SparkSpec {
   }
 
   test("governor: state persists across instances, stale state ignored") {
-    val dir = java.nio.file.Files.createTempDirectory("gov").toString
+    val dir = tmpDir("gov", create = true)
     val g1 = new Governor(stateDir = Some(dir))
     (1 to 20).foreach(_ => g1.processLoad(0.95))
     g1.saveState()

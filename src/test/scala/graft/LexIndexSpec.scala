@@ -14,8 +14,7 @@ import graft.operators.{LexIndex, SegmentStore}
 class LexIndexSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lexlc_${tag}_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    tmpDir(s"lexlc_$tag")
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

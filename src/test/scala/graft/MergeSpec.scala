@@ -19,8 +19,7 @@ class MergeSpec extends SparkSpec {
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
 
   private def tmp(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_merge_${tag}_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    tmpDir(s"merge_$tag")
 
   private def storeRows(dir: String): Set[(Long, Seq[Int], Int)] =
     IvfPq.loadIndex(spark, dir).inverted.collect()

@@ -519,8 +519,7 @@ class PlanSpec extends SparkSpec {
     val all = Tables.embeddings(spark, sf)
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_idx_plan_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("idx_plan")
     IvfPq.buildIndex(all, all.count(), dim = 64, m = 16, dsub = 4,
       kCodes = 64, dir = dir)
     // no pending deletes: the live view IS the raw store — no join node

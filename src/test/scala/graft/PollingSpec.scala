@@ -40,15 +40,15 @@ class PollingSpec extends SparkSpec {
   }
 
   test("poll → stage → AvailableNow drain → deltas, with state across drains") {
-    val staging = Files.createTempDirectory("graft_poll_staging").toString
-    val checkpoint = Files.createTempDirectory("graft_poll_ckpt").toString
+    val staging = tmpDir("poll_staging", create = true)
+    val checkpoint = tmpDir("poll_ckpt", create = true)
     val clock: Long => Long = i => i * 30_000_000L // 30s per poll, in micros
 
     val staged = PollingSource.pollToStaging(spark, StubFetcher,
       polls = 3, stagingDir = staging, clock = clock)
     assert(staged == Seq(2L, 2L, 2L))
 
-    val outDir = Files.createTempDirectory("graft_poll_out").toString
+    val outDir = tmpDir("poll_out", create = true)
     val schema = spark.read.parquet(staging).schema
     def drain(): Map[(String, Long), Double] = {
       val stream = PollingSource.stagedStream(spark, staging, schema)
@@ -101,7 +101,7 @@ class PollingSpec extends SparkSpec {
           col("id").as("counter"))
       }
     }
-    val staging = Files.createTempDirectory("graft_poll_once").toString
+    val staging = tmpDir("poll_once", create = true)
     val counts = PollingSource.pollToStaging(spark, Drifting, polls = 3,
       stagingDir = staging, clock = _ => 0L)
     assert(Drifting.calls.get == 3, "one fetch per poll")
@@ -114,9 +114,9 @@ class PollingSpec extends SparkSpec {
   test("a fresh drain keeps one state store; a resumed 8-partition checkpoint keeps 8") {
     val clock: Long => Long = i => i * 30_000_000L
     def run(resume8: Boolean): (Map[(String, Long), Double], Int) = {
-      val staging = Files.createTempDirectory("graft_poll_parts_staging").toString
-      val checkpoint = Files.createTempDirectory("graft_poll_parts_ckpt").toString
-      val outDir = Files.createTempDirectory("graft_poll_parts_out").toString
+      val staging = tmpDir("poll_parts_staging", create = true)
+      val checkpoint = tmpDir("poll_parts_ckpt", create = true)
+      val outDir = tmpDir("poll_parts_out", create = true)
       PollingSource.pollToStaging(spark, StubFetcher, polls = 3, stagingDir = staging,
         clock = clock)
       val schema = spark.read.parquet(staging).schema

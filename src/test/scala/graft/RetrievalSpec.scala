@@ -21,8 +21,7 @@ class RetrievalSpec extends SparkSpec {
       (4L, "common fillerE fillerF", "en", "s", 22L),
       (5L, "common fillerG fillerH", "en", "s", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_bm25_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("bm25")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("doc_bm25_topk")(spark, dir)
       .filter(col("query_id") === 0).orderBy(col("rank")).collect()
@@ -125,8 +124,7 @@ class RetrievalSpec extends SparkSpec {
   test("lexical index store round-trip: loaded frames reproduce the inline ones") {
     import graft.operators.LexIndex
     val docs = Tables.documents(spark, sf)
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lexrt_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("lexrt")
     LexIndex.buildIndex(docs, dir)
     val loaded = LexIndex.loadIndex(spark, dir)
     val post = LexIndex.postings(docs)
@@ -145,8 +143,7 @@ class RetrievalSpec extends SparkSpec {
     // a served lookup would read the whole store per batch. The serve
     // path collects the (bounded, rare-term-capped) query-term set and
     // pushes token IN (…) into the range-sorted parquet; pin the plan.
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lexpd_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("lexpd")
     LexIndex.buildIndex(Tables.documents(spark, sf), dir)
     val loaded = LexIndex.loadIndex(spark, dir)
     val qterms = LexIndex.queryTerms(
@@ -166,8 +163,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("served query-doc and vocab scans are pushdown-pruned") {
     import graft.operators.LexIndex
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lexqd_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("lexqd")
     LexIndex.buildIndex(Tables.documents(spark, sf), dir)
     val loaded = LexIndex.loadIndex(spark, dir)
     // (1) the caller-supplied query docs reach the corpus scan as a
@@ -206,8 +202,7 @@ class RetrievalSpec extends SparkSpec {
     // (the capped rare-term set is a subset, so the superset pushdown
     // is correct by construction) — r14 paid a second collect here,
     // pure latency at sub-second serving cadence
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lex1c_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("lex1c")
     LexIndex.buildIndex(Tables.documents(spark, sf), dir)
     val loaded = LexIndex.loadIndex(spark, dir)
     val qtoks = LexIndex.queryTokens(

@@ -48,8 +48,7 @@ class SourcesSpec extends SparkSpec {
 
   test("graft-otel V2 source: short name resolves, schema pinned, reader prunes columns") {
     import spark.implicits._
-    val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_dsv2_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    val dir = tmpDir("dsv2")
     val deltas = Seq(
       (new java.sql.Timestamp(1704067200123L), 1L, "digest_a", 5.5),
       (new java.sql.Timestamp(1704067260456L), 2L, "digest_b", 2.0))

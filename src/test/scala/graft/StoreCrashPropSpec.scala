@@ -76,8 +76,7 @@ class StoreCrashPropSpec extends SparkSpec {
   /** Store dirs of the running sequence, removed when it ends. */
   private val seqDirs = mutable.ArrayBuffer.empty[String]
   private def tmp(tag: String): String = {
-    seqDirs += s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_crashprop_${tag}_" +
-      java.util.UUID.randomUUID.toString.take(8)
+    seqDirs += tmpDir(s"crashprop_$tag")
     seqDirs.last
   }
 

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 class VerifySpec extends SparkSpec {
 
   test("a throwing query is reported while every other query and the oracles are dumped") {
-    val out = Files.createTempDirectory("verify_dump").toString
+    val out = tmpDir("verify_dump", create = true)
     val queries = Seq[(String, GraftSession.Query)](
       "bad" -> ((_, _) => throw new IllegalStateException("boom")),
       "good" -> ((s, d) => Tables.table(s, d, "region")))
@@ -16,5 +16,11 @@ class VerifySpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$out/bad")))
     val oracles = new String(Files.readAllBytes(Paths.get(s"$out/oracle_sql.json")), "UTF-8")
     assert(oracles.contains("\"qan_top_queries\""))
+  }
+
+  test("the 16-cell IVF guard finds the one- and two-level IVF oracles") {
+    val family = Verify.ivfFamily
+    Seq("emb_ann_ivf", "emb_ann_ivf_two_level", "emb_ivfpq_topk", "st_ivfpq_serve")
+      .foreach(name => assert(family(name), s"$name missing from $family"))
   }
 }
