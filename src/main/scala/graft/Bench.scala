@@ -146,9 +146,10 @@ object Bench {
     // driver windows and made per-query deltas unreadable). These five
     // queries' code paths are deliberately left alone by optimization
     // rounds; their ratio vs the previous round's controls IS the
-    // window factor.
+    // window factor. qan_otel_roundtrip took the place of its retired
+    // DataSourceV2 twin, which ran the same export→import→rollup.
     val controlSet = Seq("q16_percentiles", "q26_grouping_sets",
-      "qan_gapfill", "qan_otel_dsv2", "qan_skew_join")
+      "qan_gapfill", "qan_otel_roundtrip", "qan_skew_join")
     val controlsJson = results
       .filter { case (k, _) => controlSet.contains(k) }
       .map { case (k, (med, _, _)) => s"\"" + k + "\":" + r3(med) }

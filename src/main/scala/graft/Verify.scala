@@ -9,17 +9,18 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession(GraftSession.cpus)
     val queries = GraftSession.selected()
-    // The IVF-family oracles inline SIXTEEN-cell centroid literals
-    // (ScaleOps.ivfCtes) while the Spark side sizes the index with
-    // AnnIvf.adaptiveCells(count) — the coupling holds only while the
-    // verify corpus keeps adaptiveCells at 16 (≤ ~2.1k embeddings).
+    // The IVF-family oracles inline ScaleOps.OracleIvfCells centroid
+    // literals (ScaleOps.ivfCtes) while the Spark side sizes the index
+    // with AnnIvf.adaptiveCells(count) — the coupling holds only while
+    // the verify corpus keeps adaptiveCells there (≤ ~2.1k embeddings).
     // Fail HERE with the real cause rather than letting a grown corpus
     // surface as an opaque per-query hash mismatch.
     if (queries.exists { case (name, _) => ivfFamily(name) }) {
       val nEmb = Tables.table(spark, sfDir, "embeddings").count()
       val cells = graft.operators.AnnIvf.adaptiveCells(nEmb)
-      require(cells == 16,
-        s"IVF oracles assume 16 cells but adaptiveCells($nEmb) = $cells — " +
+      val want = graft.queries.ScaleOps.OracleIvfCells
+      require(cells == want,
+        s"IVF oracles assume $want cells but adaptiveCells($nEmb) = $cells — " +
           "the verify corpus outgrew the static centroid-literal replay; " +
           s"regenerate ScaleOps.ivfCtes sizing for ${ivfFamily.mkString(", ")}")
     }
@@ -31,7 +32,7 @@ object Verify {
     }
   }
 
-  /** The oracles that replay the 16-cell IVF index: every IVF replay
+  /** The oracles that replay the oracle-sized IVF index: every IVF replay
     * block starts from the centroid literal CTE ScaleOps marks. */
   lazy val ivfFamily: Set[String] = SparkEntry.oracleSql.collect {
     case (name, sql) if sql.contains(graft.queries.ScaleOps.IvfCentroidMarker) => name

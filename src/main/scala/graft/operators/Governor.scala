@@ -12,11 +12,12 @@ import java.nio.file.{Files, Path, Paths}
   * polling of ONE monitored database. The fleet-wide form (EMAs for
   * millions of instances) is the distributed qan_ewma operator and
   * streaming.QanStream.governorStream; this class is the cadence
-  * controller a collector embeds.
+  * controller a collector embeds. The policy numbers all three share
+  * live on the companion object.
   */
 class Governor(
-    baseIntervalSec: Double = 1.0,
-    maxIntervalSec: Double = 60.0,
+    baseIntervalSec: Double = Governor.BaseIntervalSec,
+    maxIntervalSec: Double = Governor.MaxIntervalSec,
     minIntervalSec: Double = 0.5,
     jitterPercent: Double = 0.1,
     stateDir: Option[String] = None) {
@@ -32,7 +33,7 @@ class Governor(
 
   /** EMA.Update (governor.go:55): first value initializes directly. */
   private def update(prev: Option[Double], alpha: Double, x: Double): Option[Double] =
-    Some(prev.fold(x)(v => v + alpha * (x - v)))
+    Some(prev.fold(x)(emaStep(_, alpha, x)))
 
   /** ProcessLoadMetrics (governor.go:161): clamp, update EMAs, adjust. */
   def processLoad(load: Double): Unit = {
@@ -111,11 +112,33 @@ class Governor(
   }
 }
 
+/** The governor policy (adaptive/governor.go, mysql_collector.go):
+  * the one copy of its numbers for the driver-side [[Governor]], the
+  * batch operators in [[QanOps]], the qan_* queries and their oracle
+  * SQL, and the streaming form.
+  */
 object Governor {
+  /** EMA smoothing factors (governor.go:55). */
   val FastAlpha = 0.3
   val SlowAlpha = 0.05
+  /** adjustInterval's fast-EMA thresholds (governor.go:192). */
   val HighLoad = 0.7
   val CriticalLoad = 0.9
+  /** adjustInterval's base and maximum intervals, in seconds. */
+  val BaseIntervalSec = 1.0
+  val MaxIntervalSec = 60.0
+  /** CalculateLoad's weights (mysql_collector.go:88): running threads
+    * over connected, slow queries over questions. */
+  val RunningWeight = 0.7
+  val SlowWeight = 0.3
   val StateFileName = "governor_state.json"
   val MaxStateAgeMs: Long = 60L * 60 * 1000
+
+  /** One EMA.Update step (governor.go:55). */
+  def emaStep(prev: Double, alpha: Double, x: Double): Double = prev + alpha * (x - prev)
+
+  /** CalculateLoad (mysql_collector.go:88) over the two ratios, each
+    * clamped at 1. */
+  def load(runningRatio: Double, slowRatio: Double): Double =
+    math.min(1.0, runningRatio) * RunningWeight + math.min(1.0, slowRatio) * SlowWeight
 }

@@ -20,13 +20,14 @@ object Par {
     * cost is invisible to it). Applies an explicit round-robin
     * repartition to `defaultParallelism` ONLY when the estimated
     * input is small enough that the extra exchange is trivial
-    * (bytes < parallelism × `graft.compute.widenTargetBytes`,
-    * default 64 MB — i.e. the upstream could not have fanned out to
-    * a partition per core at the advisory size anyway); above the
-    * gate, and for sources with no size estimate, this is the
-    * identity — a 100 TB scan already fans out and must NOT be
-    * reshuffled for parallelism (guide §2.5 input-starvation remedy,
-    * gated so it can never become an at-scale shuffle).
+    * (bytes < parallelism × [[WidenTargetBytes]], 64 MB — i.e. the
+    * upstream could not have fanned out to a partition per core at
+    * the advisory size anyway) and at least parallelism ×
+    * [[WidenMinChunkBytes]], 4 KB; above the gate, and for sources
+    * with no size estimate, this is the identity — a 100 TB scan
+    * already fans out and must NOT be reshuffled for parallelism
+    * (guide §2.5 input-starvation remedy, gated so it can never
+    * become an at-scale shuffle).
     */
   def widen(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     if (df.isStreaming) return df // no batch plan to size; see widenStream
@@ -34,21 +35,23 @@ object Par {
     val cores = spark.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= BigInt(Long.MaxValue) / 4) return df // no estimate
-    val target = BigInt(spark.conf
-      .get("graft.compute.widenTargetBytes", (64L << 20).toString).toLong)
-    // FLOOR: below ~minChunk per core the exchange + per-task scheduling
-    // cost exceeds any per-row compute win (measured: widening a
-    // delta-append's tokenization to 32 tasks was a net loss; widening
-    // the corpus-sized passes a net win) — tiny inputs keep their
-    // upstream layout. Scales with core count, so the rule is the same
-    // at any deployment size; at 100 TB widen is identity via the big
-    // gate anyway.
-    val minChunk = BigInt(spark.conf
-      .get("graft.compute.widenMinChunkBytes", (4L << 10).toString).toLong)
-    if (bytes < minChunk.max(1) * cores) df
-    else if (bytes >= target.max(1) * cores) df
+    if (bytes < BigInt(WidenMinChunkBytes) * cores) df
+    else if (bytes >= BigInt(WidenTargetBytes) * cores) df
     else df.repartition(cores)
   }
+
+  /** [[widen]]'s upper gate per core: the advisory partition size. */
+  private val WidenTargetBytes = 64L << 20
+
+  /** [[widen]]'s floor per core: below it the exchange + per-task
+    * scheduling cost exceeds any per-row compute win (measured:
+    * widening a delta-append's tokenization to 32 tasks was a net
+    * loss; widening the corpus-sized passes a net win) — tiny inputs
+    * keep their upstream layout. Scales with core count, so the rule
+    * is the same at any deployment size; at 100 TB widen is identity
+    * via the upper gate anyway.
+    */
+  private val WidenMinChunkBytes = 4L << 10
 
   /** [[widen]] for STREAMING inputs, where no size estimate exists at
     * plan time: an unconditional round-robin repartition to

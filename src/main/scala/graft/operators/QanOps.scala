@@ -125,20 +125,23 @@ object QanOps {
       s"$series[0], (acc, x) -> acc + ${alpha}D * (x - acc))")
 
   /** Composite load factor, mirroring
-    * adaptive/mysql_collector.go:88 `CalculateLoad`:
+    * adaptive/mysql_collector.go:88 `CalculateLoad` ([[Governor.load]]):
     * 0.7 · clamp(running/connected) + 0.3 · clamp(slow/questions).
     */
   def loadFactor(runningRatio: Column, slowRatio: Column): Column =
-    least(lit(1.0), runningRatio) * 0.7 + least(lit(1.0), slowRatio) * 0.3
+    least(lit(1.0), runningRatio) * Governor.RunningWeight +
+      least(lit(1.0), slowRatio) * Governor.SlowWeight
 
   /** Governor interval decision (adaptive/governor.go:192
     * `adjustInterval`): critical load → max interval; high load →
     * exponential backoff base·2^(load/0.7 − 1) capped; else base.
-    * Returns seconds.
+    * Returns seconds; the numbers are [[Governor]]'s.
     */
-  def governorInterval(fastEma: Column, baseSec: Double = 1.0,
-      maxSec: Double = 60.0): Column =
-    when(fastEma > 0.9, lit(maxSec))
-      .when(fastEma > 0.7, least(lit(baseSec) * pow(lit(2.0), fastEma / 0.7 - 1.0), lit(maxSec)))
-      .otherwise(lit(baseSec))
+  def governorInterval(fastEma: Column): Column = {
+    import Governor._
+    when(fastEma > CriticalLoad, lit(MaxIntervalSec))
+      .when(fastEma > HighLoad, least(lit(BaseIntervalSec) *
+        pow(lit(2.0), fastEma / HighLoad - 1.0), lit(MaxIntervalSec)))
+      .otherwise(lit(BaseIntervalSec))
+  }
 }

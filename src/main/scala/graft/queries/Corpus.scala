@@ -1647,7 +1647,7 @@ object Corpus {
     lex AS (
       SELECT query_id, doc_id, brank AS rank_lex
       FROM bm25r WHERE brank <= $hybridDepth),
-    ${ScaleOps.ivfCtes(16, 64)},
+    ${ScaleOps.ivfCtes()},
     ${Vectors.pqCtesComposable},${ScaleOps.probesCte(s"${Vectors.ivfpqNprobe}")},
     ${Vectors.adcCtes("probes", "inverted", 64)},
     ${Vectors.ivfpqRerankCtes(Vectors.ivfpqRerank, 64)},

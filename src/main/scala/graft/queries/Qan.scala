@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables._
-import graft.operators.QanOps
+import graft.operators.{Governor, QanOps}
 
 /** Block B — the reference's own QAN semantics (SURVEY §2.B), mapped
   * onto the `events` log table: user_id→instance, event_type→statement
@@ -304,13 +304,13 @@ object Qan {
         col("errors").cast(DoubleType) / col("total").cast(DoubleType),
         col("slow").cast(DoubleType) / col("total").cast(DoubleType)))
 
-  private val loadPerDaySql = """
+  private val loadPerDaySql = s"""
     SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
       COUNT(*) AS total,
       CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
       CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS slow,
-      LEAST(1.0, CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) * 0.7
-      + LEAST(1.0, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) * 0.3
+      LEAST(1.0, CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) * ${Governor.RunningWeight}
+      + LEAST(1.0, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) * ${Governor.SlowWeight}
         AS load_factor
     FROM events
     GROUP BY 1, 2"""
@@ -331,16 +331,16 @@ object Qan {
       .agg(count(lit(1)).as("n_days"),
         array_sort(collect_list(struct(col("day"), col("load_factor")))).as("series"))
       .withColumn("loads", expr("transform(series, x -> x.load_factor)"))
-      .withColumn("fast_ema", QanOps.ewmaExpr("loads", 0.3))
-      .withColumn("slow_ema", QanOps.ewmaExpr("loads", 0.05))
+      .withColumn("fast_ema", QanOps.ewmaExpr("loads", Governor.FastAlpha))
+      .withColumn("slow_ema", QanOps.ewmaExpr("loads", Governor.SlowAlpha))
       .select(col("user_id"), col("n_days"), col("fast_ema"), col("slow_ema"))
       .orderBy(col("user_id"))
 
   private val qanEwmaSql = s"""
     WITH load AS ($loadPerDaySql)
     SELECT user_id, COUNT(*) AS n_days,
-      list_reduce(list(load_factor ORDER BY day), (acc, x) -> acc + 0.3 * (x - acc)) AS fast_ema,
-      list_reduce(list(load_factor ORDER BY day), (acc, x) -> acc + 0.05 * (x - acc)) AS slow_ema
+      list_reduce(list(load_factor ORDER BY day), (acc, x) -> acc + ${Governor.FastAlpha} * (x - acc)) AS fast_ema,
+      list_reduce(list(load_factor ORDER BY day), (acc, x) -> acc + ${Governor.SlowAlpha} * (x - acc)) AS slow_ema
     FROM load
     GROUP BY user_id
     ORDER BY user_id"""
@@ -355,45 +355,42 @@ object Qan {
       .groupBy(col("user_id"))
       .agg(array_sort(collect_list(struct(col("day"), col("load_factor")))).as("series"))
       .withColumn("loads", expr("transform(series, x -> least(1.0D, x.load_factor * 4.0D))"))
-      .withColumn("fast_ema", QanOps.ewmaExpr("loads", 0.3))
+      .withColumn("fast_ema", QanOps.ewmaExpr("loads", Governor.FastAlpha))
       .select(
         col("user_id"),
         round(col("fast_ema"), 6).as("fast_ema"),
         round(QanOps.governorInterval(col("fast_ema")), 6).as("interval_s"),
-        when(col("fast_ema") > 0.9, "critical")
-          .when(col("fast_ema") > 0.7, "high")
+        when(col("fast_ema") > Governor.CriticalLoad, "critical")
+          .when(col("fast_ema") > Governor.HighLoad, "high")
           .otherwise("normal").as("load_state"))
       .orderBy(col("user_id"))
 
-  private val qanGovernorIntervalSql = s"""
+  private val qanGovernorIntervalSql = {
+    import Governor._
+    s"""
     WITH load AS ($loadPerDaySql),
     ema AS (
       SELECT user_id,
         list_reduce(list(LEAST(1.0, load_factor * 4.0) ORDER BY day),
-                    (acc, x) -> acc + 0.3 * (x - acc)) AS fast_ema
+                    (acc, x) -> acc + $FastAlpha * (x - acc)) AS fast_ema
       FROM load GROUP BY user_id)
     SELECT user_id, ROUND(fast_ema, 6) AS fast_ema,
-      ROUND(CASE WHEN fast_ema > 0.9 THEN 60.0
-                 WHEN fast_ema > 0.7 THEN LEAST(1.0 * POW(2.0, fast_ema / 0.7 - 1.0), 60.0)
-                 ELSE 1.0 END, 6) AS interval_s,
-      CASE WHEN fast_ema > 0.9 THEN 'critical'
-           WHEN fast_ema > 0.7 THEN 'high'
+      ROUND(CASE WHEN fast_ema > $CriticalLoad THEN $MaxIntervalSec
+                 WHEN fast_ema > $HighLoad THEN LEAST($BaseIntervalSec * POW(2.0, fast_ema / $HighLoad - 1.0), $MaxIntervalSec)
+                 ELSE $BaseIntervalSec END, 6) AS interval_s,
+      CASE WHEN fast_ema > $CriticalLoad THEN 'critical'
+           WHEN fast_ema > $HighLoad THEN 'high'
            ELSE 'normal' END AS load_state
     FROM ema
     ORDER BY user_id"""
+  }
 
   // --------------------------------------------------- qan_otel_export
   // The reference's log-emission shape (mysql/collector.go:208
   // deltaToLogs): one OTel log record per positive digest delta.
-  private val qanOtelExport: Q = (s, d) => {
-    val deltas = QanOps.snapshotDelta(snapshots(s, d),
-        keys = Seq("user_id", "event_type"),
-        ord = Seq(col("ts"), col("event_id")),
-        counter = col("counter"), out = "delta")
-      .withColumn("delta_value", col("delta").cast(DoubleType))
-    graft.sources.OtelLogs.toLogRecords(deltas)
+  private val qanOtelExport: Q = (s, d) =>
+    otelRecords(s, d)
       .orderBy(col("timestamp"), col("resource_instance_id"), col("db_statement_digest"))
-  }
 
   private val qanOtelExportSql = s"""
     WITH snap AS ($snapshotsSql),
@@ -428,7 +425,7 @@ object Qan {
   // directly, so any loss in the wire format (timestamps, doubles,
   // encodings) breaks the hash.
   /** This sf's deltas flattened to OTel log records (no filesystem
-    * side effects — the wire dir lives in [[allocWireDir]]). */
+    * side effects — the wire dir lives in [[otelWireDir]]). */
   private def otelRecords(s: SparkSession, d: String): DataFrame = {
     val deltas = QanOps.snapshotDelta(snapshots(s, d),
         keys = Seq("user_id", "event_type"),
@@ -438,30 +435,25 @@ object Qan {
     graft.sources.OtelLogs.toLogRecords(deltas)
   }
 
-  /** Allocate a run-unique OTel wire dir: a fixed hash-derived path
-    * races when two harnesses (Verify + Bench, parallel specs)
-    * evaluate concurrently — one run's delete/overwrite corrupts the
-    * other's read. The read is lazy, so the dir must outlive the
-    * query call — it is removed at JVM exit (shutdown hook), and dirs
-    * orphaned by killed JVMs are swept on the next invocation once
-    * they are clearly stale.
+  /** Export this sf's records to a run-unique OTel wire dir: a fixed
+    * hash-derived path races when two harnesses (Verify + Bench,
+    * parallel specs) evaluate concurrently — one run's
+    * delete/overwrite corrupts the other's read. The read is lazy, so
+    * the dir must outlive the query call — it is removed at JVM exit
+    * (shutdown hook), and dirs orphaned by killed JVMs are swept on
+    * the next invocation once they are clearly stale.
     */
-  private def allocWireDir(): String = {
+  private def otelWireDir(s: SparkSession, d: String): String = {
     val tmp = System.getProperty("java.io.tmpdir", "/tmp")
     sweepStaleWireDirs(new java.io.File(tmp))
-    graft.operators.Scratch.deleteAtExit(s"$tmp/graft_otel_roundtrip_" +
+    val path = graft.operators.Scratch.deleteAtExit(s"$tmp/graft_otel_roundtrip_" +
       java.util.UUID.randomUUID.toString.take(8))
-  }
-
-  private def otelWireDir(s: SparkSession, d: String): String = {
-    val path = allocWireDir()
     graft.sources.OtelLogs.writeJson(otelRecords(s, d), path)
     path
   }
 
-  /** The consumer-side rollup both import paths share. */
-  private def otelImportRollup(imported: DataFrame): DataFrame =
-    imported
+  private val qanOtelRoundtrip: Q = (s, d) =>
+    graft.sources.OtelLogs.readJson(s, otelWireDir(s, d))
       .groupBy(col("db_system"), col("resource_instance_id"),
         col("db_statement_digest"))
       .agg(count(lit(1)).as("n_records"),
@@ -470,25 +462,6 @@ object Qan {
         max(col("timestamp")).as("last_seen"))
       .orderBy(col("db_system"), col("resource_instance_id"),
         col("db_statement_digest"))
-
-  private val qanOtelRoundtrip: Q = (s, d) => {
-    val path = otelWireDir(s, d)
-    otelImportRollup(graft.sources.OtelLogs.readJson(s, path,
-      graft.sources.v2.OtelLogTable.WireSchema))
-  }
-
-  // The same export→import→rollup, but BOTH directions through the
-  // custom DataSourceV2 connector (format "graft-otel"): the export
-  // writes per-task part files against the pinned contract schema,
-  // the import reads per-file partitions with column pruning at the
-  // reader — the plan's BatchScan carries only the five rollup
-  // fields. Shares the roundtrip oracle: any wire-format, writer or
-  // reader defect breaks the hash.
-  private val qanOtelDsv2: Q = (s, d) => {
-    val path = allocWireDir()
-    otelRecords(s, d).write.format("graft-otel").mode("overwrite").save(path)
-    otelImportRollup(s.read.format("graft-otel").load(path))
-  }
 
   /** Sweep wire dirs orphaned by killed JVMs (shutdown hooks never ran).
     * Only dirs stale by more than six hours are touched — longer than
@@ -908,7 +881,6 @@ object Qan {
     "qan_multi_counter_rollup" -> qanMultiCounterRollup,
     "qan_otel_export" -> qanOtelExport,
     "qan_otel_roundtrip" -> qanOtelRoundtrip,
-    "qan_otel_dsv2" -> qanOtelDsv2,
     "qan_snapshot_delta" -> qanSnapshotDelta,
     "qan_rollup_minute" -> qanRollupMinute,
     "qan_top_queries" -> qanTopQueries,
@@ -930,7 +902,6 @@ object Qan {
     "qan_multi_counter_rollup" -> qanMultiCounterRollupSql,
     "qan_otel_export" -> qanOtelExportSql,
     "qan_otel_roundtrip" -> qanOtelRoundtripSql,
-    "qan_otel_dsv2" -> qanOtelRoundtripSql,
     "qan_snapshot_delta" -> qanSnapshotDeltaSql,
     "qan_rollup_minute" -> qanRollupMinuteSql,
     "qan_top_queries" -> qanTopQueriesSql,

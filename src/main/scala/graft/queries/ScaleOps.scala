@@ -460,7 +460,7 @@ object ScaleOps {
   }
 
   private lazy val embClusterSampleSql: String = s"""
-    WITH ${ivfCtes(16, 64)},
+    WITH ${ivfCtes()},
     counts AS (
       SELECT cell, COUNT(*) AS cell_n FROM inverted GROUP BY cell),
     thr AS (
@@ -564,8 +564,8 @@ object ScaleOps {
     HAVING COUNT(*) >= 2
     ORDER BY representative_id"""
 
-  private lazy val embCellDedupSql = cellDedupSql(ivfCtes(16, 64), "inverted")
-  private lazy val embCellDedupTwoLevelSql = cellDedupSql(ivf2Ctes(16, 64, 2), "inverted2")
+  private lazy val embCellDedupSql = cellDedupSql(ivfCtes(), "inverted")
+  private lazy val embCellDedupTwoLevelSql = cellDedupSql(ivf2Ctes, "inverted2")
 
   // -------------------------------------------------- emb_cell_recall
   // The SemDeDup approximation audit — doc_lsh_recall's role for
@@ -636,8 +636,8 @@ object ScaleOps {
     GROUP BY 1
     ORDER BY 1"""
 
-  private lazy val embCellRecallSql = cellRecallSql(ivfCtes(16, 64), "inverted")
-  private lazy val embCellRecallTwoLevelSql = cellRecallSql(ivf2Ctes(16, 64, 2), "inverted2")
+  private lazy val embCellRecallSql = cellRecallSql(ivfCtes(), "inverted")
+  private lazy val embCellRecallTwoLevelSql = cellRecallSql(ivf2Ctes, "inverted2")
 
   // ---------------------------------------- emb_cell_recall_two_level
   // The approximation audit for the PRODUCTION (two-level) SemDeDup
@@ -746,7 +746,7 @@ object ScaleOps {
   }
 
   private lazy val embTwoLevelProbeCurveSql: String = s"""
-    WITH ${ivf2Ctes(16, 64, 2)},
+    WITH ${ivf2Ctes},
     suba AS (SELECT vec_id, v FROM e WHERE vec_id < 500),
     probesr AS (
       SELECT vec_id, v, cell AS coarse, rn AS pr FROM (
@@ -828,7 +828,7 @@ object ScaleOps {
   }
 
   private lazy val embIvfQualitySql: String = s"""
-    WITH ${ivfCtes(16, 64)},
+    WITH ${ivfCtes()},
     err AS (
       SELECT iv.cell, iv.vec_id, ${ivfSqDist("iv.v", "c1.c", 64)} AS sq
       FROM inverted iv JOIN centf c1 ON c1.cell = iv.cell)
@@ -870,7 +870,7 @@ object ScaleOps {
   }
 
   private lazy val embOodScoreSql: String = s"""
-    WITH ${ivfCtes(16, 64)},
+    WITH ${ivfCtes()},
     scored AS (
       SELECT iv.vec_id, iv.cell,
         ROUND(SQRT(${ivfSqDist("iv.v", "c1.c", 64)}), 6) AS ood_dist
@@ -948,7 +948,7 @@ object ScaleOps {
   }
 
   private lazy val embRecallCurveSql: String = s"""
-    WITH ${ivfCtes(16, 64)},
+    WITH ${ivfCtes()},
     ${graft.queries.Vectors.cosineTopkCtes.trim},
     exact AS (SELECT query_id, neighbor_id AS id FROM ex_r WHERE rank <= 10),${probesCte("4")},
     expanded AS (
@@ -1496,9 +1496,16 @@ object ScaleOps {
     * bit-identical across engines.
     *
     * `IvfCentroidMarker` starts the seeded-centroid literal CTE of both
-    * replay blocks; Verify finds the 16-cell IVF family by it.
+    * replay blocks; Verify finds the IVF family by it.
     */
   private[graft] val IvfCentroidMarker = "cents0(cell, c)"
+
+  /** The IVF index every IVF oracle replays: `OracleIvfCells` cells
+    * (what AnnIvf.adaptiveCells gives at every oracle-checked scale;
+    * Verify checks the corpus still does) over `OracleIvfDim`-d
+    * embeddings. */
+  private[graft] val OracleIvfCells = 16
+  private[graft] val OracleIvfDim = 64
 
   private[queries] def ivfSqDist(a: String, b: String, dim: Int): String =
     Vectors.dimFold(s"($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)])", dim)
@@ -1549,7 +1556,8 @@ object ScaleOps {
     * training corpus `e` — the incremental-append oracle trains on the
     * base subset and replays the frozen-index delta encode separately.
     */
-  private[queries] def ivfCtes(cells: Int, dim: Int, eWhere: String = ""): String = {
+  private[queries] def ivfCtes(eWhere: String = ""): String = {
+    val cells = OracleIvfCells; val dim = OracleIvfDim
     val eFilter = if (eWhere.isEmpty) "" else s" WHERE $eWhere"
     s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings$eFilter),
@@ -1564,13 +1572,15 @@ object ScaleOps {
     * [[ivfCtes]]), coarse Lloyd over the fine-centroid table itself
     * (AnnIvf.CoarseRounds, seed AnnIvf.CoarseSeed), fine cells grouped
     * under their nearest FINAL coarse centroid, and the corpus
-    * assignment restricted to the wProbe nearest coarse neighborhoods
-    * — every argmin ROW_NUMBER'd by (dist, cell), the total order the
-    * packed kernels implement. Ends at `inverted2(vec_id, v, cell)`
+    * assignment restricted to the wProbe = 2 (the production default)
+    * nearest coarse neighborhoods — every argmin ROW_NUMBER'd by
+    * (dist, cell), the total order the packed kernels implement. Ends
+    * at `inverted2(vec_id, v, cell)`
     * (plus `cand`, the per-vector neighborhood candidates, for probe
     * consumers).
     */
-  private[queries] def ivf2Ctes(cells: Int, dim: Int, wProbe: Int): String = {
+  private[queries] def ivf2Ctes: String = {
+    val cells = OracleIvfCells; val dim = OracleIvfDim; val wProbe = 2
     val sampleRate = AnnIvf.DefaultSampleRate; val sampleMod = AnnIvf.SampleModulus
     s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1632,7 +1642,7 @@ object ScaleOps {
       SELECT query_id, qv, cell, rn AS cell_rank FROM (
         SELECT e.vec_id AS query_id, e.v AS qv, c1.cell,
           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-            ORDER BY ${ivfSqDist("e.v", "c1.c", 64)}, c1.cell) AS rn
+            ORDER BY ${ivfSqDist("e.v", "c1.c", OracleIvfDim)}, c1.cell) AS rn
         FROM e CROSS JOIN centf c1$where)
       WHERE rn <= $nprobe)"""
   }
@@ -1645,7 +1655,7 @@ object ScaleOps {
       SELECT query_id, qv, cell FROM (
         SELECT c.vec_id AS query_id, c.v AS qv, c.fcell AS cell,
           ROW_NUMBER() OVER (PARTITION BY c.vec_id
-            ORDER BY ${ivfSqDist("c.v", "c.fc", 64)}, c.fcell) AS rn
+            ORDER BY ${ivfSqDist("c.v", "c.fc", OracleIvfDim)}, c.fcell) AS rn
         FROM cand c
         WHERE c.vec_id < 5)
       WHERE rn <= $nprobe)"""
@@ -1654,7 +1664,7 @@ object ScaleOps {
     * (ending in a query-probe table `probesTable`) and its inverted
     * file: exact cosine over the probed cells, ranked. */
   private def annIvfSql(indexCtes: String, probesTable: String, inverted: String): String = {
-    val cos = Vectors.cosFold("qv", "cv", 64)
+    val cos = Vectors.cosFold("qv", "cv", OracleIvfDim)
     s"""
     WITH $indexCtes,
     scored AS (
@@ -1673,10 +1683,10 @@ object ScaleOps {
   }
 
   private val embAnnIvfTwoLevelSql: String =
-    annIvfSql(s"${ivf2Ctes(16, 64, 2)},${qprobesCte(2)}", "qprobes", "inverted2")
+    annIvfSql(s"${ivf2Ctes},${qprobesCte(2)}", "qprobes", "inverted2")
 
   private val embAnnIvfSql: String =
-    annIvfSql(s"${ivfCtes(16, 64)},${probesCte("2")}", "probes", "inverted")
+    annIvfSql(s"${ivfCtes()},${probesCte("2")}", "probes", "inverted")
 
   /** Oracle for the composed cleaning pass: the minhash/cluster replay
     * CTEs plus the lang/quality stage SQL exposed by Text — the same

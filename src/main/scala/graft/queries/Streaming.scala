@@ -304,7 +304,7 @@ object Streaming {
   }
 
   private lazy val stOodFilterSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     scored AS (
       SELECT iv.vec_id, iv.cell,
         ${ScaleOps.ivfSqDist("iv.v", "c1.c", 64)} AS sq
@@ -456,7 +456,7 @@ object Streaming {
   }
 
   private lazy val stIvfpqServeSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     ${Vectors.pqCtesComposable},${ScaleOps.probesCte(s"${Vectors.ivfpqNprobe}", queryWhere = "")},
     ${Vectors.adcCtes("probes", "inverted", 64)},
     scored AS (
@@ -492,7 +492,7 @@ object Streaming {
   }
 
   private lazy val stIvfpqServeTopkSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     ${Vectors.pqCtesComposable},${ScaleOps.probesCte(s"${Vectors.ivfpqNprobe}", queryWhere = "")},
     ${Vectors.adcCtes("probes", "inverted", 64)},
     ${Vectors.ivfpqRerankTailSql(Vectors.ivfpqRerank, Vectors.ivfpqK, 64)}"""
@@ -926,8 +926,7 @@ object Streaming {
   }
 
   private lazy val stIndexAppendSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64,
-        eWhere = s"vec_id % ${Vectors.appendDeltaMod} <> ${Vectors.appendDeltaRem}")},
+    WITH ${ScaleOps.ivfCtes(eWhere = s"vec_id % ${Vectors.appendDeltaMod} <> ${Vectors.appendDeltaRem}")},
     ${Vectors.pqCtesComposable},${Vectors.deltaAssignCtes},${Vectors.deltaCodedCtes}
     SELECT a.vec_id, a.cell,
       (SELECT string_agg(CAST(c.code AS VARCHAR), ',' ORDER BY c.sub)
@@ -987,7 +986,7 @@ object Streaming {
   }
 
   private lazy val stIndexDeleteSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     del AS (
       SELECT vec_id FROM embeddings
       WHERE vec_id % ${Vectors.deleteMod} = ${Vectors.deleteRem})
@@ -1034,7 +1033,7 @@ object Streaming {
   }
 
   private lazy val stCellDedupSql: String = s"""
-    WITH ${graft.queries.ScaleOps.ivfCtes(16, 64)},
+    WITH ${graft.queries.ScaleOps.ivfCtes()},
     sc AS (
       SELECT vec_id, cell, v,
         list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale

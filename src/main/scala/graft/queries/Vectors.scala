@@ -277,15 +277,6 @@ object Vectors {
         round(GraftFunctions.cosineSimilarity(col("v"), col("recon")), 4).as("recon_cos"))
       .orderBy(col("vec_id"))
 
-  /** Shared PQ replay CTE chain: seeded codebook inlined as literals;
-    * every distance/mean/fold has the same index-order shape as the
-    * Spark kernels, so codes, reconstruction and errors are
-    * bit-identical. `prefix` renames every internal CTE so the chain
-    * composes into WITH blocks that already bind cents0/assign0 (the
-    * IVF replay binds both); `withE` controls whether the shared `e`
-    * base CTE is emitted. The terminal CTE is
-    * `<prefix>pq(vec_id, codes, recon)`.
-    */
   /** The per-subspace squared-distance fold (dsub-length) — shared by
     * the PQ training replay and the frozen-codebook delta encode so
     * the two can never drift.
@@ -293,6 +284,17 @@ object Vectors {
   private[queries] def pqSqDist(a: String, b: String): String =
     ScaleOps.ivfSqDist(a, b, pqDsub)
 
+  /** Shared PQ replay CTE chain: seeded codebook `<prefix>cb0` inlined
+    * as literals; every distance/mean/fold has the same index-order
+    * shape as the Spark kernels, so codes, reconstruction and errors
+    * are bit-identical. `prefix` renames every internal CTE so the
+    * chain composes into WITH blocks that already bind assign0 (the
+    * IVF replay does); `withE` controls whether the shared `e` base
+    * CTE is emitted. The terminal CTE is
+    * `<prefix>pq(vec_id, codes, recon)`. No name here contains
+    * [[ScaleOps.IvfCentroidMarker]], so Verify's IVF family holds no
+    * PQ-only oracle.
+    */
   private def pqCtesGen(prefix: String, withE: Boolean): String = {
     val c0 = AnnPq.codebook0(pqK, pqDsub)
     val centRows = c0.zipWithIndex.map { case (c, i) =>
@@ -307,13 +309,13 @@ object Vectors {
       SELECT vec_id, v, CAST(sub AS INT) AS sub,
         list_slice(v, sub * $pqDsub + 1, sub * $pqDsub + $pqDsub) AS subv
       FROM e CROSS JOIN (SELECT unnest(range(0, $pqM)) AS sub)),
-    ${n("cents0")}(cell, c) AS (VALUES $centRows),
+    ${n("cb0")}(cell, c) AS (VALUES $centRows),
     ${n("assign0")} AS (
       SELECT vec_id, sub, subv, cell FROM (
         SELECT s.vec_id, s.sub, s.subv, c0.cell,
           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
             ORDER BY ${sqDist("s.subv", "c0.c")}, c0.cell) AS rn
-        FROM ${n("subs")} s CROSS JOIN ${n("cents0")} c0)
+        FROM ${n("subs")} s CROSS JOIN ${n("cb0")} c0)
       WHERE rn = 1),
     ${n("cb1")} AS (
       SELECT sub, cell, list(mn ORDER BY i) AS c FROM (
@@ -538,7 +540,7 @@ object Vectors {
   private lazy val embIvfpqTopkSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,${ScaleOps.probesCte(s"$ivfpqNprobe")},
     ${adcCtes("probes", "inverted", dim)},
     ${ivfpqRerankTailSql(ivfpqRerank, ivfpqK, dim)}"""
@@ -570,7 +572,7 @@ object Vectors {
   private lazy val embIvfpqTopkTwoLevelSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivf2Ctes(16, dim, 2)},
+    WITH ${ScaleOps.ivf2Ctes},
     $pqCtesComposable,${ScaleOps.qprobesCte(ivfpqNprobe)},
     ${adcCtes("qprobes", "inverted2", dim)},
     ${ivfpqRerankTailSql(ivfpqRerank, ivfpqK, dim)}"""
@@ -663,7 +665,7 @@ object Vectors {
   private lazy val embFilteredTopkSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,${ScaleOps.probesCte(s"${ivfpqNprobe * filteredProbeBoost}")},${
       filteredInvCte("inverted")},
     ${adcCtes("probes", "inv_f", dim)},
@@ -759,7 +761,7 @@ object Vectors {
   private lazy val embFilteredRecallSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,${ScaleOps.probesCte(s"${ivfpqNprobe * filteredProbeBoost}")},${
       filteredInvCte("inverted")},
     ${adcCtes("probes", "inv_f", dim)},
@@ -962,12 +964,12 @@ object Vectors {
     CROSS JOIN nex
     ORDER BY b.boost"""
 
-  private val boostMaxSql = 16 / ivfpqNprobe // adaptiveCells = 16 at oracle scale
+  private val boostMaxSql = ScaleOps.OracleIvfCells / ivfpqNprobe
 
   private lazy val embFilteredBoostCurveSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,${ScaleOps.probesCte(s"${boostMaxSql * ivfpqNprobe}")},${
       filteredInvCte("inverted")},
     ${adcCtes("probes", "inv_f", dim)},
@@ -1020,7 +1022,7 @@ object Vectors {
   private lazy val embFilteredBoostCurveTwoLevelSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivf2Ctes(16, dim, 2)},
+    WITH ${ScaleOps.ivf2Ctes},
     $pqCtesComposable,${filteredInvCte("inverted2")},
     maxwc AS (SELECT COUNT(*) AS mwc FROM coarsep),
     qcoarse AS (
@@ -1097,10 +1099,10 @@ object Vectors {
   private lazy val embFilteredTopkAdaptiveSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,
     bsel AS (
-      SELECT LEAST(${16 / ivfpqNprobe}, CAST(CEILING(1.0 /
+      SELECT LEAST($boostMaxSql, CAST(CEILING(1.0 /
         (CAST((SELECT COUNT(*) FROM embeddings
                WHERE label IN (${filteredLabels.mkString(", ")})) AS DOUBLE)
          / CAST((SELECT COUNT(*) FROM embeddings) AS DOUBLE))) AS INT))
@@ -1185,7 +1187,7 @@ object Vectors {
   private lazy val embIvfpqRerankCurveSql: String = {
     val dim = 64
     s"""
-    WITH ${ScaleOps.ivfCtes(16, dim)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,
     ${cosineTopkCtes.trim},
     exact AS (SELECT query_id, neighbor_id AS id FROM ex_r WHERE rank <= 10),${
@@ -1376,7 +1378,7 @@ object Vectors {
   }
 
   private lazy val embIndexBuildSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,
     cent_stats AS (${centRowSql("centroids", "centf")}),
     cb_el AS (SELECT sub, code, unnest(c) AS x FROM pq_cb),
@@ -1447,7 +1449,7 @@ object Vectors {
   }
 
   private lazy val embIndexShardMergeSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,
     row_cent AS (${centRowSql("centroids", "centf")}),
     row_merged AS (${checksumRowSql("merged", "inverted", "pq_coded")}),
@@ -1536,11 +1538,8 @@ object Vectors {
       .orderBy(col("artifact"))
   }
 
-  private lazy val embIndexAppendSql: String = {
-    val dim = 64
-    s"""
-    WITH ${ScaleOps.ivfCtes(16, dim,
-        eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},
+  private lazy val embIndexAppendSql: String = s"""
+    WITH ${ScaleOps.ivfCtes(eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},
     $pqCtesComposable,$deltaAssignCtes,$deltaCodedCtes,
     inv_all AS (
       SELECT vec_id, cell FROM inverted
@@ -1555,7 +1554,6 @@ object Vectors {
     UNION ALL SELECT * FROM row_delta
     UNION ALL SELECT * FROM row_balance
     ORDER BY artifact"""
-  }
 
   // --------------------------------------------------- emb_index_stats
   // Fragmentation / statistics-drift observability for the persisted
@@ -1632,11 +1630,8 @@ object Vectors {
       .orderBy(col("artifact"))
   }
 
-  private lazy val embIndexStatsSql: String = {
-    val dim = 64
-    s"""
-    WITH ${ScaleOps.ivfCtes(16, dim,
-        eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},$deltaAssignCtes,
+  private lazy val embIndexStatsSql: String = s"""
+    WITH ${ScaleOps.ivfCtes(eWhere = s"vec_id % $appendDeltaMod <> $appendDeltaRem")},$deltaAssignCtes,
     inv_all AS (
       SELECT vec_id, cell FROM inverted
       UNION ALL SELECT vec_id, cell FROM dl_assign),
@@ -1666,7 +1661,6 @@ object Vectors {
     UNION ALL SELECT * FROM row_frag
     UNION ALL SELECT * FROM row_stale
     ORDER BY artifact"""
-  }
 
   // -------------------------------------------------- emb_index_delete
   // The remaining lifecycle op of the persisted index — takedown
@@ -1727,7 +1721,7 @@ object Vectors {
     indexLifecycle("_delete", AnnIvf.OneLevelMaxVectors, (_, _) => Nil)
 
   private lazy val embIndexDeleteSql: String = s"""
-    WITH ${ScaleOps.ivfCtes(16, 64)},
+    WITH ${ScaleOps.ivfCtes()},
     $pqCtesComposable,
     row_compacted AS (${checksumRowSql("compacted", "inverted", "pq_coded", liveSql)}),
     row_live AS (${checksumRowSql("live", "inverted", "pq_coded", liveSql)}),
@@ -1783,7 +1777,7 @@ object Vectors {
     })
 
   private lazy val embIndexLifecycleTwoLevelSql: String = s"""
-    WITH ${ScaleOps.ivf2Ctes(16, 64, 2)},
+    WITH ${ScaleOps.ivf2Ctes},
     $pqCtesComposable,
     row_coarse AS (${centRowSql("coarse", "coarsep")}),
     grp_el AS (

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.operators.Governor
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -276,14 +278,13 @@ object QanStream {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case (uid, it, state: GroupState[EmaState]) =>
           // interval loads: per UTC day, the batch form of
-          // Qan.loadPerDay (least(1,err/total)*0.7 + least(1,slow/total)*0.3)
+          // Qan.loadPerDay (Governor.load of the error and slow shares)
           val dayLoads = it.toSeq.groupBy(_.ts.getTime / 86400000L).toSeq.sortBy(_._1)
             .map { case (day, es) =>
               val total = es.size.toDouble
               val errors = es.count(_.event_type == "error").toDouble
               val slow = es.count(_.event_type == "purchase").toDouble
-              day -> (math.min(1.0, errors / total) * 0.7 +
-                math.min(1.0, slow / total) * 0.3)
+              day -> Governor.load(errors / total, slow / total)
             }
           var st = state.getOption.getOrElse(EmaState(0.0, 0.0, Long.MinValue, 0L))
           dayLoads.foreach { case (day, load) =>
@@ -291,8 +292,8 @@ object QanStream {
               st =
                 if (st.nDays == 0L) EmaState(load, load, day, 1L)
                 else EmaState(
-                  st.fastEma + 0.3 * (load - st.fastEma),
-                  st.slowEma + 0.05 * (load - st.slowEma),
+                  Governor.emaStep(st.fastEma, Governor.FastAlpha, load),
+                  Governor.emaStep(st.slowEma, Governor.SlowAlpha, load),
                   day, st.nDays + 1L)
             }
           }

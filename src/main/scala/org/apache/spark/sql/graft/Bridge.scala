@@ -21,18 +21,6 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** The session's effective Hadoop configuration (core-site +
-    * spark.hadoop.* overrides) as a plain serializable map — for
-    * connectors whose executor-side tasks must build the same
-    * FileSystem the driver planned against (sessionState is
-    * private[sql], hence the bridge).
-    */
-  def hadoopConfMap(spark: SparkSession): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    spark.sessionState.newHadoopConf().iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-  }
-
   /** Block until every event posted so far has reached every listener
     * (the listener bus is private[spark]): a per-query trace reads its
     * listeners only after the query's last job-end and progress events

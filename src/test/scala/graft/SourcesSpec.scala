@@ -46,65 +46,49 @@ class SourcesSpec extends SparkSpec {
     } finally sink.query.stop()
   }
 
-  test("graft-otel V2 source: short name resolves, schema pinned, reader prunes columns") {
+  test("OTel JSON wire: schema pinned, microsecond round trip, reader prunes and pushes filters") {
     import spark.implicits._
-    val dir = tmpDir("dsv2")
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.sources.OtelLogs
+    val dir = tmpDir("otel_wire")
+    def ts(ms: Long, micros: Int) = {
+      val t = new java.sql.Timestamp(ms); t.setNanos(t.getNanos + micros * 1000); t
+    }
     val deltas = Seq(
-      (new java.sql.Timestamp(1704067200123L), 1L, "digest_a", 5.5),
-      (new java.sql.Timestamp(1704067260456L), 2L, "digest_b", 2.0))
+      (ts(1704067200123L, 456), 1L, "digest_a", 5.5),
+      (ts(1704067260456L, 789), 2L, "digest_b", 2.0))
       .toDF("ts", "user_id", "event_type", "delta_value")
-    graft.sources.OtelLogs.writeJson(
-      graft.sources.OtelLogs.toLogRecords(deltas), dir)
-    try {
-      val df = spark.read.format("graft-otel").load(dir)
-      assert(df.schema === graft.sources.v2.OtelLogTable.WireSchema)
-      // values round-trip (timestamps to the microsecond, doubles exact)
-      val rows = df.select(col("db_statement_digest"), col("delta_value"),
-        col("timestamp").cast("long")).collect().map(_.toString).sorted
-      assert(rows.toSeq == Seq(
-        "[digest_a,5.5,1704067200]", "[digest_b,2.0,1704067260]"))
-      // column pruning reaches the scan: a two-column projection's
-      // BatchScan outputs exactly those two attributes
-      val pruned = df.select(col("delta_value"), col("db_system"))
-      val scans = pruned.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }
-      assert(scans.nonEmpty, "expected a BatchScanExec")
-      assert(scans.head.output.map(_.name).toSet === Set("delta_value", "db_system"),
-        s"scan not pruned: ${scans.head.output.map(_.name)}")
-      assert(pruned.collect().length === 2)
-      // string-equality filters are pushed into the reader (visible in
-      // the scan description) and still produce the correct rows
-      val filtered = df.filter(col("db_system") === "postgresql")
-        .select(col("db_statement_digest"))
-      val fScan = filtered.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.head
-      assert(fScan.scan.description().contains("EqualTo(db_system,postgresql)"),
-        s"filter not pushed: ${fScan.scan.description()}")
-      assert(filtered.collect().map(_.getString(0)).toSeq == Seq("digest_a"))
-      // V2 writer: the same records written through the connector read
-      // back identically (timestamps to the microsecond), and a second
-      // overwrite truncates the first write's part files
-      val dir2 = dir + "_w"
-      df.write.format("graft-otel").mode("overwrite").save(dir2)
-      val back = spark.read.format("graft-otel").load(dir2)
-        .collect().map(_.toString).sorted.toSeq
-      assert(back == df.collect().map(_.toString).sorted.toSeq,
-        "V2 write→read must be lossless")
-      df.limit(1).write.format("graft-otel").mode("overwrite").save(dir2)
-      assert(spark.read.format("graft-otel").load(dir2).count() === 1,
-        "overwrite must truncate previous part files")
-      // run-unique part names: a second non-truncate write lands
-      // ALONGSIDE the first run's files, never over them
-      df.write.format("graft-otel").mode("append").save(dir2)
-      assert(spark.read.format("graft-otel").load(dir2).count() === 3,
-        "append must preserve earlier runs' files")
-      rm2(new java.io.File(dir2))
-    } finally rm2(new java.io.File(dir))
-  }
-
-  private def rm2(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm2)); f.delete(): Unit
+    OtelLogs.writeJson(OtelLogs.toLogRecords(deltas), dir)
+    val df = OtelLogs.readJson(spark, dir)
+    assert(df.schema === OtelLogs.WireSchema)
+    // values round-trip: timestamps to the microsecond, doubles exact
+    val rows = df.select(col("db_statement_digest"), col("delta_value"),
+      unix_micros(col("timestamp"))).collect().map(_.toString).sorted
+    assert(rows.toSeq == Seq(
+      "[digest_a,5.5,1704067200123456]", "[digest_b,2.0,1704067260456789]"))
+    def scanOf(q: org.apache.spark.sql.DataFrame): FileSourceScanExec =
+      q.queryExecution.executedPlan.collectFirst { case f: FileSourceScanExec => f }
+        .getOrElse(fail(s"expected a file scan:\n${q.queryExecution.executedPlan}"))
+    // column pruning reaches the scan: a two-column projection reads
+    // exactly those two fields
+    val pruned = df.select(col("delta_value"), col("db_system"))
+    assert(scanOf(pruned).requiredSchema.fieldNames.toSet === Set("delta_value", "db_system"),
+      s"scan not pruned: ${scanOf(pruned).requiredSchema.simpleString}")
+    assert(pruned.collect().length === 2)
+    // string-equality filters are pushed into the reader and still
+    // produce the correct rows
+    val filtered = df.filter(col("db_system") === "postgresql")
+      .select(col("db_statement_digest"))
+    val pushed = scanOf(filtered).metadata("PushedFilters")
+    assert(pushed.contains("EqualTo(db_system,postgresql)"), s"filter not pushed: $pushed")
+    assert(filtered.collect().map(_.getString(0)).toSeq == Seq("digest_a"))
+    // the read records write back losslessly, and a second write
+    // truncates the first write's part files
+    OtelLogs.writeJson(df, dir + "_w")
+    assert(OtelLogs.readJson(spark, dir + "_w").collect().map(_.toString).sorted.toSeq ==
+      df.collect().map(_.toString).sorted.toSeq, "write→read must be lossless")
+    OtelLogs.writeJson(df.limit(1), dir + "_w")
+    assert(OtelLogs.readJson(spark, dir + "_w").count() === 1,
+      "overwrite must truncate previous part files")
   }
 }

@@ -23,4 +23,10 @@ class VerifySpec extends SparkSpec {
     Seq("emb_ann_ivf", "emb_ann_ivf_two_level", "emb_ivfpq_topk", "st_ivfpq_serve")
       .foreach(name => assert(family(name), s"$name missing from $family"))
   }
+
+  test("the 16-cell IVF guard leaves out the PQ-only oracles") {
+    val family = Verify.ivfFamily
+    Seq("emb_pq_codes", "emb_pq_topk")
+      .foreach(name => assert(!family(name), s"$name builds no IVF index but is in $family"))
+  }
 }
