@@ -46,7 +46,11 @@ class SourcesSpec extends SparkSpec {
     } finally sink.query.stop()
   }
 
-  test("OTel JSON wire: schema pinned, microsecond round trip, reader prunes and pushes filters") {
+  // The case keeps the name it had when a DataSourceV2 connector served
+  // the OTel wire; it now checks the same contract through OtelLogs:
+  // pinned schema, microsecond round trip, pruned and filtered scans,
+  // lossless rewrite and overwrite.
+  test("graft-otel V2 source: short name resolves, schema pinned, reader prunes columns") {
     import spark.implicits._
     import org.apache.spark.sql.execution.FileSourceScanExec
     import graft.sources.OtelLogs
