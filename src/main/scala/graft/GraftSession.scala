@@ -65,7 +65,8 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the TopK rewrite rule and the SQL functions, exactly as a cluster
-    // deployment (spark.sql.extensions=graft.plans.GraftExtensions) has them
+    // deployment (spark.sql.extensions=graft.plans.GraftExtensions) has
+    // them, plus graft's file: filesystem (graft.sources.LocalFs)
     graft.plans.GraftExtensions.install(spark)
     spark
   }

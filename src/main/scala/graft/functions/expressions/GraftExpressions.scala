@@ -134,9 +134,9 @@ object MinHash {
     * xxhash64(g, i))))`): Spark HOF lambdas are interpreted per
     * element, which made signatures the dominant cost of the LSH
     * pipeline (k·|grams| interpreted evals per row). Here it's one
-    * tight compiled loop.
-    */
-  /** The k affine coefficient pairs, derived from a seeded xorshift —
+    * tight compiled loop (`ExprKernels.minhashSignature`).
+    *
+    * The k affine coefficient pairs, derived from a seeded xorshift —
     * exposed so the DuckDB oracle can inline the identical constants.
     */
   def coefficients(k: Int, seed: Long = 0x5EED5EEDL): (Array[Long], Array[Long]) = {
@@ -147,28 +147,6 @@ object MinHash {
     var i = 0
     while (i < k) { as(i) = next() | 1L; bs(i) = next(); i += 1 }
     (as, bs)
-  }
-
-  def signature(hashes: Array[Long], k: Int, seed: Long = 0x5EED5EEDL): Array[Long] = {
-    val (as, bs) = coefficients(k, seed)
-    // UNSIGNED min per slot: the permuted values are uniform 64-bit
-    // patterns either way, but unsigned ordering lets an engine
-    // without wrap-around int64 (e.g. the DuckDB oracle working in
-    // HUGEINT mod 2^64) reproduce the identical signature.
-    val out = Array.fill(k)(-1L) // unsigned max
-    var i = 0
-    var g = 0
-    while (g < hashes.length) {
-      val h = hashes(g)
-      i = 0
-      while (i < k) {
-        val p = as(i) * h + bs(i)
-        if (java.lang.Long.compareUnsigned(p, out(i)) < 0) out(i) = p
-        i += 1
-      }
-      g += 1
-    }
-    out
   }
 
   def fnv64(bytes: Array[Byte]): Long = {
@@ -200,6 +178,10 @@ object ExprKernels {
 
   def minhashSignature(v: ArrayData, k: Int): ArrayData = {
     val (as, bs) = coeffs(k)
+    // UNSIGNED min per slot: the permuted values are uniform 64-bit
+    // patterns either way, but unsigned ordering lets an engine
+    // without wrap-around int64 (e.g. the DuckDB oracle working in
+    // HUGEINT mod 2^64) reproduce the identical signature.
     val out = Array.fill(k)(-1L) // unsigned max
     var g = 0
     while (g < v.numElements()) {

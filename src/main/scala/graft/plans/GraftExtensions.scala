@@ -12,7 +12,11 @@ import graft.functions.expressions._
   * gets the custom planner strategy plus the SQL-callable functions.
   * For an already-running session (e.g. the one `graft.GraftSession`
   * builds), the companion's `install(spark)` registers the same pieces
-  * at runtime.
+  * at runtime, and also puts graft's `file:` filesystem
+  * (`graft.sources.LocalFs`) under the session's Hadoop conf. The
+  * extension route cannot do that; a deployment that keeps checkpoints
+  * on local disk sets `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` itself (README).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -102,6 +106,7 @@ object GraftExtensions {
 
   /** Runtime registration on an existing session (idempotent). */
   def install(spark: SparkSession): Unit = {
+    graft.sources.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     TopK.install(spark)
     if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule))
       spark.experimental.extraOptimizations =

@@ -474,13 +474,13 @@ object QanStream {
     * created and keeps one versioned state store PER partition (a
     * stream-stream join holds four), each of which opens, writes,
     * checksums and commits its own delta file on every micro-batch,
-    * however few keys it holds. Measured on the collector's drain
-    * (~1,000 (instance, digest) keys, 4 vCPU, perfbench qan_monitor):
-    * 8 partitions spent 910 ms of a 1,321 ms trigger in state commit —
-    * about 110 ms per partition per batch — and 1 partition 54 ms. So
-    * the cost tracks the partition count, not the key count. The
-    * memory-sink and foreachBatch replays keep `parts` = 8; the polling
-    * drain passes 1 (`PollingSource.drainAvailableNow`). Results and
+    * however few keys it holds. Measured with `tools.QueryTrace` at
+    * sf0.01 (750 keys, one batch, 4 vCPU): st_delta_stream's 8
+    * partitions commit state in 101–118 ms, about 13 ms per partition
+    * per batch, and qan_poll_delta's 1 partition in 3–6 ms. So the cost
+    * tracks the partition count, not the key count. The memory-sink
+    * and foreachBatch replays keep `parts` = 8; the polling drain
+    * passes 1 (`PollingSource.drainAvailableNow`). Results and
     * cross-batch semantics are partition-count-invariant; a resumed
     * checkpoint ignores `parts`, because Spark restores the count from
     * its offset log.

@@ -79,7 +79,7 @@ class KernelPropSpec extends AnyFunSuite {
         val sa = ExprKernels.minhashSignature(ExprKernels.gramHashes(sarr(a)), k).toLongArray()
         val sb = ExprKernels.minhashSignature(ExprKernels.gramHashes(sarr(b)), k).toLongArray()
         val su = ExprKernels.minhashSignature(ExprKernels.gramHashes(sarr(a ++ b)), k).toLongArray()
-        // slot values are UNSIGNED 64-bit patterns (see MinHash.signature)
+        // slot values are UNSIGNED 64-bit patterns (see ExprKernels.minhashSignature)
         su.sameElements(sa.zip(sb).map { case (x, y) =>
           if (java.lang.Long.compareUnsigned(x, y) <= 0) x else y })
       }

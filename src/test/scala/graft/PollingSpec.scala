@@ -155,6 +155,50 @@ class PollingSpec extends SparkSpec {
     assert(run(resume8 = true) == (continued, 8))
   }
 
+  test("a drain checkpoint survives a swap between the stock and graft's file: filesystem") {
+    // one staged file per poll: q1 grows by 10, q2 resets at poll 2
+    object OneFile extends PollingSource.SnapshotFetcher {
+      override def fetch(s: SparkSession, i: Long): DataFrame = {
+        import s.implicits._
+        Seq(("q1", 10L * (i + 1)), ("q2", Seq(100L, 200L, 5L, 25L)(i.toInt)))
+          .toDF("digest", "counter").coalesce(1)
+      }
+    }
+    val truth = Map(("q1", 0L) -> 10.0, ("q1", 1L) -> 10.0, ("q1", 2L) -> 10.0,
+      ("q1", 3L) -> 10.0, ("q2", 0L) -> 100.0, ("q2", 1L) -> 100.0, ("q2", 2L) -> 5.0,
+      ("q2", 3L) -> 20.0)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def twoThenTwo(before: () => Unit, after: () => Unit): Unit = {
+      val staging = tmpDir("poll_swap_staging", create = true)
+      val checkpoint = tmpDir("poll_swap_ckpt", create = true)
+      val outDir = tmpDir("poll_swap_out", create = true)
+      before()
+      (0 until 4).foreach { i =>
+        if (i == 2) after()
+        PollingSource.pollToStaging(spark, OneFile, polls = 1, stagingDir = staging,
+          startIndex = i.toLong, clock = j => j * 30_000_000L)
+        val schema = spark.read.parquet(staging).schema
+        PollingSource.drainAvailableNow(QanStream.deltaStream(counterEvents(
+          PollingSource.stagedStream(spark, staging, schema))).toDF(), outDir, checkpoint)
+      }
+      // batch n's source-log entry names the one file poll n staged
+      val entries = (0 until 4).map { n =>
+        val lines = Files.readAllLines(java.nio.file.Paths.get(s"$checkpoint/sources/0/$n"))
+        lines.size - 1
+      }
+      assert(entries == Seq(1, 1, 1, 1))
+      assert(!new java.io.File(s"$checkpoint/sources/0/4").exists)
+      val got = spark.read.parquet(outDir).collect()
+        .map(r => (r.getString(2), r.getLong(0)) -> r.getDouble(3)).toMap
+      assert(got == truth)
+      assert(got.groupMapReduce(_._1._1)(_._2)(_ + _) == Map("q1" -> 40.0, "q2" -> 225.0))
+    }
+    try {
+      twoThenTwo(() => LocalFsSpec.useStock(conf), () => graft.plans.GraftExtensions.install(spark))
+      twoThenTwo(() => graft.plans.GraftExtensions.install(spark), () => LocalFsSpec.useStock(conf))
+    } finally graft.sources.LocalFs.install(conf)
+  }
+
   test("jdbc fetcher builds a partitioned production read") {
     // no live DB in the sandbox: assert the option plumbing, not the scan
     val f = PollingSource.JdbcFetcher(
