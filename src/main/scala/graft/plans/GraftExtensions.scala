@@ -13,10 +13,12 @@ import graft.functions.expressions._
   * For an already-running session (e.g. the one `graft.GraftSession`
   * builds), the companion's `install(spark)` registers the same pieces
   * at runtime, and also puts graft's `file:` filesystem
-  * (`graft.sources.LocalFs`) under the session's Hadoop conf. The
-  * extension route cannot do that; a deployment that keeps checkpoints
-  * on local disk sets `spark.hadoop.fs.file.impl` and
-  * `spark.hadoop.fs.AbstractFileSystem.file.impl` itself (README).
+  * (`graft.sources.LocalFs`) under the session's Hadoop conf and turns
+  * off per-session artifact isolation. The extension route cannot do
+  * either: such a deployment sets
+  * `spark.sql.artifact.isolation.enabled=false` itself and, if it keeps
+  * checkpoints on local disk, `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` (README).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -104,8 +106,23 @@ object GraftExtensions {
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))
     }))
 
-  /** Runtime registration on an existing session (idempotent). */
+  /** Runtime registration on an existing session (idempotent).
+    *
+    * Also turns off Spark's per-session artifact isolation, so that
+    * batch and streaming tasks run under the application's one class
+    * loader. With isolation on, every session's jobs carry that
+    * session's artifact UUID and executors give each UUID its own
+    * `ExecutorClassLoader`; every streaming query runs on a clone of
+    * the session with a fresh UUID, and `CodeGenerator`'s cache is
+    * keyed by (class loader, code). So each collector drain and each
+    * `st_*` replay compiled all of its generated classes again and ran
+    * them under a cold JIT (README, "One class loader per application",
+    * has the measured cost). graft adds no jar, file or artifact to a
+    * session, so isolation separated nothing. Clones copy the conf, so
+    * every query started after this call runs unisolated.
+    */
   def install(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
     graft.sources.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     TopK.install(spark)
     if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule))

@@ -25,10 +25,15 @@ object Vectors {
 
   /** The (id, v) corpus every index query builds from, persisted: the
     * sizing count, the training rounds and the inverted file each
-    * rescan it. */
-  private[queries] def vecCorpus(s: SparkSession, d: String): DataFrame =
-    vecs(s, d).select(col("vec_id").as("id"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * rescan it. A corpus that an earlier query left cached in the
+    * session (specs clear nothing between queries) is reused as it is,
+    * not asked to be cached again. */
+  private[queries] def vecCorpus(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val corpus = vecs(s, d).select(col("vec_id").as("id"), col("v"))
+    if (corpus.storageLevel != StorageLevel.NONE) corpus
+    else corpus.persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** The fixed query set (vec_id < 5) as (query_id, qv). */
   private[queries] def queryVecs(corpus: DataFrame): DataFrame =

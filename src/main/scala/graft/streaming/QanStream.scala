@@ -484,6 +484,15 @@ object QanStream {
     * cross-batch semantics are partition-count-invariant; a resumed
     * checkpoint ignores `parts`, because Spark restores the count from
     * its offset log.
+    *
+    * Every query started here runs on a clone of the session. With
+    * Spark's per-session artifact isolation on, each clone's tasks got
+    * a class loader of their own, so every replay compiled its
+    * generated classes again: 11–13 compiles (94–229 ms) in each warm
+    * `tools.QueryTrace` run of st_delta_stream, st_funnel_stream,
+    * st_percent_change and st_rollup_stream at sf0.01. With isolation
+    * off (`GraftExtensions.install`) the same runs compile nothing and
+    * take 0.43–0.61 s instead of 0.78–1.02 s.
     */
   private[graft] def startReplay[T](spark: SparkSession, parts: Int = 8)(start: => T): T =
     startLock.synchronized {

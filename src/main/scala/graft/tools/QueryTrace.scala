@@ -2,7 +2,9 @@ package graft.tools
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
@@ -17,8 +19,12 @@ import graft.GraftSession
   *    count, description, and the stage names of jobs over 0.5 s — and
   *    a `SUMMARY wall in_jobs driver_gaps n_jobs` line;
   *  - the JVM counters that move with it: GC-time delta, old-gen
-  *    occupancy before→after, code-cache size. Wall tracking the GC
-  *    delta on an unchanged plan is allocation/GC variance, not cost;
+  *    occupancy before→after, code-cache size, and the generated
+  *    classes Janino compiled (`codegen_compiles`, `codegen_ms`). Wall
+  *    tracking the GC delta on an unchanged plan is allocation/GC
+  *    variance, not cost; a warm run that still compiles means a
+  *    codegen cache miss (a new class loader or a new literal in the
+  *    generated code);
   *  - for a streaming query, its micro-batch progress summed over every
   *    stream it ran: batches with input, addBatch, state-store commit,
   *    the most state partitions any stateful operator ran with (each
@@ -65,22 +71,32 @@ object QueryTrace {
           Bridge.drainListenerBus(spark)
           jobs.synchronized(jobs.clear())
           progress.synchronized(progress.clear())
-          val (gc0, old0) = (GraftSession.gcSec, GraftSession.oldGenMb)
+          val (gc0, old0, cg0) = (GraftSession.gcSec, GraftSession.oldGenMb, codegen)
           val t0 = System.currentTimeMillis()
           GraftSession.run(spark, fn, sfDir)
           val wall = (System.currentTimeMillis() - t0) / 1e3
-          val (gc1, old1) = (GraftSession.gcSec, GraftSession.oldGenMb)
+          val (gc1, old1, cg1) = (GraftSession.gcSec, GraftSession.oldGenMb, codegen)
           Bridge.drainListenerBus(spark)
           val tag = s"[querytrace] $name run=$r"
           printJobs(tag, t0, wall, jobs.synchronized(jobs.toVector).sortBy(_.start))
           println(f"$tag gc_delta=${gc1 - gc0}%6.2fs oldgen=${old0}%7.1f->${old1}%7.1fMB " +
-            f"codecache=${GraftSession.codeCacheMb}%6.1fMB")
+            f"codecache=${GraftSession.codeCacheMb}%6.1fMB " +
+            f"codegen_compiles=${cg1._1 - cg0._1} codegen_ms=${(cg1._2 - cg0._2) / 1e6}%.0f")
           printStreams(tag, progress.synchronized(progress.toVector))
         }
     }
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** Janino compiles so far in this JVM, planning and tasks alike
+    * (local mode): Spark's `CodegenMetrics` compilation-time count, and
+    * `CodeGenerator.compileTime`, the exact nanosecond sum of the same
+    * compiles. The histogram's own snapshot is a 1,028-sample decaying
+    * reservoir of whole milliseconds, so its sum stops being additive
+    * once the JVM has compiled more classes than that. */
+  private def codegen: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** One line per job in start order, then the SUMMARY. A gap is the
     * time from the latest job end seen so far to this job's start; the

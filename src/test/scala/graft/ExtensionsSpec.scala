@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.GraftExtensions
@@ -86,6 +87,46 @@ class ExtensionsSpec extends SparkSpec {
     assert(GraftExtensions.functionBuilders.map(_._1).contains("simhash64"))
   }
 
+  test("batch tasks, replays and collector drains all run under one class loader") {
+    // Spark gives each session's artifact UUID its own executor class
+    // loader, and every streaming query runs on a session clone with a
+    // fresh UUID; install turns isolation off, so generated code
+    // compiles once per JVM instead of once per query
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.sources.PollingSource
+    import graft.streaming.QanStream
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    ExtensionsSpec.loaders.clear()
+    val seen: Long => Long = ExtensionsSpec.seen
+    assert(spark.range(8).as[Long].map(seen).collect().length == 8)
+    (1 to 2).foreach { _ =>
+      val ms = MemoryStream[Long]
+      ms.addData(1L, 2L, 3L)
+      assert(QanStream.runToMemory(ms.toDS().map(seen).toDF("v"), OutputMode.Append())
+        .count() == 3)
+    }
+    object OneRow extends PollingSource.SnapshotFetcher {
+      override def fetch(s: SparkSession, pollIndex: Long): DataFrame =
+        s.range(1).toDF("v")
+    }
+    val staging = tmpDir("loader_staging", create = true)
+    val (outDir, checkpoint) = (tmpDir("loader_out"), tmpDir("loader_ckpt"))
+    (0L to 1L).foreach { i =>
+      PollingSource.pollToStaging(spark, OneRow, polls = 1, stagingDir = staging,
+        startIndex = i)
+      val staged = PollingSource.stagedStream(spark, staging,
+        spark.read.parquet(staging).schema)
+      PollingSource.drainAvailableNow(
+        staged.select(col("poll_index")).as[Long].map(seen).toDF("poll_index"),
+        outDir, checkpoint)
+    }
+    assert(spark.read.parquet(outDir).as[Long].collect().sorted.toSeq == Seq(0L, 1L))
+    assert(ExtensionsSpec.loaders.size == 1,
+      s"tasks ran under ${ExtensionsSpec.loaders.size} class loaders: ${ExtensionsSpec.loaders}")
+  }
+
   test("otel log export round-trips through the JSON sink/source") {
     val out = SparkEntry.queries("qan_otel_export")(spark, sf)
     val dir = tmpDir("otel_logs", create = true)
@@ -95,5 +136,15 @@ class ExtensionsSpec extends SparkSpec {
     assert(back.columns.sorted.toSeq == out.columns.sorted.toSeq)
     // all exported deltas are positive, per collector.go:230
     assert(back.filter(col("delta_value") <= 0).count() == 0)
+  }
+}
+
+object ExtensionsSpec {
+  /** The context class loaders the spec's tasks ran under. */
+  val loaders: java.util.Set[ClassLoader] = java.util.concurrent.ConcurrentHashMap.newKeySet()
+
+  def seen(x: Long): Long = {
+    loaders.add(Thread.currentThread.getContextClassLoader)
+    x
   }
 }
