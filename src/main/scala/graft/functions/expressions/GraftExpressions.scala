@@ -527,29 +527,12 @@ object AnnKernels {
     cellIds(best)
   }
 
-  /** Squared L2 distance to the nearest centroid — the quantization
-    * error the IVF index audit reports. Same argmin rule (and the
-    * same index-order accumulation, so DuckDB's list fold replays the
-    * double bit-exactly) as [[nearestCell]].
-    */
-  def nearestCellDist(v: ArrayData, cents: Array[Array[Double]]): Double = {
-    require(cents.nonEmpty, "nearestCellDist: empty centroid set")
-    var best = -1
-    var bestD = 0.0
-    var j = 0
-    while (j < cents.length) {
-      val d = sqDist(v, cents(j))
-      if (best < 0 || java.lang.Double.compare(d, bestD) < 0) { bestD = d; best = j }
-      j += 1
-    }
-    bestD
-  }
-
   /** One sweep, both answers: (nearest cell id, squared L2 to it) —
     * the argmin pass already holds the min distance, so callers that
-    * need the assignment AND the quantization error (OOD scoring)
-    * must not pay the centroid sweep twice. Same argmin/tie/NaN rule
-    * as [[nearestCell]]/[[nearestCellDist]].
+    * need the assignment AND the quantization error (OOD scoring,
+    * the index audit) must not pay the centroid sweep twice; callers
+    * that need only the error read its `sq`. Same argmin/tie/NaN rule
+    * as [[nearestCell]].
     */
   def nearestCellWithDist(v: ArrayData, cents: Array[Array[Double]],
       cellIds: Array[Int]): org.apache.spark.sql.catalyst.InternalRow = {
@@ -607,47 +590,26 @@ object AnnKernels {
     acc
   }
 
-  /** [[nearestCell]] over a PACKED centroid group (array<array<double>>
-    * column) — the two-level IVF fine-assignment kernel. The coarse
-    * quantizer prunes the centroid table to a per-row neighborhood that
-    * arrives as DATA through a broadcast join, not as a codegen
-    * reference object — at 10⁸ vectors the full fine table (~400 MB)
-    * never ships on the codegen classpath and the per-row sweep is the
-    * neighborhood, not all cells. Same (dist, cell) argmin total order
-    * (Double.compare, ties → earliest row = lowest cell when ids are
-    * ascending) as [[nearestCell]].
-    */
-  def nearestCellPacked(v: ArrayData, cents: ArrayData, ids: ArrayData): Int = {
-    val m = cents.numElements()
-    require(m > 0, "nearestCellPacked: empty centroid group")
-    // tie → LOWEST CELL ID, not earliest row: the concatenated probe
-    // groups arrive in probe order, not globally id-ascending, so
-    // "earliest row" would diverge from the oracle's
-    // ROW_NUMBER(ORDER BY dist, cell) on an exact distance tie
-    // (possible when two cells hold identical centroids)
-    var bestId = 0
-    var bestD = 0.0
-    var found = false
-    var j = 0
-    while (j < m) {
-      val d = sqDistPacked(v, cents.getArray(j))
-      val id = ids.getInt(j)
-      val cmp = if (found) java.lang.Double.compare(d, bestD) else -1
-      if (cmp < 0 || (cmp == 0 && id < bestId)) { bestD = d; bestId = id; found = true }
-      j += 1
-    }
-    bestId
-  }
-
-  /** The `nprobe` nearest cell ids within a packed group — the
-    * two-level probe set (see [[nearestCellPacked]]); same repeated
-    * argmin under Double.compare as [[nearestCells]].
+  /** [[nearestCells]] over a PACKED centroid group
+    * (array<array<double>> column) — the two-level IVF kernel: the
+    * `nprobe` nearest fine cells for a probe, the nearest one (at
+    * nprobe = 1) for an assignment. The coarse quantizer prunes the
+    * centroid table to a per-row neighbourhood that arrives as DATA
+    * through a broadcast join, not as a codegen reference object — at
+    * 10⁸ vectors the full fine table (~400 MB) never ships on the
+    * codegen classpath and the per-row sweep is the neighbourhood,
+    * not all cells. Same repeated argmin under Double.compare as
+    * [[nearestCells]], but ties resolve to the LOWEST CELL ID, not the
+    * earliest row: the concatenated probe groups arrive in probe
+    * order, not globally id-ascending, so "earliest row" would diverge
+    * from the oracle's ROW_NUMBER(ORDER BY dist, cell) on an exact
+    * distance tie (possible when two cells hold identical centroids).
     */
   def nearestCellsPacked(v: ArrayData, cents: ArrayData, ids: ArrayData,
       nprobe: Int): ArrayData = {
     val m = cents.numElements()
-    // mirror nearestCellPacked: an empty group would leave best = -1
-    // and surface as an opaque ArrayIndexOutOfBounds inside codegen
+    // an empty group would leave best = -1 and surface as an opaque
+    // ArrayIndexOutOfBounds inside codegen
     require(m > 0, "nearestCellsPacked: empty centroid group")
     val dists = new Array[Double](m)
     var j = 0
@@ -657,8 +619,7 @@ object AnnKernels {
     val out = new Array[Int](k)
     var r = 0
     while (r < k) {
-      // same (dist, LOWEST id) total order as nearestCellPacked — see
-      // the tie note there
+      // (dist, LOWEST id) total order — see the tie note above
       var best = -1
       var bestD = 0.0
       var bestId = 0
@@ -961,31 +922,11 @@ case class NearestCell(child: Expression, cents: Seq[Seq[Double]], cellIds: Seq[
   override def prettyName: String = "nearest_cell"
 }
 
-/** Squared L2 distance to the nearest centroid — the per-vector
-  * quantization error of an IVF assignment, as one compiled
-  * projection (pairs with [[NearestCell]] for the index audit).
-  */
-case class NearestCellDist(child: Expression, cents: Seq[Seq[Double]])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  @transient private lazy val centArr: Array[Array[Double]] = cents.map(_.toArray).toArray
-  override def dataType: DataType = DoubleType
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def nullSafeEval(v: Any): Any =
-    AnnKernels.nearestCellDist(v.asInstanceOf[ArrayData], centArr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("cents", centArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.AnnKernels.nearestCellDist($c, $cRef);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "nearest_cell_dist"
-}
-
 /** (nearest cell, squared distance to it) in ONE compiled centroid
   * sweep — for consumers needing assignment + quantization error
-  * together (OOD scoring): composing [[NearestCell]] with
-  * [[NearestCellDist]] would run the identical argmin twice.
+  * together (OOD scoring, the index audit): composing [[NearestCell]]
+  * with a separate distance kernel would run the identical argmin
+  * twice.
   */
 case class NearestCellWithDist(child: Expression, cents: Seq[Seq[Double]],
     cellIds: Seq[Int]) extends UnaryExpression with ImplicitCastInputTypes {
@@ -1036,32 +977,13 @@ case class NearestCells(child: Expression, cents: Seq[Seq[Double]], cellIds: Seq
   override def prettyName: String = "nearest_cells"
 }
 
-/** IVF fine assignment against a PACKED centroid group column
-  * (array<array<double>> + array<int> ids) — the two-level form's
-  * inner argmin. Unlike [[NearestCell]], the centroids are DATA (from
-  * a broadcast join on the coarse cell), not a codegen reference
-  * object, so the fine table never ships on the codegen classpath
-  * and per-row work is the pruned neighborhood, not all cells.
-  */
-case class NearestCellInGroup(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType),
-    ArrayType(ArrayType(DoubleType)), ArrayType(org.apache.spark.sql.types.IntegerType))
-  override def nullSafeEval(v: Any, cents: Any, ids: Any): Any =
-    AnnKernels.nearestCellPacked(v.asInstanceOf[ArrayData],
-      cents.asInstanceOf[ArrayData], ids.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, c, i) =>
-      s"${ev.value} = graft.functions.expressions.AnnKernels.nearestCellPacked($v, $c, $i);")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(first = f, second = s, third = t)
-  override def prettyName: String = "nearest_cell_in_group"
-}
-
-/** The `nprobe` nearest fine cells within a packed group — the
-  * two-level probe set (pairs with [[NearestCellInGroup]]).
+/** The `nprobe` nearest fine cells within a PACKED centroid group
+  * column (array<array<double>> + array<int> ids) — the two-level
+  * probe set, and at nprobe = 1 the two-level assignment. Unlike
+  * [[NearestCells]], the centroids are DATA (from a broadcast join on
+  * the coarse cell), not a codegen reference object, so the fine
+  * table never ships on the codegen classpath and per-row work is the
+  * pruned neighbourhood, not all cells.
   */
 case class NearestCellsInGroup(first: Expression, second: Expression, third: Expression,
     nprobe: Int) extends TernaryExpression with ImplicitCastInputTypes {
@@ -1770,12 +1692,8 @@ object GraftFunctions {
   def nearestCells(v: Column, cents: Array[Array[Double]], cellIds: Array[Int],
       nprobe: Int): Column =
     column(NearestCells(expression(v), cents.toSeq.map(_.toSeq), cellIds.toSeq, nprobe))
-  def nearestCellDist(v: Column, cents: Array[Array[Double]]): Column =
-    column(NearestCellDist(expression(v), cents.toSeq.map(_.toSeq)))
   def nearestCellWithDist(v: Column, cents: Array[Array[Double]], cellIds: Array[Int]): Column =
     column(NearestCellWithDist(expression(v), cents.toSeq.map(_.toSeq), cellIds.toSeq))
-  def nearestCellInGroup(v: Column, cents: Column, ids: Column): Column =
-    column(NearestCellInGroup(expression(v), expression(cents), expression(ids)))
   def nearestCellsInGroup(v: Column, cents: Column, ids: Column, nprobe: Int): Column =
     column(NearestCellsInGroup(expression(v), expression(cents), expression(ids), nprobe))
   def int8QuantStats(v: Column): Column = column(Int8QuantStats(expression(v)))

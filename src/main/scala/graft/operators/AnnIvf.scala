@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.functions.expressions.GraftFunctions
 
@@ -15,7 +13,9 @@ import graft.functions.expressions.GraftFunctions
   * refinement (cell means with decimal-exact sums, so the refinement
   * is engine-replayable) → corpus assigned to its nearest refined
   * centroid (the inverted file) → each query probes its `nprobe`
-  * nearest cells and exact-cosine re-ranks inside them.
+  * nearest cells and exact-cosine re-ranks inside them. This object
+  * holds the training and one-level primitives; the built index, its
+  * assignment, probe and top-k live in [[IvfPq]].
   *
   * At 100 TB: centroids are a tiny table (≤ cells×dim doubles) that is
   * collected once and shipped to executors as a codegen reference
@@ -67,82 +67,23 @@ object AnnIvf {
   // family at ~90–114× wall-clock for 100× data). Past the ceiling
   // the two-level index (capped-sample training, √cells coarse
   // constants, broadcast fine neighborhoods) is the only scale-safe
-  // choice. Encoding the cutover HERE — rather than in per-query
-  // prose — means no consumer can select the superlinear path at
-  // scale by accident: emb_cell_dedup and the streaming SemDeDup
-  // calibration route through [[invertedFileAuto]], which resolves to
-  // the one-level plan at every oracle-checked scale (n ≤ ~200k ≪
-  // the ceiling), so the centroid-literal oracle replays stay valid
+  // choice. The cutover lives in ONE builder, [[IvfPq.indexAuto]],
+  // and its result is ONE value, [[IvfPq.Index]], that every IVF cell
+  // consumer (SemDeDup batch + streaming calibration, the composed
+  // search, the store) assigns and probes through — no consumer can
+  // select the superlinear path at scale by accident. At every
+  // oracle-checked scale (n ≤ ~200k ≪ the ceiling) it resolves to the
+  // one-level plan, so the centroid-literal oracle replays stay valid
   // unchanged. AnnSpec pins the cutover and bit-exact agreement of
-  // the two regimes at wProbe = all (the hard half of the handover).
+  // the two shapes at wProbe = all (the hard half of the handover).
 
   /** One-level ceiling: the largest corpus whose full fine-centroid
     * table still ships sanely as a codegen constant (~10⁵ cells at
     * adaptiveCells' 125-occupancy rule ≈ 50 MB) with an O(cells)
-    * per-row argmin. Past it, [[regimeFor]] switches to the two-level
-    * index.
+    * per-row argmin. Past it, [[IvfPq.indexAuto]] builds the
+    * two-level index.
     */
   val OneLevelMaxVectors: Long = 10L * 1000 * 1000
-
-  sealed trait IvfRegime
-  case object OneLevel extends IvfRegime
-  case object TwoLevel extends IvfRegime
-
-  /** Which index build a corpus of `n` vectors gets. `oneLevelMax` is
-    * parameterized for specs only — production call sites use the
-    * default ceiling.
-    */
-  def regimeFor(n: Long, oneLevelMax: Long = OneLevelMaxVectors): IvfRegime =
-    if (n <= oneLevelMax) OneLevel else TwoLevel
-
-  /** The inverted file through whichever index [[regimeFor]] selects
-    * for a corpus of `n` vectors — the structural handover every IVF
-    * cell consumer (SemDeDup batch + streaming calibration) routes
-    * through. One-level: full-corpus Lloyd, centroid constants,
-    * O(cells)-per-row argmin. Two-level: capped-sample training,
-    * coarse pruning, O(√cells)-per-row (wProbe coarse neighborhoods).
-    * At wProbe = all-coarse-cells the two assignments agree bit for
-    * bit (AnnSpec); at the production wProbe the divergence is the
-    * audited boundary loss (emb_cell_recall_two_level /
-    * emb_two_level_probe_curve).
-    */
-  def invertedFileAuto(corpus: DataFrame, n: Long, dim: Int,
-      wProbe: Int = 2, oneLevelMax: Long = OneLevelMaxVectors): DataFrame = {
-    val cells = adaptiveCells(n)
-    regimeFor(n, oneLevelMax) match {
-      case OneLevel =>
-        val (ids, cents) = collectCentroids(refinedCentroids(corpus, cells, dim))
-        invertedFile(corpus, ids, cents)
-      case TwoLevel =>
-        invertedFileTwoLevel(corpus,
-          twoLevelIndex(corpus, cells, dim, knownCount = n), wProbe)
-    }
-  }
-
-  /** Scan-side cell assignment for an ARRIVING (id, v) relation scored
-    * against an index calibrated offline on `corpus` — the streaming
-    * SemDeDup's calibrate-offline/apply-online stage, regime-dispatched
-    * like [[invertedFileAuto]]. One-level: a single stateless
-    * projection against the centroid codegen constants. Two-level:
-    * coarse-constant probe + broadcast join against the fine groups +
-    * packed argmin — every stage is a stateless stream-static
-    * operation (projection or broadcast equi-join), so BOTH regimes
-    * keep the no-state-store/no-watermark/no-shuffle property the
-    * streaming path's scale argument rests on. Returns (id, v, cell).
-    */
-  def assignCellsAuto(corpus: DataFrame, n: Long, dim: Int, arriving: DataFrame,
-      wProbe: Int = 2, oneLevelMax: Long = OneLevelMaxVectors): DataFrame = {
-    val cells = adaptiveCells(n)
-    regimeFor(n, oneLevelMax) match {
-      case OneLevel =>
-        val (ids, cents) = collectCentroids(refinedCentroids(corpus, cells, dim))
-        arriving.select(col("id"), col("v"),
-          GraftFunctions.nearestCell(col("v"), cents, ids).as("cell"))
-      case TwoLevel =>
-        invertedFileTwoLevel(arriving,
-          twoLevelIndex(corpus, cells, dim, knownCount = n), wProbe)
-    }
-  }
 
   /** Deterministic seeded initial centroids (same xorshift family as
     * AnnLsh.hyperplanes, different seed) — stable across runs and
@@ -242,7 +183,8 @@ object AnnIvf {
   //  - each vector argmins over the coarse table (O(√cells)), then
   //    over the fine members of its `wProbe` nearest coarse groups,
   //    which arrive as DATA through a broadcast hash join on the
-  //    coarse id (NearestCellInGroup) — per-row work
+  //    coarse id (IvfPq.assign / IvfPq.probe, NearestCellsInGroup at
+  //    k = 1 for assignment) — per-row work
   //    O(√cells·wProbe + wProbe·cells/√cells) ≈ O(√cells), and the
   //    fine table rides Spark's torrent broadcast, never the codegen
   //    classpath.
@@ -284,17 +226,6 @@ object AnnIvf {
     else math.max(1L, math.min(DefaultSampleRate,
       (TrainCap * SampleModulus + n - 1) / n))
 
-  /** Two-level index: coarse centroids (codegen constants, √cells-
-    * sized) + the fine-centroid groups keyed by coarse cell (a
-    * broadcast-join table). `groups` columns: coarse, gcents
-    * array<array<double>>, gids array<int> — both ascending by fine
-    * cell id so the packed argmin's tie rule matches ROW_NUMBER's.
-    * `coarseIds`/`coarseCents` hold ONLY coarse cells that own ≥ 1
-    * fine member under the final assignment (see [[twoLevelIndex]]).
-    */
-  final case class TwoLevelIndex(coarseIds: Array[Int],
-      coarseCents: Array[Array[Double]], groups: DataFrame)
-
   /** Build the two-level index: fine Lloyd on the training sample,
     * coarse Lloyd ([[CoarseRounds]] rounds, seed [[CoarseSeed]]) over
     * the fine-centroid table itself (≤ cells rows — the "corpus" of
@@ -304,18 +235,21 @@ object AnnIvf {
   val CoarseSeed = 11L
   val CoarseRounds = 2
 
+  /** Coarse neighbourhoods a two-level assignment or probe searches —
+    * the production boundary-loss trade (emb_cell_recall_two_level,
+    * emb_two_level_probe_curve); the value [[twoLevelIndex]] builds.
+    */
+  val WProbe = 2
+
   def coarseK(cells: Int): Int = math.max(1, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
-  def twoLevelIndex(corpus: DataFrame, cells: Int, dim: Int,
-      sampleRate: Long = -1L, knownCount: Long = -1L): TwoLevelIndex = {
+  def twoLevelIndex(corpus: DataFrame, cells: Int, dim: Int, n: Long,
+      sampleRate: Long = -1L): IvfPq.TwoLevelIndex = {
     // -1 = auto: capped sample rate (see sampleRateFor) — resolves to
-    // DefaultSampleRate at every oracle-checked scale. Every call site
-    // has already counted the corpus for adaptiveCells — pass it as
-    // knownCount so index sizing costs ONE corpus scan, not two (at
-    // 100 TB the second count is a wasted full pass).
-    val rate =
-      if (sampleRate > 0) sampleRate
-      else sampleRateFor(if (knownCount >= 0) knownCount else corpus.count())
+    // DefaultSampleRate at every oracle-checked scale. `n` is the count
+    // every caller already took for adaptiveCells, so index sizing
+    // costs ONE corpus scan, not two.
+    val rate = if (sampleRate > 0) sampleRate else sampleRateFor(n)
     val train = corpus.where(trainingSample(col("id"), rate))
     var (fineIds, fineCents) = collectCentroids(refinedCentroids(train, cells, dim))
     // Empty-sample totality: a tiny corpus can hash-sample to ZERO
@@ -350,7 +284,7 @@ object AnnIvf {
     // assignment: cIds lists cells with members under the PREVIOUS
     // Lloyd round's assignment, and recomputed means can strand one.
     // A probe targeting an empty cell finds no neighborhood, and the
-    // probe-0 inner join in invertedFileTwoLevel would then silently
+    // probe-0 inner join of IvfPq's neighbourhood join would silently
     // drop the vector while the oracle resolves it via its other
     // probes. Restrict the probe table to cells that own ≥ 1 fine
     // member (the oracle's ivf2Ctes applies the identical restriction
@@ -359,126 +293,6 @@ object AnnIvf {
     // touches ≤ coarseK rows, never the corpus.
     val present = groups.select(col("coarse")).collect().map(_.getInt(0)).toSet
     val keep = cIds.indices.filter(i => present.contains(cIds(i))).toArray
-    TwoLevelIndex(keep.map(cIds), keep.map(cCents), groups)
-  }
-
-  /** The two-level inverted file: coarse probe (projection against the
-    * √cells constants) → broadcast join per probed group → packed
-    * argmin over the unioned neighborhood. `wProbe` coarse groups
-    * bound the boundary loss (wProbe = all coarse cells ⇒ exactly the
-    * one-level assignment).
-    */
-  def invertedFileTwoLevel(vecs: DataFrame, idx: TwoLevelIndex,
-      wProbe: Int = 2): DataFrame = {
-    val emptyC = expr("CAST(array() AS ARRAY<ARRAY<DOUBLE>>)")
-    val emptyI = expr("CAST(array() AS ARRAY<INT>)")
-    var out = vecs.withColumn("__probes",
-      GraftFunctions.nearestCells(col("v"), idx.coarseCents, idx.coarseIds, wProbe))
-    var cs: Column = null
-    var is: Column = null
-    for (p <- 0 until wProbe) {
-      val g = idx.groups.select(col("coarse").as(s"__c$p"),
-        col("gcents").as(s"__gc$p"), col("gids").as(s"__gi$p"))
-      // probe 1 always resolves: the index's coarse table is
-      // restricted to cells with ≥ 1 fine member (twoLevelIndex), so
-      // every probed cell exists in `groups`; later probes may still
-      // not exist when fewer coarse cells survive than wProbe
-      out = out.join(broadcast(g),
-        expr(s"try_element_at(__probes, ${p + 1})") === col(s"__c$p"),
-        if (p == 0) "inner" else "left")
-      val c = if (p == 0) col(s"__gc$p") else coalesce(col(s"__gc$p"), emptyC)
-      val i = if (p == 0) col(s"__gi$p") else coalesce(col(s"__gi$p"), emptyI)
-      cs = if (cs == null) c else concat(cs, c)
-      is = if (is == null) i else concat(is, i)
-    }
-    // preserve the input columns (same contract as probeCellsTwoLevel
-    // and the one-level invertedFile): attributes ride the assignment
-    val inCols = vecs.columns.toSeq
-    out.withColumn("cell", GraftFunctions.nearestCellInGroup(col("v"), cs, is))
-      .select((inCols.map(col) :+ col("cell")): _*)
-  }
-
-  /** Query-side two-level probe: coarse argmin over the √cells
-    * constants, broadcast join per probed coarse group, the `nprobe`
-    * nearest fine cells out of the unioned neighborhood — appended as
-    * an exploded `cell` column, input columns preserved. Factored out
-    * of [[topKTwoLevel]] so EVERY two-level probe consumer (the plain
-    * search, the composed IVF+PQ search, the streaming serve) probes
-    * through the identical plan: projection + wProbe broadcast joins,
-    * no window, no corpus shuffle — legal on streaming inputs too
-    * (stream-static broadcast joins only).
-    */
-  def probeCellsTwoLevel(df: DataFrame, vCol: String, idx: TwoLevelIndex,
-      nprobe: Int, wProbe: Int): DataFrame = {
-    val emptyC = expr("CAST(array() AS ARRAY<ARRAY<DOUBLE>>)")
-    val emptyI = expr("CAST(array() AS ARRAY<INT>)")
-    val inCols = df.columns.toSeq
-    var q = df.withColumn("__tlprobes",
-      GraftFunctions.nearestCells(col(vCol), idx.coarseCents, idx.coarseIds, wProbe))
-    var cs: Column = null
-    var is: Column = null
-    for (p <- 0 until wProbe) {
-      val g = idx.groups.select(col("coarse").as(s"__qc$p"),
-        col("gcents").as(s"__qgc$p"), col("gids").as(s"__qgi$p"))
-      // same resolve-or-skip join rule as invertedFileTwoLevel: probe 1
-      // always resolves (the coarse table is restricted to non-empty
-      // cells), later probes may not exist when fewer coarse cells
-      // survive than wProbe
-      q = q.join(broadcast(g),
-        expr(s"try_element_at(__tlprobes, ${p + 1})") === col(s"__qc$p"),
-        if (p == 0) "inner" else "left")
-      val c = if (p == 0) col(s"__qgc$p") else coalesce(col(s"__qgc$p"), emptyC)
-      val i = if (p == 0) col(s"__qgi$p") else coalesce(col(s"__qgi$p"), emptyI)
-      cs = if (cs == null) c else concat(cs, c)
-      is = if (is == null) i else concat(is, i)
-    }
-    q.withColumn("cell",
-        explode(GraftFunctions.nearestCellsInGroup(col(vCol), cs, is, nprobe)))
-      .select((inCols.map(col) :+ col("cell")): _*)
-  }
-
-  /** Top-k approximate neighbours through the two-level index: both
-    * the corpus assignment and the query probes argmin over coarse
-    * neighborhoods; re-rank is the same exact-cosine stage as
-    * [[topK]].
-    */
-  def topKTwoLevel(vecs: DataFrame, queries: DataFrame, k: Int, cells: Int,
-      dim: Int, nprobe: Int = 2, wProbe: Int = 2,
-      sampleRate: Long = -1L, knownCount: Long = -1L): DataFrame = {
-    val idx = twoLevelIndex(vecs, cells, dim, sampleRate, knownCount)
-    val inverted = invertedFileTwoLevel(vecs, idx, wProbe)
-    val probes = probeCellsTwoLevel(queries, "qv", idx, nprobe, wProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
-    probes.join(inverted, Seq("cell"))
-      .filter(col("query_id") =!= col("id"))
-      .withColumn("cos_sim", GraftFunctions.cosineSimilarity(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cos_sim"), 4).as("cos_sim"))
-  }
-
-  /** Top-k approximate neighbours per query through the inverted file.
-    *
-    * @param vecs    (id, v: array<double>) corpus
-    * @param queries (query_id, qv: array<double>) query set
-    */
-  def topK(vecs: DataFrame, queries: DataFrame, k: Int, cells: Int, dim: Int,
-      nprobe: Int = 2): DataFrame = {
-    val (cellIds, cents) = collectCentroids(refinedCentroids(vecs, cells, dim))
-    val inverted = invertedFile(vecs, cellIds, cents)
-    // each query probes its nprobe nearest cells — one projection +
-    // explode, never a crossJoin against the centroid table
-    val probes = queries.select(col("query_id"), col("qv"),
-      explode(GraftFunctions.nearestCells(col("qv"), cents, cellIds, nprobe)).as("cell"))
-    probes.join(inverted, Seq("cell"))
-      .filter(col("query_id") =!= col("id"))
-      .withColumn("cos_sim", GraftFunctions.cosineSimilarity(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cos_sim"), 4).as("cos_sim"))
+    IvfPq.TwoLevelIndex(keep.map(cIds), keep.map(cCents), groups, WProbe)
   }
 }

@@ -17,16 +17,18 @@ import graft.functions.expressions.GraftFunctions
   * Two structural disciplines both live HERE, shared by every composed
   * consumer (batch search, rerank tuning curve, streaming serve):
   *
-  *  - '''Regime dispatch''' ([[AnnIvf.regimeFor]]): below the
-  *    one-level ceiling the index is the full-corpus Lloyd build with
-  *    centroid codegen constants; past ~10⁷ vectors [[indexAuto]]
-  *    selects the two-level index (capped-sample training, √cells
-  *    coarse constants, broadcast fine neighborhoods) — the same
-  *    handover SemDeDup routes through, so the O(cells)-per-row /
-  *    50 MB-constant one-level shape is unreachable at scale by
-  *    construction. At every oracle-checked scale the dispatch
-  *    resolves to one-level, so the centroid-literal replays stay
-  *    valid unchanged; the forced two-level arm has its own
+  *  - '''One index value''' ([[Index]]): below the one-level
+  *    ceiling [[indexAuto]] builds the full-corpus Lloyd index with
+  *    centroid codegen constants; past ~10⁷ vectors it builds the
+  *    two-level index (capped-sample training, √cells coarse
+  *    constants, broadcast fine neighbourhoods, `wProbe` carried in
+  *    the value). Every IVF consumer — SemDeDup, the streaming
+  *    calibration, the flat and composed searches, the store — builds,
+  *    assigns ([[assign]]) and probes ([[probe]]) through it, so the
+  *    O(cells)-per-row / 50 MB-constant one-level shape is unreachable
+  *    at scale by construction. At every oracle-checked scale the
+  *    builder resolves to one-level, so the centroid-literal replays
+  *    stay valid unchanged; the forced two-level arm has its own
   *    full-composition oracle (emb_ivfpq_topk_two_level).
   *  - '''True ADC''': the candidate relation carries (cell, id,
   *    codes) — m ints per vector, the part a 100 TB deployment keeps
@@ -42,53 +44,104 @@ import graft.functions.expressions.GraftFunctions
   */
 object IvfPq {
 
-  /** A built search index, regime-resolved. */
+  /** A built IVF index — the one value every IVF consumer builds
+    * ([[indexAuto]], [[AnnIvf.twoLevelIndex]]), assigns ([[assign]])
+    * and probes ([[probe]]) through.
+    */
   sealed trait Index
   final case class OneLevelIndex(cellIds: Array[Int],
       cents: Array[Array[Double]]) extends Index
-  final case class TwoLevelIndexW(idx: AnnIvf.TwoLevelIndex, wProbe: Int) extends Index
 
-  /** Build the index through whichever regime [[AnnIvf.regimeFor]]
-    * selects for a corpus of `n` vectors — the structural handover
-    * every composed-search consumer routes through.
+  /** Two-level index: coarse centroids (codegen constants, √cells-
+    * sized), the fine-centroid groups keyed by coarse cell (a
+    * broadcast-join table; columns coarse, gcents
+    * array<array<double>>, gids array<int>, both ascending by fine
+    * cell id so the packed argmin's tie rule matches ROW_NUMBER's),
+    * and `wProbe`, the number of nearest coarse neighbourhoods an
+    * assignment or probe searches. `coarseIds`/`coarseCents` hold ONLY
+    * coarse cells that own ≥ 1 fine member (see
+    * [[AnnIvf.twoLevelIndex]]).
     */
-  def indexAuto(corpus: DataFrame, n: Long, dim: Int, wProbe: Int = 2,
+  final case class TwoLevelIndex(coarseIds: Array[Int],
+      coarseCents: Array[Array[Double]], groups: DataFrame,
+      wProbe: Int) extends Index
+
+  /** Build the index a corpus of `n` vectors gets: the one-level
+    * full-corpus Lloyd build up to `oneLevelMax` vectors, the
+    * two-level index past it (see the AnnIvf two-level block). The
+    * one cutover every IVF consumer routes through, so the
+    * O(cells)-per-row one-level shape is unreachable at scale by
+    * construction. `oneLevelMax` is parameterized for specs and the
+    * forced-two-level queries; production call sites use the default
+    * ceiling.
+    */
+  def indexAuto(corpus: DataFrame, n: Long, dim: Int,
       oneLevelMax: Long = AnnIvf.OneLevelMaxVectors): Index = {
     val cells = AnnIvf.adaptiveCells(n)
-    AnnIvf.regimeFor(n, oneLevelMax) match {
-      case AnnIvf.OneLevel =>
-        val (ids, cents) = AnnIvf.collectCentroids(
-          AnnIvf.refinedCentroids(corpus, cells, dim))
-        OneLevelIndex(ids, cents)
-      case AnnIvf.TwoLevel =>
-        TwoLevelIndexW(
-          AnnIvf.twoLevelIndex(corpus, cells, dim, knownCount = n), wProbe)
-    }
+    if (n <= oneLevelMax) {
+      val (ids, cents) = AnnIvf.collectCentroids(
+        AnnIvf.refinedCentroids(corpus, cells, dim))
+      OneLevelIndex(ids, cents)
+    } else AnnIvf.twoLevelIndex(corpus, cells, dim, n)
   }
 
-  /** Corpus assignment under the index: (id, v, cell) — projection
-    * only (one-level) or projection + broadcast joins (two-level);
-    * never a corpus shuffle.
+  /** Corpus assignment under the index: the input columns plus `cell`
+    * — projection only (one-level) or projection + broadcast joins
+    * (two-level: the fine argmin is the probe at k = 1, whose
+    * (dist, lowest id) order is the one-level argmin's); never a
+    * corpus shuffle, and legal on streaming inputs.
     */
   def assign(index: Index, vecs: DataFrame): DataFrame = index match {
     case OneLevelIndex(ids, cents) => AnnIvf.invertedFile(vecs, ids, cents)
-    case TwoLevelIndexW(idx, w) => AnnIvf.invertedFileTwoLevel(vecs, idx, w)
+    case t: TwoLevelIndex => neighbourhoods(t, vecs, "v")((cs, is) =>
+      element_at(GraftFunctions.nearestCellsInGroup(col("v"), cs, is, 1), 1))
   }
 
   /** Query-side probe: the `nprobe` nearest cells appended as an
     * exploded `cell` column (input columns preserved). One-level: a
     * single compiled argmin projection; two-level: coarse probe +
-    * broadcast neighborhood joins ([[AnnIvf.probeCellsTwoLevel]]).
-    * Both shapes are legal on streaming inputs (no window, no state).
+    * broadcast neighbourhood joins. Both shapes are legal on streaming
+    * inputs (no window, no state).
     */
   def probe(index: Index, df: DataFrame, vCol: String, nprobe: Int): DataFrame =
     index match {
       case OneLevelIndex(ids, cents) =>
         df.withColumn("cell",
           explode(GraftFunctions.nearestCells(col(vCol), cents, ids, nprobe)))
-      case TwoLevelIndexW(idx, w) =>
-        AnnIvf.probeCellsTwoLevel(df, vCol, idx, nprobe, w)
+      case t: TwoLevelIndex => neighbourhoods(t, df, vCol)((cs, is) =>
+        explode(GraftFunctions.nearestCellsInGroup(col(vCol), cs, is, nprobe)))
     }
+
+  /** The two-level neighbourhood join shared by [[assign]] and
+    * [[probe]]: the `wProbe` nearest coarse cells (a projection
+    * against the √cells constants), one broadcast join per probed
+    * group, and `cell` = `pick(cents, ids)` over the concatenated
+    * neighbourhood. Probe 1 always resolves (the coarse table is
+    * restricted to non-empty cells) and joins inner; later probes may
+    * not exist when fewer coarse cells survive than `wProbe`, so they
+    * join left and contribute nothing. Input columns are preserved, so
+    * attributes ride the assignment as in the one-level
+    * [[AnnIvf.invertedFile]].
+    */
+  private def neighbourhoods(idx: TwoLevelIndex, df: DataFrame, vCol: String)(
+      pick: (Column, Column) => Column): DataFrame = {
+    val emptyC = expr("CAST(array() AS ARRAY<ARRAY<DOUBLE>>)")
+    val emptyI = expr("CAST(array() AS ARRAY<INT>)")
+    var out = df.withColumn("__probes",
+      GraftFunctions.nearestCells(col(vCol), idx.coarseCents, idx.coarseIds, idx.wProbe))
+    val members = for (p <- 0 until idx.wProbe) yield {
+      val g = idx.groups.select(col("coarse").as(s"__c$p"),
+        col("gcents").as(s"__gc$p"), col("gids").as(s"__gi$p"))
+      out = out.join(broadcast(g),
+        expr(s"try_element_at(__probes, ${p + 1})") === col(s"__c$p"),
+        if (p == 0) "inner" else "left")
+      if (p == 0) (col(s"__gc$p"), col(s"__gi$p"))
+      else (coalesce(col(s"__gc$p"), emptyC), coalesce(col(s"__gi$p"), emptyI))
+    }
+    out.withColumn("cell",
+        pick(concat(members.map(_._1): _*), concat(members.map(_._2): _*)))
+      .select((df.columns.toSeq.map(col) :+ col("cell")): _*)
+  }
 
   /** The coded inverted file — the hot index a 100 TB deployment keeps
     * memory-resident: (cell, id, codes array&lt;int&gt; of length m).
@@ -121,7 +174,7 @@ object IvfPq {
           .as("adc_cos"))
 
   /** Train BOTH halves of the composed search concurrently: the
-    * regime-dispatched index ([[indexAuto]]) and the PQ codebooks
+    * IVF index ([[indexAuto]]) and the PQ codebooks
     * (AnnPq) are INDEPENDENT training chains over the same corpus
     * (typically persisted by the caller) — overlapping them collapses
     * the serialized per-job scheduling latency of the two Lloyd
@@ -131,10 +184,10 @@ object IvfPq {
     * immutable corpus.
     */
   def trainHalves(corpus: DataFrame, n: Long, dim: Int, m: Int, dsub: Int,
-      kCodes: Int, wProbe: Int = 2,
+      kCodes: Int,
       oneLevelMax: Long = AnnIvf.OneLevelMaxVectors): (Index, Array[Array[Array[Double]]]) =
     Par.two(
-      () => indexAuto(corpus, n, dim, wProbe, oneLevelMax),
+      () => indexAuto(corpus, n, dim, oneLevelMax),
       () => AnnPq.collectCodebooks(
         AnnPq.refinedCodebooks(corpus, m, dsub, kCodes), m))
 
@@ -169,16 +222,33 @@ object IvfPq {
         round(col("adc_cos"), 4).as("adc_cos"), col("adc_rank"))
   }
 
-  /** End-to-end composed search: train (regime-dispatched index + PQ
+  /** IVF-flat top-k over a built index (either shape): the corpus is
+    * assigned ([[assign]]), each query (query_id, qv) probes its
+    * `nprobe` nearest cells ([[probe]]) and every candidate in them is
+    * re-ranked by exact cosine — no codes, no ADC pool. Output:
+    * (query_id, rank, neighbor_id, cos_sim), unsorted.
+    */
+  def flatTopK(index: Index, vecs: DataFrame, queries: DataFrame, k: Int,
+      nprobe: Int): DataFrame =
+    probe(index, queries.select(col("query_id"), col("qv")), "qv", nprobe)
+      .join(assign(index, vecs), Seq("cell"))
+      .filter(col("query_id") =!= col("id"))
+      .withColumn("cos_sim", GraftFunctions.cosineSimilarity(col("qv"), col("v")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
+        round(col("cos_sim"), 4).as("cos_sim"))
+
+  /** End-to-end composed search: train (the [[indexAuto]] index + PQ
     * codebooks) and run [[topKWith]]. `oneLevelMax` is parameterized
     * for specs and the forced-two-level query; production call sites
     * use the default ceiling.
     */
   def topK(corpus: DataFrame, n: Long, dim: Int, queries: DataFrame, k: Int,
       nprobe: Int, rerank: Int, m: Int, dsub: Int, kCodes: Int,
-      wProbe: Int = 2, oneLevelMax: Long = AnnIvf.OneLevelMaxVectors): DataFrame = {
-    val (index, books) =
-      trainHalves(corpus, n, dim, m, dsub, kCodes, wProbe, oneLevelMax)
+      oneLevelMax: Long = AnnIvf.OneLevelMaxVectors): DataFrame = {
+    val (index, books) = trainHalves(corpus, n, dim, m, dsub, kCodes, oneLevelMax)
     topKWith(index, books, dsub, corpus, queries, k, nprobe, rerank)
   }
 
@@ -188,7 +258,7 @@ object IvfPq {
   // single most common production constraint on a retrieval index;
   // FAISS "searching with filters", Milvus/Qdrant filtered HNSW).
   // Two regimes, dispatched on SELECTIVITY — the same
-  // structural-handover discipline as AnnIvf.regimeFor, because each
+  // structural-handover discipline as IvfPq.indexAuto, because each
   // shape is catastrophically wrong in the other's regime:
   //
   //  - PreFilteredProbe (broad filters): probe the index with a
@@ -254,8 +324,8 @@ object IvfPq {
   /** [[codedInvertedFile]] carrying metadata attribute columns — the
     * wider schema a deployment stores when it serves filtered
     * queries: (cell, id, codes, attrs…). Still projection-only
-    * passes; the attrs ride the assignment (invertedFile /
-    * invertedFileTwoLevel preserve input columns).
+    * passes; the attrs ride the assignment ([[assign]] preserves
+    * input columns).
     */
   def codedInvertedFileAttrs(index: Index, corpus: DataFrame,
       books: Array[Array[Array[Double]]], dsub: Int,
@@ -315,8 +385,8 @@ object IvfPq {
         // or in the large-corpus regime the boost silently does not
         // materialize (FilteredAnnSpec pins the forced-two-level leg)
         val probeIndex = index match {
-          case TwoLevelIndexW(idx, w) =>
-            TwoLevelIndexW(idx, math.min(w * boost, idx.coarseIds.length))
+          case t: TwoLevelIndex =>
+            t.copy(wProbe = math.min(t.wProbe * boost, t.coarseIds.length))
           case one => one
         }
         val surv = probe(probeIndex, queries, "qv", nprobe * boost)
@@ -344,19 +414,18 @@ object IvfPq {
     }
   }
 
-  /** End-to-end filtered search: train (regime-dispatched index + PQ
+  /** End-to-end filtered search: train (the [[indexAuto]] index + PQ
     * codebooks, same as [[topK]]) and run [[filteredTopKWith]].
     */
   def filteredTopK(corpus: DataFrame, n: Long, dim: Int, attrs: Seq[String],
       pred: Column, queries: DataFrame, k: Int, nprobe: Int, rerank: Int,
       m: Int, dsub: Int, kCodes: Int, probeBoost: Int = 2,
-      bruteFrac: Double = 0.05, wProbe: Int = 2,
-      oneLevelMax: Long = AnnIvf.OneLevelMaxVectors): DataFrame = {
+      bruteFrac: Double = 0.05): DataFrame = {
     val vecsOnly = corpus.select(col("id"), col("v"))
     // the sizing count is a third independent chain over the corpus —
     // overlapped with the two training halves
     val ((index, books), filteredN) = Par.two(
-      () => trainHalves(vecsOnly, n, dim, m, dsub, kCodes, wProbe, oneLevelMax),
+      () => trainHalves(vecsOnly, n, dim, m, dsub, kCodes),
       () => corpus.filter(pred).count())
     filteredTopKWith(index, books, dsub, corpus, attrs, pred, queries,
       k, nprobe, rerank, n, filteredN, probeBoost, bruteFrac)
@@ -423,13 +492,12 @@ object IvfPq {
     * serves in one process does not pay a second load.
     */
   def buildIndex(corpus: DataFrame, n: Long, dim: Int, m: Int, dsub: Int,
-      kCodes: Int, dir: String, wProbe: Int = 2,
+      kCodes: Int, dir: String,
       oneLevelMax: Long = AnnIvf.OneLevelMaxVectors): (Index, Array[Array[Array[Double]]]) = {
     val spark = corpus.sparkSession
     SegmentStore.reset(spark, dir)
-    val (index, books) =
-      trainHalves(corpus, n, dim, m, dsub, kCodes, wProbe, oneLevelMax)
-    writeStore(spark, index, books, m, dsub, wProbe, corpus, dir)
+    val (index, books) = trainHalves(corpus, n, dim, m, dsub, kCodes, oneLevelMax)
+    writeStore(spark, index, books, m, dsub, corpus, dir)
     (index, books)
   }
 
@@ -439,7 +507,7 @@ object IvfPq {
     * shard's slice under frozen halves).
     */
   private def writeStore(spark: SparkSession, index: Index,
-      books: Array[Array[Array[Double]]], m: Int, dsub: Int, wProbe: Int,
+      books: Array[Array[Array[Double]]], m: Int, dsub: Int,
       slice: DataFrame, dir: String): Unit = {
     // driver-held rows (centroids/codebooks/meta are KB–MB by
     // construction): ONE partition — createDataFrame otherwise
@@ -449,9 +517,11 @@ object IvfPq {
       spark.createDataFrame(new java.util.ArrayList(
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
         .coalesce(1)
-    val regime = index match {
-      case _: OneLevelIndex => "one_level"
-      case _: TwoLevelIndexW => "two_level"
+    // a one-level store keeps the w_probe column at the two-level
+    // default; only a two-level load reads it back
+    val (regime, wProbe) = index match {
+      case _: OneLevelIndex => ("one_level", AnnIvf.WProbe)
+      case t: TwoLevelIndex => ("two_level", t.wProbe)
     }
     // the five store tables are independent writes to disjoint subdirs
     // — the coded file (the only data-sized job) overlaps the tiny
@@ -463,11 +533,11 @@ object IvfPq {
         toDf(ids.zip(cents).toSeq.map { case (i, c) =>
           org.apache.spark.sql.Row(i, c.toSeq) }, centroidSchema)
           .write.mode("overwrite").parquet(s"$dir/centroids"))
-      case TwoLevelIndexW(idx, _) => Seq(
-        () => toDf(idx.coarseIds.zip(idx.coarseCents).toSeq.map { case (i, c) =>
+      case t: TwoLevelIndex => Seq(
+        () => toDf(t.coarseIds.zip(t.coarseCents).toSeq.map { case (i, c) =>
           org.apache.spark.sql.Row(i, c.toSeq) }, centroidSchema)
           .write.mode("overwrite").parquet(s"$dir/coarse"),
-        () => idx.groups.write.mode("overwrite").parquet(s"$dir/groups"))
+        () => t.groups.write.mode("overwrite").parquet(s"$dir/groups"))
     }) ++ Seq(
       () => toDf(books.toSeq.zipWithIndex.flatMap { case (book, s) =>
         book.toSeq.zipWithIndex.map { case (cent, code) =>
@@ -501,11 +571,11 @@ object IvfPq {
     * caller.
     */
   def encodeShard(index: Index, books: Array[Array[Array[Double]]],
-      dsub: Int, slice: DataFrame, dir: String, wProbe: Int = 2): Unit = {
+      dsub: Int, slice: DataFrame, dir: String): Unit = {
     val spark = slice.sparkSession
     // a shard encode REPLACES the target wholesale, like a build
     SegmentStore.reset(spark, dir)
-    writeStore(spark, index, books, books.length, dsub, wProbe, slice, dir)
+    writeStore(spark, index, books, books.length, dsub, slice, dir)
   }
 
   /** Merge self-contained shard stores into one serving artifact.
@@ -748,7 +818,7 @@ object IvfPq {
           case _ =>
             val (cids, ccents) = centsOf(s"$dir/coarse")
             val groups = spark.read.schema(groupSchema).parquet(s"$dir/groups")
-            TwoLevelIndexW(AnnIvf.TwoLevelIndex(cids, ccents, groups), wProbe)
+            TwoLevelIndex(cids, ccents, groups, wProbe)
         }
         (idx, readInverted(spark, dir, m)
           .select(col("cell"), col("id"), col("codes")))

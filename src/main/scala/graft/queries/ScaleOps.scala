@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
 
 import graft.Tables._
 import graft.functions.expressions.GraftFunctions
-import graft.operators.{AnnIvf, AnnLsh, Dedup, Multimodal}
+import graft.operators.{AnnIvf, AnnLsh, Dedup, IvfPq, Multimodal}
 
 /** Rows-only operators (SURVEY §2): the scale paths whose algorithms
   * aren't expressible in DuckDB SQL (seeded MinHash/SimHash/LSH,
@@ -381,17 +381,19 @@ object ScaleOps {
   // sampling, dedup, OOD — must share one index shape or they
   // silently describe different partitions of the corpus at scale.
   // Each one-level/two-level pair (annIvf, cellDedup, cellRecall) is
-  // one body given its regime's search or inverted-file builder, which
+  // one body given its shape's index or inverted-file builder, which
   // takes the persisted corpus and its one sizing count.
-  private def annIvf(topK: (DataFrame, DataFrame, Long) => DataFrame): Q = (s, d) => {
+  private def annIvf(indexOf: (DataFrame, Long) => IvfPq.Index): Q = (s, d) => {
     val corpus = Vectors.vecCorpus(s, d)
-    topK(corpus, Vectors.queryVecs(corpus), corpus.count())
+    IvfPq.flatTopK(indexOf(corpus, corpus.count()), corpus,
+        Vectors.queryVecs(corpus), k = 10, nprobe = 2)
       .orderBy(col("query_id"), col("rank"))
   }
 
-  private val embAnnIvf = annIvf((corpus, queries, n) =>
-    AnnIvf.topK(corpus, queries, k = 10,
-      cells = AnnIvf.adaptiveCells(n), dim = 64, nprobe = 2))
+  private val embAnnIvf = annIvf((corpus, n) => {
+    val (ids, cents) = oneLevelCentroids(corpus, n)
+    IvfPq.OneLevelIndex(ids, cents)
+  })
 
   // Two-level IVF top-k — the regime PAST adaptiveCells' ceiling
   // (~10⁶–10⁷ vectors; see the AnnIvf two-level scaladoc): fine
@@ -403,10 +405,7 @@ object ScaleOps {
   // the fine table, neighborhood argmin) bit-exactly.
   // (count ONCE: adaptiveCells and the training-sample cap share the
   // same sizing count — a second count() is a wasted corpus pass)
-  private val embAnnIvfTwoLevel = annIvf((corpus, queries, n) =>
-    AnnIvf.topKTwoLevel(corpus, queries, k = 10,
-      cells = AnnIvf.adaptiveCells(n), dim = 64,
-      nprobe = 2, wProbe = 2, knownCount = n))
+  private val embAnnIvfTwoLevel = annIvf(twoLevelIndex)
 
   /** The one-level index at adaptiveCells(n): refined centroids,
     * collected. */
@@ -419,12 +418,14 @@ object ScaleOps {
     AnnIvf.invertedFile(corpus, ids, cents)
   }
 
-  /** The two-level inverted file at wProbe 2 (sampled fine training,
-    * coarse-pruned assignment; `n` also caps the training sample). */
+  /** The two-level index at adaptiveCells(n) and the production
+    * wProbe (sampled fine training; `n` also caps the sample). */
+  private def twoLevelIndex(corpus: DataFrame, n: Long): IvfPq.TwoLevelIndex =
+    AnnIvf.twoLevelIndex(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64, n)
+
+  /** The two-level inverted file: coarse-pruned assignment. */
   private def twoLevelInverted(corpus: DataFrame, n: Long): DataFrame =
-    AnnIvf.invertedFileTwoLevel(corpus,
-      AnnIvf.twoLevelIndex(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64,
-        knownCount = n), wProbe = 2)
+    IvfPq.assign(twoLevelIndex(corpus, n), corpus)
 
   // ------------------------------------------------ emb_cluster_sample
   // Cluster-balanced data selection (the embedding-space analogue of
@@ -519,13 +520,13 @@ object ScaleOps {
       .orderBy(col("representative_id"))
   }
 
-  // STRUCTURAL regime handover (AnnIvf.regimeFor): past the
-  // one-level ceiling this dispatches to the two-level index — the
+  // STRUCTURAL regime handover (IvfPq.indexAuto): past the
+  // one-level ceiling this builds the two-level index — the
   // 90×-at-100× path cannot be selected at scale by accident. At
   // every oracle-checked scale it resolves to the one-level plan
   // the centroid-literal replay below inlines.
   private val embCellDedup =
-    cellDedup((corpus, n) => AnnIvf.invertedFileAuto(corpus, n, dim = 64))
+    cellDedup((corpus, n) => IvfPq.assign(IvfPq.indexAuto(corpus, n, dim = 64), corpus))
 
   // SemDeDup through the TWO-LEVEL index — the variant for the regime
   // the 100x point measured out of the one-level path (BENCH_SF10:
@@ -693,7 +694,7 @@ object ScaleOps {
       .select(col("a_id"), col("b_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (idx, (nAudit, nExact)) = graft.operators.Par.two(
-      () => AnnIvf.twoLevelIndex(corpus, cells = cells, dim = 64, knownCount = n),
+      () => AnnIvf.twoLevelIndex(corpus, cells = cells, dim = 64, n),
       () => (sub.count(), exact.count()))
     // fine candidates of the wProbe nearest coarse neighborhoods, with
     // the probe rank that admits them; the squared distance is the
@@ -804,7 +805,7 @@ object ScaleOps {
   // max squared quantization error (distance to the refined centroid)
   // — the observability pass an ANN index owner runs before trusting
   // recall (unbalanced or high-inertia cells mean re-train). Error is
-  // computed by the NearestCellDist compiled kernel (same index-order
+  // computed by the NearestCellWithDist compiled kernel (same index-order
   // fold DuckDB's list_reduce replays bit-exactly); the per-cell mean
   // goes through exact decimal sums so it is order-independent. One
   // projection-only scan + one hash aggregate — nothing but the
@@ -847,7 +848,7 @@ object ScaleOps {
   // or semantic-dedup cells: distance to the NEAREST IVF centroid as
   // an out-of-distribution score, reported as the top-50 farthest
   // vectors (junk-candidate review list). One codegen'd scan — the
-  // centroid table rides inside the compiled NearestCellDist kernel
+  // centroid table rides inside the compiled NearestCellWithDist kernel
   // (a broadcast-by-construction literal, never a join) — and the
   // global ranking is a bounded TakeOrderedAndProject, so at 100 TB
   // the cost is exactly one pass over the vectors plus a 50-row
@@ -860,7 +861,7 @@ object ScaleOps {
     // or outlier pruning and semantic dedup silently diverge at scale
     val (ids, cents) = oneLevelCentroids(corpus, corpus.count())
     // one compiled sweep yields assignment AND quantization error —
-    // NearestCell + NearestCellDist would argmin the centroids twice
+    // two separate kernels would argmin the centroids twice
     corpus
       .withColumn("cd", GraftFunctions.nearestCellWithDist(col("v"), cents, ids))
       .select(col("id").as("vec_id"), col("cd.cell").as("cell"),
@@ -1572,7 +1573,7 @@ object ScaleOps {
     * [[ivfCtes]]), coarse Lloyd over the fine-centroid table itself
     * (AnnIvf.CoarseRounds, seed AnnIvf.CoarseSeed), fine cells grouped
     * under their nearest FINAL coarse centroid, and the corpus
-    * assignment restricted to the wProbe = 2 (the production default)
+    * assignment restricted to the AnnIvf.WProbe (the production value)
     * nearest coarse neighborhoods — every argmin ROW_NUMBER'd by
     * (dist, cell), the total order the packed kernels implement. Ends
     * at `inverted2(vec_id, v, cell)`
@@ -1580,7 +1581,7 @@ object ScaleOps {
     * consumers).
     */
   private[queries] def ivf2Ctes: String = {
-    val cells = OracleIvfCells; val dim = OracleIvfDim; val wProbe = 2
+    val cells = OracleIvfCells; val dim = OracleIvfDim; val wProbe = AnnIvf.WProbe
     val sampleRate = AnnIvf.DefaultSampleRate; val sampleMod = AnnIvf.SampleModulus
     s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

@@ -265,7 +265,7 @@ object Streaming {
   // split: centroids AND the decimal-exact mean squared quantization
   // error are computed on the static corpus (the offline index build),
   // then the arriving vector stream is scored by the compiled
-  // NearestCell/NearestCellDist kernels and filtered against the
+  // NearestCellWithDist kernel and filtered against the
   // frozen 1.05×mean threshold (this corpus is near-uniform — max sq
   // is only ~1.08×mean — so the calibration sits where a tail exists;
   // production would freeze a quantile from the same offline pass) — a STATELESS scan-level stream (no
@@ -285,7 +285,7 @@ object Streaming {
         cells = AnnIvf.adaptiveCells(corpus.count()), dim = 64))
     val meanSq = corpus
       .select(graft.functions.expressions.GraftFunctions
-        .nearestCellDist(col("v"), cents).as("sq"))
+        .nearestCellWithDist(col("v"), cents, ids).getField("sq").as("sq"))
       .agg((sum(col("sq").cast(DecimalType(28, 12))).cast(DoubleType)
         / count(lit(1))).as("m"))
       .head.getDouble(0)
@@ -1012,18 +1012,18 @@ object Streaming {
   // emitted at ingest (DedupStream.cellDedupStream scaladoc for the
   // state-size and determinism arguments).
   private val stCellDedup: Q = (s, d) => {
-    import graft.operators.AnnIvf
+    import graft.operators.IvfPq
     import org.apache.spark.sql.types.ArrayType
     val corpus = Vectors.vecCorpus(s, d)
     // calibration routes through the STRUCTURAL regime handover
-    // (AnnIvf.regimeFor): same index shape as every batch IVF consumer
+    // (IvfPq.indexAuto): same index shape as every batch IVF consumer
     // at oracle scales (one-level, adaptiveCells = 16), and past the
     // one-level ceiling the two-level calibration — still a stateless
     // stream-static stage — is selected automatically
     val arriving = QanStream.embeddingsStream(s, d)
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
-    val feed = AnnIvf.assignCellsAuto(corpus, corpus.count(), dim = 64, arriving)
+    val feed = IvfPq.assign(IvfPq.indexAuto(corpus, corpus.count(), dim = 64), arriving)
       .select(col("cell"), col("id").as("vec_id"), col("v"))
     QanStream.runToMemory(
         graft.streaming.DedupStream.cellDedupStream(feed).toDF(),

@@ -431,7 +431,7 @@ object Vectors {
   // and full-precision vectors are touched only for the rerank·|Q|
   // survivors (a broadcast-join point fetch, never a corpus-wide
   // score). The whole pipeline lives in the IvfPq operator and ROUTES
-  // THROUGH THE REGIME DISPATCH (AnnIvf.regimeFor): at every
+  // THROUGH THE ONE INDEX BUILDER (IvfPq.indexAuto): at every
   // oracle-checked scale it resolves to the one-level index this
   // oracle replays; past the ~10⁷-vector ceiling the two-level arm
   // (its own oracle: emb_ivfpq_topk_two_level) is selected
@@ -569,8 +569,7 @@ object Vectors {
     val queries = queryVecs(corpus)
     IvfPq.topK(corpus, n, dim = 64, queries, k = ivfpqK,
         nprobe = ivfpqNprobe, rerank = ivfpqRerank,
-        m = pqM, dsub = pqDsub, kCodes = pqK,
-        wProbe = 2, oneLevelMax = -1L)
+        m = pqM, dsub = pqDsub, kCodes = pqK, oneLevelMax = -1L)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -588,7 +587,7 @@ object Vectors {
   // vectors satisfying a predicate — the most common production
   // constraint on a retrieval index (tenant / language / license
   // filters). Selectivity-dispatched (IvfPq.filterRegimeFor, the
-  // regimeFor discipline): broad filters run the PRE-FILTERED PROBE —
+  // indexAuto discipline): broad filters run the PRE-FILTERED PROBE —
   // nprobe boosted ×2 to compensate the per-cell thinning, candidates
   // pruned by the predicate BEFORE any ADC scoring (the attribute is
   // a stored column of the coded file, so at 100 TB the filter is
@@ -863,9 +862,9 @@ object Vectors {
             (col("pos") + 1).as("cell_rank"), col("col").as("cell"))
         (pool(probesMax).join(boosts,
           col("cell_rank") <= col("boost") * lit(ivfpqNprobe)), Nil)
-      case IvfPq.TwoLevelIndexW(idx, wBase) =>
+      case idx: IvfPq.TwoLevelIndex =>
         val maxWc = idx.coarseIds.length
-        val wProbe = least(lit(wBase) * col("boost"), lit(maxWc))
+        val wProbe = least(lit(idx.wProbe) * col("boost"), lit(maxWc))
         // every fine cell per query, tagged (coarse rank, fine distance)
         // — the one probe pass all boosts share
         val qcells = queries.select(col("query_id"), col("qv"),
@@ -1021,7 +1020,7 @@ object Vectors {
   // bounded by s·n·|Q|, the brute arm's own cost); production
   // queries run filteredTopK at one chosen boost.
   private val embFilteredBoostCurveTwoLevel = filteredBoostCurve { (vecs, n, cells) =>
-    IvfPq.TwoLevelIndexW(AnnIvf.twoLevelIndex(vecs, cells, dim = 64, knownCount = n), 2)
+    AnnIvf.twoLevelIndex(vecs, cells, dim = 64, n)
   }
 
   private lazy val embFilteredBoostCurveTwoLevelSql: String = {
@@ -1365,7 +1364,7 @@ object Vectors {
     // manifest from the RELOADED artifact (never the in-memory build)
     val (cids, ccents) = loaded.index match {
       case IvfPq.OneLevelIndex(ids, cents) => (ids, cents)
-      case IvfPq.TwoLevelIndexW(idx, _) => (idx.coarseIds, idx.coarseCents)
+      case idx: IvfPq.TwoLevelIndex => (idx.coarseIds, idx.coarseCents)
     }
     import s.implicits._
     val bookEl = loaded.books.toSeq.zipWithIndex.flatMap { case (book, sub) =>
@@ -1444,7 +1443,7 @@ object Vectors {
     val loaded = IvfPq.loadIndex(s, dirM)
     val (cids, ccents) = loaded.index match {
       case IvfPq.OneLevelIndex(ids, cents) => (ids, cents)
-      case IvfPq.TwoLevelIndexW(idx, _) => (idx.coarseIds, idx.coarseCents)
+      case idx: IvfPq.TwoLevelIndex => (idx.coarseIds, idx.coarseCents)
     }
     centRow(s, "centroids", cids, ccents)
       .unionAll(checksumRow("merged", loaded.inverted))
@@ -1762,7 +1761,7 @@ object Vectors {
   private val embIndexLifecycleTwoLevel = indexLifecycle("_two_level", -1L,
     (s, loaded) => {
       val idx = loaded.index match {
-        case IvfPq.TwoLevelIndexW(i, _) => i
+        case i: IvfPq.TwoLevelIndex => i
         case other => sys.error(s"forced two-level store loaded as $other")
       }
       // groups is the trained half the two-level design keeps as DATA

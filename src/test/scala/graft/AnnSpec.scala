@@ -47,11 +47,11 @@ class AnnSpec extends SparkSpec {
 
   test("two-level IVF: wProbe covering every coarse cell reproduces the one-level argmin exactly") {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.operators.AnnIvf
+    import graft.operators.{AnnIvf, IvfPq}
     val e = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
     val corpus = e.select(col("vec_id").as("id"), col("v"))
-    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64)
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, corpus.count())
     // the same fine centroids, flattened back out of the groups table
     val fine = idx.groups
       .select(explode(arrays_zip(col("gids"), col("gcents"))).as("z"))
@@ -62,7 +62,7 @@ class AnnSpec extends SparkSpec {
     // wProbe = every coarse cell ⇒ the neighborhood is the full fine
     // table ⇒ the packed argmin must equal the one-level argmin bit
     // for bit (same (dist, cell) total order)
-    val twoLevel = AnnIvf.invertedFileTwoLevel(corpus, idx, wProbe = idx.coarseIds.length)
+    val twoLevel = IvfPq.assign(idx.copy(wProbe = idx.coarseIds.length), corpus)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(twoLevel == oneLevel)
     assert(twoLevel.nonEmpty)
@@ -109,7 +109,7 @@ class AnnSpec extends SparkSpec {
 
   test("two-level recall audit: bands bounded, totals equal the production-assignment recount") {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.operators.AnnIvf
+    import graft.operators.{AnnIvf, IvfPq}
     import graft.functions.expressions.GraftFunctions
     val rows = SparkEntry.queries("emb_cell_recall_two_level")(spark, sf).collect()
     assert(rows.nonEmpty)
@@ -123,8 +123,9 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = corpus.count()
-    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, knownCount = n)
-    val cells = AnnIvf.invertedFileTwoLevel(corpus, idx, wProbe = 2)
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, n)
+    assert(idx.wProbe == 2, "the builder sets the production wProbe")
+    val cells = IvfPq.assign(idx, corpus)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     val sub = corpus.filter(col("id") < 500)
     val a = sub.select(col("id").as("a_id"), col("v").as("av"))
@@ -141,7 +142,7 @@ class AnnSpec extends SparkSpec {
 
   test("wProbe tuning curve: monotone scan volume, w=2 is production, w=max is the one-level argmin") {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.operators.AnnIvf
+    import graft.operators.{AnnIvf, IvfPq}
     import graft.functions.expressions.GraftFunctions
     val rows = SparkEntry.queries("emb_two_level_probe_curve")(spark, sf).collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4))
@@ -156,7 +157,7 @@ class AnnSpec extends SparkSpec {
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = corpus.count()
-    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, knownCount = n)
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, n)
     val sub = corpus.filter(col("id") < 500)
     val pairs = sub.select(col("id").as("a_id"), col("v").as("av"))
       .join(sub.select(col("id").as("b_id"), col("v").as("bv")), col("a_id") < col("b_id"))
@@ -167,7 +168,8 @@ class AnnSpec extends SparkSpec {
     def sameUnder(assign: Map[Long, Int]): Long =
       pairs.count { case (x, y) => assign(x) == assign(y) }.toLong
     // w=2 row must equal the PRODUCTION assignment's same-cell count
-    val prod = AnnIvf.invertedFileTwoLevel(sub, idx, wProbe = 2)
+    assert(idx.wProbe == 2, "the builder sets the production wProbe")
+    val prod = IvfPq.assign(idx, sub)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(rows(1).getLong(2) == sameUnder(prod), "w=2 equals the production assignment")
     // w=maxW covers every coarse cell (coarseK(16)=4) — the assignment
@@ -184,40 +186,29 @@ class AnnSpec extends SparkSpec {
 
   test("regime handover: cutover pinned, both dispatch arms bit-equal their explicit builds") {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.operators.AnnIvf
-    // the cutover constant is structural, not prose
-    assert(AnnIvf.regimeFor(AnnIvf.OneLevelMaxVectors) == AnnIvf.OneLevel)
-    assert(AnnIvf.regimeFor(AnnIvf.OneLevelMaxVectors + 1) == AnnIvf.TwoLevel)
-    assert(AnnIvf.regimeFor(0L) == AnnIvf.OneLevel)
+    import graft.operators.{AnnIvf, IvfPq}
     val corpus = Tables.embeddings(spark, sf)
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val n = corpus.count()
-    // below the ceiling: invertedFileAuto IS the one-level build
+    def cellsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+      df.collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    // the cutover is structural, not prose: a corpus AT the ceiling is
+    // one-level, one vector past it is two-level
+    val atMax = IvfPq.indexAuto(corpus, n, dim = 64, oneLevelMax = n)
+    val pastMax = IvfPq.indexAuto(corpus, n, dim = 64, oneLevelMax = n - 1)
+    assert(atMax.isInstanceOf[IvfPq.OneLevelIndex])
+    assert(pastMax.isInstanceOf[IvfPq.TwoLevelIndex])
+    // below the ceiling: the built index IS the one-level build
     val (ids, cents) = AnnIvf.collectCentroids(
       AnnIvf.refinedCentroids(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64))
-    val oneLevel = AnnIvf.invertedFile(corpus, ids, cents)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    val auto = AnnIvf.invertedFileAuto(corpus, n, dim = 64)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(auto == oneLevel)
-    // forced past the ceiling: invertedFileAuto IS the two-level build
-    val idx = AnnIvf.twoLevelIndex(corpus, cells = AnnIvf.adaptiveCells(n),
-      dim = 64, knownCount = n)
-    val twoLevel = AnnIvf.invertedFileTwoLevel(corpus, idx, wProbe = 2)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    val autoTwo = AnnIvf.invertedFileAuto(corpus, n, dim = 64, oneLevelMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(autoTwo == twoLevel)
-    // the streaming calibration stage dispatches identically (batch
-    // relation stands in for the arriving stream — same plan shape)
-    val assigned = AnnIvf.assignCellsAuto(corpus, n, dim = 64, arriving = corpus)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(assigned == oneLevel)
-    val assignedTwo = AnnIvf.assignCellsAuto(corpus, n, dim = 64,
-        arriving = corpus, oneLevelMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(assignedTwo == twoLevel)
+    val oneLevel = cellsOf(AnnIvf.invertedFile(corpus, ids, cents))
+    assert(cellsOf(IvfPq.assign(atMax, corpus)) == oneLevel)
+    // past the ceiling: the built index IS the two-level build at the
+    // production wProbe
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = AnnIvf.adaptiveCells(n), dim = 64, n)
+    assert(pastMax.asInstanceOf[IvfPq.TwoLevelIndex].wProbe == AnnIvf.WProbe)
+    assert(cellsOf(IvfPq.assign(pastMax, corpus)) == cellsOf(IvfPq.assign(idx, corpus)))
   }
 
   test("int8 quantization: high recall@10, near-1 recon cosine, bounded mae") {
@@ -377,7 +368,7 @@ class AnnSpec extends SparkSpec {
     // one-level index by accident (the r10 verdict's hole)
     assert(IvfPq.indexAuto(corpus, n, dim = 64).isInstanceOf[IvfPq.OneLevelIndex])
     assert(IvfPq.indexAuto(corpus, n, dim = 64, oneLevelMax = n - 1)
-      .isInstanceOf[IvfPq.TwoLevelIndexW])
+      .isInstanceOf[IvfPq.TwoLevelIndex])
     val queries = corpus.filter(col("id") < 5)
       .select(col("id").as("query_id"), col("v").as("qv"))
     val books = AnnPq.collectCodebooks(
@@ -397,13 +388,40 @@ class AnnSpec extends SparkSpec {
     // AND probes equal the one-level argmin exactly, same codebooks ⇒
     // the COMPOSED output (ADC ranks, exact re-rank, every column) is
     // bit-equal — the wProbe=all property lifted to the whole search
-    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64,
-      sampleRate = AnnIvf.SampleModulus, knownCount = n)
-    val two = IvfPq.topKWith(IvfPq.TwoLevelIndexW(idx, idx.coarseIds.length),
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, n,
+      sampleRate = AnnIvf.SampleModulus)
+    val two = IvfPq.topKWith(idx.copy(wProbe = idx.coarseIds.length),
         books, 4, corpus, queries, k = 10, nprobe = 2, rerank = 30)
       .collect().map(_.toString).sorted.toSeq
     assert(two == explicitOne)
     assert(two.nonEmpty)
+  }
+
+  test("IVF-flat top-k: the two-level index at wProbe=all returns exactly the one-level rows") {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.operators.{AnnIvf, IvfPq}
+    val corpus = Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("v"))
+    val n = corpus.count()
+    val queries = corpus.filter(col("id") < 5)
+      .select(col("id").as("query_id"), col("v").as("qv"))
+    val (ids, cents) = AnnIvf.collectCentroids(
+      AnnIvf.refinedCentroids(corpus, cells = 16, dim = 64))
+    val one = IvfPq.flatTopK(IvfPq.OneLevelIndex(ids, cents), corpus, queries,
+        k = 10, nprobe = 2)
+      .collect().map(_.toString).sorted.toSeq
+    // a 100% training sample makes the fine centroids the one-level
+    // build, and wProbe = every coarse cell makes both the assignment
+    // and the nprobe-2 probe argmin over the whole fine table — so the
+    // one top-k body must return the one-level rows exactly
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, n,
+      sampleRate = AnnIvf.SampleModulus)
+    val two = IvfPq.flatTopK(idx.copy(wProbe = idx.coarseIds.length), corpus, queries,
+        k = 10, nprobe = 2)
+      .collect().map(_.toString).sorted.toSeq
+    assert(one.nonEmpty)
+    assert(two == one)
   }
 
   test("composed two-level search: non-empty, exact-score dominance, deterministic") {
@@ -660,16 +678,16 @@ class AnnSpec extends SparkSpec {
     assert(delta.count() > 0)
     val dir = tmpDir("idx_2l")
     val (index, books) = IvfPq.buildIndex(base, nBase, dim = 64, m = 16,
-      dsub = 4, kCodes = 64, dir = dir, wProbe = 2, oneLevelMax = -1L)
+      dsub = 4, kCodes = 64, dir = dir, oneLevelMax = -1L)
     val idx = index match {
-      case IvfPq.TwoLevelIndexW(i, w) => assert(w == 2); i
+      case i: IvfPq.TwoLevelIndex => assert(i.wProbe == 2); i
       case other => fail(s"forced build must select the two-level regime: $other")
     }
     // store round-trip: coarse constants, groups table, codebooks, and
     // the coded file all reproduce the in-memory build bit for bit
     val loaded = IvfPq.loadIndex(spark, dir)
     val lidx = loaded.index match {
-      case IvfPq.TwoLevelIndexW(i, w) => assert(w == 2); i
+      case i: IvfPq.TwoLevelIndex => assert(i.wProbe == 2); i
       case other => fail(s"two-level store loaded as $other")
     }
     assert(lidx.coarseIds.toSeq == idx.coarseIds.toSeq)
@@ -707,7 +725,7 @@ class AnnSpec extends SparkSpec {
     val isDel = col("id") % 3 === 1
     IvfPq.deleteFromIndex(all.filter(isDel).select(col("id")), dir)
     val afterDel = IvfPq.loadIndex(spark, dir)
-    assert(afterDel.index.isInstanceOf[IvfPq.TwoLevelIndexW])
+    assert(afterDel.index.isInstanceOf[IvfPq.TwoLevelIndex])
     val live = asSet(afterDel.live)
     assert(live == asSet(IvfPq.codedInvertedFile(index, all.filter(!isDel), books, 4)),
       "two-level live view must equal the frozen-index encode of the surviving corpus")
@@ -720,7 +738,7 @@ class AnnSpec extends SparkSpec {
     assert(IvfPq.compactIndex(spark, dir).isEmpty)
     // and the post-compaction store still serves through the two-level arm
     val servedAfter = IvfPq.loadIndex(spark, dir)
-    assert(servedAfter.index.isInstanceOf[IvfPq.TwoLevelIndexW])
+    assert(servedAfter.index.isInstanceOf[IvfPq.TwoLevelIndex])
     assert(IvfPq.topKWith(servedAfter.index, servedAfter.books, servedAfter.dsub,
         all.filter(!isDel), queries, k = 10, nprobe = 2, rerank = 30)
       .collect().nonEmpty)
@@ -978,7 +996,7 @@ class AnnSpec extends SparkSpec {
       assert(mean >= 0 && mx >= 0 && mean <= mx + 1e-9,
         s"cell ${r.getInt(0)}: mean $mean > max $mx")
     }
-    // NearestCellDist agrees with an independent driver-side recompute
+    // NearestCellWithDist's sq agrees with an independent driver-side recompute
     // for one vector per cell
     import graft.operators.AnnIvf
     val corpus = Tables.embeddings(spark, sf)
@@ -988,7 +1006,8 @@ class AnnSpec extends SparkSpec {
       AnnIvf.refinedCentroids(corpus, cells = 16, dim = 64))
     val probe = corpus.filter(col("id").isin(out.map(_.getLong(4)): _*))
       .select(col("id"),
-        graft.functions.expressions.GraftFunctions.nearestCellDist(col("v"), cents).as("sq"),
+        graft.functions.expressions.GraftFunctions
+          .nearestCellWithDist(col("v"), cents, ids).getField("sq").as("sq"),
         col("v"))
       .collect()
     probe.foreach { r =>
@@ -1111,10 +1130,11 @@ class AnnSpec extends SparkSpec {
     val corpus = Tables.embeddings(spark, sf)
       .select(col("vec_id").as("id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
-    val (_, cents) = AnnIvf.collectCentroids(
+    val (ids, cents) = AnnIvf.collectCentroids(
       AnnIvf.refinedCentroids(corpus, cells = 16, dim = 64))
     val trueMax = corpus
-      .select(sqrt(GraftFunctions.nearestCellDist(col("v"), cents)).as("d"))
+      .select(sqrt(GraftFunctions.nearestCellWithDist(col("v"), cents, ids)
+        .getField("sq")).as("d"))
       .agg(max(col("d"))).head.getDouble(0)
     assert(math.abs(dists.head - trueMax) < 1e-6,
       s"top-1 ${dists.head} vs brute-force max $trueMax")

@@ -30,7 +30,7 @@ class EmptyInputSpec extends SparkSpec {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
-    import graft.operators.AnnIvf
+    import graft.operators.{AnnIvf, IvfPq}
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", ArrayType(DoubleType))))
     def corpusOf(rows: Row*) =
@@ -41,13 +41,13 @@ class EmptyInputSpec extends SparkSpec {
     // validates length mismatch only — emptiness is a per-row concern
     // and no row ever evaluates)
     val empty = corpusOf()
-    val idx0 = AnnIvf.twoLevelIndex(empty, cells = 16, dim = 64, knownCount = 0L)
+    val idx0 = AnnIvf.twoLevelIndex(empty, cells = 16, dim = 64, 0L)
     assert(idx0.coarseIds.isEmpty)
-    assert(AnnIvf.invertedFileTwoLevel(empty, idx0, wProbe = 2).count() == 0L)
+    assert(IvfPq.assign(idx0, empty).count() == 0L)
     val q = corpusOf(Row(99L, vec))
       .select(col("id").as("query_id"), col("v").as("qv"))
-    assert(AnnIvf.topKTwoLevel(empty, q, k = 5, cells = 16, dim = 64,
-      knownCount = 0L).count() == 0L, "queries against a zero-row corpus find nothing")
+    assert(IvfPq.flatTopK(idx0, empty, q, k = 5, nprobe = 2).count() == 0L,
+      "queries against a zero-row corpus find nothing")
     // single-vector corpora, BOTH hash-sample fates: id=0 lands IN the
     // 60% training sample; id=1 hashes OUT, leaving the sample empty —
     // the corpus-fallback (twoLevelIndex) must still build one real
@@ -55,18 +55,19 @@ class EmptyInputSpec extends SparkSpec {
     // vector (the r9 bug class at its smallest reproduction)
     for (id <- Seq(0L, 1L)) {
       val one = corpusOf(Row(id, vec))
-      val idx = AnnIvf.twoLevelIndex(one, cells = 16, dim = 64, knownCount = 1L)
+      val idx = AnnIvf.twoLevelIndex(one, cells = 16, dim = 64, 1L)
       assert(idx.coarseIds.nonEmpty, s"id=$id: index must have a cell")
-      val inv = AnnIvf.invertedFileTwoLevel(one, idx, wProbe = 2).collect()
+      val inv = IvfPq.assign(idx, one).collect()
       assert(inv.length == 1, s"id=$id must be assigned, not silently dropped")
-      val hits = AnnIvf.topKTwoLevel(one, q, k = 5, cells = 16, dim = 64,
-        knownCount = 1L).collect()
+      val hits = IvfPq.flatTopK(idx, one, q, k = 5, nprobe = 2).collect()
       assert(hits.length == 1 && hits.head.getLong(2) == id,
         s"id=$id must be findable end-to-end")
     }
-    // the regime dispatcher is total over the same corpora, both arms
-    assert(AnnIvf.invertedFileAuto(empty, 0L, dim = 64).count() == 0L)
-    assert(AnnIvf.invertedFileAuto(empty, 0L, dim = 64, oneLevelMax = -1L).count() == 0L)
+    // the index builder + assignment is total over the same corpora,
+    // both shapes
+    assert(IvfPq.assign(IvfPq.indexAuto(empty, 0L, dim = 64), empty).count() == 0L)
+    assert(IvfPq.assign(IvfPq.indexAuto(empty, 0L, dim = 64, oneLevelMax = -1L),
+      empty).count() == 0L)
   }
 
   test("every batch query is total over zero-row tables") {

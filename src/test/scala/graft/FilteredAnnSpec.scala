@@ -158,7 +158,7 @@ class FilteredAnnSpec extends SparkSpec {
     val corpus = labeled(sf).select(col("id"), col("v"))
     val n = corpus.count()
     val idx = graft.operators.AnnIvf.twoLevelIndex(corpus,
-      graft.operators.AnnIvf.adaptiveCells(n), dim = 64, knownCount = n)
+      graft.operators.AnnIvf.adaptiveCells(n), dim = 64, n)
     val maxWc = idx.coarseIds.length
     curve.foreach { r =>
       assert(r.getInt(1) == math.min(2 * r.getInt(0), maxWc),
@@ -185,7 +185,7 @@ class FilteredAnnSpec extends SparkSpec {
     val vecsOnly = corpus.select(col("id"), col("v"))
     val index = IvfPq.indexAuto(vecsOnly, n, dim = 64, oneLevelMax = -1L)
     index match {
-      case IvfPq.TwoLevelIndexW(_, _) => ()
+      case _: IvfPq.TwoLevelIndex => ()
       case other => fail(s"forced two-level build returned $other")
     }
     val books = AnnPq.collectCodebooks(

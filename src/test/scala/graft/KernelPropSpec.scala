@@ -148,7 +148,8 @@ class KernelPropSpec extends AnyFunSuite {
     // the two-level packed kernel receives the SAME centroids as the
     // one-level kernel, but concatenated in probe-group order (not
     // id-ascending) — its (dist, lowest-id) tie rule must make the
-    // result permutation-invariant and equal to the one-level argmin
+    // result permutation-invariant and equal to the one-level argmin.
+    // Two-level ASSIGNMENT is the packed probe at nprobe = 1.
     val centsGen = Gen.chooseNum(1, 8).flatMap(k =>
       Gen.listOfN(k, Gen.listOfN(4, Gen.chooseNum(-10.0, 10.0))))
     check(Prop.forAll(Gen.listOfN(4, Gen.chooseNum(-10.0, 10.0)), centsGen,
@@ -161,7 +162,7 @@ class KernelPropSpec extends AnyFunSuite {
       val perm = new scala.util.Random(seed).shuffle(ids.toList)
       val packedCents = new GenericArrayData(perm.map(i => arr(cs(i).toSeq)).toArray[Any])
       val packedIds = new GenericArrayData(perm.toArray)
-      val packed = AnnKernels.nearestCellPacked(arr(v), packedCents, packedIds)
+      val packed = AnnKernels.nearestCellsPacked(arr(v), packedCents, packedIds, 1).getInt(0)
       packed == oneLevel
     })
   }

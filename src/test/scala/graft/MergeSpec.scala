@@ -53,11 +53,33 @@ class MergeSpec extends SparkSpec {
     val (m, mono) = buildMerged(-1L, "two")
     // the merged store must load as two-level (trained halves carried)
     IvfPq.loadIndex(spark, m).index match {
-      case IvfPq.TwoLevelIndexW(_, _) => ()
+      case _: IvfPq.TwoLevelIndex => ()
       case other => fail(s"merged store loaded as $other")
     }
     assert(storeRows(m) == storeRows(mono))
     assert(storeRows(m).nonEmpty)
+  }
+
+  test("a merged two-level shard store reloads with the wProbe its shards were encoded under") {
+    val c = corpus().persist()
+    val n = c.count()
+    // a wProbe other than the builder's 2: the store's meta must carry
+    // the encoded index's value, not a default
+    val index = IvfPq.indexAuto(c, n, dim = 64, oneLevelMax = -1L) match {
+      case t: IvfPq.TwoLevelIndex => t.copy(wProbe = 3)
+      case other => fail(s"forced two-level build returned $other")
+    }
+    val books = AnnPq.collectCodebooks(
+      AnnPq.refinedCodebooks(c, 16, 4, 64), 16)
+    val (dirA, dirB, dirM) = (tmp("wp_a"), tmp("wp_b"), tmp("wp_m"))
+    IvfPq.encodeShard(index, books, 4, c.filter(col("id") % 2 === 0), dirA)
+    IvfPq.encodeShard(index, books, 4, c.filter(col("id") % 2 === 1), dirB)
+    IvfPq.mergeIndexes(spark, Seq(dirA, dirB), dirM)
+    IvfPq.loadIndex(spark, dirM).index match {
+      case t: IvfPq.TwoLevelIndex => assert(t.wProbe == 3, s"loaded wProbe ${t.wProbe}")
+      case other => fail(s"merged store loaded as $other")
+    }
+    c.unpersist()
   }
 
   test("mismatched trained halves are refused") {

@@ -132,19 +132,19 @@ class PlanSpec extends SparkSpec {
 
   test("two-level IVF assignment: corpus side is projection + broadcast joins — no Window, no corpus shuffle") {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.operators.AnnIvf
+    import graft.operators.{AnnIvf, IvfPq}
     val e = Tables.embeddings(spark, sf)
       .withColumn("v", col("embedding").cast(ArrayType(DoubleType)))
     val corpus = e.select(col("vec_id").as("id"), col("v"))
-    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64)
-    val inv = AnnIvf.invertedFileTwoLevel(corpus, idx, wProbe = 2)
+    val idx = AnnIvf.twoLevelIndex(corpus, cells = 16, dim = 64, corpus.count())
+    val inv = IvfPq.assign(idx, corpus)
     inv.collect()
     val plan = inv.queryExecution.executedPlan.toString
     // neighborhoods arrive through broadcast hash joins; the packed
-    // argmin is a compiled projection. The only hash exchanges allowed
+    // argmin (the nprobe-1 packed probe) is a compiled projection. The only hash exchanges allowed
     // are inside the ≤cells-row fine-group broadcast subtree — the
     // CORPUS must never shuffle, window, or sort-merge.
-    assert(plan.contains("nearest_cell_in_group"), plan)
+    assert(plan.contains("nearest_cells_in_group"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("Window"), s"window in two-level assignment:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"corpus shuffle join:\n$plan")

@@ -751,7 +751,8 @@ class StreamingSpec extends SparkSpec {
     val scored = QanStream.embeddingsStream(spark, sf)
       .select(col("vec_id"),
         graft.functions.expressions.GraftFunctions
-          .nearestCellDist(col("embedding").cast(ArrayType(DoubleType)), cents).as("sq"))
+          .nearestCellWithDist(col("embedding").cast(ArrayType(DoubleType)), cents, ids)
+          .getField("sq").as("sq"))
       .filter(col("sq") > lit(1e9)) // any literal; plan shape is the point
     val h = QanStream.runToMemoryQuery(scored)
     try {
